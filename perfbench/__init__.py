@@ -1,0 +1,5 @@
+"""Lake benchmark: query and object-store workloads over the engine's public API.
+
+Run ``python3 perfbench/run.py --workload <name> --seed <n> --seconds <s> --trace <0|1>``
+from the repository root; see ``perfbench/README.md``.
+"""
