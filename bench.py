@@ -101,7 +101,11 @@ def _prev_round_compact(repo_dir: str, sf) -> tuple[dict | None, str | None]:
             except ValueError:
                 continue
             # two compact shapes exist: r11-12's q/q_cols arrays and the
-            # r13+ driver-contract {"queries": {name: cold_sec}} dict
+            # r13+ driver-contract {"queries": {name: cold_sec}} dict. The
+            # verbose line also has "queries" but carries "calib_probes";
+            # adopting it would zero every previous spread
+            if "calib_probes" in obj:
+                continue
             if ("q" in obj and "q_cols" in obj) or "queries" in obj:
                 return obj, os.path.basename(path)
     return None, None

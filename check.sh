@@ -1,14 +1,7 @@
 #!/bin/sh
 # Full local verification: unit/property/plan tests, the DuckDB oracle
 # differential at the driver's correctness scale, and the headline bench.
-#
-# OPERATORS.md is regenerated FIRST so the doc-pin test
-# (tests/test_contracts.py::test_operators_md_matches_registry) always runs
-# against anchors computed from the exact tree being verified — the round-10
-# verdict found a red pytest caused by committing code after the last
-# regeneration. If this script leaves OPERATORS.md modified, commit it.
 set -e
-python -m hadoop_fs_ceph_spark.registry --operators-md
 python -m pytest tests/ -q
 python -m hadoop_fs_ceph_spark.plans --all
 python -m hadoop_fs_ceph_spark.oracle /root/testdata/sf0.01

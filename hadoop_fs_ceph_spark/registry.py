@@ -64,10 +64,13 @@ def coverage_line(specs: dict[str, QuerySpec] | None = None) -> str:
 
 def operators_md(specs: dict[str, QuerySpec] | None = None) -> str:
     """Render the registry as OPERATORS.md (VERDICT r6 item 8): one row per
-    declared query with its source anchor (file:line), oracle posture,
-    bench membership, and tags, grouped by operator module. Generated —
-    never hand-edited; ``tests/test_contracts.py`` pins the on-disk file
-    to this function's output, same pattern as the README coverage line."""
+    declared query with its source anchor (``module::function``), oracle
+    posture, bench membership, and tags, grouped by operator module in
+    source order. Generated — never hand-edited; ``tests/test_contracts.py``
+    pins the on-disk file to this function's output, same pattern as the
+    README coverage line. The anchor names the function rather than its
+    line, so moving code never makes the file stale; only a registry
+    change does."""
     import inspect
     import pathlib
 
@@ -100,7 +103,7 @@ def operators_md(specs: dict[str, QuerySpec] | None = None) -> str:
         lines += ["| query | anchor | oracle | bench | tags |", "|---|---|---|---|---|"]
         for name, line, s in rows:
             lines.append(
-                f"| {name} | {rel}:{line} | "
+                f"| {name} | {s.fn.__module__}::{s.fn.__qualname__} | "
                 f"{'duckdb' if s.oracle else 'rows-only'} | "
                 f"{'yes' if s.bench else ''} | {', '.join(s.tags)} |"
             )

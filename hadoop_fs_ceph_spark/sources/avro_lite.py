@@ -365,7 +365,9 @@ class AvroLiteReader(DataSourceReader):
             raise ValueError("avro_lite requires .load(path)")
         self.blocksize = int(options.get("virtual.blocksize", DEFAULT_BLOCKSIZE))
         self._files = [f for f in list_data_files(self.path) if f.endswith(".avro")]
-        self._plan = plan_virtual_blocks(self._files, self.blocksize)
+        self._plan = plan_virtual_blocks(
+            [(f, os.path.getsize(f)) for f in self._files], self.blocksize
+        )
 
     def partitions(self) -> Sequence[InputPartition]:
         return [_AvroPartition(file=f, start=s, end=e) for f, s, e in self._plan]

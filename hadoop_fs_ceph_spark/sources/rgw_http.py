@@ -25,7 +25,10 @@ server, all stdlib:
   the store has no blocks; the connector invents them for parallelism),
   and serve each partition with ranged GETs honoring the Hadoop
   line-split contract (a record crossing a block boundary is read exactly
-  once; see ``pydatasource.py`` for the two rules).
+  once). Planning, line framing and row decoding are the ones
+  ``cephfs_like`` uses — ``plan_virtual_blocks``, ``split_lines`` and
+  ``decode_rows`` in ``pydatasource.py``, whose docstring states the two
+  ownership rules; only the pread differs (a ranged GET here).
 
 100 TB posture: planning is one ListObjectsV2 pass (O(#objects) driver
 metadata, paginated in real RGW); every task fetches only its own
@@ -58,12 +61,17 @@ from typing import Iterator, Sequence
 from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 from pyspark.sql.types import StructType
 
-# A straddling line is fetched in bounded continuation reads of this size —
-# the same "buffer, never whole object" discipline as the reference's 4 MiB
-# read buffers (CephRgwInputStream.java:120). Small here so tests actually
-# exercise multi-fetch continuation.
-CONTINUATION_BYTES = 8 * 1024
-DEFAULT_BLOCKSIZE = 32 * 1024 * 1024
+# CONTINUATION_BYTES is re-exported: this module's readers continue
+# straddling lines in reads of that size
+from hadoop_fs_ceph_spark.sources.pydatasource import (  # noqa: F401
+    CONTINUATION_BYTES,
+    DEFAULT_BLOCKSIZE,
+    _parser_for,
+    decode_rows,
+    plan_virtual_blocks,
+    split_lines,
+)
+
 RETRY_ATTEMPTS = 4
 RETRY_BASE_DELAY = 0.1  # seconds; doubles per attempt (0.1, 0.2, 0.4)
 
@@ -101,6 +109,9 @@ def _parse_range(rng: str, size: int):
 # --------------------------------------------------------------------------
 # Loopback RGW: the minimal S3 REST subset the connector consumes
 # --------------------------------------------------------------------------
+_ACCEPT_RANGES = [("Accept-Ranges", "bytes")]
+
+
 class _RgwHandler(BaseHTTPRequestHandler):
     protocol_version = "HTTP/1.1"
     server_version = "LoopbackRgw/1.0"
@@ -123,6 +134,17 @@ class _RgwHandler(BaseHTTPRequestHandler):
     def _uploads(self) -> dict:
         return self.server.uploads  # type: ignore[attr-defined]
 
+    def _reply(self, status: int, body: bytes = b"", headers=()) -> None:
+        """Status line, ``headers`` in order, then ``Content-Length`` of
+        ``body``. A HEAD reply carries the headers of the GET but no body."""
+        self.send_response(status)
+        for name, value in headers:
+            self.send_header(name, value)
+        self.send_header("Content-Length", str(len(body)))
+        self.end_headers()
+        if body and self.command != "HEAD":
+            self.wfile.write(body)
+
     def do_PUT(self):
         bucket, key, q = self._split()
         n = int(self.headers.get("Content-Length", 0))
@@ -140,29 +162,19 @@ class _RgwHandler(BaseHTTPRequestHandler):
                 # malformed partNumber answers 400 — never an uncaught
                 # exception severing the connection (same failure class
                 # as the malformed-Range fix, review r8)
-                self.send_response(400)
-                self.send_header("Content-Length", "0")
-                self.end_headers()
+                self._reply(400)
                 return
             with self.server.lock:  # type: ignore[attr-defined]
                 up = self._uploads().get((bucket, key, q["uploadId"]))
                 if up is not None:
                     up[part_no] = body
             if up is None:
-                self.send_response(404)
-                self.send_header("Content-Length", "0")
-                self.end_headers()
+                self._reply(404)
                 return
-            self.send_response(200)
-            self.send_header("ETag", f'"part-{part_no}-{len(body)}"')
-            self.send_header("Content-Length", "0")
-            self.end_headers()
+            self._reply(200, headers=[("ETag", f'"part-{part_no}-{len(body)}"')])
             return
         self._store()[(bucket, key)] = body
-        self.send_response(200)
-        self.send_header("ETag", f'"{len(body)}"')
-        self.send_header("Content-Length", "0")
-        self.end_headers()
+        self._reply(200, headers=[("ETag", f'"{len(body)}"')])
 
     def do_POST(self):
         bucket, key, q = self._split()
@@ -183,12 +195,7 @@ class _RgwHandler(BaseHTTPRequestHandler):
             ET.SubElement(root, "Bucket").text = bucket
             ET.SubElement(root, "Key").text = key
             ET.SubElement(root, "UploadId").text = uid
-            out = ET.tostring(root, encoding="utf-8", xml_declaration=True)
-            self.send_response(200)
-            self.send_header("Content-Type", "application/xml")
-            self.send_header("Content-Length", str(len(out)))
-            self.end_headers()
-            self.wfile.write(out)
+            self._reply_xml(root)
             return
         if "uploadId" in q:  # CompleteMultipartUpload
             with self.server.lock:  # type: ignore[attr-defined]
@@ -202,24 +209,15 @@ class _RgwHandler(BaseHTTPRequestHandler):
                     assembled = b"".join(up[p] for p in sorted(up))
                     self._store()[(bucket, key)] = assembled
             if up is None:
-                self.send_response(404)
-                self.send_header("Content-Length", "0")
-                self.end_headers()
+                self._reply(404)
                 return
             root = ET.Element("CompleteMultipartUploadResult")
             ET.SubElement(root, "Bucket").text = bucket
             ET.SubElement(root, "Key").text = key
             ET.SubElement(root, "ETag").text = f'"{len(assembled)}"'
-            out = ET.tostring(root, encoding="utf-8", xml_declaration=True)
-            self.send_response(200)
-            self.send_header("Content-Type", "application/xml")
-            self.send_header("Content-Length", str(len(out)))
-            self.end_headers()
-            self.wfile.write(out)
+            self._reply_xml(root)
             return
-        self.send_response(400)
-        self.send_header("Content-Length", "0")
-        self.end_headers()
+        self._reply(400)
 
     def do_DELETE(self):
         bucket, key, q = self._split()
@@ -229,14 +227,10 @@ class _RgwHandler(BaseHTTPRequestHandler):
         if "uploadId" in q:  # AbortMultipartUpload: discard buffered parts
             with self.server.lock:  # type: ignore[attr-defined]
                 existed = self._uploads().pop((bucket, key, q["uploadId"]), None)
-            self.send_response(204 if existed is not None else 404)
-            self.send_header("Content-Length", "0")
-            self.end_headers()
+            self._reply(204 if existed is not None else 404)
             return
         existed = self._store().pop((bucket, key), None)
-        self.send_response(204 if existed is not None else 404)
-        self.send_header("Content-Length", "0")
-        self.end_headers()
+        self._reply(204 if existed is not None else 404)
 
     def do_HEAD(self):
         if not self._authorized():
@@ -245,14 +239,9 @@ class _RgwHandler(BaseHTTPRequestHandler):
         bucket, key, _ = self._split()
         body = self._store().get((bucket, key))
         if body is None:
-            self.send_response(404)
-            self.send_header("Content-Length", "0")
-            self.end_headers()
+            self._reply(404)
             return
-        self.send_response(200)
-        self.send_header("Content-Length", str(len(body)))
-        self.send_header("Accept-Ranges", "bytes")
-        self.end_headers()
+        self._reply(200, body, _ACCEPT_RANGES)
 
     def _authorized(self, payload: bytes = b"") -> bool:
         """SigV4 gate: when the server holds credentials, every request
@@ -280,9 +269,7 @@ class _RgwHandler(BaseHTTPRequestHandler):
         )
 
     def _deny(self):
-        self.send_response(403)
-        self.send_header("Content-Length", "0")
-        self.end_headers()
+        self._reply(403)
 
     def do_GET(self):
         with self.server.lock:  # type: ignore[attr-defined]
@@ -291,9 +278,7 @@ class _RgwHandler(BaseHTTPRequestHandler):
                 # test-only failure injection: transient 503, as a loaded RGW
                 self.server.fail_next_count -= 1  # type: ignore[attr-defined]
         if inject:
-            self.send_response(503)
-            self.send_header("Content-Length", "0")
-            self.end_headers()
+            self._reply(503)
             return
         if not self._authorized():
             self._deny()
@@ -304,34 +289,24 @@ class _RgwHandler(BaseHTTPRequestHandler):
             return
         body = self._store().get((bucket, key))
         if body is None:
-            self.send_response(404)
-            self.send_header("Content-Length", "0")
-            self.end_headers()
+            self._reply(404)
             return
         rng = self.headers.get("Range")
         span = _parse_range(rng, len(body)) if rng else None
         if span == "unsatisfiable":
-            self.send_response(416)
-            self.send_header("Content-Range", f"bytes */{len(body)}")
-            self.send_header("Content-Length", "0")
-            self.end_headers()
+            self._reply(416, headers=[("Content-Range", f"bytes */{len(body)}")])
             return
         if isinstance(span, tuple):
             lo, hi = span
-            part = body[lo : hi + 1]
-            self.send_response(206)
-            self.send_header("Content-Range", f"bytes {lo}-{hi}/{len(body)}")
-            self.send_header("Content-Length", str(len(part)))
-            self.end_headers()
-            self.wfile.write(part)
+            self._reply(
+                206,
+                body[lo : hi + 1],
+                [("Content-Range", f"bytes {lo}-{hi}/{len(body)}")],
+            )
             return
         # span is None: no Range header, or a malformed one (RFC 7233 §3.1:
         # a recipient MAY ignore an invalid Range and answer 200 full)
-        self.send_response(200)
-        self.send_header("Content-Length", str(len(body)))
-        self.send_header("Accept-Ranges", "bytes")
-        self.end_headers()
-        self.wfile.write(body)
+        self._reply(200, body, _ACCEPT_RANGES)
 
     def _list_bucket(self, bucket: str, q: dict):
         """ListObjectsV2 with real pagination: results come back in pages of
@@ -369,12 +344,11 @@ class _RgwHandler(BaseHTTPRequestHandler):
             ET.SubElement(c, "Key").text = k
             ET.SubElement(c, "Size").text = str(size)
         ET.SubElement(root, "KeyCount").text = str(len(emitted))
+        self._reply_xml(root)
+
+    def _reply_xml(self, root: ET.Element) -> None:
         out = ET.tostring(root, encoding="utf-8", xml_declaration=True)
-        self.send_response(200)
-        self.send_header("Content-Type", "application/xml")
-        self.send_header("Content-Length", str(len(out)))
-        self.end_headers()
-        self.wfile.write(out)
+        self._reply(200, out, [("Content-Type", "application/xml")])
 
 
 class LoopbackRgw:
@@ -423,12 +397,7 @@ class LoopbackRgw:
         round-trip exercises PUT framing too — signed when the server
         enforces SigV4."""
         url = f"{self.endpoint}/{bucket}/{urllib.parse.quote(key)}"
-        req = urllib.request.Request(
-            url,
-            data=data,
-            method="PUT",
-            headers=_signed_headers("PUT", url, data, self.credentials),
-        )
+        req = _signed_request("PUT", url, self.credentials, data)
         with urllib.request.urlopen(req, timeout=30) as resp:
             if resp.status != 200:
                 raise IOError(f"PUT {key} -> {resp.status}")
@@ -437,35 +406,34 @@ class LoopbackRgw:
 # --------------------------------------------------------------------------
 # Client helpers (used by both planner and partition readers)
 # --------------------------------------------------------------------------
-def _signed_headers(
+def _signed_request(
     method: str,
     url: str,
-    payload: bytes,
     creds: tuple[str, str] | None,
+    data: bytes | None = None,
     extra: dict[str, str] | None = None,
-) -> dict[str, str]:
-    """SigV4 headers for one request, merged with ``extra`` (e.g. Range,
-    which S3 includes in the signed set). Anonymous mode returns just
-    ``extra``. The timestamp is stamped here — sources/sigv4.py stays a
-    pure function of its inputs. urllib supplies the Host header from the
-    URL; the signed 'host' value is identical, so it is dropped from the
-    outgoing set."""
-    if not creds:
-        return dict(extra or {})
-    from hadoop_fs_ceph_spark.sources.sigv4 import sign_request
+) -> urllib.request.Request:
+    """One request carrying ``data`` (None: no body), with SigV4 headers
+    merged with ``extra`` (e.g. Range, which S3 includes in the signed set).
+    Anonymous mode sends just ``extra``. The timestamp is stamped here —
+    sources/sigv4.py stays a pure function of its inputs. urllib supplies
+    the Host header from the URL; the signed 'host' value is identical, so
+    it is dropped from the outgoing set."""
+    headers = dict(extra or {})
+    if creds:
+        from hadoop_fs_ceph_spark.sources.sigv4 import sign_request
 
-    amzdate = time.strftime("%Y%m%dT%H%M%SZ", time.gmtime())
-    headers = sign_request(
-        method,
-        url,
-        access_key=creds[0],
-        secret_key=creds[1],
-        amzdate=amzdate,
-        payload=payload,
-        extra_headers=extra,
-    )
-    headers.pop("host", None)
-    return headers
+        headers = sign_request(
+            method,
+            url,
+            access_key=creds[0],
+            secret_key=creds[1],
+            amzdate=time.strftime("%Y%m%dT%H%M%SZ", time.gmtime()),
+            payload=data or b"",
+            extra_headers=extra,
+        )
+        headers.pop("host", None)
+    return urllib.request.Request(url, data=data, method=method, headers=headers)
 
 
 _IDEMPOTENT_METHODS = frozenset({"GET", "HEAD", "PUT", "DELETE"})
@@ -517,10 +485,7 @@ def list_objects(
         url = f"{endpoint}/{bucket}?list-type=2&prefix={urllib.parse.quote(prefix)}"
         if token:
             url += f"&continuation-token={urllib.parse.quote(token)}"
-        req = urllib.request.Request(
-            url, headers=_signed_headers("GET", url, b"", creds)
-        )
-        with _open_with_retry(req) as resp:
+        with _open_with_retry(_signed_request("GET", url, creds)) as resp:
             root = ET.fromstring(resp.read())
         for c in root.findall("Contents"):
             out.append((c.findtext("Key"), int(c.findtext("Size"))))
@@ -549,11 +514,8 @@ def get_range(
         return b""
     url = f"{endpoint}/{bucket}/{urllib.parse.quote(key)}"
     rng = {"Range": f"bytes={start}-{start + length - 1}"}
-    req = urllib.request.Request(
-        url, headers=_signed_headers("GET", url, b"", creds, extra=rng)
-    )
     try:
-        with _open_with_retry(req) as resp:
+        with _open_with_retry(_signed_request("GET", url, creds, extra=rng)) as resp:
             if resp.status not in (200, 206):
                 raise IOError(f"GET {key} range -> {resp.status}")
             return resp.read()
@@ -585,10 +547,7 @@ def multipart_put(
     if part_size <= 0:
         raise ValueError(f"part_size must be positive, got {part_size}")
     base = f"{endpoint}/{bucket}/{urllib.parse.quote(key)}"
-    url = base + "?uploads"
-    req = urllib.request.Request(
-        url, data=b"", method="POST", headers=_signed_headers("POST", url, b"", creds)
-    )
+    req = _signed_request("POST", base + "?uploads", creds, b"")
     with _open_with_retry(req) as resp:
         uid = ET.fromstring(resp.read()).findtext("UploadId")
     if not uid:
@@ -597,21 +556,12 @@ def multipart_put(
     for i, start in enumerate(range(0, len(data), part_size), start=1):
         chunk = data[start : start + part_size]
         purl = f"{base}?partNumber={i}&uploadId={urllib.parse.quote(uid)}"
-        req = urllib.request.Request(
-            purl,
-            data=chunk,
-            method="PUT",
-            headers=_signed_headers("PUT", purl, chunk, creds),
-        )
-        with _open_with_retry(req) as resp:
+        with _open_with_retry(_signed_request("PUT", purl, creds, chunk)) as resp:
             if resp.status != 200:
                 raise IOError(f"UploadPart {i} -> {resp.status}")
         n = i
     curl = f"{base}?uploadId={urllib.parse.quote(uid)}"
-    req = urllib.request.Request(
-        curl, data=b"", method="POST", headers=_signed_headers("POST", curl, b"", creds)
-    )
-    with _open_with_retry(req) as resp:
+    with _open_with_retry(_signed_request("POST", curl, creds, b"")) as resp:
         if resp.status != 200:
             raise IOError(f"CompleteMultipartUpload -> {resp.status}")
     return n
@@ -628,11 +578,8 @@ def abort_multipart(
     task-abort path of a distributed writer (a failed executor's partial
     upload must never become visible)."""
     url = f"{endpoint}/{bucket}/{urllib.parse.quote(key)}?uploadId={urllib.parse.quote(upload_id)}"
-    req = urllib.request.Request(
-        url, method="DELETE", headers=_signed_headers("DELETE", url, b"", creds)
-    )
     try:
-        with _open_with_retry(req) as resp:
+        with _open_with_retry(_signed_request("DELETE", url, creds)) as resp:
             if resp.status not in (200, 204):
                 raise IOError(f"AbortMultipartUpload -> {resp.status}")
     except urllib.error.HTTPError as e:
@@ -656,8 +603,6 @@ class _ObjectBlock(InputPartition):
 
 class RgwHttpReader(DataSourceReader):
     def __init__(self, schema: StructType, options: dict):
-        from hadoop_fs_ceph_spark.sources.pydatasource import _parser_for
-
         self.schema = schema
         self.endpoint = options.get("endpoint")
         self.bucket = options.get("bucket")
@@ -670,85 +615,29 @@ class RgwHttpReader(DataSourceReader):
         # conf delegation (fs.s3a.access.key / fs.s3a.secret.key analogs)
         ak, sk = options.get("access.key"), options.get("secret.key")
         self.creds = (ak, sk) if ak and sk else None
-        self._parser_for = _parser_for
 
     def partitions(self) -> Sequence[InputPartition]:
-        if self.blocksize <= 0:
-            raise ValueError(f"virtual.blocksize must be positive, got {self.blocksize}")
-        parts = []
-        for key, size in list_objects(
-            self.endpoint, self.bucket, self.prefix, creds=self.creds
-        ):
-            for start in range(0, size, self.blocksize):
-                parts.append(
-                    _ObjectBlock(key=key, start=start, end=min(start + self.blocksize, size), size=size)
-                )
-        return parts
+        listing = list_objects(self.endpoint, self.bucket, self.prefix, creds=self.creds)
+        sizes = dict(listing)
+        return [
+            _ObjectBlock(key=k, start=s, end=e, size=sizes[k])
+            for k, s, e in plan_virtual_blocks(listing, self.blocksize)
+        ]
 
     def read(self, partition: _ObjectBlock) -> Iterator[tuple]:
-        """Hadoop line-split contract over ranged GETs: this split yields
-        exactly the lines whose starting offset p satisfies
-        ``start < p <= end`` (split 0 additionally owns p == 0). The first
-        fetch covers the block itself; a line straddling ``end`` is
-        completed with bounded continuation fetches.
+        """The lines this split owns (``split_lines``), each pread a ranged
+        GET: one for the block, then continuation GETs for a straddling
+        line."""
+        ep, bk, key, creds = self.endpoint, self.bucket, partition.key, self.creds
 
-        The scan tracks an offset ``pos`` into an immutable ``bytes`` buffer
-        (``buf.find(b"\\n", pos)``) instead of copying/shifting a bytearray
-        per line — O(block) total, so a 32 MiB block of short CSV lines
-        costs one pass, not terabytes of memcpy (ADVICE r7, medium)."""
-        parsers = [self._parser_for(f.dataType) for f in self.schema.fields]
-        n = len(parsers)
-        sep = self.sep.encode()
-        ep, bk, key = self.endpoint, self.bucket, partition.key
-        # +1 byte past end: lets us own a line starting exactly at `end`
-        buf = get_range(
-            ep, bk, key, partition.start,
-            partition.end - partition.start + 1, creds=self.creds,
-        )
-        pos = 0  # scan offset: buf[pos] is the first unconsumed byte
-        abs_base = partition.start  # absolute offset of buf[0]
-        fetched_to = partition.start + len(buf)  # next absolute byte to fetch
+        def pread(offset: int, length: int) -> bytes:
+            # the module-level get_range is looked up per call, so a caller
+            # that replaces it (to count or time GETs) sees every request
+            return get_range(ep, bk, key, offset, length, creds=creds)
 
-        if partition.start > 0:
-            i = buf.find(b"\n")
-            if i < 0:
-                return  # block is interior to one line owned by the previous split
-            pos = i + 1
-
-        while abs_base + pos <= partition.end:
-            j = buf.find(b"\n", pos)
-            while j < 0 and fetched_to < partition.size:
-                more = get_range(ep, bk, key, fetched_to, CONTINUATION_BYTES, creds=self.creds)
-                if not more:
-                    break
-                fetched_to += len(more)
-                # drop the consumed prefix before concatenating so the copy
-                # is bounded by the unconsumed straddling tail, not the block
-                if pos:
-                    abs_base += pos
-                    buf = buf[pos:]
-                    pos = 0
-                search_from = len(buf)
-                buf = buf + more
-                j = buf.find(b"\n", search_from)
-            if j < 0:  # final unterminated line
-                if pos >= len(buf):
-                    return
-                line = buf[pos:]
-                consumed = len(buf) - pos
-            else:
-                line = buf[pos:j]
-                consumed = j + 1 - pos
-            fields = line.rstrip(b"\r").split(sep)
-            if len(fields) != n:
-                raise ValueError(
-                    f"{key}@{abs_base + pos}: expected {n} fields, got {len(fields)}"
-                )
-            yield tuple(
-                None if not raw else parsers[i](raw.decode())
-                for i, raw in enumerate(fields)
-            )
-            pos += consumed
+        parsers = [_parser_for(f.dataType) for f in self.schema.fields]
+        lines = split_lines(pread, partition.start, partition.end, partition.size)
+        yield from decode_rows(lines, parsers, self.sep.encode())
 
 
 class RgwHttpDataSource(DataSource):

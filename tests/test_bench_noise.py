@@ -49,6 +49,12 @@ def test_prev_round_compact_picks_newest_matching_sf(tmp_path):
 
 def test_prev_round_compact_none_when_no_match(tmp_path):
     (tmp_path / "BENCH_r01.json").write_text(json.dumps(_artifact(0.01, {})))
+    # a tail holding the verbose line whole but no compact line: the
+    # verbose line has "queries" too, and must never be adopted
+    verbose = json.dumps({"queries": {"q1": 1.5}, "calib_probes": [[0.3, 0.1]]})
+    (tmp_path / "BENCH_r02.json").write_text(
+        json.dumps({"sf": 0.1, "tail": "noise\n" + verbose + "\n"})
+    )
     obj, name = _prev_round_compact(str(tmp_path), 0.1)
     assert obj is None and name is None
 

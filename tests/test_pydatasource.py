@@ -71,10 +71,8 @@ def test_sync_marker_deterministic_and_distinct():
 def test_plan_virtual_blocks_counts(tmp_path):
     f1 = tmp_path / "a.bin"
     f2 = tmp_path / "b.bin"
-    f1.write_bytes(b"x" * 1000)
-    f2.write_bytes(b"y" * 2501)
     for bs in (100, 999, 1000, 1001, 10**9):
-        plan = plan_virtual_blocks([str(f1), str(f2)], bs)
+        plan = plan_virtual_blocks([(str(f1), 1000), (str(f2), 2501)], bs)
         assert len(plan) == math.ceil(1000 / bs) + math.ceil(2501 / bs)
         # splits tile each file exactly: contiguous, non-overlapping, full cover
         for f, size in ((str(f1), 1000), (str(f2), 2501)):
@@ -92,7 +90,8 @@ def test_plan_skips_empty_and_hidden_files(tmp_path):
     (tmp_path / "empty.csv").write_bytes(b"")
     files = list_data_files(str(tmp_path))
     assert files == [str(tmp_path / "data.csv"), str(tmp_path / "empty.csv")]
-    assert plan_virtual_blocks(files, 10) == [(str(tmp_path / "data.csv"), 0, 2)]
+    sized = [(f, os.path.getsize(f)) for f in files]
+    assert plan_virtual_blocks(sized, 10) == [(str(tmp_path / "data.csv"), 0, 2)]
 
 
 # ---------------------------------------------------------------------------

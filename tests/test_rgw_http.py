@@ -7,10 +7,14 @@ test_pydatasource.py, but over the wire): reading the same objects at ANY
 ``virtual.blocksize`` must yield the same multiset of rows — every line
 read exactly once no matter where block boundaries fall, including inside
 a line, with straddling lines completed by bounded continuation fetches.
+The split tests run through both line-protocol sources (``rgw_http`` and
+``cephfs_like``), which share one planner and one framing function.
 """
 
+import os
 import urllib.error
 import urllib.request
+from types import SimpleNamespace
 
 import pytest
 from pyspark.sql.types import LongType, StringType, StructField, StructType
@@ -19,6 +23,8 @@ _ID_S_SCHEMA = StructType(
     [StructField("id", LongType()), StructField("s", StringType())]
 )
 
+import hadoop_fs_ceph_spark.sources.rgw_http as rgw_mod
+from hadoop_fs_ceph_spark.sources.pydatasource import CephFsLikeReader
 from hadoop_fs_ceph_spark.sources.rgw_http import (
     CONTINUATION_BYTES,
     LoopbackRgw,
@@ -148,61 +154,134 @@ def test_range_suffix_and_malformed_forms(rgw):
 
 
 # ---------------------------------------------------------------------------
-# Split exactness over ranged GETs (reader logic, no Spark session)
+# Split exactness through both line-protocol sources (reader logic, no Spark
+# session): rgw_http over ranged GETs and cephfs_like over os.pread share the
+# planner and the framing, so they must agree on rows AND on reads
 # ---------------------------------------------------------------------------
 
 
-def _read_all(rgw, blocksize):
-    reader = RgwHttpReader(
-        _ID_S_SCHEMA,
-        {
-            "endpoint": rgw.endpoint,
-            "bucket": "lake",
-            "prefix": "data/",
-            "virtual.blocksize": str(blocksize),
-        },
-    )
-    rows = []
-    for part in reader.partitions():
-        rows.extend(reader.read(part))
-    return rows
+@pytest.fixture(params=["rgw_http", "cephfs_like"])
+def lines_source(request, tmp_path, monkeypatch):
+    """``put(name, data)`` stores one object; ``read_all(blocksize)`` plans
+    and reads every split with the source's own reader and returns
+    ``(rows, splits, reads)``. Reads are counted the way the benchmark's
+    traced run counts GETs: by replacing ``rgw_http.get_range`` (or
+    ``os.pread``) after the reader is built and its splits are planned, so
+    the reader must look the function up at call time."""
+    if request.param == "rgw_http":
+        server = request.getfixturevalue("rgw")
+        io_fn = (rgw_mod, "get_range")
+
+        def put(name, data):
+            server.put("lake", "data/" + name, data)
+
+        def reader(bs):
+            return RgwHttpReader(
+                _ID_S_SCHEMA,
+                {
+                    "endpoint": server.endpoint,
+                    "bucket": "lake",
+                    "prefix": "data/",
+                    "virtual.blocksize": str(bs),
+                },
+            )
+
+    else:
+        d = tmp_path / "data"
+        d.mkdir()
+        io_fn = (os, "pread")
+
+        def put(name, data):
+            (d / name).write_bytes(data)
+
+        def reader(bs):
+            return CephFsLikeReader(
+                _ID_S_SCHEMA, {"path": str(d), "virtual.blocksize": str(bs)}
+            )
+
+    def read_all(bs):
+        r = reader(bs)
+        parts = r.partitions()
+        real, reads = getattr(*io_fn), []
+
+        def counted(*a, **kw):
+            reads.append(a)
+            return real(*a, **kw)
+
+        monkeypatch.setattr(*io_fn, counted)
+        try:
+            rows = [row for part in parts for row in r.read(part)]
+        finally:
+            monkeypatch.setattr(*io_fn, real)
+        return rows, len(parts), len(reads)
+
+    return SimpleNamespace(put=put, read_all=read_all)
 
 
-def test_split_exactness_any_blocksize(rgw):
+def _expected_reads(payloads, bs):
+    """Reads the split contract needs: one per split covering
+    ``[start, end + 1)``, plus ``CONTINUATION_BYTES`` reads until the
+    split's last owned line (the last line starting in ``(start, end]``,
+    or at 0 for split 0) is terminated."""
+    n = 0
+    for data in payloads:
+        size = len(data)
+        starts = [p for p in range(size) if p == 0 or data[p - 1] == ord("\n")]
+        for start in range(0, size, bs):
+            end = min(start + bs, size)
+            n += 1
+            owned = [p for p in starts if start < p <= end or p == start == 0]
+            if not owned:
+                continue
+            t = data.find(b"\n", owned[-1])
+            short = (size if t < 0 else t + 1) - min(end + 1, size)
+            n += max(0, -(-short // CONTINUATION_BYTES))
+    return n
+
+
+def test_split_exactness_any_blocksize(lines_source):
     # ragged line lengths so boundaries fall mid-line for most blocksizes
     # (i % 37 == 0 rows carry an EMPTY field: the line protocol maps it to
     # NULL, same convention as cephfs_like)
     lines = [f"{i},{'x' * (i % 37)}" for i in range(500)]
     payload = ("\n".join(lines) + "\n").encode()
-    rgw.put("lake", "data/part-0.csv", payload)
-    rgw.put("lake", "data/part-1.csv", payload.rstrip(b"\n"))  # no final \n
+    lines_source.put("part-0.csv", payload)
+    lines_source.put("part-1.csv", payload.rstrip(b"\n"))  # no final \n
     expect = sorted(
         [(i, ("x" * (i % 37)) or None) for i in range(500)] * 2,
         key=lambda r: (r[0], r[1] or ""),
     )
     for bs in (7, 64, 1000, len(payload), 10 * len(payload)):
-        got = sorted(_read_all(rgw, bs), key=lambda r: (r[0], r[1] or ""))
+        rows, splits, reads = lines_source.read_all(bs)
+        got = sorted(rows, key=lambda r: (r[0], r[1] or ""))
         assert got == expect, f"blocksize={bs}"
+        assert reads == _expected_reads([payload, payload.rstrip(b"\n")], bs)
+        if bs >= len(payload):  # one split per object: one read each
+            assert splits == reads == 2
 
 
-def test_straddling_line_continuation_fetches(rgw):
+def test_straddling_line_continuation_fetches(lines_source):
     # one line far longer than CONTINUATION_BYTES forces multiple
-    # continuation ranged GETs to complete the straddling read
+    # continuation reads to complete the straddling read
     big = "y" * (3 * CONTINUATION_BYTES)
     payload = ("1,short\n2," + big + "\n3,tail\n").encode()
-    rgw.put("lake", "data/big.csv", payload)
-    rows = sorted(_read_all(rgw, 16))
-    assert rows == [(1, "short"), (2, big), (3, "tail")]
+    lines_source.put("big.csv", payload)
+    rows, splits, reads = lines_source.read_all(16)
+    assert sorted(rows) == [(1, "short"), (2, big), (3, "tail")]
+    assert reads == _expected_reads([payload], 16)
+    assert reads - splits >= 3
 
 
-def test_block_interior_to_one_line_yields_nothing(rgw):
+def test_block_interior_to_one_line_yields_nothing(lines_source):
     # blocksize smaller than the line: interior blocks contain no \n and
     # must yield zero rows (the line belongs to the split that owns its
     # starting offset)
     payload = b"7," + b"z" * 200 + b"\n"
-    rgw.put("lake", "data/one.csv", payload)
-    rows = _read_all(rgw, 10)
+    lines_source.put("one.csv", payload)
+    rows, splits, reads = lines_source.read_all(10)
     assert rows == [(7, "z" * 200)]
+    # one read per split; only split 0 continues, to finish its line
+    assert splits == 21 and reads == splits + 1
 
 
 def test_partition_count_tracks_blocksize(rgw):
@@ -471,8 +550,6 @@ def test_retry_is_restricted_to_idempotent_methods(monkeypatch):
     a successful upload into a client failure. Idempotent methods keep
     the full retry budget."""
     import io
-
-    import hadoop_fs_ceph_spark.sources.rgw_http as rgw_mod
 
     calls = {"n": 0}
 
