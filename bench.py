@@ -201,7 +201,8 @@ def _compact_line(
     * ``common`` — like-for-like subtotal over the heads present in BOTH
       this round and the previous artifact (VERDICT r12 item 2: a head-set
       change must never masquerade as a total regression; ``value`` keeps
-      the full-set total).
+      the full-set total), raw (``now``/``prev``) and calibration-
+      normalized (``now_norm``/``prev_norm``).
     * ``s`` — per-query cold spreads, parallel to ``sorted(queries)``
       (feeds the next round's noise verdict).
     * ``e`` — per-query executor task-time (whole seconds, pass-1 cold,
@@ -234,6 +235,10 @@ def _compact_line(
             "n": len(common_names),
             "now": round(sum(timings[n] for n in common_names), 2),
             "prev": round(sum(pq[n]["cold"] for n in common_names), 2),
+            # the same pair in reference-host seconds, as the noise verdict
+            # compares them, so host drift does not read as a regression
+            "now_norm": round(sum(timings[n] for n in common_names) * scale, 2),
+            "prev_norm": round(sum(pq[n]["normalized"] for n in common_names), 2),
         },
         "total_warm": round(sum(warm.values()), 3),
         "calib_spark_sec": calib_spark,

@@ -23,8 +23,18 @@ PySpark implementation and an ANSI-SQL oracle string for differential
 checking against DuckDB.
 """
 
-from hadoop_fs_ceph_spark.session import get_spark
-from hadoop_fs_ceph_spark.catalog import Catalog
+import importlib
 
 __all__ = ["get_spark", "Catalog"]
 __version__ = "0.1.0"
+
+# Resolved on first use (PEP 562), so importing a submodule that needs no
+# pyspark — ``worker_daemon``, which must run before pyspark is imported —
+# imports none.
+_LAZY = {"get_spark": "hadoop_fs_ceph_spark.session", "Catalog": "hadoop_fs_ceph_spark.catalog"}
+
+
+def __getattr__(name: str):
+    if name not in _LAZY:
+        raise AttributeError(f"module {__name__!r} has no attribute {name!r}")
+    return getattr(importlib.import_module(_LAZY[name]), name)

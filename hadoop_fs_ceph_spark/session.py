@@ -33,6 +33,18 @@ def _cpus() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
 
 
+def _worker_daemon_conf() -> dict[str, str]:
+    """Start Python workers from ``worker_daemon`` (the installed pyspark
+    in place of Spark's zipped copy) when a worker can import this package:
+    from the working directory it inherits, which ``python -m`` puts on
+    ``sys.path``, or from ``PYTHONPATH``.  Otherwise Spark's own daemon."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    seen = [os.getcwd(), *os.environ.get("PYTHONPATH", "").split(os.pathsep)]
+    if root not in {os.path.abspath(p) for p in seen if p}:
+        return {}
+    return {"spark.python.daemon.module": "hadoop_fs_ceph_spark.worker_daemon"}
+
+
 def s3a_storage_conf(
     endpoint: str,
     access_key: str | None = None,
@@ -126,7 +138,7 @@ def get_spark(
     )
     for k, v in (storage_conf or {}).items():
         builder = builder.config(f"spark.hadoop.{k}", v)
-    for k, v in (extra_conf or {}).items():
+    for k, v in {**_worker_daemon_conf(), **(extra_conf or {})}.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     if storage_conf:

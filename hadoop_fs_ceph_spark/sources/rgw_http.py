@@ -25,10 +25,10 @@ server, all stdlib:
   the store has no blocks; the connector invents them for parallelism),
   and serve each partition with ranged GETs honoring the Hadoop
   line-split contract (a record crossing a block boundary is read exactly
-  once). Planning, line framing and row decoding are the ones
-  ``cephfs_like`` uses — ``plan_virtual_blocks``, ``split_lines`` and
-  ``decode_rows`` in ``pydatasource.py``, whose docstring states the two
-  ownership rules; only the pread differs (a ranged GET here).
+  once). Planning, line framing and decoding are the ones ``cephfs_like``
+  uses — ``block_partitions``, ``split_lines`` and ``decode_batches``
+  (Arrow record batches) in ``pydatasource.py``, whose docstring states
+  the two ownership rules; only the pread differs (a ranged GET here).
 
 100 TB posture: planning is one ListObjectsV2 pass (O(#objects) driver
 metadata, paginated in real RGW); every task fetches only its own
@@ -54,10 +54,10 @@ import urllib.error
 import urllib.parse
 import urllib.request
 import xml.etree.ElementTree as ET
-from dataclasses import dataclass
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from typing import Iterator, Sequence
 
+import pyarrow as pa
 from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 from pyspark.sql.types import StructType
 
@@ -66,9 +66,9 @@ from pyspark.sql.types import StructType
 from hadoop_fs_ceph_spark.sources.pydatasource import (  # noqa: F401
     CONTINUATION_BYTES,
     DEFAULT_BLOCKSIZE,
-    _parser_for,
-    decode_rows,
-    plan_virtual_blocks,
+    _BlockPartition,
+    block_partitions,
+    decode_batches,
     split_lines,
 )
 
@@ -593,14 +593,6 @@ def abort_multipart(
 # --------------------------------------------------------------------------
 # The rgw_http DataSource
 # --------------------------------------------------------------------------
-@dataclass
-class _ObjectBlock(InputPartition):
-    key: str
-    start: int
-    end: int  # exclusive
-    size: int
-
-
 class RgwHttpReader(DataSourceReader):
     def __init__(self, schema: StructType, options: dict):
         self.schema = schema
@@ -618,26 +610,21 @@ class RgwHttpReader(DataSourceReader):
 
     def partitions(self) -> Sequence[InputPartition]:
         listing = list_objects(self.endpoint, self.bucket, self.prefix, creds=self.creds)
-        sizes = dict(listing)
-        return [
-            _ObjectBlock(key=k, start=s, end=e, size=sizes[k])
-            for k, s, e in plan_virtual_blocks(listing, self.blocksize)
-        ]
+        return block_partitions(listing, self.blocksize)
 
-    def read(self, partition: _ObjectBlock) -> Iterator[tuple]:
+    def read(self, partition: _BlockPartition) -> Iterator[pa.RecordBatch]:
         """The lines this split owns (``split_lines``), each pread a ranged
         GET: one for the block, then continuation GETs for a straddling
-        line."""
-        ep, bk, key, creds = self.endpoint, self.bucket, partition.key, self.creds
+        line; decoded into record batches (``decode_batches``)."""
+        ep, bk, key, creds = self.endpoint, self.bucket, partition.name, self.creds
 
         def pread(offset: int, length: int) -> bytes:
             # the module-level get_range is looked up per call, so a caller
             # that replaces it (to count or time GETs) sees every request
             return get_range(ep, bk, key, offset, length, creds=creds)
 
-        parsers = [_parser_for(f.dataType) for f in self.schema.fields]
         lines = split_lines(pread, partition.start, partition.end, partition.size)
-        yield from decode_rows(lines, parsers, self.sep.encode())
+        yield from decode_batches(lines, self.schema, self.sep)
 
 
 class RgwHttpDataSource(DataSource):

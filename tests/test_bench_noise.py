@@ -149,8 +149,28 @@ def test_compact_line_common_subtotal_vs_prev():
         timings, **_compact_args(timings, prev=prev, prev_name="BENCH_r12.json")
     )
     obj = json.loads(line)
-    assert obj["common"] == {"n": 1, "now": 1.2, "prev": 1.0}
+    assert obj["common"] == {"n": 1, "now": 1.2, "prev": 1.0, "now_norm": 1.2, "prev_norm": 1.0}
     assert obj["value"] > obj["common"]["now"]  # full set still reported
+
+
+def test_compact_line_common_subtotal_normalized_across_hosts():
+    """ADVICE low: on a cross-host round the raw common pair can read as a
+    regression that is host drift; the normalized pair puts both rounds in
+    reference-host seconds. The queries dict stays raw."""
+    prev = {
+        "queries": {"alpha": 1.0, "beta": 2.0},
+        "s": [0.1, 0.1],
+        "calib_spark_sec": 0.57,  # the previous host ran at half speed
+        "calib_ref": 0.285,
+    }
+    timings = {"alpha": 1.4, "beta": 2.6}
+    line = _compact_line(
+        timings,
+        **_compact_args(timings, prev=prev, prev_name="BENCH_r13.json", scale=0.75),
+    )
+    obj = json.loads(line)
+    assert obj["common"] == {"n": 2, "now": 4.0, "prev": 3.0, "now_norm": 3.0, "prev_norm": 1.5}
+    assert obj["queries"] == {"alpha": 1.4, "beta": 2.6}
 
 
 def test_compact_line_fits_budget_for_full_head_set():

@@ -12,9 +12,31 @@ connector's virtual blocks + positioned reads exist to serve
 import io
 import math
 import os
+import struct
+import time
+from datetime import date, datetime, timezone
+from decimal import ROUND_HALF_EVEN, Context, Decimal
+from unittest import mock
 
 import pytest
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
+from pyspark.sql.datasource import EqualTo, GreaterThan, In, IsNull, Not
+from pyspark.sql.types import (
+    BooleanType,
+    DateType,
+    DecimalType,
+    DoubleType,
+    FloatType,
+    IntegerType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+    TimestampNTZType,
+    TimestampType,
+)
 
 from hadoop_fs_ceph_spark.sources.avro_lite import (
     _Cursor,
@@ -24,9 +46,14 @@ from hadoop_fs_ceph_spark.sources.avro_lite import (
     write_avro,
     write_container,
 )
+from hadoop_fs_ceph_spark.sources import pydatasource
 from hadoop_fs_ceph_spark.sources.pydatasource import (
+    _compile_pushed_filter,
+    batch_rows,
+    decode_batches,
     plan_virtual_blocks,
     register_python_sources,
+    split_lines,
 )
 
 # ---------------------------------------------------------------------------
@@ -92,6 +119,247 @@ def test_plan_skips_empty_and_hidden_files(tmp_path):
     assert files == [str(tmp_path / "data.csv"), str(tmp_path / "empty.csv")]
     sized = [(f, os.path.getsize(f)) for f in files]
     assert plan_virtual_blocks(sized, 10) == [(str(tmp_path / "data.csv"), 0, 2)]
+
+
+# ---------------------------------------------------------------------------
+# the line decoder (no spark)
+# ---------------------------------------------------------------------------
+
+
+def _schema(*types):
+    return StructType([StructField(f"c{i}", t) for i, t in enumerate(types)])
+
+
+def _decode(lines, *types, sep=",", pushed=()):
+    return list(batch_rows(decode_batches(lines, _schema(*types), sep, pushed)))
+
+
+_ALL_TYPES = (
+    LongType(), IntegerType(), DoubleType(), FloatType(), DecimalType(12, 2),
+    BooleanType(), TimestampType(), TimestampNTZType(), DateType(), StringType(),
+)
+
+
+def test_decode_batches_match_to_arrow_schema():
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    line = b"1,2,0.5,0.25,1.50,true,2024-01-01T00:00:00,2024-01-01T00:00:00,2024-01-01,x"
+    (batch,) = decode_batches([line], _schema(*_ALL_TYPES), ",")
+    assert batch.schema == to_arrow_schema(_schema(*_ALL_TYPES))
+
+
+def test_decode_empty_field_is_null_for_every_type():
+    assert _decode([b",,,,,,,,,"], *_ALL_TYPES) == [(None,) * len(_ALL_TYPES)]
+    # one column: an empty line is one NULL row, wherever it stands
+    assert _decode([b"", b"a", b""], StringType()) == [(None,), ("a",), (None,)]
+
+
+def test_decode_null_spellings_stay_strings():
+    lines = [b"NULL", b"NA", b"nan", b"None", b"null"]
+    assert _decode(lines, StringType()) == [(s.decode(),) for s in lines]
+    # nan is a double, not a NULL
+    (x,) = _decode([b"nan"], DoubleType())[0]
+    assert x != x
+
+
+def test_decode_bool_true_only_for_exact_true():
+    lines = [b"true", b"True", b"TRUE", b"1", b"yes", b"false", b""]
+    assert _decode(lines, BooleanType()) == [
+        (True,), (False,), (False,), (False,), (False,), (False,), (None,),
+    ]
+
+
+@pytest.fixture
+def kolkata(monkeypatch):
+    """The worker's local zone set to UTC+05:30 for the test."""
+    monkeypatch.setenv("TZ", "Asia/Kolkata")
+    time.tzset()
+    yield
+    monkeypatch.undo()
+    time.tzset()
+
+
+def test_decode_timestamp_is_local_wall_time_taken_to_utc(kolkata):
+    lines = [b"2024-01-01T05:30:00", b"2024-01-01T05:30:00Z", b"2024-01-01", b""]
+    utc = datetime(2024, 1, 1, tzinfo=timezone.utc)
+    got = _decode(lines, TimestampType())
+    assert got == [(utc,), (utc,), (datetime(2023, 12, 31, 18, 30, tzinfo=timezone.utc),), (None,)]
+    # exactly what Spark's converter made of the naive datetime before
+    naive = datetime.fromisoformat("2024-01-01T05:30:00")
+    assert got[0][0] == naive.astimezone(timezone.utc)
+
+
+def test_decode_timestamp_ntz_date_decimal(kolkata):
+    got = _decode(
+        [b"2024-02-29T23:59:59.123456Z,2024-02-29,1.235", b"1996-01-02,1996-01-02,1.245",
+         b"2000-01-01 10:00,2000-01-01,-1.245", b"2000-01-01,2000-01-01,nan"],
+        TimestampNTZType(), DateType(), DecimalType(12, 2),
+    )
+    assert got == [
+        (datetime(2024, 2, 29, 23, 59, 59, 123456), date(2024, 2, 29), Decimal("1.24")),
+        (datetime(1996, 1, 2), date(1996, 1, 2), Decimal("1.24")),  # HALF_EVEN
+        (datetime(2000, 1, 1, 10), date(2000, 1, 1), Decimal("-1.24")),
+        (datetime(2000, 1, 1), date(2000, 1, 1), None),  # a NaN decimal is NULL
+    ]
+
+
+def test_decode_wrong_field_count_quotes_the_line():
+    with pytest.raises(ValueError, match=r"expected 2 fields, got 3 in line b'1,a,b'"):
+        _decode([b"0,x", b"1,a,b"], LongType(), StringType())
+    with pytest.raises(ValueError, match=r"expected 2 fields, got 1 in line b''"):
+        _decode([b"0,x", b""], LongType(), StringType())
+
+
+def test_decode_carriage_returns():
+    # a CRLF line loses its \r; a \r anywhere else is refused, not split
+    assert _decode([b"1,a\r", b"2,b"], LongType(), StringType()) == [(1, "a"), (2, "b")]
+    with pytest.raises(ValueError, match="carriage return inside line"):
+        _decode([b"1,a\rb"], LongType(), StringType())
+
+
+def test_decode_reads_one_batch_of_lines_at_a_time():
+    """Decoding is lazy: the first batch is out after ``BATCH_ROWS`` lines,
+    so a task holds its block plus one batch, not every row it owns."""
+    pulled = []
+
+    def lines():
+        for i in range(25):
+            pulled.append(i)
+            yield b"%d" % i
+
+    with mock.patch.object(pydatasource, "BATCH_ROWS", 10):
+        batches = decode_batches(lines(), _schema(LongType()), ",")
+        assert next(batches).num_rows == 10 and len(pulled) == 10
+        assert [b.num_rows for b in batches] == [10, 5]
+
+
+def test_pushed_masks_follow_sql_null_rules():
+    schema = _schema(LongType(), StringType())
+    lines = [b"1,a", b"2,", b",b", b"3,c"]
+
+    def keep(flt):
+        compiled = _compile_pushed_filter(flt, schema)
+        assert compiled is not None
+        return _decode(lines, LongType(), StringType(), pushed=[compiled])
+
+    assert keep(GreaterThan(("c0",), 1)) == [(2, None), (3, "c")]
+    assert keep(Not(EqualTo(("c1",), "a"))) == [(None, "b"), (3, "c")]
+    assert keep(In(("c1",), ("a", "b"))) == [(1, "a"), (None, "b")]
+    assert keep(IsNull(("c1",))) == [(2, None)]
+    # a batch every row of which fails is not yielded
+    assert list(decode_batches(lines, schema, ",", [_compile_pushed_filter(
+        EqualTo(("c0",), 9), schema)])) == []
+    # DOUBLE columns and IN with a NULL literal stay with Spark
+    assert _compile_pushed_filter(GreaterThan(("c0",), 1.0), _schema(DoubleType())) is None
+    assert _compile_pushed_filter(In(("c1",), ("a", None)), schema) is None
+
+
+def _reference_rows(lines, types):
+    """The per-field row decoder the Arrow one replaced, followed by the
+    conversions Spark's Python-to-Arrow converter applied to its values:
+    the reference the decoder must equal."""
+
+    def value(s, t):
+        if not s:
+            return None
+        if isinstance(t, (LongType, IntegerType)):
+            return int(s)
+        if isinstance(t, DoubleType):
+            return float(s)
+        if isinstance(t, FloatType):
+            return struct.unpack("f", struct.pack("f", float(s)))[0]
+        if isinstance(t, DecimalType):
+            d = Decimal(s)
+            ctx = Context(prec=t.precision, rounding=ROUND_HALF_EVEN)
+            return None if d.is_nan() else d.quantize(Decimal(f"1E-{t.scale}"), context=ctx)
+        if isinstance(t, BooleanType):
+            return s == "true"
+        if isinstance(t, TimestampType):
+            return datetime.fromisoformat(s.rstrip("Z")).astimezone(timezone.utc)
+        if isinstance(t, TimestampNTZType):
+            return datetime.fromisoformat(s.rstrip("Z"))
+        if isinstance(t, DateType):
+            return date.fromisoformat(s)
+        return s
+
+    return [
+        tuple(value(raw.decode(), t) for raw, t in zip(line.split(b","), types))
+        for line in lines
+    ]
+
+
+def _nan_safe(rows):
+    return [tuple("NaN" if v != v else v for v in row) for row in rows]
+
+
+_WALL = st.datetimes(datetime(1901, 1, 1), datetime(2100, 1, 1))
+_VALUES = {
+    LongType(): st.integers(-(2**63), 2**63 - 1).map(str),
+    IntegerType(): st.integers(-(2**31), 2**31 - 1).map(str),
+    DoubleType(): st.floats().map(repr),
+    FloatType(): st.floats(width=32).map(repr),
+    DecimalType(12, 2): st.decimals(-(10**9), 10**9, places=4).map(str),
+    BooleanType(): st.sampled_from(["true", "false", "True", "1", "yes"]),
+    TimestampType(): st.tuples(_WALL, st.sampled_from(["", "Z"])).map(
+        lambda wz: wz[0].isoformat() + wz[1]
+    ),
+    TimestampNTZType(): _WALL.map(datetime.isoformat),
+    DateType(): st.dates(date(1, 1, 1), date(9999, 12, 31)).map(date.isoformat),
+    StringType(): st.text(
+        st.characters(blacklist_characters=",\n\r", blacklist_categories=("Cs",)), max_size=6
+    ),
+}
+
+
+@settings(
+    max_examples=80, deadline=None, suppress_health_check=[HealthCheck.function_scoped_fixture]
+)
+@given(data=st.data())
+def test_decode_equals_reference_row_decoder(kolkata, data):
+    """Every leaf type, NULLs included, decodes exactly as the per-field
+    row decoder did; TIMESTAMP walls are read in a non-UTC local zone."""
+    types = data.draw(st.lists(st.sampled_from(list(_VALUES)), min_size=1, max_size=4))
+    field = lambda t: st.one_of(st.just(""), _VALUES[t])  # noqa: E731
+    rows = data.draw(st.lists(st.tuples(*map(field, types)), min_size=1, max_size=12))
+    lines = [",".join(row).encode() for row in rows]
+    got = _decode(lines, *types)
+    assert _nan_safe(got) == _nan_safe(_reference_rows(lines, types))
+
+
+_FIELD = st.text(
+    st.characters(blacklist_characters=",\n\r", blacklist_categories=("Cs",)), max_size=6
+)
+
+
+@settings(max_examples=60, deadline=None)
+@given(
+    rows=st.lists(
+        st.tuples(st.one_of(st.none(), st.integers(-(2**63), 2**63 - 1)), _FIELD, st.booleans()),
+        max_size=40,
+    ),
+    blocksize=st.integers(1, 400),
+    final_newline=st.booleans(),
+    batch_rows_=st.integers(1, 7),
+)
+def test_decode_is_independent_of_split_layout(rows, blocksize, final_newline, batch_rows_):
+    """Decoding the lines of every split of any layout, in split order,
+    equals decoding the whole data as one split."""
+    data = b"\n".join(
+        b"%s,%s,%s" % (b"" if k is None else b"%d" % k, s.encode(), b"true" if f else b"x")
+        for k, s, f in rows
+    ) + (b"\n" if final_newline and rows else b"")
+    size = len(data)
+    pread = lambda offset, length: data[offset : offset + length]  # noqa: E731
+    types = (LongType(), StringType(), BooleanType())
+    with mock.patch.object(pydatasource, "BATCH_ROWS", batch_rows_):
+        whole = _decode(split_lines(pread, 0, size, size), *types)
+        split = [
+            row
+            for _, start, end in plan_virtual_blocks([("f", size)], blocksize)
+            for row in _decode(split_lines(pread, start, end, size), *types)
+        ]
+    assert split == whole
+    assert whole == [(k, s or None, f) for k, s, f in rows]
 
 
 # ---------------------------------------------------------------------------

@@ -24,7 +24,7 @@ _ID_S_SCHEMA = StructType(
 )
 
 import hadoop_fs_ceph_spark.sources.rgw_http as rgw_mod
-from hadoop_fs_ceph_spark.sources.pydatasource import CephFsLikeReader
+from hadoop_fs_ceph_spark.sources.pydatasource import CephFsLikeReader, batch_rows
 from hadoop_fs_ceph_spark.sources.rgw_http import (
     CONTINUATION_BYTES,
     LoopbackRgw,
@@ -210,7 +210,7 @@ def lines_source(request, tmp_path, monkeypatch):
 
         monkeypatch.setattr(*io_fn, counted)
         try:
-            rows = [row for part in parts for row in r.read(part)]
+            rows = [row for part in parts for row in batch_rows(r.read(part))]
         finally:
             monkeypatch.setattr(*io_fn, real)
         return rows, len(parts), len(reads)
@@ -367,7 +367,7 @@ def test_read_is_linear_in_block_size(rgw):
     )
     (part,) = reader.partitions()
     t0 = _time.perf_counter()
-    count = sum(1 for _ in reader.read(part))
+    count = sum(1 for _ in batch_rows(reader.read(part)))
     elapsed = _time.perf_counter() - t0
     assert count == n_lines
     assert elapsed < 30, f"block scan took {elapsed:.1f}s — O(n^2) regression?"

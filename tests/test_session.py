@@ -2,9 +2,16 @@
 reference connector's mount-time endpoint + credential resolution,
 CephRgwFileSystem.java:98-147, re-expressed as Hadoop s3a options) and
 the split-sizing lever (virtual block size, CephRgwFileSystem.java:112 →
-spark.sql.files.maxPartitionBytes)."""
+spark.sql.files.maxPartitionBytes), and the Python-worker daemon that
+imports the installed pyspark instead of Spark's zipped copy."""
+
+import os
+import zipfile
+
+import pytest
 
 from hadoop_fs_ceph_spark.session import get_spark, s3a_storage_conf
+from hadoop_fs_ceph_spark.worker_daemon import worker_path
 
 
 def test_s3a_storage_conf_shapes():
@@ -59,3 +66,68 @@ def test_max_partition_bytes_applied(spark):
         str(128 * 1024 * 1024),
         "134217728",
     )
+
+
+def test_python_workers_import_installed_pyspark(spark):
+    """Python tasks run under ``worker_daemon``, so their pyspark is the
+    installed package directory, not a module inside ``pyspark.zip``."""
+    import pyarrow as pa
+
+    assert (
+        spark.sparkContext.getConf().get("spark.python.daemon.module")
+        == "hadoop_fs_ceph_spark.worker_daemon"
+    )
+
+    def where(batches):
+        import pyspark
+
+        for b in batches:
+            yield pa.RecordBatch.from_pydict({"path": [pyspark.__file__] * b.num_rows})
+
+    df = spark.range(4, numPartitions=2).mapInArrow(where, "path string")
+    (path,) = {r.path for r in df.collect()}
+    assert ".zip" not in path and os.path.isfile(path), path
+
+
+_VERSION = b'__version__: str = "4.1.2"\n'
+
+
+def _spark_like_path(tmp_path, zipped_version=_VERSION, installed=("pyspark", "py4j")):
+    """A worker ``sys.path``: the working directory, Spark's three archives,
+    then a site directory holding the ``installed`` packages."""
+    lib, site = tmp_path / "lib", tmp_path / "site"
+    lib.mkdir()
+    with zipfile.ZipFile(lib / "pyspark.zip", "w") as zf:
+        zf.writestr("pyspark/__init__.py", "")
+        zf.writestr("pyspark/version.py", zipped_version)
+    with zipfile.ZipFile(lib / "py4j-0.10.9.9-src.zip", "w") as zf:
+        zf.writestr("py4j/__init__.py", "")
+    with zipfile.ZipFile(lib / "spark-core_2.13-4.1.2.jar", "w") as zf:
+        zf.writestr("org/apache/spark/SparkContext.class", b"")
+    for pkg in installed:
+        (site / pkg).mkdir(parents=True)
+        (site / pkg / "__init__.py").write_text("")
+    if "pyspark" in installed:
+        (site / "pyspark" / "version.py").write_bytes(_VERSION)
+    archives = ("pyspark.zip", "py4j-0.10.9.9-src.zip", "spark-core_2.13-4.1.2.jar")
+    return [str(tmp_path), *(str(lib / a) for a in archives), str(site)]
+
+
+def test_worker_path_drops_archives_for_same_release(tmp_path):
+    path = _spark_like_path(tmp_path)
+    assert worker_path(path) == [path[0], path[4]]
+
+
+@pytest.mark.parametrize(
+    "case",
+    [
+        {"zipped_version": b'__version__: str = "4.1.1"\n'},
+        {"installed": ("py4j",)},
+        {"installed": ("pyspark",)},
+    ],
+    ids=["version_differs", "no_installed_pyspark", "no_installed_py4j"],
+)
+def test_worker_path_unchanged_unless_installed_matches(tmp_path, case):
+    path = _spark_like_path(tmp_path, **case)
+    before = list(path)
+    assert worker_path(path) == before and path == before

@@ -10,6 +10,7 @@ import urllib.request
 import pytest
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
+from hadoop_fs_ceph_spark.sources.pydatasource import batch_rows
 from hadoop_fs_ceph_spark.sources.rgw_http import (
     LoopbackRgw,
     RgwHttpReader,
@@ -152,7 +153,7 @@ def test_loopback_rgw_enforces_sigv4():
         )
         rows = []
         for part in reader.partitions():
-            rows.extend(reader.read(part))
+            rows.extend(batch_rows(reader.read(part)))
         expect = sorted([(i, ("v" * (i % 11)) or None) for i in range(200)] * 3,
                         key=lambda r: (r[0], r[1] or ""))
         assert sorted(rows, key=lambda r: (r[0], r[1] or "")) == expect

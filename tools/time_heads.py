@@ -4,7 +4,9 @@ Usage: python tools/time_heads.py name [name ...] [--passes N]
 
 Mirrors bench.py methodology (cold = cache cleared before each run, warm =
 immediate re-run, min over passes) on one session, so A/B comparisons of a
-single operator don't pay a full-suite run.
+single operator don't pay a full-suite run. Each cold run also records the
+CPU seconds its Python workers used (``cold_py_cpu``), the cost of the
+Python/Arrow boundary for UDF, pandas and Python-source heads.
 """
 
 from __future__ import annotations
@@ -18,6 +20,16 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from hadoop_fs_ceph_spark.registry import load_all  # noqa: E402
 from hadoop_fs_ceph_spark.session import get_spark  # noqa: E402
+from perfbench.probes import jvm_pid, tree_cpu_s  # noqa: E402
+
+
+def python_worker_cpu_s(jvm: int) -> float:
+    """CPU seconds the driver JVM's Python workers have used so far: the
+    JVM's process tree (workers it or a daemon has reaped included) less
+    the JVM's own time."""
+    with open(f"/proc/{jvm}/stat") as f:
+        fields = f.read().rsplit(")", 1)[1].split()
+    return tree_cpu_s(jvm) - (int(fields[11]) + int(fields[12])) / os.sysconf("SC_CLK_TCK")
 
 
 def main() -> None:
@@ -42,13 +54,16 @@ def main() -> None:
     # warm JVM/codegen once
     specs[args[0]].fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
     spark.catalog.clearCache()
+    jvm = jvm_pid(spark)
     out = {}
     for name in args:
-        cold, warm = [], []
+        cold, warm, py_cpu = [], [], []
         for _ in range(passes):
+            cpu0 = python_worker_cpu_s(jvm)
             t0 = time.perf_counter()
             specs[name].fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
             cold.append(time.perf_counter() - t0)
+            py_cpu.append(python_worker_cpu_s(jvm) - cpu0)
             t0 = time.perf_counter()
             specs[name].fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
             warm.append(time.perf_counter() - t0)
@@ -58,6 +73,7 @@ def main() -> None:
             "warm": round(min(warm), 3),
             "cold_all": [round(v, 3) for v in cold],
             "warm_all": [round(v, 3) for v in warm],
+            "cold_py_cpu": [round(v, 2) for v in py_cpu],
         }
         print(json.dumps({name: out[name]}))
     print(json.dumps(out))
