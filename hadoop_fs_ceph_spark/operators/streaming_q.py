@@ -930,9 +930,7 @@ def stream_dedup_then_window(spark, sf_dir):
 def _docs_stream(spark, sf_dir):
     """``readStream`` over the documents table (schema from a batch read,
     like ``events_stream`` — inference would be an extra full pass)."""
-    import os as _os
-
-    raw_schema = spark.read.parquet(_os.path.join(sf_dir, "documents.parquet")).schema
+    raw_schema = t(spark, sf_dir, "documents").schema
     return (
         spark.readStream.schema(raw_schema)
         .option("pathGlobFilter", "documents.parquet")

@@ -16,6 +16,8 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from hadoop_fs_ceph_spark.sources.readers import read_parquet
+
 # --- streaming-state audit capture ------------------------------------------
 # When the scale-audit CLI (plans/__main__.py --all) audits a streaming
 # query, it must see the PRE-SINK streaming plan without draining the
@@ -54,7 +56,7 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = os.path.join(sf_dir, "events.parquet")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    raw_schema = spark.read.parquet(path).schema
+    raw_schema = read_parquet(spark, path).schema
     if os.path.isdir(path):
         # Spark-written layout (e.g. the soak replicas): events.parquet is
         # a DIRECTORY of part files — stream it directly; the glob filter

@@ -7,6 +7,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from hadoop_fs_ceph_spark.sources.readers import read_parquet
+
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 # Tables whose cardinality is FIXED by the TPC-H spec (25 nations, 5
@@ -37,6 +39,12 @@ def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     ``unix_micros()`` / ``withWatermark()`` accept it; the session timezone is
     pinned UTC so the NTZ→LTZ cast is the identity wall-clock mapping and both
     engines (Spark, DuckDB) see identical µs timestamps.
+
+    The schema is resolved once per file listing (``read_parquet``): a
+    repeat load runs no Spark job. The ``events`` confs are set before the
+    read so ``nanosAsLong`` is part of the cache key; they stay here rather
+    than in ``get_spark`` because the external driver calls
+    ``__spark_entry__.entry`` on a session it built itself.
     """
     path = os.path.join(sf_dir, f"{name}.parquet")
     if name == "events":
@@ -44,11 +52,11 @@ def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # Pin the session to UTC so ts rendering matches DuckDB regardless of
         # how the consuming session was built (all other tables have no ts).
         spark.conf.set("spark.sql.session.timeZone", "UTC")
-        df = spark.read.parquet(path)
+        df = read_parquet(spark, path)
         ts_dtype = dict(df.dtypes).get("ts")
         if ts_dtype == "bigint":  # old fixtures: nanos-as-long
             df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
         elif ts_dtype == "timestamp_ntz":  # current fixtures: µs no-tz
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
         return df
-    return spark.read.parquet(path)
+    return read_parquet(spark, path)

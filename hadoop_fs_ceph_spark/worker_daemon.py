@@ -16,8 +16,12 @@ Before anything imports pyspark it drops those three archives from
 without them and the installed ``pyspark/version.py`` is byte-identical to
 the zip's; otherwise ``sys.path`` stays as Spark built it.  It then runs
 ``pyspark.daemon`` as ``__main__``, whose ``argv[1]`` still names the
-worker module, so the planner workers run on the same path.  Only the
-standard library may be imported here.
+worker module.  Only task workers start here: the Python data source
+planner workers (``create_data_source``, ``plan_data_source_read``,
+``lookup_data_sources``) always start under ``-m pyspark.daemon``, because
+Spark 4.1.2's ``PythonPlannerRunner`` calls the ``SparkEnv.createPythonWorker``
+overload that takes no daemon module.  Only the standard library may be
+imported here.
 """
 
 from __future__ import annotations
