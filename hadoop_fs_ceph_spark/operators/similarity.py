@@ -34,6 +34,7 @@ from hadoop_fs_ceph_spark.functions.text import (
     tokens,
 )
 from hadoop_fs_ceph_spark.registry import query
+from hadoop_fs_ceph_spark.sources.readers import relation_bytes
 from hadoop_fs_ceph_spark.tables import t
 
 # Sign-bit LSH: bucket = 4 sign bits of the first 4 components. At
@@ -2173,6 +2174,13 @@ _SPC_MAX_SLICES = 16  # sliced-broadcast ladder cap (~4 TB of documents);
 # beyond it a deployment uses the measured B x B doc-bucket grid instead
 
 
+def _spc_slices(spark, sf_dir) -> int:
+    """Broadcast slices for the sparse-cosine build side: one per 256 MiB of
+    documents as the storage layer sizes them, capped at _SPC_MAX_SLICES."""
+    doc_bytes = relation_bytes(spark, os.path.join(sf_dir, "documents.parquet"))
+    return min(_SPC_MAX_SLICES, int(1 + doc_bytes // (256 * 1024 * 1024)))
+
+
 @query(
     "sim_sparse_cosine_join",
     oracle=f"""
@@ -2328,16 +2336,7 @@ def sim_sparse_cosine_join(spark, sf_dir):
     # _SPC_MAX_SLICES a deployment switches to the measured grid
     # decomposition above; the slice ladder covers ~4 TB of documents
     # before that point.
-    doc_path = os.path.join(sf_dir, "documents.parquet")
-    if os.path.isdir(doc_path):
-        doc_bytes = sum(
-            os.path.getsize(os.path.join(dp, f))
-            for dp, _, fs in os.walk(doc_path)
-            for f in fs
-        )
-    else:
-        doc_bytes = os.path.getsize(doc_path) if os.path.exists(doc_path) else 0
-    n_slices = min(_SPC_MAX_SLICES, int(1 + doc_bytes // (256 * 1024 * 1024)))
+    n_slices = _spc_slices(spark, sf_dir)
     if n_slices == 1:
         joined = a.join(F.broadcast(b), "tok")
     else:

@@ -61,6 +61,13 @@ def _file_signature(spark: SparkSession, path: str) -> tuple | None:
     return tuple(sorted(files))
 
 
+def relation_bytes(spark: SparkSession, path: str) -> int:
+    """Total length of the files under ``path`` as its storage layer lists
+    them (so an ``s3a://`` or ``cephrgw://`` table is sized too); 0 when the
+    path cannot be listed."""
+    return sum(length for _, length, _ in _file_signature(spark, path) or ())
+
+
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     """``spark.read.parquet(path)`` that infers the schema once per file
     listing. The key is the path's file signature plus the session values of

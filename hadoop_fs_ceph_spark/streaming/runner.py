@@ -16,7 +16,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from hadoop_fs_ceph_spark.sources.readers import read_parquet
+from hadoop_fs_ceph_spark.sources.readers import read_parquet, relation_bytes
 
 # --- streaming-state audit capture ------------------------------------------
 # When the scale-audit CLI (plans/__main__.py --all) audits a streaming
@@ -81,7 +81,8 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def stream_state_width(sf_dir: str, table: str = "events") -> int:
     """STATE-partition width for a streaming query, derived from the
-    source table's on-disk size — the same data-sized-width discipline
+    source table's size as its storage layer lists it (``relation_bytes``
+    through the active session) — the same data-sized-width discipline
     the iterative graph operators use (guide §2: make partitioning
     scale-adaptive, not a constant tuned for one deployment).
 
@@ -101,14 +102,7 @@ def stream_state_width(sf_dir: str, table: str = "events") -> int:
     ``spark.sql.shuffle.partitions`` at FIRST start of its checkpoint;
     this rule is the sane default the fixtures and soaks exercise."""
     path = os.path.join(sf_dir, f"{table}.parquet")
-    if os.path.isdir(path):
-        n_bytes = sum(
-            os.path.getsize(os.path.join(dp, f))
-            for dp, _, fs in os.walk(path)
-            for f in fs
-        )
-    else:
-        n_bytes = os.path.getsize(path) if os.path.exists(path) else 0
+    n_bytes = relation_bytes(SparkSession.active(), path)
     return max(8, n_bytes // (128 * 1024 * 1024) + 1)
 
 

@@ -2,16 +2,25 @@
 reference connector's mount-time endpoint + credential resolution,
 CephRgwFileSystem.java:98-147, re-expressed as Hadoop s3a options) and
 the split-sizing lever (virtual block size, CephRgwFileSystem.java:112 →
-spark.sql.files.maxPartitionBytes), and the Python-worker daemon that
-imports the installed pyspark instead of Spark's zipped copy."""
+spark.sql.files.maxPartitionBytes), the Python-worker daemon that
+imports the installed pyspark instead of Spark's zipped copy, and the
+generated-code cache that holds a whole benchmark pass."""
 
 import os
 import zipfile
 
 import pytest
+from pyspark.errors import AnalysisException
 
-from hadoop_fs_ceph_spark.session import get_spark, s3a_storage_conf
+from hadoop_fs_ceph_spark.registry import load_all
+from hadoop_fs_ceph_spark.session import (
+    CODEGEN_CACHE_MAX_ENTRIES,
+    codegen_compiles,
+    get_spark,
+    s3a_storage_conf,
+)
 from hadoop_fs_ceph_spark.worker_daemon import worker_path
+from perfbench.workloads import LAKE_HEADS
 
 
 def test_s3a_storage_conf_shapes():
@@ -66,6 +75,31 @@ def test_max_partition_bytes_applied(spark):
         str(128 * 1024 * 1024),
         "134217728",
     )
+
+
+def test_codegen_cache_cap_applied(spark):
+    key = "spark.sql.codegen.cache.maxEntries"
+    assert spark.conf.get(key) == str(CODEGEN_CACHE_MAX_ENTRIES)
+    # static: only a session get_spark creates can size it
+    with pytest.raises(AnalysisException, match="static"):
+        spark.conf.set(key, "100")
+
+
+def test_second_pass_of_lake_heads_compiles_nothing(spark, sf_dir):
+    """Every class the lake benchmark's heads generate stays cached: a
+    repeat pass of the 9 heads reuses them all (Spark's default cap of 100
+    entries evicts and recompiles part of each pass)."""
+    specs = load_all()
+
+    def one_pass() -> int:
+        before = codegen_compiles(spark)
+        for head in LAKE_HEADS:
+            spark.catalog.clearCache()
+            specs[head].fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+        return codegen_compiles(spark) - before
+
+    one_pass()
+    assert one_pass() == 0
 
 
 def test_python_workers_import_installed_pyspark(spark):

@@ -1,6 +1,6 @@
 """Parquet schema resolution: ``read_parquet`` infers a path's schema once
 per file listing and session inference confs, and ``tables.t`` goes
-through it."""
+through it; ``relation_bytes`` sizes a table from the same listing."""
 
 import itertools
 import os
@@ -13,7 +13,9 @@ from pyspark.sql.types import BinaryType, StringType
 from pyspark.errors import AnalysisException
 
 from hadoop_fs_ceph_spark.sources import readers
-from hadoop_fs_ceph_spark.sources.readers import read_parquet
+from hadoop_fs_ceph_spark.operators.similarity import _spc_slices
+from hadoop_fs_ceph_spark.sources.readers import read_parquet, relation_bytes
+from hadoop_fs_ceph_spark.streaming import stream_state_width
 from hadoop_fs_ceph_spark.tables import t
 
 _groups = itertools.count()
@@ -127,3 +129,31 @@ def test_unlistable_path_is_spark_error_and_not_kept(spark, tmp_path):
     with pytest.raises(AnalysisException):
         read_parquet(spark, path)
     assert path not in readers._schemas
+
+
+def test_relation_bytes_sizes_without_os(spark, sf_dir, tmp_path, monkeypatch):
+    """Slice count and state width come from the Hadoop listing: the same
+    on sf0.001 with ``os.walk``/``getsize`` refusing, and past their floors
+    on sparse table directories of 300 MiB (documents) and 1 GiB (events)."""
+    MiB = 1024 * 1024
+    docs = os.path.join(sf_dir, "documents.parquet")
+    events = os.path.join(sf_dir, "events.parquet")
+    sizes = (os.path.getsize(docs), os.path.getsize(events))
+    for table, size in (("documents", 300 * MiB), ("events", 1024 * MiB)):
+        (tmp_path / f"{table}.parquet").mkdir()
+        with open(tmp_path / f"{table}.parquet" / "part-0.parquet", "wb") as f:
+            f.truncate(size)
+
+    def refuse(*args, **kwargs):
+        raise AssertionError("sized through os, not the storage layer")
+
+    monkeypatch.setattr(os, "walk", refuse)
+    monkeypatch.setattr(os.path, "getsize", refuse)
+
+    assert (relation_bytes(spark, docs), relation_bytes(spark, events)) == sizes
+    assert _spc_slices(spark, sf_dir) == 1
+    assert stream_state_width(sf_dir) == 8
+    assert relation_bytes(spark, str(tmp_path / "documents.parquet")) == 300 * MiB
+    assert _spc_slices(spark, str(tmp_path)) == 2
+    assert stream_state_width(str(tmp_path)) == 9
+    assert relation_bytes(spark, str(tmp_path / "missing.parquet")) == 0

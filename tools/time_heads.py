@@ -6,7 +6,9 @@ Mirrors bench.py methodology (cold = cache cleared before each run, warm =
 immediate re-run, min over passes) on one session, so A/B comparisons of a
 single operator don't pay a full-suite run. Each cold run also records the
 CPU seconds its Python workers used (``cold_py_cpu``), the cost of the
-Python/Arrow boundary for UDF, pandas and Python-source heads.
+Python/Arrow boundary for UDF, pandas and Python-source heads, and the
+classes Janino compiled for it (``cold_compiles``): after the first pass a
+head whose generated code stays cached compiles 0.
 """
 
 from __future__ import annotations
@@ -19,7 +21,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from hadoop_fs_ceph_spark.registry import load_all  # noqa: E402
-from hadoop_fs_ceph_spark.session import get_spark  # noqa: E402
+from hadoop_fs_ceph_spark.session import codegen_compiles, get_spark  # noqa: E402
 from perfbench.probes import jvm_pid, tree_cpu_s  # noqa: E402
 
 
@@ -57,13 +59,14 @@ def main() -> None:
     jvm = jvm_pid(spark)
     out = {}
     for name in args:
-        cold, warm, py_cpu = [], [], []
+        cold, warm, py_cpu, compiles = [], [], [], []
         for _ in range(passes):
-            cpu0 = python_worker_cpu_s(jvm)
+            cpu0, n0 = python_worker_cpu_s(jvm), codegen_compiles(spark)
             t0 = time.perf_counter()
             specs[name].fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
             cold.append(time.perf_counter() - t0)
             py_cpu.append(python_worker_cpu_s(jvm) - cpu0)
+            compiles.append(codegen_compiles(spark) - n0)
             t0 = time.perf_counter()
             specs[name].fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
             warm.append(time.perf_counter() - t0)
@@ -74,6 +77,7 @@ def main() -> None:
             "cold_all": [round(v, 3) for v in cold],
             "warm_all": [round(v, 3) for v in warm],
             "cold_py_cpu": [round(v, 2) for v in py_cpu],
+            "cold_compiles": compiles,
         }
         print(json.dumps({name: out[name]}))
     print(json.dumps(out))
