@@ -1,52 +1,47 @@
 """Headline bench: run the bench-tagged declared queries at $SPARK_GRAFT_SF_DIR.
 
-Prints ONE JSON line:
+``python bench.py`` prints two JSON lines: a verbose record, then the
+compact driver-contract line (``_compact_line``):
   {"metric": "...", "value": total_sec, "unit": "sec", "queries": {...}, "sf": ...}
 
-Results are materialized with the no-op sink (full execution, no driver
-collection) so timings measure the distributed plan, not toPandas.
+Every mode, and ``tools/time_heads.py``, times queries through one run path:
+``run`` builds a head's DataFrame, writes it to the no-op sink (full
+execution, no driver collection, so timings measure the distributed plan,
+not toPandas) and records ``fn_s`` + ``action_s`` with the
+``perfbench.probes.StageCounters`` of exactly that run; ``suite`` runs one
+cold pass over a head set. Each mode starts from ``session``, all but the
+soak warm up with ``warm_up``, and ``confs`` holds conf overrides.
 
-Round 11 adds the NOISE-AWARE round-over-round verdict (VERDICT r10 item
-5): the previous round's per-query normalized values + spreads are read
-back from the newest same-SF BENCH_r*.json artifact and every query gets
-a vs_prev code in the compact line — 0 inside combined noise, 1 slower
-beyond it, -1 faster, 9 new — so regression claims cite a per-query
-verdict computed from both rounds' measured spreads instead of a
-hand-eyeballed column diff.
+The compact line carries a NOISE-AWARE verdict against the previous round:
+its per-query cold walls and spreads are read back from the newest same-SF
+BENCH_r*.json artifact, and every query gets a code in ``noise`` (inside
+combined noise, slower or faster beyond it, or new), so a regression claim
+cites both rounds' measured spreads instead of a hand-eyeballed diff.
 
-``python bench.py --rehearsal`` runs the CLUSTER-SHAPE rehearsal
-(VERDICT r8 item 5): the whole headline suite again with
-``autoBroadcastJoinThreshold=-1`` (auto-broadcasts off — explicit
-``broadcast()`` hints, which are design decisions, stay honored) and
-``shuffle.partitions=200`` — the planner posture of a 1000-executor
-cluster, where dimension tables outgrow the driver-side threshold and
-shuffles fan wide. Each query's row count + content hash must match the
-default-config run (no correctness change) and the wall-clock ratio is
+``python bench.py --rehearsal`` runs the CLUSTER-SHAPE rehearsal: the
+whole headline suite again with ``autoBroadcastJoinThreshold=-1``
+(auto-broadcasts off; explicit ``broadcast()`` hints, which are design
+decisions, stay honored) and ``shuffle.partitions=200``, the planner
+posture of a 1000-executor cluster. Each query's row count and content
+hash must match the default-config run, and the wall-clock ratio is
 reported (a plan that silently depended on a tiny-scale auto-broadcast
 shows up as a blow-up here). Results splice into ``SCALE.md``.
 
-``python bench.py --soak`` instead runs the measured-scaling soak
-(VERDICT r6 item 4 / r7 item 2): it builds an sf×N dataset
-(N = $SPARK_GRAFT_SOAK_REPLICAS, default 10; ×100 ≈ sf10 is the deep
-tier — see ``_build_soak_tables``), runs every headline query at BOTH
-scales recording wall-clock and shuffle read/write bytes (from the
-Spark AppStatusStore), and splices the per-query table into
-``SCALE.md``'s SOAK{N} section — the empirical answer to "does this
-plan survive the scale-up", query by query. The ×100 tier caught a
-real quadratic-blocking defect in round 8 (see
-dedup_semantic_bucket_scaled).
+``python bench.py --soak`` runs the measured-scaling soak: it builds an
+sf×N dataset (N = $SPARK_GRAFT_SOAK_REPLICAS, default 10; ×100 ≈ sf10 is
+the deep tier, see ``_build_soak_tables``), runs every headline query at
+BOTH scales recording wall-clock and shuffle read/write bytes, and
+splices the per-query table into ``SCALE.md``'s SOAK{N} section.
 
-``python bench.py --skew`` runs the HOT-KEY rehearsal (round 9): the
-headline suite on a planted-skew variant of the data (one whale
-customer owns 25% of orders, one part/supplier on 20% of lineitems,
-one user emits 20% of events, one ORDER owns ~10% of lineitem lines —
-row counts and FK join fan-outs unchanged)
-at the cluster shape (auto-broadcast off, 200 shuffle partitions, AQE
-skew-split threshold lowered so the rewrite fires at test scale). Two
-gates per query: the AQE skew-split rewrite must not change the answer
-(content hash, skewJoin on vs off), and the wall-clock ratio vs the
-uniform data must stay bounded. Results splice into ``SCALE.md``'s
-SKEW section.
+``python bench.py --skew`` runs the HOT-KEY rehearsal: the headline suite
+on a planted-skew variant of the data (one whale customer owns 25% of
+orders, one part/supplier on 20% of lineitems, one user emits 20% of
+events, one ORDER owns ~10% of lineitem lines; row counts and FK join
+fan-outs unchanged) at the cluster shape, with AQE's skew-split threshold
+lowered so the rewrite fires at test scale. Two gates per query: the
+skew-split rewrite must not change the answer (content hash, skewJoin on
+vs off), and the wall-clock ratio vs the uniform data must stay bounded.
+Results splice into ``SCALE.md``'s SKEW section.
 """
 
 from __future__ import annotations
@@ -56,23 +51,121 @@ import os
 import re
 import sys
 import time
+from contextlib import contextmanager
+from dataclasses import dataclass
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from hadoop_fs_ceph_spark.registry import load_all
 from hadoop_fs_ceph_spark.session import get_spark
+from hadoop_fs_ceph_spark.tables import DEFAULT_SF_DIR
+from perfbench.probes import StageCounters, StageProbe
+
+
+@dataclass
+class Run:
+    """One measured execution of a query head. ``fn_s`` is the time spent
+    inside ``spec.fn()`` (eager barriers, streaming drains, driver
+    scalars), ``action_s`` the final noop-sink write, and ``stages`` the
+    counters of exactly the Spark jobs and stages those two spans ran.
+    ``content`` is the result's (rows, hash) when a suite asks for it."""
+
+    fn_s: float
+    action_s: float
+    stages: StageCounters
+    content: tuple[int, int] | None = None
+
+    @property
+    def wall(self) -> float:
+        return self.fn_s + self.action_s
+
+
+# One probe per SparkContext: each run takes it before and after, so runs
+# from any caller share it without seeing each other's stages.
+_PROBES: dict = {}
+
+
+def run(spark, spec, sf_dir: str) -> Run:
+    """Build ``spec``'s DataFrame and write it to the noop sink, timing the
+    two steps. The session's probe is taken just before and just after, so
+    the counters hold this run's stages only, whatever ran in between."""
+    sc = spark.sparkContext
+    if sc not in _PROBES:
+        _PROBES[sc] = StageProbe(spark)
+    probe = _PROBES[sc]
+    probe.take()
+    t0 = time.perf_counter()
+    df = spec.fn(spark, sf_dir)
+    t1 = time.perf_counter()
+    df.write.format("noop").mode("overwrite").save()
+    t2 = time.perf_counter()
+    return Run(t1 - t0, t2 - t1, probe.take())
+
+
+def suite(spark, specs: dict, sf_dir: str, *, content_hash: bool = False, head_conf=None):
+    """One cold pass: ``run`` each head of ``specs`` in order and yield
+    ``(name, Run)``. ``content_hash`` adds each result's (rows, hash);
+    ``head_conf`` maps a head to conf overrides held for its run and hash.
+    Persisted intermediates are dropped when the caller's loop body is done
+    (so a warm re-run placed there still finds them), also if a head raises."""
+    for name, spec in specs.items():
+        try:
+            with confs(spark, (head_conf or {}).get(name, {})):
+                rec = run(spark, spec, sf_dir)
+                if content_hash:
+                    rec.content = _content_hash(spec.fn(spark, sf_dir))
+            yield name, rec
+        finally:
+            spark.catalog.clearCache()
+
+
+@contextmanager
+def confs(spark, overrides: dict):
+    """Hold ``overrides`` on the session for the block, then put back every
+    key's prior value. Keys that had none are unset, not skipped, and this
+    holds when the block raises too: an override must never leak into
+    whatever runs on the session next."""
+    saved = {k: spark.conf.get(k, None) for k in overrides}
+    try:
+        for k, v in overrides.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
+def session(app: str, *, bench_only: bool = True, driver_memory: str = "24g", extra_conf=None):
+    """What every mode starts from: the data dir ($SPARK_GRAFT_SF_DIR), the
+    registry sorted by name (bench heads only unless told otherwise) and a
+    quiet session."""
+    specs = {n: s for n, s in sorted(load_all().items()) if s.bench or not bench_only}
+    spark = get_spark(app, driver_memory=driver_memory, extra_conf=extra_conf)
+    spark.sparkContext.setLogLevel("ERROR")
+    return spark, DEFAULT_SF_DIR, specs
+
+
+def warm_up(spark, specs: dict, sf_dir: str) -> float:
+    """Build ``sf_dir``'s owned layouts, then run the first head of
+    ``specs`` once so timed runs measure plans, not JVM warm-up, first file
+    listings and first-time codegen. Returns the layout build seconds."""
+    layout_sec = _prebuild_layouts(spark, sf_dir)
+    run(spark, next(iter(specs.values())), sf_dir)
+    spark.catalog.clearCache()
+    return layout_sec
 
 
 def _prev_round_compact(repo_dir: str, sf) -> tuple[dict | None, str | None]:
     """The newest BENCH_r*.json's compact tail line (same SF), parsed.
 
-    Round-11 (VERDICT r10 item 5): the driver records each round's bench
-    stdout tail; the final compact line is a complete JSON object with
-    per-query [cold, warm, spread, normalized]. Loading the previous
-    round's line lets THIS run attach a per-query noise verdict — is the
-    round-over-round normalized delta inside the two rounds' combined
-    measurement spread? — so a like-for-like regression claim can cite a
-    verdict instead of eyeballing two columns across files."""
+    The driver records each round's bench stdout tail; the final compact
+    line is a complete JSON object with a ``queries`` dict of cold walls
+    and a parallel ``s`` spread array. Loading the previous round's line
+    lets THIS run attach a per-query noise verdict (is the normalized
+    round-over-round delta inside the two rounds' combined spread?)."""
     import glob
 
     def _round_no(p: str) -> int:
@@ -100,49 +193,32 @@ def _prev_round_compact(repo_dir: str, sf) -> tuple[dict | None, str | None]:
                 obj = json.loads(line)
             except ValueError:
                 continue
-            # two compact shapes exist: r11-12's q/q_cols arrays and the
-            # r13+ driver-contract {"queries": {name: cold_sec}} dict. The
-            # verbose line also has "queries" but carries "calib_probes";
-            # adopting it would zero every previous spread
-            if "calib_probes" in obj:
-                continue
-            if ("q" in obj and "q_cols" in obj) or "queries" in obj:
+            # the verbose line also has "queries" but carries
+            # "calib_probes"; adopting it would zero every previous spread
+            if "queries" in obj and "calib_probes" not in obj:
                 return obj, os.path.basename(path)
     return None, None
 
 
 def _prev_per_query(prev: dict | None) -> dict[str, dict[str, float]]:
     """Per-query {cold, normalized, spread} from a previous round's compact
-    line, whichever of the two shapes it uses (r11-12 q/q_cols arrays, or
-    the r13+ queries dict with a parallel "s" spread array in sorted-name
-    order). Spreads are normalized to the reference host so tolerance
-    composition is calibration-consistent."""
-    if not prev:
+    line: its ``queries`` dict with the parallel ``s`` spread array in
+    sorted-name order. Values and spreads are normalized to the reference
+    host so tolerance composition is calibration-consistent."""
+    if not prev or "queries" not in prev:
         return {}
     pscale = prev.get("calib_ref", 0.285) / max(
         prev.get("calib_spark_sec", 0.285), 1e-9
     )
+    s = prev.get("s") or []
     out: dict[str, dict[str, float]] = {}
-    if "q" in prev and "q_cols" in prev:
-        cols = {c: i for i, c in enumerate(prev["q_cols"])}
-        if "normalized" not in cols or "spread" not in cols:
-            return {}
-        for n, row in prev["q"].items():
-            out[n] = {
-                "cold": row[cols["cold"]] if "cold" in cols else row[cols["normalized"]],
-                "normalized": row[cols["normalized"]],
-                "spread": row[cols["spread"]] * pscale,
-            }
-    elif "queries" in prev:
-        names = sorted(prev["queries"])
-        s = prev.get("s") or []
-        for i, n in enumerate(names):
-            cold = prev["queries"][n]
-            out[n] = {
-                "cold": cold,
-                "normalized": cold * pscale,
-                "spread": (s[i] if i < len(s) else 0.0) * pscale,
-            }
+    for i, n in enumerate(sorted(prev["queries"])):
+        cold = prev["queries"][n]
+        out[n] = {
+            "cold": cold,
+            "normalized": cold * pscale,
+            "spread": (s[i] if i < len(s) else 0.0) * pscale,
+        }
     return out
 
 
@@ -189,13 +265,11 @@ def _compact_line(
     layout_build_sec: float,
     budget: int = 1950,
 ) -> str:
-    """The FINAL compact JSON line (round-13 shape, VERDICT r12 item 1).
+    """The FINAL compact JSON line.
 
     The driver's BENCH artifact preserves only the last ~2000 characters
     of stdout and its PERF comparator reads a plain ``{"queries": {name:
-    cold_sec}}`` dict — the r11-12 ``q_cols``/``q`` array encoding parsed
-    as ``n_common: 0``, leaving every per-query regression claim to hand
-    reconstruction. This line therefore leads with the driver-contract
+    cold_sec}}`` dict. This line therefore leads with that driver-contract
     ``queries`` dict (1-decimal cold seconds) plus:
 
     * ``common`` — like-for-like subtotal over the heads present in BOTH
@@ -206,7 +280,7 @@ def _compact_line(
     * ``s`` — per-query cold spreads, parallel to ``sorted(queries)``
       (feeds the next round's noise verdict).
     * ``e`` — per-query executor task-time (whole seconds, pass-1 cold,
-      from the AppStatusStore; VERDICT r12 item 6: attributes a flat
+      from the run's ``StageCounters``; VERDICT r12 item 6: attributes a flat
       low-core wall to fixed cost vs serial plans — a compute-bound head
       shows e >> wall shrinkage, a fixed-cost head shows e ≈ 0).
 
@@ -261,23 +335,6 @@ def _compact_line(
     return best
 
 
-def _exec_time_totals(spark) -> float:
-    """Cumulative executor task run time (seconds) across all stages in
-    the AppStatusStore — diffed around each query's pass-1 cold run to
-    attribute distributed compute to queries (the wall-vs-task-time split
-    is what makes core-count scaling measurable at a fixed-cost-bound SF)."""
-    sc = spark.sparkContext
-    jvm, gw = sc._jvm, sc._gateway
-    empty = jvm.java.util.ArrayList()
-    quant = gw.new_array(jvm.double, 0)
-    stages = sc._jsc.sc().statusStore().stageList(empty, False, False, quant, empty)
-    ms = 0
-    it = stages.iterator()
-    while it.hasNext():
-        ms += it.next().executorRunTime()
-    return ms / 1000.0
-
-
 # Every owned layout built outside the timed region MUST be named here —
 # the compact line publishes the list (round-13, VERDICT r12 "what's
 # wrong" #2: `value` excludes layout_build_sec, so any NEW prebuilt layout
@@ -301,27 +358,10 @@ def _prebuild_layouts(spark, sf_dir: str) -> float:
 
 
 def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    spark, sf_dir, bench_specs = session("bench")
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else None
-
-    specs = load_all()
-    bench_specs = {n: s for n, s in sorted(specs.items()) if s.bench}
-    spark = get_spark(
-        "bench",
-        driver_memory="24g",
-        # keep every stage row so the per-query executor-task-time diff
-        # (round-13, VERDICT r12 item 6) never loses history to UI eviction
-        extra_conf={"spark.ui.retainedStages": "100000"},
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-
-    layout_build_sec = _prebuild_layouts(spark, sf_dir)
-
-    # warm the JVM + file listing once so per-query numbers measure the plans
-    next(iter(bench_specs.values())).fn(spark, sf_dir).write.format("noop").mode(
-        "overwrite"
-    ).save()
+    layout_build_sec = warm_up(spark, bench_specs, sf_dir)
 
     # Host-speed calibration probes, reported alongside the timings so
     # cross-round comparisons can normalize for container/CPU variance
@@ -374,20 +414,11 @@ def main() -> None:
     for _pass in range(_PASSES):
         if _pass:
             calibs.append(_calibrate())  # mid-suite probes, interleaved
-        for name, spec in bench_specs.items():
+        for name, cold in suite(spark, bench_specs, sf_dir):
+            cold_samples[name].append(cold.wall)
             if _pass == 0:
-                e0 = _exec_time_totals(spark)
-            start = time.perf_counter()
-            spec.fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            cold_samples[name].append(time.perf_counter() - start)
-            if _pass == 0:
-                exec_sec[name] = round(_exec_time_totals(spark) - e0, 1)
-            start = time.perf_counter()
-            spec.fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            warm_samples[name].append(time.perf_counter() - start)
-            # drop per-query persisted intermediates so one query's cached
-            # blocks can't crowd executor memory for the next
-            spark.catalog.clearCache()
+                exec_sec[name] = round(cold.stages.exec_run_s, 1)
+            warm_samples[name].append(run(spark, bench_specs[name], sf_dir).wall)
     timings = {n: round(min(v), 3) for n, v in cold_samples.items()}
     warm = {n: round(min(v), 3) for n, v in warm_samples.items()}
     spread = {
@@ -565,40 +596,12 @@ def _build_soak_tables(spark, src_dir: str, dst_dir: str, replicas: int) -> None
         out.write.mode("overwrite").parquet(f"{dst_dir}/{name}.parquet")
 
 
-def _shuffle_totals(spark) -> tuple[int, int]:
-    """Cumulative (shuffleWriteBytes, shuffleReadBytes) across all stages
-    in the AppStatusStore — diffed around each query to attribute bytes."""
-    sc = spark.sparkContext
-    jvm, gw = sc._jvm, sc._gateway
-    empty = jvm.java.util.ArrayList()
-    quant = gw.new_array(jvm.double, 0)
-    stages = sc._jsc.sc().statusStore().stageList(empty, False, False, quant, empty)
-    w = r = 0
-    it = stages.iterator()
-    while it.hasNext():
-        s = it.next()
-        w += s.shuffleWriteBytes()
-        r += s.shuffleReadBytes()
-    return w, r
-
-
 def soak_main() -> None:
     import shutil
     import tempfile
 
-    base_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    spark, base_dir, bench_specs = session("bench-soak", driver_memory="48g")
     replicas = int(os.environ.get("SPARK_GRAFT_SOAK_REPLICAS", "10"))
-    specs = load_all()
-    bench_specs = {n: s for n, s in sorted(specs.items()) if s.bench}
-    spark = get_spark(
-        "bench-soak",
-        driver_memory="48g",
-        # keep every stage row so the cumulative-diff attribution never
-        # loses history to UI eviction mid-suite
-        extra_conf={"spark.ui.retainedStages": "100000"},
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-
     soak_dir = tempfile.mkdtemp(prefix="spark_graft_soak_")
     try:
         t0 = time.perf_counter()
@@ -606,32 +609,21 @@ def soak_main() -> None:
         build_sec = round(time.perf_counter() - t0, 1)
 
         def run_suite(sf_dir: str) -> dict[str, dict[str, float]]:
-            out: dict[str, dict[str, float]] = {}
             # owned layouts are built once per data dir, outside the
             # timed passes (a deployment pays them per generation)
             _prebuild_layouts(spark, sf_dir)
-            # pass 1: wall + shuffle bytes; pass 2: wall only (min damps
-            # host-contention bursts; bytes are deterministic)
-            for name, spec in bench_specs.items():
-                w0, r0 = _shuffle_totals(spark)
-                start = time.perf_counter()
-                spec.fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-                wall = time.perf_counter() - start
-                w1, r1 = _shuffle_totals(spark)
-                spark.catalog.clearCache()
-                out[name] = {
-                    "wall": wall,
-                    "shuffle_write": w1 - w0,
-                    "shuffle_read": r1 - r0,
+            # wall = min of two passes (damps host-contention bursts);
+            # shuffle bytes from pass 1 (they are deterministic)
+            first = dict(suite(spark, bench_specs, sf_dir))
+            second = dict(suite(spark, bench_specs, sf_dir))
+            return {
+                n: {
+                    "wall": round(min(first[n].wall, second[n].wall), 3),
+                    "shuffle_write": first[n].stages.shuffle_write_bytes,
+                    "shuffle_read": first[n].stages.shuffle_read_bytes,
                 }
-            for name, spec in bench_specs.items():
-                start = time.perf_counter()
-                spec.fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-                out[name]["wall"] = round(
-                    min(out[name]["wall"], time.perf_counter() - start), 3
-                )
-                spark.catalog.clearCache()
-            return out
+                for n in bench_specs
+            }
 
         small = run_suite(base_dir)
         big = run_suite(soak_dir)
@@ -782,19 +774,10 @@ def _sched_probe(spark) -> float:
 
 
 def rehearsal_main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    specs = load_all()
-    bench_specs = {n: s for n, s in sorted(specs.items()) if s.bench}
-    spark = get_spark("bench-rehearsal", driver_memory="24g")
-    spark.sparkContext.setLogLevel("ERROR")
-
-    _prebuild_layouts(spark, sf_dir)  # owned layouts outside the timing
-
-    # warm the JVM/codegen once so the baseline and rehearsal passes
-    # compare steady-state plans, not JIT noise
-    next(iter(bench_specs.values())).fn(spark, sf_dir).write.format("noop").mode(
-        "overwrite"
-    ).save()
+    spark, sf_dir, bench_specs = session("bench-rehearsal")
+    # warm once so the baseline and rehearsal passes compare steady-state
+    # plans, not JIT noise
+    warm_up(spark, bench_specs, sf_dir)
 
     # a STREAMING query's state-partition count is frozen into its
     # checkpoint at first start — production never re-plans it with
@@ -803,46 +786,17 @@ def rehearsal_main() -> None:
     # heads keep the deployment's state width (the session default)
     # while still running under the no-auto-broadcast posture (their
     # stream-static joins must survive it).
-    stream_parts = spark.conf.get("spark.sql.shuffle.partitions")
+    stream_pin = {"spark.sql.shuffle.partitions": spark.conf.get("spark.sql.shuffle.partitions")}
+    pins = {n: stream_pin for n, s in bench_specs.items() if "streaming" in s.tags}
 
-    def run_suite() -> dict[str, dict]:
-        out: dict[str, dict] = {}
-        for name, spec in bench_specs.items():
-            pinned = "streaming" in spec.tags
-            if pinned:
-                cur = spark.conf.get("spark.sql.shuffle.partitions")
-                spark.conf.set("spark.sql.shuffle.partitions", stream_parts)
-            try:
-                start = time.perf_counter()
-                spec.fn(spark, sf_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                wall = time.perf_counter() - start
-                n, h = _content_hash(spec.fn(spark, sf_dir))
-            finally:
-                if pinned:
-                    spark.conf.set("spark.sql.shuffle.partitions", cur)
-            spark.catalog.clearCache()
-            out[name] = {"wall": round(wall, 3), "n": n, "h": h}
-        return out
+    def run_suite() -> dict[str, Run]:
+        return dict(suite(spark, bench_specs, sf_dir, content_hash=True, head_conf=pins))
 
-    saved = {k: spark.conf.get(k, None) for k in _REHEARSAL_CONF}
     probe_base = _sched_probe(spark)
     base = run_suite()
-    for k, v in _REHEARSAL_CONF.items():
-        spark.conf.set(k, v)
-    try:
+    with confs(spark, _REHEARSAL_CONF):
         probe_reh = _sched_probe(spark)
         reh = run_suite()
-    finally:
-        # restore EVERY override: keys with no retrievable prior value
-        # must be unset, not skipped, or the rehearsal conf would leak
-        # into anything composed after this suite (ADVICE r9)
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
     base2 = run_suite()  # bracket host drift: compare vs best baseline
 
     # per-exchange fan-out overhead measured ON THIS HOST, ×4 for the
@@ -853,13 +807,10 @@ def rehearsal_main() -> None:
     allowance = 4.0 * max(0.05, probe_reh - probe_base)
 
     rows, bad = [], []
-    for name, spec in bench_specs.items():
-        b = min(base[name]["wall"], base2[name]["wall"])
-        r = reh[name]["wall"]
-        same = (
-            base[name]["n"] == reh[name]["n"] == base2[name]["n"]
-            and base[name]["h"] == reh[name]["h"] == base2[name]["h"]
-        )
+    for name in bench_specs:
+        b = min(base[name].wall, base2[name].wall)
+        r = reh[name].wall
+        same = base[name].content == reh[name].content == base2[name].content
         ratio = r / b if b else float("inf")
         # a no-broadcast pass legitimately pays SMJ + wider shuffles; the
         # gate catches plans that COLLAPSE without the tiny-scale
@@ -906,8 +857,8 @@ def rehearsal_main() -> None:
             f"{'same' if same else '**DIFFERS**'} | "
             f"{'ok' if ok else '**FAIL**'} |"
         )
-    tot_b = sum(min(base[n]['wall'], base2[n]['wall']) for n in bench_specs)
-    tot_r = sum(reh[n]["wall"] for n in bench_specs)
+    tot_b = sum(r[1] for r in rows)
+    tot_r = sum(r[2] for r in rows)
     md += [
         "",
         f"**Totals:** baseline = {tot_b:.1f}s, rehearsal = {tot_r:.1f}s "
@@ -1022,82 +973,43 @@ def skew_main() -> None:
     import shutil
     import tempfile
 
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    specs = load_all()
-    bench_specs = {n: s for n, s in sorted(specs.items()) if s.bench}
-    spark = get_spark("bench-skew", driver_memory="24g")
-    spark.sparkContext.setLogLevel("ERROR")
-
+    spark, sf_dir, bench_specs = session("bench-skew")
     skew_dir = tempfile.mkdtemp(prefix="spark_graft_skew_")
     try:
         t0 = time.perf_counter()
         hot = _build_skew_tables(spark, sf_dir, skew_dir)
         build_sec = round(time.perf_counter() - t0, 1)
 
-        def run_suite(data_dir: str, with_hash: bool) -> dict[str, dict]:
-            out: dict[str, dict] = {}
+        def run_suite(data_dir: str, with_hash: bool) -> dict[str, Run]:
             # owned layouts built once per data dir, outside the timing
             _prebuild_layouts(spark, data_dir)
-            for name, spec in bench_specs.items():
-                start = time.perf_counter()
-                spec.fn(spark, data_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                wall = time.perf_counter() - start
-                rec: dict = {"wall": round(wall, 3)}
-                if with_hash:
-                    rec["n"], rec["h"] = _content_hash(spec.fn(spark, data_dir))
-                spark.catalog.clearCache()
-                out[name] = rec
-            return out
+            return dict(suite(spark, bench_specs, data_dir, content_hash=with_hash))
 
         # warm codegen once, then run every suite at the cluster shape
-        next(iter(bench_specs.values())).fn(spark, sf_dir).write.format(
-            "noop"
-        ).mode("overwrite").save()
-        saved = {
-            k: spark.conf.get(k, None)
-            for k in {**_SKEW_CONF, **_SKEW_AQE_ON, **_SKEW_AQE_OFF}
-        }
-        for k, v in _SKEW_CONF.items():
-            spark.conf.set(k, v)
-        try:
-            for k, v in _SKEW_AQE_ON.items():
-                spark.conf.set(k, v)
+        warm_up(spark, bench_specs, sf_dir)
+        with confs(spark, {**_SKEW_CONF, **_SKEW_AQE_ON}):
             uniform = run_suite(sf_dir, with_hash=False)
             skew_on = run_suite(skew_dir, with_hash=True)
-            for k, v in _SKEW_AQE_OFF.items():
-                spark.conf.set(k, v)
-            skew_off = run_suite(skew_dir, with_hash=True)
+            with confs(spark, _SKEW_AQE_OFF):
+                skew_off = run_suite(skew_dir, with_hash=True)
             # drift bracket re-runs uniform under the SAME conf as the
             # first uniform pass (skew-split back on), so the per-query
             # min() compares like with like
-            for k, v in _SKEW_AQE_ON.items():
-                spark.conf.set(k, v)
             uniform2 = run_suite(sf_dir, with_hash=False)
-        finally:
-            # unset keys whose prior value was unretrievable — skipping
-            # them would pin rehearsal overrides (e.g. the 1 MiB skew
-            # threshold) on the session for any composed suite
-            for k, v in saved.items():
-                if v is None:
-                    spark.conf.unset(k)
-                else:
-                    spark.conf.set(k, v)
     finally:
         shutil.rmtree(skew_dir, ignore_errors=True)
 
     rows, bad = [], []
     for name in bench_specs:
-        u = min(uniform[name]["wall"], uniform2[name]["wall"])
+        u = min(uniform[name].wall, uniform2[name].wall)
         s_on, s_off = skew_on[name], skew_off[name]
-        ratio = s_on["wall"] / u if u else float("inf")
-        same = s_on["n"] == s_off["n"] and s_on["h"] == s_off["h"]
+        ratio = s_on.wall / u if u else float("inf")
+        same = s_on.content == s_off.content
         # gate: planted whales may legitimately cost one oversized task,
         # but must not collapse the plan (ratio) and the AQE skew-split
         # rewrite must never change the answer (content)
-        ok = same and (ratio <= 2.5 or s_on["wall"] - u <= 1.0)
-        rows.append((name, u, s_on["wall"], s_off["wall"], ratio, same, ok))
+        ok = same and (ratio <= 2.5 or s_on.wall - u <= 1.0)
+        rows.append((name, u, s_on.wall, s_off.wall, ratio, same, ok))
         if not ok:
             bad.append(name)
 

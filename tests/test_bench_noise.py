@@ -1,4 +1,4 @@
-"""Unit pins for bench.py's round-over-round noise verdict (round 11).
+"""Unit pins for bench.py's round-over-round noise verdict.
 
 No Spark: the parser and verdict logic are pure functions over the
 driver's BENCH_r*.json artifact shape. Pins the artifact-discovery rules
@@ -17,12 +17,16 @@ from bench import _compact_line, _noise_verdicts, _prev_per_query, _prev_round_c
 
 
 def _artifact(sf, q, calib=0.285):
+    """A BENCH_r*.json holding a compact line in the r13 shape: ``q`` maps
+    a head to its (cold, spread) pair, stored as the ``queries`` dict and
+    the ``s`` array parallel to the sorted names."""
+    names = sorted(q)
     compact = json.dumps(
         {
-            "q_cols": ["cold", "warm", "spread", "normalized"],
-            "q": q,
             "metric": "headline_queries_total_wall_clock",
             "sf": sf,
+            "queries": {n: q[n][0] for n in names},
+            "s": [q[n][1] for n in names],
             "calib_spark_sec": calib,
             "calib_ref": 0.285,
         },
@@ -36,15 +40,15 @@ def _artifact(sf, q, calib=0.285):
 
 
 def test_prev_round_compact_picks_newest_matching_sf(tmp_path):
-    old = _artifact(0.1, {"q1": [1.0, 0.9, 0.1, 1.0]})
-    new = _artifact(0.1, {"q1": [2.0, 1.8, 0.2, 2.0]})
-    other_sf = _artifact(0.01, {"q1": [9.0, 9.0, 9.0, 9.0]})
+    old = _artifact(0.1, {"q1": (1.0, 0.1)})
+    new = _artifact(0.1, {"q1": (2.0, 0.2)})
+    other_sf = _artifact(0.01, {"q1": (9.0, 9.0)})
     (tmp_path / "BENCH_r01.json").write_text(json.dumps(old))
     (tmp_path / "BENCH_r02.json").write_text(json.dumps(new))
     (tmp_path / "BENCH_r03.json").write_text(json.dumps(other_sf))
     obj, name = _prev_round_compact(str(tmp_path), 0.1)
     assert name == "BENCH_r02.json"  # newest artifact at the SAME SF
-    assert obj["q"]["q1"][3] == 2.0
+    assert obj["queries"]["q1"] == 2.0
 
 
 def test_prev_round_compact_none_when_no_match(tmp_path):
@@ -61,9 +65,9 @@ def test_prev_round_compact_none_when_no_match(tmp_path):
 
 def test_noise_verdict_branches():
     prev = _artifact(0.1, {
-        "steady": [2.0, 1.8, 0.1, 2.0],
-        "shrunk": [4.0, 3.5, 0.1, 4.0],
-        "blown": [1.0, 0.9, 0.1, 1.0],
+        "steady": (2.0, 0.1),
+        "shrunk": (4.0, 0.1),
+        "blown": (1.0, 0.1),
     })
     prev_obj = json.loads(prev["tail"].strip().splitlines()[-1])
     timings = {"steady": 2.1, "shrunk": 1.0, "blown": 3.0, "fresh": 0.5}
@@ -82,7 +86,7 @@ def test_noise_verdict_normalizes_prev_spread_by_prev_calib():
     # previous round ran on a 2x-slow host (calib 0.57): its RAW spread
     # halves after normalization, so a delta just past the naive sum
     # still flags
-    prev = _artifact(0.1, {"x": [2.0, 1.8, 1.0, 1.0]}, calib=0.57)
+    prev = _artifact(0.1, {"x": (2.0, 1.0)}, calib=0.57)
     prev_obj = json.loads(prev["tail"].strip().splitlines()[-1])
     # this run: normalized value 1.8 vs prev 1.0 -> delta 0.8;
     # tol = 0.1 + 1.0*0.5 + max(0.15, 0.2) = 0.8 -> boundary ok
@@ -211,14 +215,14 @@ def test_compact_line_drops_arrays_before_queries():
     assert set(obj2["queries"]) == set(timings)
 
 
-def test_prev_per_query_parses_both_shapes():
-    old = {
-        "q_cols": ["cold", "warm", "spread", "normalized"],
-        "q": {"x": [2.0, 1.8, 0.2, 1.0]},
+def test_prev_per_query_parses_queries_shape():
+    one = {
+        "queries": {"x": 2.0},
+        "s": [0.2],
         "calib_spark_sec": 0.57,
         "calib_ref": 0.285,
     }
-    pq = _prev_per_query(old)
+    pq = _prev_per_query(one)
     assert pq["x"]["cold"] == 2.0 and pq["x"]["normalized"] == 1.0
     assert abs(pq["x"]["spread"] - 0.1) < 1e-9  # normalized by prev calib
     new = {
@@ -257,20 +261,31 @@ def test_prev_round_compact_accepts_new_shape(tmp_path):
     assert name == "BENCH_r13.json" and obj["queries"]["q1"] == 1.5
 
 
+def test_prev_round_compact_reads_the_checked_in_r13_artifact():
+    """The newest sf0.1 artifact in the repo carries the compact line the
+    parser reads: a queries dict with its parallel spread array."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    obj, name = _prev_round_compact(repo, 0.1)
+    assert int(name[len("BENCH_r"):-len(".json")]) >= 13
+    pq = _prev_per_query(obj)
+    assert len(pq) == len(obj["queries"]) == len(obj["s"]) > 0
+    assert all(row["cold"] > 0 for row in pq.values())
+
+
 def test_prev_round_compact_sorts_rounds_numerically(tmp_path):
     """Round-12 (ADVICE r11): artifact recency is the ROUND NUMBER, not
     the filename string — 'BENCH_r100.json' must beat 'BENCH_r99.json'
     even though it sorts lower lexicographically, and an unpadded
     'BENCH_r9.json' must lose to both."""
     (tmp_path / "BENCH_r9.json").write_text(
-        json.dumps(_artifact(0.1, {"q1": [9.0, 9.0, 0.1, 9.0]}))
+        json.dumps(_artifact(0.1, {"q1": (9.0, 0.1)}))
     )
     (tmp_path / "BENCH_r99.json").write_text(
-        json.dumps(_artifact(0.1, {"q1": [2.0, 1.8, 0.1, 2.0]}))
+        json.dumps(_artifact(0.1, {"q1": (2.0, 0.1)}))
     )
     (tmp_path / "BENCH_r100.json").write_text(
-        json.dumps(_artifact(0.1, {"q1": [1.0, 0.9, 0.1, 1.0]}))
+        json.dumps(_artifact(0.1, {"q1": (1.0, 0.1)}))
     )
     obj, name = _prev_round_compact(str(tmp_path), 0.1)
     assert name == "BENCH_r100.json"
-    assert obj["q"]["q1"][3] == 1.0
+    assert obj["queries"]["q1"] == 1.0
