@@ -31,6 +31,8 @@ Module map (SURVEY.md §2B families):
                  z-score outlier flagging
 * analytics_suite — funnel conversion, retention cohorts, market-basket
                  pairs, gaps-and-islands streaks, cumulative distinct
+* ranking      — shared distributed-rank + exact-quantile helpers (no
+                 queries)
 * funcs3       — boolean aggregates (count_if/bool_and/bool_or), trig family
 * funcs4       — calendar-arithmetic datetime family, bigram frequency
 * funcs5       — VARIANT family, interval arithmetic, bitwise folds,

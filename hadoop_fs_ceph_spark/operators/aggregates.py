@@ -12,7 +12,6 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from hadoop_fs_ceph_spark.barrier import eager_barrier
 from hadoop_fs_ceph_spark.canonical import (
     _sql_fixsum as _sql_fix,
     davg,
@@ -23,6 +22,12 @@ from hadoop_fs_ceph_spark.canonical import (
     sql_dstddev_samp,
     sql_dsum,
     sql_dvar_samp,
+)
+from hadoop_fs_ceph_spark.operators.ranking import (
+    _MED_PASSES,
+    _conc_customer_cents,
+    _quantiles_refine,
+    _ranked_nosort,
 )
 from hadoop_fs_ceph_spark.registry import query
 from hadoop_fs_ceph_spark.tables import t
@@ -804,29 +809,6 @@ def agg_bitmap_distinct(spark, sf_dir):
     return per.crossJoin(F.broadcast(tot)).orderBy("pri")
 
 
-# Exact-median refinement: bucket count per pass. Three passes cover a
-# value domain of B^3 ≈ 6.9e10 distinct integers — far above the
-# per-customer cents range at any TPC-H scale factor (~5e9 at SF 100);
-# the is_exact output column verifies convergence instead of trusting it.
-_MED_B = 4096
-_MED_PASSES = 3
-# Wide-domain tier: composite keys (value·1e8 + tiebreak — the exact
-# RFM / equi-depth reformulations) span up to the full signed-long range, so
-# 3 passes at B=4096 (4096³ ≈ 6.9e10) cannot collapse them. Each pass
-# narrows the bracket WIDTH to exactly (hi − lo) div B (the selected bucket
-# spans w = (hi−lo) div B + 1 values, so hi_new − lo_new ≤ w − 1), hence
-# 4 passes at B=65536 pin ANY long bracket: floor(w₀ / 65536⁴) =
-# floor(w₀ / 2^64) = 0 — convergence by arithmetic, not luck. Round 12
-# (guide §1.2 — touch each byte once): the wide tier used 6 passes at
-# B=4096 (4096⁶ = 2^72 > 2^64); widening its buckets 16× deletes two full
-# data passes (and two per-pass localCheckpoint barriers) from every
-# wide-domain consumer while the per-pass state stays combiner-sized
-# (≤65536 count rows per refining key). The default 3-pass tier keeps
-# B=4096: its consumers' plans, docs and domain claims are unchanged.
-_MED_B_WIDE = 65536
-_MED_PASSES_WIDE = 4
-
-
 @query(
     "agg_exact_median_nosort",
     oracle="""
@@ -867,8 +849,6 @@ def agg_exact_median_nosort(spark, sf_dir):
     case of the multi-quantile refiner (⌈n/2⌉ = ⌈50n/100⌉), so the
     delicate narrowing arithmetic lives in ONE place:
     ``_quantiles_refine``."""
-    from hadoop_fs_ceph_spark.operators.analytics_suite import _conc_customer_cents
-
     x = _conc_customer_cents(spark, sf_dir).persist()
     base = x.agg(
         F.min("cents").alias("lo"),
@@ -892,108 +872,6 @@ def agg_exact_median_nosort(spark, sf_dir):
 
 
 _QNT_PCTS = (25, 50, 75, 99)
-
-
-def _quantiles_refine(x, states, key="pct", weight=None, b=_MED_B):
-    """One shared refinement pass over ALL quantile states at once: the
-    bounded (key, lo, hi, k) state relation broadcasts onto the value
-    relation, then each state's crossing bucket is located by its own
-    fold and the narrowed state relation emerges from one tiny join —
-    ONE data scan per pass regardless of how many states refine.
-    Two binding modes, chosen by whether ``key`` is a column of ``x``:
-    a state-key column in ``x`` (per-GROUP quantiles) equi-joins each
-    row to ITS group's state; otherwise (multi-quantile over one
-    population) the states fan out to every row. Bucket ids and range
-    narrowing use true integer ``div`` — a double divide + cast can
-    round up across an integer boundary (and loses exactness past
-    2^53). Binning is WIDTH-based (b = (cents − lo) div w with
-    w = ⌈range/B⌉) rather than ((cents − lo)·B) div range: the product
-    form overflows long once the value domain nears 2^63/B — and the
-    composite value·1e8 + key domains of the exact RFM/histogram
-    reformulations live there — while the width form's largest
-    intermediate is the range itself. ``agg_exact_median_nosort`` is
-    the 1-row state case. ``weight``: optional integer weight column in
-    ``x`` — bucket mass becomes Σweight instead of COUNT (k then binds
-    a WEIGHTED rank), and nothing else changes: the weighted median is
-    the same three passes. ``b``: buckets per pass — ``_MED_B`` (4096)
-    for the default 3-pass tier, ``_MED_B_WIDE`` (65536) for the 4-pass
-    wide-domain tier (see the tier comment above); either way the
-    per-pass state stays ≤b count rows per refining key."""
-    bound = (
-        x.join(F.broadcast(states), key)
-        if key in x.columns
-        else x.crossJoin(F.broadcast(states))
-    )
-    w_expr = f"((hi - lo) div {b}) + 1"
-    binned = (
-        bound.filter(F.col("cents").between(F.col("lo"), F.col("hi")))
-        .select(
-            key,
-            F.expr(f"(cents - lo) div ({w_expr})").alias("b"),
-            *([weight] if weight else []),
-        )
-        .groupBy(key, "b")
-        .agg(
-            (F.sum(weight) if weight else F.count(F.lit(1))).alias("cnt")
-        )
-    )
-    lz = F.lit(0).cast("long")
-    init = F.struct(
-        lz.alias("cum"),
-        F.lit(False).alias("found"),
-        lz.alias("sel_b"),
-        lz.alias("cum_before"),
-    )
-
-    def step(acc, p):
-        new_cum = acc["cum"] + p["cnt"]
-        now = new_cum >= F.col("k")
-        return F.when(acc["found"], acc).otherwise(
-            F.struct(
-                new_cum.alias("cum"),
-                now.alias("found"),
-                F.when(now, p["b"]).otherwise(lz).alias("sel_b"),
-                F.when(now, acc["cum"]).otherwise(lz).alias("cum_before"),
-            )
-        )
-
-    arrs = binned.groupBy(key).agg(
-        F.collect_list(F.struct("b", "cnt")).alias("arr")
-    )
-    return (
-        states.join(arrs, key)
-        .select(
-            key,
-            F.aggregate(F.array_sort("arr"), init, step).alias("acc"),
-            "lo",
-            "hi",
-            "k",
-        )
-        .selectExpr(
-            key,
-            f"lo + acc.sel_b * ({w_expr}) AS lo",
-            f"least(hi, lo + (acc.sel_b + 1) * ({w_expr}) - 1) AS hi",
-            "k - acc.cum_before AS k",
-        )
-        # Round-12 (guide §3.3/§5 — a materialized intermediate truncates
-        # the plan): each pass references `states` TWICE (the broadcast
-        # into `bound` and the final narrow join), so without a barrier
-        # the state subtree DOUBLES per pass — the 6-pass wide-domain
-        # consumers compiled 2⁶ copies of the base state into one plan
-        # (ds_rfm_segmentation: 447 Exchange / 126 BroadcastExchange
-        # nodes, ~28 s at sf0.1, nearly all AQE re-planning of repeated
-        # tiny stages). The state is ≤|states| rows (bounded by groups ×
-        # quantiles — control-plane-sized, the same class as the k-core
-        # survivor vector), so an eager localCheckpoint per pass costs
-        # one small job and keeps the compiled plan LINEAR in pass
-        # count. Measured at sf0.1: RFM 27.9 → 6.3 s (4.4×), grouped
-        # quantiles 4.3 → 2.9 s cold; the 3-pass single-state consumers
-        # (2³ = 8 copies) roughly break even — the checkpoint jobs cost
-        # what the redundant tiny stages did — and the win grows with
-        # pass count and state width. Hashes unchanged (all seven
-        # refinement consumers re-verified at sf0.001 + sf0.01).
-        .transform(eager_barrier)
-    )
 
 
 @query(
@@ -1028,8 +906,6 @@ def agg_exact_quantiles_nosort(spark, sf_dir):
     to width 1. This is the shape a production profiler uses when the
     sketch tolerance of `percentile_approx` isn't acceptable (billing
     cutoffs, SLA percentiles) but sorting the corpus isn't either."""
-    from hadoop_fs_ceph_spark.operators.analytics_suite import _conc_customer_cents
-
     x = _conc_customer_cents(spark, sf_dir).persist()
     pcts = spark.range(1).select(
         F.explode(F.array(*[F.lit(p) for p in _QNT_PCTS])).alias("pct0")
@@ -1408,8 +1284,6 @@ def agg_quantile_sketch_error(spark, sf_dir):
     3-pass refinement (`agg_exact_quantiles_nosort`); the rank count is
     one more map-combined aggregate against a 2-row broadcast. No
     sort, no window, no driver state anywhere."""
-    from hadoop_fs_ceph_spark.operators.analytics_suite import _conc_customer_cents
-
     x = _conc_customer_cents(spark, sf_dir).persist()
     base = x.agg(
         F.min("cents").alias("lo"),
@@ -1569,8 +1443,6 @@ def agg_trimmed_mean_nosort(spark, sf_dir):
     the cut is at the exact order statistics: at 100 TB the rank pass
     shuffles (bin, 16-byte rows), never the payload, and the only global
     state is the ≤4096-row offset map."""
-    from hadoop_fs_ceph_spark.operators.analytics_suite import _ranked_nosort
-
     x = t(spark, sf_dir, "orders").select(
         F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"), "o_orderkey"
     )

@@ -25,6 +25,13 @@ from hadoop_fs_ceph_spark.operators.basket_common import (
     OP_CAPPED_CTES,
     capped_order_parts,
 )
+from hadoop_fs_ceph_spark.operators.ranking import (
+    _MED_B_WIDE,
+    _MED_PASSES_WIDE,
+    _conc_customer_cents,
+    _quantiles_refine,
+    _ranked_nosort,
+)
 from hadoop_fs_ceph_spark.registry import query
 from hadoop_fs_ceph_spark.tables import t
 
@@ -506,12 +513,6 @@ def ds_rfm_segmentation(spark, sf_dir):
     combiner-sized shuffles, zero sorts, zero driver state — then ride
     into the map-side bucket assignment as a one-row broadcast map.
     Composite bound: holds while custkey < C = 1e8 (docs at _RFM_C)."""
-    from hadoop_fs_ceph_spark.operators.aggregates import (
-        _MED_B_WIDE,
-        _MED_PASSES_WIDE,
-        _quantiles_refine,
-    )
-
     o = t(spark, sf_dir, "orders")
     m = o.groupBy("o_custkey").agg(
         F.max("o_orderdate").alias("last_d"),
@@ -802,134 +803,6 @@ def _conc_bins(x, st):
         .groupBy("bin")
         .agg(F.count(F.lit(1)).alias("nb"), F.sum("cents").alias("sb"))
     )
-
-
-def _conc_customer_cents(spark, sf_dir):
-    o = t(spark, sf_dir, "orders")
-    return o.groupBy("o_custkey").agg(
-        F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias("cents")
-    )
-
-
-def _ranked_nosort(x, bins=4096, with_totals=False):
-    """EXACT global rank + inclusive running sum over DISTINCT long keys
-    with NO single-partition window — the distributed-rank pattern:
-
-    1. range-bin every row against a broadcast one-row (lo, hi) bound
-       (map-side, width-based integer ``div`` — same overflow posture as
-       ``_quantiles_refine``);
-    2. one partial-merged aggregate gives per-bin (count, value-sum) —
-       ≤ ``bins`` rows — whose sorted array folds sequentially into a
-       per-bin EXCLUSIVE prefix map {bin → (rows_before, value_before)};
-    3. the per-row window runs ``partitionBy(bin)`` — parallel across
-       bins, never a single task — and the broadcast prefix map turns
-       within-bin rank/running-sum into the global ones.
-
-    This is how a range-partitioned sort ranks without sorting the world
-    through one task: the only global object is the ≤``bins``-row offset
-    relation. Composite keys (value·1e8 + tiebreak) spread ties across
-    the tiebreak domain, so equal VALUES never pile into one bin; a
-    pathologically clustered value distribution concentrates bins (the
-    classic range-sort skew), which AQE splits at runtime — or a
-    refinement pass re-bins the heavy range, same machinery.
-
-    ``x``: columns ``key`` (distinct long) and ``val`` (long). Returns
-    ``key, val, i`` (1-based global rank by key) and ``cum`` (inclusive
-    running sum of val in key order), all exact integers.
-
-    ``with_totals=True`` additionally returns ``n_tot``/``v_tot`` (the
-    global COUNT and SUM(val)) on every row — the fold's final
-    accumulator already holds both, so exposing them through the same
-    ≤``bins``-row broadcast is FREE, where a caller-side
-    ``ranked.agg(...)`` would re-execute the whole rank pipeline a
-    second time (round-12, guide §1.2: it cost ds_lift_gains_deciles a
-    full extra rank pass)."""
-    st = x.agg(F.min("key").alias("lo"), F.max("key").alias("hi"))
-    w_expr = f"((hi - lo) div {bins}) + 1"
-    b = x.crossJoin(F.broadcast(st)).select(
-        "key", "val", F.expr(f"(key - lo) div ({w_expr})").alias("bin")
-    )
-    per = b.groupBy("bin").agg(
-        F.count(F.lit(1)).alias("cnt"), F.sum("val").alias("vs")
-    )
-    lz = F.lit(0).cast("long")
-    init = F.struct(
-        lz.alias("c"),
-        lz.alias("v"),
-        F.array().cast("array<struct<bin:long,cb:long,vb:long>>").alias("es"),
-    )
-
-    def step(acc, p):
-        return F.struct(
-            (acc["c"] + p["cnt"]).alias("c"),
-            (acc["v"] + p["vs"]).alias("v"),
-            F.concat(
-                acc["es"],
-                F.array(
-                    F.struct(
-                        p["bin"].alias("bin"),
-                        acc["c"].alias("cb"),
-                        acc["v"].alias("vb"),
-                    )
-                ),
-            ).alias("es"),
-        )
-
-    # Round-12 (guide §4-adjacent — per-row work, measured): the offsets
-    # used to ship as ONE broadcast row holding a ≤4096-entry MAP, read
-    # per data row via om[bin] — but Spark's GetMapValue is a LINEAR scan
-    # of the map, and both output columns paid it, so the per-row cost
-    # was O(bins) twice: rows × bins ≈ 150k × 4096 × 2 ≈ 1.2G probes on
-    # the widest consumer (agg_trimmed_mean_nosort), measured 152 s cold
-    # at sf0.1 — the slowest query in the tree, and every distributed-rank
-    # consumer paid proportionally (gini 5.2 s on 15k customers). The
-    # same fold now EXPLODES into a ≤``bins``-row (bin, cb, vb) relation
-    # and broadcast-hash-JOINS on bin: an O(1) hash probe per row,
-    # identical integer arithmetic (every bin of ``b`` exists in ``per``
-    # by construction, so the inner join drops nothing). Measured:
-    # trimmed mean 152 → 2.1 s (72×), gini 5.2 → 1.5 s; all eleven
-    # consumers hash-identical at sf0.001 + sf0.01.
-    folded = F.aggregate(
-        F.array_sort(F.collect_list(F.struct("bin", "cnt", "vs"))),
-        init,
-        step,
-    )
-    if with_totals:
-        # the fold's final accumulator c/v ARE the global totals: every
-        # bin's (cnt, vs) was added exactly once, in bin order
-        offs = (
-            per.agg(folded.alias("f"))
-            .select(
-                F.col("f.c").alias("n_tot"),
-                F.col("f.v").alias("v_tot"),
-                F.explode("f.es").alias("e"),
-            )
-            .select(
-                F.col("e.bin").alias("bin"),
-                F.col("e.cb").alias("cb"),
-                F.col("e.vb").alias("vb"),
-                "n_tot",
-                "v_tot",
-            )
-        )
-    else:
-        offs = (
-            per.agg(folded["es"].alias("es"))
-            .select(F.explode("es").alias("e"))
-            .select(F.col("e.bin").alias("bin"), F.col("e.cb").alias("cb"), F.col("e.vb").alias("vb"))
-        )
-    w = Window.partitionBy("bin").orderBy("key")
-    out = b.join(F.broadcast(offs), "bin").select(
-        "key",
-        "val",
-        (F.col("cb") + F.row_number().over(w)).alias("i"),
-        (
-            F.col("vb")
-            + F.sum("val").over(w.rowsBetween(Window.unboundedPreceding, 0))
-        ).alias("cum"),
-        *(["n_tot", "v_tot"] if with_totals else []),
-    )
-    return out
 
 
 @query(
@@ -4366,8 +4239,6 @@ def ds_segment_migration_matrix(spark, sf_dir):
     Scale: two rank passes over per-customer aggregates (facts
     collapse first), one slim (ck, q) join. Migration at 100 TB is
     exactly this plan."""
-    from hadoop_fs_ceph_spark.operators.analytics_suite import _ranked_nosort
-
     o = t(spark, sf_dir, "orders")
     split = F.lit(_MIG_SPLIT).cast("timestamp_ntz")
 
@@ -4855,8 +4726,6 @@ def ds_abc_classification(spark, sf_dir):
 
     Scale: one per-key aggregate + one range-binned rank pass + a
     3-row class aggregate."""
-    from hadoop_fs_ceph_spark.operators.analytics_suite import _ranked_nosort
-
     li = t(spark, sf_dir, "lineitem")
     per = li.groupBy(F.col("l_partkey").alias("pk")).agg(
         F.sum(F.round(F.col("l_extendedprice") * 100).cast("long")).alias("rev_c")

@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from hadoop_fs_ceph_spark import scratch
 from hadoop_fs_ceph_spark.canonical import dsum, sql_dsum
 from hadoop_fs_ceph_spark.registry import query
 from hadoop_fs_ceph_spark.tables import dim, t
@@ -488,11 +489,10 @@ def join_dpp_partitioned(spark, sf_dir):
     when the filter lives in a dimension, not on the fact — static
     pruning can't see through the join. The oracle is the post-join
     semantics expressed directly."""
-    from hadoop_fs_ceph_spark.operators.sources_q import _scratch
     from hadoop_fs_ceph_spark.sources import write_table
 
     o = t(spark, sf_dir, "orders")
-    path = _scratch(sf_dir, "dpp_orders")
+    path = scratch.path(sf_dir, "dpp_orders")
     write_table(o, path, format="parquet", mode="overwrite",
                 partition_by=["o_orderstatus"])
     fact = spark.read.parquet(path)
@@ -501,7 +501,7 @@ def join_dpp_partitioned(spark, sf_dir):
     # expressions — Catalyst cannot fold it into a static partition
     # filter, so pruning the fact scan requires the runtime DPP subquery
     # (filter the dim first, broadcast the surviving keys, prune).
-    dim_path = _scratch(sf_dir, "dpp_status_dim")
+    dim_path = scratch.path(sf_dir, "dpp_status_dim")
     write_table(
         o.select("o_orderstatus")
         .distinct()

@@ -31,6 +31,11 @@ from hadoop_fs_ceph_spark.canonical import (
     sql_dvar_samp,
 )
 from hadoop_fs_ceph_spark.functions.text import poly_hash, sql_poly_hash
+from hadoop_fs_ceph_spark.operators.ranking import (
+    _MED_PASSES,
+    _quantiles_refine,
+    _ranked_nosort,
+)
 from hadoop_fs_ceph_spark.registry import query
 from hadoop_fs_ceph_spark.tables import t
 
@@ -637,11 +642,6 @@ def profile_equidepth_histogram(spark, sf_dir):
     ≤16·4096-row shuffles, zero sorts, zero driver state). This retires
     the round-4 allowlist entry: the oracle stays the ntile truth, and
     the plan now survives 100 TB."""
-    from hadoop_fs_ceph_spark.operators.aggregates import (
-        _MED_PASSES,
-        _quantiles_refine,
-    )
-
     o = t(spark, sf_dir, "orders")
     x = o.select(
         F.round(F.col("o_totalprice") * 100).cast("long").alias("cents")
@@ -2647,8 +2647,6 @@ def ds_mann_whitney_u(spark, sf_dir):
     statistics on 100 TB without a world sort; the key encoding
     (cents·2^44 + event_id) holds while event ids fit 44 bits and cents 18, after
     which the same machinery runs on a composite struct key."""
-    from hadoop_fs_ceph_spark.operators.analytics_suite import _ranked_nosort
-
     # Round-13 (surfaced by the first SOAK run with this head): both key
     # expressions must survive the soak's per-replica 10^12 key offsets.
     # The A/B split runs in residue arithmetic — (u·MIX) mod 100 ==
@@ -3546,8 +3544,6 @@ def ds_kruskal_wallis(spark, sf_dir):
     Scale: one range-binned shuffle + per-bin windows for ranks (the
     exact-Gini plan), then a ≤k-row aggregate — rank tests on 100 TB
     without sorting the world."""
-    from hadoop_fs_ceph_spark.operators.analytics_suite import _ranked_nosort
-
     e = t(spark, sf_dir, "events")
     gid = F.ascii(F.substring("event_type", 1, 1)).cast("long")
     assigned = e.select(
@@ -3673,8 +3669,6 @@ def ds_spearman_rho(spark, sf_dir):
     Scale: two range-binned rank passes + one slim join + a one-row
     aggregate; ρ is one deterministic double chain over exact
     integers, rounded at 1e-8."""
-    from hadoop_fs_ceph_spark.operators.analytics_suite import _ranked_nosort
-
     o = t(spark, sf_dir, "orders")
     per = o.groupBy("o_custkey").agg(
         F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias("spend_c"),
@@ -3784,8 +3778,6 @@ def ds_wilcoxon_signed_rank(spark, sf_dir):
 
     Scale: the per-user early/late fold is one partial-merged groupBy
     over the scan; ranking shuffles only (user, |d|) pairs."""
-    from hadoop_fs_ceph_spark.operators.analytics_suite import _ranked_nosort
-
     e = t(spark, sf_dir, "events")
     b = e.agg(
         F.expr("(unix_micros(MIN(ts)) + unix_micros(MAX(ts))) div 2").alias("mid")
@@ -4182,8 +4174,6 @@ def ds_lift_gains_deciles(spark, sf_dir):
 
     Scale: one rank pass + one 10-row fold; the ranked relation
     shuffles (key, y) pairs only."""
-    from hadoop_fs_ceph_spark.operators.analytics_suite import _ranked_nosort
-
     li = t(spark, sf_dir, "lineitem")
     keyed = li.select(
         (

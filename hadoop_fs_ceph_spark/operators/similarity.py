@@ -2340,6 +2340,9 @@ def sim_sparse_cosine_join(spark, sf_dir):
     if n_slices == 1:
         joined = a.join(F.broadcast(b), "tok")
     else:
+        # every slice filters b: cache it once. The union runs at the
+        # caller's action, so spark.catalog.clearCache() releases it.
+        b = b.persist()
         sliced = None
         for j in range(n_slices):
             s = a.join(

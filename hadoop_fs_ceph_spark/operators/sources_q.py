@@ -11,23 +11,15 @@ write→read cycle is lossless (the reference-surface guarantee: bytes out
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from hadoop_fs_ceph_spark import scratch
 from hadoop_fs_ceph_spark.canonical import dsum, sql_dsum
 from hadoop_fs_ceph_spark.registry import query
 from hadoop_fs_ceph_spark.sources import read_csv, read_json, read_orc, write_table
 from hadoop_fs_ceph_spark.tables import t
-
-SCRATCH = os.path.join(tempfile.gettempdir(), "hfcs_scratch")
-
-
-def _scratch(sf_dir: str, name: str) -> str:
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    return os.path.join(SCRATCH, tag, name)
-
 
 _ORDERS_AGG_SQL = f"""
     SELECT o_orderstatus,
@@ -55,7 +47,7 @@ def src_csv_roundtrip(spark, sf_dir):
     Timestamps round-trip via an explicit ISO format; doubles via Spark's
     shortest-repr serialization (lossless)."""
     o = t(spark, sf_dir, "orders")
-    path = _scratch(sf_dir, "csv_orders")
+    path = scratch.path(sf_dir, "csv_orders")
     write_table(o, path, format="csv", mode="overwrite", header="true",
                 timestampFormat="yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX")
     schema = (
@@ -69,7 +61,7 @@ def src_csv_roundtrip(spark, sf_dir):
 def src_json_roundtrip(spark, sf_dir):
     """parquet → JSON lines → schema'd read-back → aggregate."""
     o = t(spark, sf_dir, "orders")
-    path = _scratch(sf_dir, "json_orders")
+    path = scratch.path(sf_dir, "json_orders")
     write_table(o, path, format="json", mode="overwrite",
                 timestampFormat="yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX")
     schema = (
@@ -85,7 +77,7 @@ def src_orc_roundtrip(spark, sf_dir):
     oracle runs on the original parquet — a hash match proves the ORC
     cycle lossless)."""
     o = t(spark, sf_dir, "orders")
-    path = _scratch(sf_dir, "orc_orders")
+    path = scratch.path(sf_dir, "orc_orders")
     write_table(o, path, format="orc", mode="overwrite")
     return _orders_agg(read_orc(spark, path))
 
@@ -102,7 +94,7 @@ def src_xml_roundtrip(spark, sf_dir):
     Scale: the XML source splits files like any text source; schema'd
     reads skip inference (a full extra pass at 100 TB)."""
     o = t(spark, sf_dir, "orders")
-    path = _scratch(sf_dir, "xml_orders")
+    path = scratch.path(sf_dir, "xml_orders")
     (
         o.write.mode("overwrite")
         .format("xml")
@@ -140,7 +132,7 @@ def src_partitioned_write(spark, sf_dir):
     survive the layout change. Partition pruning over this layout is
     asserted in tests/test_plans.py."""
     o = t(spark, sf_dir, "orders").withColumn("yr", F.year("o_orderdate"))
-    path = _scratch(sf_dir, "part_orders")
+    path = scratch.path(sf_dir, "part_orders")
     write_table(o, path, mode="overwrite", partition_by=["o_orderstatus", "yr"])
     back = spark.read.parquet(path)
     return (
@@ -170,7 +162,7 @@ def src_save_modes(spark, sf_dir):
     The returned counts prove the sequence: overwrite(1x) → errorifexists
     rejected (still 1x) → append(+1x) = 2x the source rows."""
     o = t(spark, sf_dir, "orders")
-    path = _scratch(sf_dir, "modes_orders")
+    path = scratch.path(sf_dir, "modes_orders")
     write_table(o, path, mode="overwrite")
     try:
         write_table(o, path, mode="errorifexists")
@@ -243,7 +235,7 @@ def src_bucketed_join(spark, sf_dir):
     pre-co-located buckets; the bucketed write is the reference's
     virtual-block idea (split-friendly layout) taken one step further:
     key-aligned layout."""
-    tag = os.path.basename(os.path.normpath(sf_dir)).replace(".", "_")
+    tag = scratch.tag(sf_dir)
     names = {}
     for tbl, key, cols in (
         ("orders", "o_orderkey", ["o_orderkey"]),
@@ -256,7 +248,7 @@ def src_bucketed_join(spark, sf_dir):
             .select(*cols)
             .write.bucketBy(8, key)
             .sortBy(key)
-            .option("path", _scratch(sf_dir, f"bucketed_{tbl}"))
+            .option("path", scratch.path(sf_dir, f"bucketed_{tbl}"))
             .mode("overwrite")
             .format("parquet")
             .saveAsTable(name)
@@ -368,7 +360,7 @@ def src_text_roundtrip(spark, sf_dir):
     the reference's FileSystem actually moves; structure is always layered
     on top)."""
     d = t(spark, sf_dir, "documents").select("text")
-    path = _scratch(sf_dir, "text_docs")
+    path = scratch.path(sf_dir, "text_docs")
     d.write.mode("overwrite").text(path)
     back = spark.read.text(path)  # column: value
     return back.agg(
@@ -403,7 +395,7 @@ def src_schema_evolution(spark, sf_dir):
     without rewriting history — the schema lives in the files, exactly
     the reference's world where the FS stores only bytes."""
     o = t(spark, sf_dir, "orders")
-    path = _scratch(sf_dir, "evolve_orders")
+    path = scratch.path(sf_dir, "evolve_orders")
     gen1 = o.filter(F.col("o_orderkey") % 2 == 0).select("o_orderkey", "o_totalprice")
     gen1.write.mode("overwrite").parquet(path)
     gen2 = o.filter(F.col("o_orderkey") % 2 == 1).select(
@@ -429,7 +421,7 @@ def src_parquet_codecs(spark, sf_dir):
     whatever bytes the format layer hands it). At 100 TB codec choice is
     a first-order cost knob, so the engine proves re-encoding lossless."""
     o = t(spark, sf_dir, "orders")
-    path = _scratch(sf_dir, "zstd_orders")
+    path = scratch.path(sf_dir, "zstd_orders")
     write_table(o, path, mode="overwrite", compression="zstd")
     return _orders_agg(spark.read.parquet(path))
 
@@ -446,9 +438,9 @@ def src_compact_small_files(spark, sf_dir):
     100 TB the same rewrite runs per-partition with a target file size of
     ~1 GiB, keyed off AQE advisory partition sizes."""
     o = t(spark, sf_dir, "orders")
-    frag = _scratch(sf_dir, "frag_orders")
+    frag = scratch.path(sf_dir, "frag_orders")
     write_table(o.repartition(64), frag, mode="overwrite")
-    compacted = _scratch(sf_dir, "compact_orders")
+    compacted = scratch.path(sf_dir, "compact_orders")
     write_table(spark.read.parquet(frag).coalesce(4), compacted, mode="overwrite")
     return _orders_agg(spark.read.parquet(compacted))
 
@@ -473,7 +465,7 @@ def src_clustered_write(spark, sf_dir):
     scan touches ~1/8 of the files. Same idea generalizes to multi-column
     Z-ordering; single-key range clustering is the Spark-native form."""
     o = t(spark, sf_dir, "orders")
-    path = _scratch(sf_dir, "clustered_orders")
+    path = scratch.path(sf_dir, "clustered_orders")
     write_table(
         o.repartitionByRange(8, "o_orderdate").sortWithinPartitions("o_orderdate"),
         path,
@@ -504,7 +496,7 @@ def src_csv_dialect(spark, sf_dir):
             F.col("o_orderpriority")
         ),
     )
-    path = _scratch(sf_dir, "csv_dialect_orders")
+    path = scratch.path(sf_dir, "csv_dialect_orders")
     write_table(
         o, path, format="csv", mode="overwrite", header="true",
         timestampFormat="yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX",
@@ -532,8 +524,8 @@ def src_multi_path_read(spark, sf_dir):
     doubled across the path split."""
     o = t(spark, sf_dir, "orders")
     urgent = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
-    pa = _scratch(sf_dir, "multi_a")
-    pb = _scratch(sf_dir, "multi_b")
+    pa = scratch.path(sf_dir, "multi_a")
+    pb = scratch.path(sf_dir, "multi_b")
     write_table(o.filter(urgent), pa, format="parquet", mode="overwrite")
     write_table(o.filter(~urgent), pb, format="parquet", mode="overwrite")
     return _orders_agg(spark.read.parquet(pa, pb))
@@ -567,7 +559,7 @@ def src_dynamic_partition_overwrite(spark, sf_dir):
     o = t(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice", "o_orderstatus"
     )
-    path = _scratch(sf_dir, "dyn_overwrite_orders")
+    path = scratch.path(sf_dir, "dyn_overwrite_orders")
     o.write.mode("overwrite").partitionBy("o_orderstatus").parquet(path)
     restated = o.filter(F.col("o_orderstatus") == "F").withColumn(
         "o_totalprice", F.col("o_totalprice") * 1.1
@@ -619,7 +611,7 @@ def src_time_travel(spark, sf_dir):
     import json
 
     o = t(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
-    root = _scratch(sf_dir, "time_travel")
+    root = scratch.path(sf_dir, "time_travel")
     base, delta = os.path.join(root, "data", "base"), os.path.join(root, "data", "delta")
     write_table(o.filter(F.col("o_orderkey") % 3 != 0), base,
                 format="parquet", mode="overwrite")
@@ -692,7 +684,7 @@ def src_nested_struct_roundtrip(spark, sf_dir):
             )
         ).alias("hist")
     )
-    path = _scratch(sf_dir, "nested_struct")
+    path = scratch.path(sf_dir, "nested_struct")
     write_table(nested, path, format="parquet", mode="overwrite")
     back = spark.read.parquet(path)
     first = F.element_at("hist", 1)
@@ -740,7 +732,7 @@ def src_csv_permissive_corrupt(spark, sf_dir):
             F.col("source"),
         ).alias("value")
     )
-    path = _scratch(sf_dir, "csv_permissive")
+    path = scratch.path(sf_dir, "csv_permissive")
     lines.write.mode("overwrite").text(path)
     back = spark.read.csv(
         path,
@@ -799,7 +791,7 @@ def src_zorder_write(spark, sf_dir):
         "l_orderkey", "l_partkey", "l_extendedprice"
     )
     z = F.expr(_Z_EXPR).alias("z")
-    path = _scratch(sf_dir, "zorder_lineitem")
+    path = scratch.path(sf_dir, "zorder_lineitem")
     write_table(
         li.select("*", z)
         .repartitionByRange(8, "z")
@@ -844,7 +836,7 @@ def src_catalog_rename(spark, sf_dir):
 
     cat = Catalog(spark, sf_dir)
     sample = t(spark, sf_dir, "orders").filter(F.col("o_orderkey") % 5 == 0)
-    path = _scratch(sf_dir, "rename_orders")
+    path = scratch.path(sf_dir, "rename_orders")
     cat.write_table(sample, "orders_staging", path, mode="overwrite")
     cat.rename_table("orders_staging", "orders_final")
     if cat.exists("orders_staging"):  # pragma: no cover - contract violation
@@ -946,7 +938,7 @@ def src_multi_table_snapshot(spark, sf_dir):
     )
     li = t(spark, sf_dir, "lineitem").select("l_orderkey", "l_extendedprice")
     li = li.join(o.select("o_orderkey"), li.l_orderkey == o.o_orderkey, "left_semi")
-    root = _scratch(sf_dir, "multi_snap")
+    root = scratch.path(sf_dir, "multi_snap")
     paths = {
         ("orders", "base"): o,  # full dim in the base commit
         ("lineitem", "base"): li.filter(F.col("l_orderkey") % 2 == 1),
@@ -1014,7 +1006,7 @@ def src_partition_evolution(spark, sf_dir):
     o = t(spark, sf_dir, "orders").withColumn("yr", F.year("o_orderdate"))
     old_half = o.filter(F.col("o_orderkey") % 2 == 0)
     new_half = o.filter(F.col("o_orderkey") % 2 == 1)
-    root = _scratch(sf_dir, "part_evolution")
+    root = scratch.path(sf_dir, "part_evolution")
     p_old, p_new = os.path.join(root, "spec0"), os.path.join(root, "spec1")
     write_table(old_half, p_old, mode="overwrite", partition_by=["o_orderstatus"])
     write_table(new_half, p_new, mode="overwrite", partition_by=["o_orderstatus", "yr"])
@@ -1050,13 +1042,13 @@ def src_merge_on_read_deletes(spark, sf_dir):
     read-side join until compaction folds the vectors in.
 
     The query materializes base + sidecar as real parquet (base written
-    once, reused across runs), then serves the MOR read: anti-join on
+    once per process, reused across runs), then serves the MOR read: anti-join on
     the key, aggregate the surviving rows, and report the delete count
     from the sidecar alone. At scale the sidecar is broadcast-sized by
     construction (deletes ≪ base) and the anti-join is AQE-broadcast;
     the oracle replays the same subtraction relationally."""
-    base_p = _scratch(sf_dir, "mor_base")
-    del_p = _scratch(sf_dir, "mor_deletes")
+    base_p = scratch.path(sf_dir, "mor_base")
+    del_p = scratch.path(sf_dir, "mor_deletes")
     o = t(spark, sf_dir, "orders")
     if not os.path.exists(base_p):
         o.write.mode("overwrite").parquet(base_p)
@@ -1109,8 +1101,8 @@ def src_schema_drift_report(spark, sf_dir):
     machinery (or in how Spark round-trips types through parquet)
     surfaces as a hash mismatch."""
     o = t(spark, sf_dir, "orders")
-    v0_p = _scratch(sf_dir, "drift_v0")
-    v1_p = _scratch(sf_dir, "drift_v1")
+    v0_p = scratch.path(sf_dir, "drift_v0")
+    v1_p = scratch.path(sf_dir, "drift_v1")
     o.write.mode("overwrite").parquet(v0_p)
     (
         o.select(
@@ -1183,7 +1175,7 @@ def src_binaryfile_scan(spark, sf_dir):
     d = t(spark, sf_dir, "documents").filter(
         (F.col("lang") == "en") & (F.col("doc_id") < 100)
     )
-    path = _scratch(sf_dir, "binfiles")
+    path = scratch.path(sf_dir, "binfiles")
     (
         d.select(F.col("text").alias("value"), "doc_id")
         .repartition(4)
@@ -1272,7 +1264,7 @@ def src_snapshot_expiry_plan(spark, sf_dir):
     import json
 
     o = t(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
-    root = _scratch(sf_dir, "snap_expiry")
+    root = scratch.path(sf_dir, "snap_expiry")
     for fid, residue in _EXPIRY_FILES.items():
         write_table(
             o.filter(F.col("o_orderkey") % 4 == residue),
@@ -1442,8 +1434,7 @@ def src_write_audit_publish(spark, sf_dir):
     map-combined), and publish is O(1) metadata, not a data copy."""
     import shutil as _shutil
 
-    base = _scratch(sf_dir, "wap")
-    _shutil.rmtree(base, ignore_errors=True)
+    base = scratch.fresh("wap")
     staging = os.path.join(base, "staging")
     published = os.path.join(base, "published")
     o = t(spark, sf_dir, "orders")
@@ -1522,7 +1513,7 @@ def src_python_datasource(spark, sf_dir):
 
     register_python_sources(spark)
     o = t(spark, sf_dir, "orders").select(*_PYDS_ORDERS_COLS)
-    path = _scratch(sf_dir, "pyds_orders")
+    path = scratch.path(sf_dir, "pyds_orders")
     write_table(o, path, format="csv", mode="overwrite")
     back = (
         spark.read.format("cephfs_like")
@@ -1564,7 +1555,7 @@ def src_pyds_filter_pushdown(spark, sf_dir):
 
     register_python_sources(spark)
     o = t(spark, sf_dir, "orders").select(*_PYDS_ORDERS_COLS)
-    path = _scratch(sf_dir, "pyds_orders_push")
+    path = scratch.path(sf_dir, "pyds_orders_push")
     write_table(o, path, format="csv", mode="overwrite")
     back = (
         spark.read.format("cephfs_like")
@@ -1604,7 +1595,7 @@ def src_avro_roundtrip(spark, sf_dir):
 
     register_python_sources(spark)
     o = t(spark, sf_dir, "orders").select(*_PYDS_ORDERS_COLS)
-    path = _scratch(sf_dir, "avro_orders")
+    path = scratch.path(sf_dir, "avro_orders")
     specs = [
         ("o_orderkey", "long"),
         ("o_custkey", "long"),
@@ -1656,7 +1647,7 @@ def src_csv_malformed_permissive(spark, sf_dir):
     100 TB filters `_corrupt IS NOT NULL` to a dead-letter sink in the
     same pass."""
     o = t(spark, sf_dir, "orders").select(*_PYDS_ORDERS_COLS)
-    path = _scratch(sf_dir, "csv_malformed")
+    path = scratch.path(sf_dir, "csv_malformed")
     # default timestampNTZFormat on BOTH sides (yyyy-MM-dd'T'HH:mm:ss[.SSS])
     # — timestamp_ntz columns ignore the plain timestampFormat option
     write_table(o, path, format="csv", mode="overwrite")
@@ -1713,7 +1704,7 @@ def src_avro_datasource_writer(spark, sf_dir):
 
     register_python_sources(spark)
     o = t(spark, sf_dir, "orders").select(*_PYDS_ORDERS_COLS)
-    path = _scratch(sf_dir, "avro_writer_api")
+    path = scratch.path(sf_dir, "avro_writer_api")
     o.repartition(8).write.format("avro_lite").mode("overwrite").save(path)
     back = (
         spark.read.format("avro_lite")
@@ -1849,7 +1840,7 @@ def src_parquet_bloom_write(spark, sf_dir):
     haystack lookups from 'scan every row group the zones admit' into
     footer-only skips."""
     o = t(spark, sf_dir, "orders")
-    root = _scratch(sf_dir, "bloom_orders")
+    root = scratch.path(sf_dir, "bloom_orders")
     write_table(
         o,
         root,
@@ -1896,7 +1887,7 @@ def src_footer_stats_audit(spark, sf_dir):
     import pyarrow.parquet as pq
 
     li = t(spark, sf_dir, "lineitem").select("l_returnflag", "l_quantity")
-    root = _scratch(sf_dir, "footer_stats")
+    root = scratch.path(sf_dir, "footer_stats")
     (
         li.repartition("l_returnflag")
         .write.mode("overwrite")
@@ -1969,7 +1960,7 @@ def src_vacuum_orphans(spark, sf_dir):
     import json
 
     o = t(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
-    root = _scratch(sf_dir, "vacuum_orphans")
+    root = scratch.path(sf_dir, "vacuum_orphans")
     data = os.path.join(root, "data")
     for fid, res in (("f0", 0), ("f1", 1), ("f2", 2)):
         write_table(
@@ -2042,7 +2033,7 @@ def src_scan_pruning_plan(spark, sf_dir):
     o = t(spark, sf_dir, "orders").withColumn(
         "file_month", F.month("o_orderdate").cast("long")
     )
-    root = _scratch(sf_dir, "scan_pruning")
+    root = scratch.path(sf_dir, "scan_pruning")
     (
         o.repartition("file_month")
         .write.mode("overwrite")
@@ -2138,7 +2129,7 @@ def src_derived_partition_pruning(spark, sf_dir):
     — at 100 TB it is THE difference between a 3-partition read and a
     full-table scan for every time-range query."""
     o = t(spark, sf_dir, "orders")
-    path = _scratch(sf_dir, "derived_part_orders")
+    path = scratch.path(sf_dir, "derived_part_orders")
     write_table(
         o.withColumn(
             "ym", (F.year("o_orderdate") * 100 + F.month("o_orderdate")).cast("int")
@@ -2323,7 +2314,7 @@ def src_metadata_lineage_audit(spark, sf_dir):
     (no storage cost, no shuffle); the audit aggregate is
     partial-merged per file."""
     o = t(spark, sf_dir, "orders")
-    path = _scratch(sf_dir, "lineage_orders")
+    path = scratch.path(sf_dir, "lineage_orders")
     write_table(
         o.repartition(1, "o_orderstatus"),
         path,
@@ -2411,9 +2402,9 @@ def src_rgw_http_roundtrip(spark, sf_dir):
         .select("doc_id", "lang", "source", "n_chars")
         .repartition(4, "doc_id")  # ≥4 objects → the 2-key pages MUST paginate
     )
-    path = _scratch(sf_dir, "rgw_docs_csv")
+    path = scratch.path(sf_dir, "rgw_docs_csv")
     write_table(d, path, format="csv", mode="overwrite")
-    out = _scratch(sf_dir, "rgw_docs_back")
+    out = scratch.path(sf_dir, "rgw_docs_back")
     creds = ("AKIDEXAMPLE", "wJalrXUtnFEMI/K7MDENG+bPxRfiCYEXAMPLEKEY")
     with LoopbackRgw(page_size=2, credentials=creds) as rgw:
         for fname in sorted(os.listdir(path)):
@@ -2533,9 +2524,9 @@ def src_rgw_multipart_write(spark, sf_dir):
         .select("doc_id", "source", "n_chars")
         .repartition(4, "doc_id")
     )
-    path = _scratch(sf_dir, "rgw_mp_csv")
+    path = scratch.path(sf_dir, "rgw_mp_csv")
     write_table(d, path, format="csv", mode="overwrite")
-    out = _scratch(sf_dir, "rgw_mp_back")
+    out = scratch.path(sf_dir, "rgw_mp_back")
     creds = ("AKIDEXAMPLE", "wJalrXUtnFEMI/K7MDENG+bPxRfiCYEXAMPLEKEY")
     with LoopbackRgw(credentials=creds) as rgw:
         for fname in sorted(os.listdir(path)):

@@ -15,6 +15,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from hadoop_fs_ceph_spark import scratch
 from hadoop_fs_ceph_spark.canonical import sql_dsum
 from hadoop_fs_ceph_spark.registry import query
 from hadoop_fs_ceph_spark.tables import t
@@ -231,15 +232,9 @@ def sql_ddl_dml(spark, sf_dir):
     an aggregate read-back through the session catalog. The external
     LOCATION keeps data ownership with the path — DROP TABLE removes
     only metadata, exactly the object-store-friendly contract."""
-    import os
-    import tempfile
-
-    from hadoop_fs_ceph_spark.tables import t as _t
-
-    tag = os.path.basename(os.path.normpath(sf_dir)).replace(".", "_")
-    name = f"eng_ddl_orders_{tag}"
-    path = os.path.join(tempfile.gettempdir(), "hfcs_scratch", tag, "ddl_orders")
-    _t(spark, sf_dir, "orders").createOrReplaceTempView("orders_src_ddl")
+    name = f"eng_ddl_orders_{scratch.tag(sf_dir)}"
+    path = scratch.path(sf_dir, "ddl_orders")
+    t(spark, sf_dir, "orders").createOrReplaceTempView("orders_src_ddl")
     spark.sql(f"DROP TABLE IF EXISTS {name}")
     spark.sql(
         f"""CREATE TABLE {name} (

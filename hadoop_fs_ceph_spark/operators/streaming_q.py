@@ -16,10 +16,13 @@ timezone-free.
 
 from __future__ import annotations
 
+import os
+
 import pandas as pd
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from hadoop_fs_ceph_spark import scratch
 from hadoop_fs_ceph_spark.registry import query
 from hadoop_fs_ceph_spark.streaming import (
     audit_gate,
@@ -346,10 +349,6 @@ def stream_file_sink(spark, sf_dir):
     max(event time) − 10 min — which is what the oracle computes; the
     unfinalized tail stays in state (its absence is the late-data
     discipline, also exercised in tests/test_streaming.py)."""
-    import os
-    import tempfile
-    import uuid
-
     s = events_stream(spark, sf_dir)
     agg = (
         s.withWatermark("ts", "10 minutes")
@@ -358,7 +357,7 @@ def stream_file_sink(spark, sf_dir):
         .select(F.col("w.start").alias("w_start"), "n")
     )
     audit_gate(agg, "stream_file_sink", "append")
-    base = os.path.join(tempfile.gettempdir(), "hfcs_sink", uuid.uuid4().hex[:8])
+    base = scratch.fresh("sink")
     out, ckpt = os.path.join(base, "data"), os.path.join(base, "ckpt")
     q = (
         agg.writeStream.format("parquet")
@@ -390,12 +389,7 @@ def stream_foreachbatch_upsert(spark, sf_dir):
     Update output mode emits each key's current total when it changes, so
     replace-on-key merging converges to the batch aggregate regardless of
     how the input was split into micro-batches."""
-    import os
-    import tempfile
-    import uuid
-
-    base = os.path.join(tempfile.gettempdir(), "hfcs_upsert", uuid.uuid4().hex[:8])
-    os.makedirs(base, exist_ok=True)
+    base = scratch.fresh("upsert")
 
     def upsert(batch_df, batch_id: int):
         cur = os.path.join(base, f"v{batch_id}")
@@ -417,12 +411,8 @@ def stream_foreachbatch_upsert(spark, sf_dir):
         F.count(F.lit(1)).alias("n"),
         (F.sum(F.round(F.col("value") * 1000000.0).cast("long")).cast("double") / 1000000.0).alias("sum_value"),
     )
-    import os as _os
-    import tempfile as _tempfile
-    import uuid as _uuid
-
     audit_gate(agg, "stream_foreachbatch_upsert", "update")
-    ckpt = _os.path.join(_tempfile.gettempdir(), "hfcs_ckpt", f"fbu-{_uuid.uuid4().hex[:8]}")
+    ckpt = scratch.fresh("ckpt")
     q = (
         agg.writeStream.foreachBatch(upsert)
         .outputMode("update")
@@ -576,13 +566,8 @@ def stream_incremental_checkpoint(spark, sf_dir):
     are cheap, reprocessing is zero, duplicates are impossible. The
     two phases' disjoint contents hash-prove no row was skipped or
     replayed."""
-    import os
-    import tempfile
-    import uuid
-
     e = t(spark, sf_dir, "events").select("event_id", "ts", "value")
-    run = uuid.uuid4().hex[:8]
-    base = os.path.join(tempfile.gettempdir(), "hfcs_incr", run)
+    base = scratch.fresh("incr")
     src = os.path.join(base, "src")
     ck = os.path.join(base, "ck")
     e.filter(F.col("event_id") % 10 != 0).write.mode("overwrite").parquet(src)
@@ -834,13 +819,8 @@ def stream_max_files_per_trigger(spark, sf_dir):
     oracle) compares the SORTED multiset of batch sizes; the batch
     count is pinned by the output row count. State per batch is one
     integer on the driver (observability metadata, not data)."""
-    import os
-    import tempfile
-    import uuid
-
     e = t(spark, sf_dir, "events").select("event_id", "ts", "value")
-    run = uuid.uuid4().hex[:8]
-    src = os.path.join(tempfile.gettempdir(), "hfcs_mft", run, "src")
+    src = os.path.join(scratch.fresh("mft"), "src")
     for g in range(_MFT_SLICES):
         e.filter(F.col("event_id") % _MFT_SLICES == g).coalesce(1).write.mode(
             "append"
@@ -1043,24 +1023,19 @@ def stream_python_datasource(spark, sf_dir):
     a partition-planning `streamReader` upgrade keeps the same offset
     log and moves byte-serving to executors, and the BATCH side of this
     source already plans executor-side virtual-block splits."""
-    import os
-    import tempfile
-    import uuid
-
     from hadoop_fs_ceph_spark.sources.pydatasource import register_python_sources
 
     register_python_sources(spark)
     cols = ["o_orderkey", "o_custkey", "o_orderstatus",
             "o_totalprice", "o_orderdate", "o_orderpriority"]
     o = t(spark, sf_dir, "orders").select(*cols)
-    src = os.path.join(tempfile.gettempdir(), "hfcs_scratch",
-                       os.path.basename(os.path.normpath(sf_dir)), "stream_pyds")
+    src = scratch.path(sf_dir, "stream_pyds")
     o.write.mode("overwrite").format("csv").save(src)
     ddl = ("o_orderkey bigint, o_custkey bigint, o_orderstatus string, "
            "o_totalprice double, o_orderdate timestamp_ntz, o_orderpriority string")
     s = spark.readStream.format("cephfs_like").schema(ddl).load(src)
     audit_gate(s, "stream_python_datasource", "append")
-    base = os.path.join(tempfile.gettempdir(), "hfcs_sink", uuid.uuid4().hex[:8])
+    base = scratch.fresh("sink")
     out, ckpt = os.path.join(base, "data"), os.path.join(base, "ckpt")
     q = (
         s.writeStream.format("parquet")

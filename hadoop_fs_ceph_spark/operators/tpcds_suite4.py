@@ -44,11 +44,10 @@ the engine layer built on the lake it feeds.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from hadoop_fs_ceph_spark import scratch
 from hadoop_fs_ceph_spark.operators.tpcds_suite import (
     _CHANNEL_SQL,
     _channel_col,
@@ -385,26 +384,14 @@ def ensure_q14_layout(spark, sf_dir):
     deployment that wants it). That Sort moves zero bytes; the exchange
     was the 100 TB cost, and it is gone (plan-pinned with a plain-Q14
     control in tests/test_plans.py::test_q14_bucketed_join_legs_no_exchange)."""
-    import hashlib
-    import tempfile
     import time as _time
 
-    # Tag = basename + 8 hex of the FULL path: two data dirs sharing a
-    # basename (e.g. sf0.1 fixtures in different roots) must not collide
-    # on the session-catalog table names or the scratch path.
-    norm = os.path.normpath(os.path.abspath(sf_dir))
-    tag = "{}_{}".format(
-        os.path.basename(norm).replace(".", "_"),
-        hashlib.sha256(norm.encode()).hexdigest()[:8],
-    )
-    names = {
-        tbl: f"q14b_{tbl}_{tag}" for tbl in ("orders", "lineitem")
-    }
+    tag = scratch.tag(sf_dir)
+    names = {tbl: f"q14b_{tbl}_{tag}" for tbl in ("orders", "lineitem")}
     if _Q14_LAYOUT.get(tag) and all(
         spark.catalog.tableExists(n) for n in names.values()
     ):
         return names, 0.0
-    scratch = os.path.join(tempfile.gettempdir(), "hfcs_scratch", tag)
     t0 = _time.perf_counter()
     for tbl, key, cols in (
         ("orders", "o_orderkey", ["o_orderkey", "o_orderpriority", "o_orderdate"]),
@@ -420,7 +407,7 @@ def ensure_q14_layout(spark, sf_dir):
             .repartition(8, F.col(key))
             .write.bucketBy(8, key)
             .sortBy(key)
-            .option("path", os.path.join(scratch, f"q14_bucketed_{tbl}"))
+            .option("path", scratch.path(sf_dir, f"q14_bucketed_{tbl}"))
             .mode("overwrite")
             .format("parquet")
             .saveAsTable(names[tbl])

@@ -116,7 +116,6 @@ def get_spark(
     master: str | None = None,
     shuffle_partitions: int | None = None,
     driver_memory: str = "8g",
-    max_partition_bytes: int = DEFAULT_MAX_PARTITION_BYTES,
     storage_conf: dict[str, str] | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
@@ -128,12 +127,12 @@ def get_spark(
     cores, but AQE's partition coalescing makes the initial number mostly a
     ceiling rather than a tuning cliff.
 
-    ``max_partition_bytes`` is the split-sizing lever — the Spark analog
-    of the reference's virtual block size (32 MiB,
-    ``CephRgwFileSystem.java:112``), which exists purely to drive input
-    split count and scan parallelism. Smaller values → more, smaller scan
-    tasks (the reference's choice for object-store latency hiding);
-    Spark's 128 MiB default suits parquet over fast storage.
+    ``DEFAULT_MAX_PARTITION_BYTES`` (``extra_conf`` overrides it) is the
+    split-sizing lever — the Spark analog of the reference's virtual block
+    size (32 MiB, ``CephRgwFileSystem.java:112``), which exists purely to
+    drive input split count and scan parallelism. Smaller values → more,
+    smaller scan tasks (the reference's choice for object-store latency
+    hiding); Spark's 128 MiB default suits parquet over fast storage.
 
     ``storage_conf`` takes the ``fs.s3a.*`` mapping from
     :func:`s3a_storage_conf` (endpoint/credentials/path-style for a Ceph
@@ -153,7 +152,7 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(DEFAULT_BROADCAST_THRESHOLD))
-        .config("spark.sql.files.maxPartitionBytes", str(max_partition_bytes))
+        .config("spark.sql.files.maxPartitionBytes", str(DEFAULT_MAX_PARTITION_BYTES))
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.filterPushdown", "true")

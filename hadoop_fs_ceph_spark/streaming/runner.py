@@ -10,12 +10,12 @@ points them at durable storage.
 from __future__ import annotations
 
 import os
-import tempfile
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from hadoop_fs_ceph_spark import scratch
 from hadoop_fs_ceph_spark.sources.readers import read_parquet, relation_bytes
 
 # --- streaming-state audit capture ------------------------------------------
@@ -130,7 +130,7 @@ def run_to_memory(
     spark = sdf.sparkSession
     run_id = uuid.uuid4().hex[:8]
     table = f"{name}_{run_id}"
-    checkpoint = os.path.join(tempfile.gettempdir(), "hfcs_ckpt", f"{name}-{run_id}")
+    checkpoint = scratch.fresh("ckpt")
     old_width = spark.conf.get("spark.sql.shuffle.partitions")
     if state_width is not None:
         spark.conf.set("spark.sql.shuffle.partitions", str(state_width))

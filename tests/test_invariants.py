@@ -132,11 +132,11 @@ def test_compaction_reduces_file_count(spark, sf_dir):
     import glob
     import os
 
-    from hadoop_fs_ceph_spark.operators.sources_q import _scratch
+    from hadoop_fs_ceph_spark import scratch
 
     SPECS["src_compact_small_files"].fn(spark, sf_dir).collect()
-    n_frag = len(glob.glob(os.path.join(_scratch(sf_dir, "frag_orders"), "part-*")))
-    n_comp = len(glob.glob(os.path.join(_scratch(sf_dir, "compact_orders"), "part-*")))
+    n_frag = len(glob.glob(os.path.join(scratch.path(sf_dir, "frag_orders"), "part-*")))
+    n_comp = len(glob.glob(os.path.join(scratch.path(sf_dir, "compact_orders"), "part-*")))
     assert n_frag >= 32, n_frag
     assert 1 <= n_comp <= 4, n_comp
 
@@ -1505,7 +1505,7 @@ def test_ranked_nosort_matches_window_rank(spark):
     (Pareto's descending encoding), and a singleton relation."""
     from pyspark.sql import Window
 
-    from hadoop_fs_ceph_spark.operators.analytics_suite import _ranked_nosort
+    from hadoop_fs_ceph_spark.operators.ranking import _ranked_nosort
 
     cases = {
         "clustered": [(k, k % 7 + 1) for k in list(range(50)) + list(range(10**12, 10**12 + 50))],
@@ -1535,7 +1535,7 @@ def test_ranked_nosort_with_totals_rides_global_count_and_sum(spark):
     row (they ride the offset fold's final accumulator — round 12 removed
     a second full rank pass in ds_lift_gains_deciles with them), and must
     not perturb the rank/cum columns."""
-    from hadoop_fs_ceph_spark.operators.analytics_suite import _ranked_nosort
+    from hadoop_fs_ceph_spark.operators.ranking import _ranked_nosort
 
     rows = [(k * 997 % 1009, k % 7 + 1) for k in range(200)]
     x = spark.createDataFrame(rows, "key long, val long")
@@ -1926,7 +1926,7 @@ def test_sketch_error_verdict_and_exactness(spark, sf_dir):
     """Both pct rows carry a TRUE within-bound verdict, and the exact
     side matches a direct sorted-rank computation."""
     import __spark_entry__ as entry
-    from hadoop_fs_ceph_spark.operators.analytics_suite import _conc_customer_cents
+    from hadoop_fs_ceph_spark.operators.ranking import _conc_customer_cents
 
     rows = entry.queries()["agg_quantile_sketch_error"](spark, sf_dir).collect()
     assert [r.pct for r in rows] == [50, 90]
@@ -2252,7 +2252,7 @@ def test_spearman_self_correlation_is_one(spark, sf_dir):
     """ρ(X, X) = 1 exactly under the Σd² identity (d ≡ 0); checked by
     running the registered query's machinery on one variable ranked
     against itself via the composite-key encoding."""
-    from hadoop_fs_ceph_spark.operators.analytics_suite import _ranked_nosort
+    from hadoop_fs_ceph_spark.operators.ranking import _ranked_nosort
 
     o = t(spark, sf_dir, "orders").limit(500)
     per = o.select(
@@ -2646,6 +2646,25 @@ def test_sparse_cosine_bounds(spark, sf_dir):
         assert r["n_shared"] >= 3
         assert r["cosine_tfidf"] <= 1.0 + 1e-9
         assert r["doc_a"] < r["doc_b"]
+
+
+def test_sparse_cosine_sliced_broadcast_matches_single_slice(spark, sf_dir, monkeypatch):
+    """The sliced-broadcast branch (taken once documents outgrow one
+    256 MiB slice) must give the same pairs as the single broadcast."""
+    import os
+
+    from hadoop_fs_ceph_spark.operators import similarity
+
+    monkeypatch.syspath_prepend(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+    from bench import _content_hash
+
+    fn = SPECS["sim_sparse_cosine_join"].fn
+    one = _content_hash(fn(spark, sf_dir))
+    monkeypatch.setattr(similarity, "_spc_slices", lambda spark, sf_dir: 3)
+    sliced = _content_hash(fn(spark, sf_dir))
+    spark.catalog.clearCache()
+    assert one[0] > 0
+    assert sliced == one
 
 
 def test_mood_median_balanced_margins(spark, sf_dir):

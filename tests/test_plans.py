@@ -80,10 +80,10 @@ def test_partition_pruning_on_partitioned_layout(spark, sf_dir):
     time (PartitionFilters on the scan), not scan-then-filter."""
     import os
 
-    from hadoop_fs_ceph_spark.operators.sources_q import _scratch
+    from hadoop_fs_ceph_spark import scratch
 
     SPECS["src_partitioned_write"].fn(spark, sf_dir).collect()  # materialize layout
-    path = _scratch(sf_dir, "part_orders")
+    path = scratch.path(sf_dir, "part_orders")
     assert os.path.isdir(path)
     df = spark.read.parquet(path).filter("o_orderstatus = 'F'").select("o_orderkey")
     plan = plan_of(df)

@@ -100,7 +100,7 @@ def test_histogram_refinement_median_property(spark, vals):
     distributions."""
     from pyspark.sql import functions as F
 
-    from hadoop_fs_ceph_spark.operators.aggregates import (
+    from hadoop_fs_ceph_spark.operators.ranking import (
         _MED_PASSES,
         _quantiles_refine,
     )
@@ -132,7 +132,7 @@ def test_histogram_refinement_wide_tier_four_passes(spark):
     precondition). Negative lo included to exercise signed narrowing."""
     from pyspark.sql import functions as F
 
-    from hadoop_fs_ceph_spark.operators.aggregates import (
+    from hadoop_fs_ceph_spark.operators.ranking import (
         _MED_B_WIDE,
         _MED_PASSES_WIDE,
         _quantiles_refine,
@@ -162,7 +162,7 @@ def test_histogram_refinement_honest_beyond_domain(spark):
     which is exactly what the operators' is_exact column surfaces."""
     from pyspark.sql import functions as F
 
-    from hadoop_fs_ceph_spark.operators.aggregates import (
+    from hadoop_fs_ceph_spark.operators.ranking import (
         _MED_PASSES,
         _quantiles_refine,
     )
