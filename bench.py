@@ -28,10 +28,11 @@ reported (a plan that silently depended on a tiny-scale auto-broadcast
 shows up as a blow-up here). Results splice into ``SCALE.md``.
 
 ``python bench.py --soak`` runs the measured-scaling soak: it builds an
-sf×N dataset (N = $SPARK_GRAFT_SOAK_REPLICAS, default 10; ×100 ≈ sf10 is
-the deep tier, see ``_build_soak_tables``), runs every headline query at
-BOTH scales recording wall-clock and shuffle read/write bytes, and
-splices the per-query table into ``SCALE.md``'s SOAK{N} section.
+sf×1 and an sf×N dataset the same way (N = $SPARK_GRAFT_SOAK_REPLICAS,
+default 10; ×100 ≈ sf10 is the deep tier, see ``_build_soak_tables``), so
+the two differ in scale alone, runs every headline query at BOTH scales
+recording wall-clock and shuffle read/write bytes, and splices the
+per-query table into ``SCALE.md``'s SOAK{N} section.
 
 ``python bench.py --skew`` runs the HOT-KEY rehearsal: the headline suite
 on a planted-skew variant of the data (one whale customer owns 25% of
@@ -602,8 +603,12 @@ def soak_main() -> None:
 
     spark, base_dir, bench_specs = session("bench-soak", driver_memory="48g")
     replicas = int(os.environ.get("SPARK_GRAFT_SOAK_REPLICAS", "10"))
+    small_dir = tempfile.mkdtemp(prefix="spark_graft_soak1_")
     soak_dir = tempfile.mkdtemp(prefix="spark_graft_soak_")
     try:
+        # the 1x tier goes through the same builder as the Nx tier, so the
+        # two share a file layout and the wall ratio measures scale alone
+        _build_soak_tables(spark, base_dir, small_dir, 1)
         t0 = time.perf_counter()
         _build_soak_tables(spark, base_dir, soak_dir, replicas)
         build_sec = round(time.perf_counter() - t0, 1)
@@ -625,9 +630,10 @@ def soak_main() -> None:
                 for n in bench_specs
             }
 
-        small = run_suite(base_dir)
+        small = run_suite(small_dir)
         big = run_suite(soak_dir)
     finally:
+        shutil.rmtree(small_dir, ignore_errors=True)
         shutil.rmtree(soak_dir, ignore_errors=True)
 
     rows = []
@@ -650,7 +656,9 @@ def soak_main() -> None:
         f"(`bench.py::_build_soak_tables` — referential integrity holds within "
         f"each replica; documents/embeddings are content-decorrelated across "
         f"replicas so duplicate DENSITY stays constant, which is how real "
-        f"corpora scale; build took {build_sec}s). Every headline query ran at "
+        f"corpora scale; build took {build_sec}s). The sf0.1 tier is the same "
+        f"builder at 1 replica, so both tiers share a file layout. Every "
+        f"headline query ran at "
         "both scales on the same session (local[32], min wall of 2 passes; "
         "shuffle bytes diffed from the Spark AppStatusStore around pass 1).",
         "",

@@ -1410,7 +1410,7 @@ def agg_exact_mode(spark, sf_dir):
     ),
     r AS (
       SELECT cents,
-             ROW_NUMBER() OVER (ORDER BY cents * 100000000 + o_orderkey) AS i,
+             ROW_NUMBER() OVER (ORDER BY cents, o_orderkey) AS i,
              (SELECT CAST(COUNT(*) AS BIGINT) FROM x) AS n
       FROM x
     ),
@@ -1432,22 +1432,23 @@ def agg_trimmed_mean_nosort(spark, sf_dir):
     """EXACT 10%-trimmed mean of order value with NO sort and NO
     single-partition window — the robust-location member of the
     distributed-rank family (`agg_exact_median_nosort` etc.): global
-    ranks come from ``_ranked_nosort`` over the composite key
-    cents·10⁸ + orderkey (range-bin → per-bin offsets → bin-local
-    windows), the trim keeps ranks in (⌊n/10⌋, n − ⌊n/10⌋], and the
-    kept-sum is an exact integer aggregate. One final division pair
+    ranks come from ``_ranked_nosort`` in (cents, orderkey) order
+    (range-bin → per-bin offsets → bin-local windows), the trim keeps
+    ranks in (⌊n/10⌋, n − ⌊n/10⌋], and the kept-sum is an exact integer
+    aggregate. One final division pair
     (cents → dollars) is the only float op — bit-identical cross-engine
     against the oracle's ROW_NUMBER() world-sort truth.
 
     Unlike winsorizing at approx quantiles (`profile_winsorize_clip`),
     the cut is at the exact order statistics: at 100 TB the rank pass
-    shuffles (bin, 16-byte rows), never the payload, and the only global
-    state is the ≤4096-row offset map."""
+    shuffles (bin, 24-byte rows), never the payload, and the only global
+    state is the ≤4096-row offset relation."""
     x = t(spark, sf_dir, "orders").select(
         F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"), "o_orderkey"
     )
     keyed = x.select(
-        (F.col("cents") * 100000000 + F.col("o_orderkey")).alias("key"),
+        F.col("cents").alias("key"),
+        F.col("o_orderkey").alias("tie"),
         F.col("cents").alias("val"),
     )
     ranked = _ranked_nosort(keyed)

@@ -26,10 +26,7 @@ from hadoop_fs_ceph_spark.operators.basket_common import (
     capped_order_parts,
 )
 from hadoop_fs_ceph_spark.operators.ranking import (
-    _MED_B_WIDE,
-    _MED_PASSES_WIDE,
     _conc_customer_cents,
-    _quantiles_refine,
     _ranked_nosort,
 )
 from hadoop_fs_ceph_spark.registry import query
@@ -286,20 +283,20 @@ def ds_pareto_concentration(spark, sf_dir):
     result set crosses the threshold exactly once.
 
     EXACT and, since round 5, with NO single-partition window: the
-    descending running sum comes from ``_ranked_nosort`` over the
-    distinct composite key −rc·1e8 + custkey (ascending composite order
-    IS (rc DESC, custkey) — the oracle's frame), which range-bins,
-    folds per-bin (count, sum) prefixes into a broadcast ≤4096-row
-    offset map, and runs the window partitioned BY BIN. The ranked
-    relation is the per-customer aggregate (≪ facts); the two scalar
-    totals join in as one-row broadcasts. Composite bound: custkey <
-    1e8, per-customer cents < 9.2e10 (documented at _RFM_C)."""
+    descending running sum comes from ``_ranked_nosort`` on key −rc
+    with tie custkey (ascending (−rc, custkey) IS (rc DESC, custkey) —
+    the oracle's frame), which range-bins, folds per-bin (count, sum)
+    prefixes into a broadcast ≤4096-row offset relation, and runs the
+    window partitioned BY BIN. The ranked relation is the per-customer
+    aggregate (≪ facts); the two scalar totals ride in on the offset
+    broadcast."""
     o = t(spark, sf_dir, "orders")
     pc = o.groupBy("o_custkey").agg(
         F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias("rc")
     )
     keyed = pc.select(
-        (-F.col("rc") * _RFM_C + F.col("o_custkey")).alias("key"),
+        (-F.col("rc")).alias("key"),
+        F.col("o_custkey").alias("tie"),
         F.col("rc").alias("val"),
     )
     # Round-12 (guide §1.2): (t, n_cust) used to be a SECOND aggregate
@@ -498,21 +495,14 @@ def ds_rfm_segmentation(spark, sf_dir):
 
     EXACT and, since round 5, with NO sort and NO single-partition
     window: each dimension's ntile(4) assignment is reproduced from
-    first principles. The dimension key is the composite value·C +
-    custkey (descending dims negate the value — the same composite the
-    approx twin sketches), which makes every key DISTINCT, so a
-    customer's ntile bucket is 1 + (#cutpoints below its key) where the
-    3 cutpoints are the composite order statistics at the quartile
-    boundary ranks end_i = i·(n div 4) + min(i, n mod 4) — exactly
-    ntile's deal arithmetic. The 9 boundary values (3 dims × 3 cuts)
-    come from the shared histogram-refinement machinery in FOUR shared
-    passes (the wide-domain tier: composites span ~2^57, beyond the
-    3-pass 4096³ reach; 65536⁴ = 2^64 collapses any long bracket — each
-    pass divides the surviving width by exactly 65536) over the
-    9·|customers| exploded (skey, composite) relation — ≤9·65536-row
-    combiner-sized shuffles, zero sorts, zero driver state — then ride
-    into the map-side bucket assignment as a one-row broadcast map.
-    Composite bound: holds while custkey < C = 1e8 (docs at _RFM_C)."""
+    first principles. The per-customer relation explodes into one
+    group per dimension (key = the value, negated for the descending
+    dims; tie = custkey), and ONE grouped ``_ranked_nosort`` call gives
+    every customer its rank i in each dimension's (value, custkey)
+    order, plus the group size n. The bucket is then ntile's deal
+    arithmetic, 1 + Σ_c [i > c·(n div 4) + least(c, n mod 4)] for
+    c = 1..3, and one per-customer groupBy pivots the three buckets
+    back together — zero sorts, zero driver state, one rank pass."""
     o = t(spark, sf_dir, "orders")
     m = o.groupBy("o_custkey").agg(
         F.max("o_orderdate").alias("last_d"),
@@ -520,65 +510,41 @@ def ds_rfm_segmentation(spark, sf_dir):
         F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias("cents"),
     )
     maxd = m.agg(F.max("last_d").alias("maxd"))
-    comp = (
+    dims = (
         m.crossJoin(F.broadcast(maxd))
         .select(
-            "cents",
-            (
-                F.datediff("maxd", "last_d").cast("long") * _RFM_C
-                + F.col("o_custkey")
-            ).alias("rc"),
-            (-F.col("freq") * _RFM_C + F.col("o_custkey")).alias("fc"),
-            (-F.col("cents") * _RFM_C + F.col("o_custkey")).alias("mc"),
+            F.col("o_custkey").alias("tie"),
+            F.col("cents").alias("val"),
+            F.explode(
+                F.array(
+                    *[
+                        F.struct(F.lit(dim).alias("dim"), value.cast("long").alias("key"))
+                        for dim, value in (
+                            (1, F.datediff("maxd", "last_d")),
+                            (2, -F.col("freq")),
+                            (3, -F.col("cents")),
+                        )
+                    ]
+                )
+            ).alias("d"),
         )
-        .persist()
+        .select("d.dim", "d.key", "tie", "val")
     )
-    x9 = comp.select(
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(dim * 10 + cut).cast("long").alias("skey"),
-                        F.col(col).alias("cents"),
-                    )
-                    for dim, col in ((1, "rc"), (2, "fc"), (3, "mc"))
-                    for cut in (1, 2, 3)
-                ]
-            )
-        ).alias("s")
-    ).select("s.skey", "s.cents").persist()
-    base = x9.groupBy("skey").agg(
-        F.min("cents").alias("lo"),
-        F.max("cents").alias("hi"),
-        F.count(F.lit(1)).alias("n"),
+    ranked = _ranked_nosort(dims, with_totals=True, grp="dim")
+    bucket = F.lit(1)
+    for c in (1, 2, 3):
+        bucket = bucket + (
+            F.col("i") > F.expr(f"{c} * (n_tot div 4) + least({c}, n_tot % 4)")
+        ).cast("int")
+    per = ranked.groupBy("tie").agg(
+        *[
+            F.max(F.when(F.col("dim") == dim, bucket)).alias(name)
+            for dim, name in ((1, "r_bucket"), (2, "f_bucket"), (3, "m_bucket"))
+        ],
+        F.max("val").alias("cents"),
     )
-    states = base.selectExpr(
-        "skey",
-        "lo",
-        "hi",
-        "(skey % 10) * (n div 4) + least(skey % 10, n % 4) AS k",
-    )
-    for _ in range(_MED_PASSES_WIDE):
-        states = _quantiles_refine(x9, states, key="skey", b=_MED_B_WIDE)
-    cuts = states.agg(
-        F.map_from_entries(F.collect_list(F.struct("skey", "lo"))).alias("cut")
-    )
-
-    def bucket(col, dim):
-        b = F.lit(1)
-        for cut in (1, 2, 3):
-            b = b + (F.col(col) > F.col("cut")[F.lit(dim * 10 + cut)]).cast("int")
-        return b.cast("int")
-
     return (
-        comp.crossJoin(F.broadcast(cuts))
-        .select(
-            bucket("rc", 1).alias("r_bucket"),
-            bucket("fc", 2).alias("f_bucket"),
-            bucket("mc", 3).alias("m_bucket"),
-            "cents",
-        )
-        .groupBy("r_bucket", "f_bucket", "m_bucket")
+        per.groupBy("r_bucket", "f_bucket", "m_bucket")
         .agg(
             F.count(F.lit(1)).alias("n_customers"),
             (F.sum("cents").cast("double") / F.lit(100.0)).alias("monetary"),
@@ -587,11 +553,10 @@ def ds_rfm_segmentation(spark, sf_dir):
     )
 
 
-# Composite-key multiplier for the approx-RFM tie split: bucket keys are
-# value * _RFM_C + custkey, so equal values order by custkey exactly like
-# ntile's tie-break — but through a sketch instead of a global sort.
-# Holds while custkey < 1e8 (TPC-H custkey at SF 100 is 1.5e7); a wider
-# corpus bumps the constant (or switches the composite to DECIMAL).
+# Composite-key multiplier for the approx-RFM tie split: a percentile
+# sketch ranks ONE long column, so its keys are value * _RFM_C + custkey,
+# and equal values order by custkey like ntile's tie-break. Holds while
+# custkey < 1e8 (TPC-H custkey at SF 100 is 1.5e7).
 _RFM_C = 100_000_000
 
 
@@ -739,17 +704,14 @@ def agg_gini_concentration(spark, sf_dir):
     until the single final division — bit-identical across engines.
 
     EXACT and, since round 5, with NO single-partition window: global
-    ranks come from ``_ranked_nosort`` — range-bin the distinct
-    composite key cents·1e8 + custkey (the ntile tiebreak composite;
-    its ascending order IS (cents, custkey)), rank within bins in
-    parallel, lift to global ranks through a broadcast ≤4096-row prefix
-    map. Composite bound: holds while custkey < 1e8 and per-customer
-    cents < 9.2e10 (~$0.9B); a wider corpus bumps _RFM_C or switches
-    the composite to DECIMAL. The ranked relation is the per-customer
-    aggregate, never the fact table."""
+    ranks come from ``_ranked_nosort`` in (cents, custkey) order —
+    range-bin on cents, rank within bins in parallel, lift to global
+    ranks through a broadcast ≤4096-row prefix relation. The ranked
+    relation is the per-customer aggregate, never the fact table."""
     x = _conc_customer_cents(spark, sf_dir)
     keyed = x.select(
-        (F.col("cents") * _RFM_C + F.col("o_custkey")).alias("key"),
+        F.col("cents").alias("key"),
+        F.col("o_custkey").alias("tie"),
         F.col("cents").alias("val"),
     )
     ranked = _ranked_nosort(keyed)
@@ -4230,49 +4192,36 @@ def ds_segment_migration_matrix(spark, sf_dir):
     absent — the "who moved up, who churned" transition table behind
     lifecycle marketing (the dynamic sequel to `ds_rfm_segmentation`'s
     static snapshot). Quartiles are row-quartiles of the per-period
-    spend ranking — computed by `_ranked_nosort` (distributed rank, no
-    world sort) with the (spend, custkey) composite tie-break, so
-    segment boundaries are deterministic in both engines; the matrix
-    is one full-outer join of the two ≤|customers|-row segment
-    relations plus a ≤25-cell aggregate.
+    spend ranking — ONE grouped `_ranked_nosort` call (distributed
+    rank, no world sort) ranks both periods in (spend, custkey) order,
+    so segment boundaries are deterministic in both engines; one
+    per-customer groupBy then pivots the two quartiles side by side
+    (0 for a period the customer is absent from), and a ≤25-cell
+    aggregate counts the matrix.
 
-    Scale: two rank passes over per-customer aggregates (facts
-    collapse first), one slim (ck, q) join. Migration at 100 TB is
-    exactly this plan."""
-    o = t(spark, sf_dir, "orders")
+    Scale: one rank pass over the per-(period, customer) aggregate
+    (facts collapse first), one slim per-customer aggregate. Migration
+    at 100 TB is exactly this plan."""
+    o = t(spark, sf_dir, "orders").filter(F.col("o_orderdate").isNotNull())
     split = F.lit(_MIG_SPLIT).cast("timestamp_ntz")
-
-    def seg(df):
-        per = df.groupBy(F.col("o_custkey").alias("ck")).agg(
-            F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias("spend")
-        )
-        # Round-12 (guide §1.2): the quartile denominator used to be a
-        # second aggregate over per, cross-joined back — re-executing
-        # the per-customer aggregate once per period. with_totals rides
-        # the same global count in through the offset broadcast.
-        ranked = _ranked_nosort(
-            per.select(
-                (F.col("spend") * F.lit(2**32).cast("long") + F.col("ck")).alias(
-                    "key"
-                ),
-                F.col("ck").alias("val"),
-            ),
-            with_totals=True,
-        )
-        return ranked.select(
-            F.col("val").alias("ck"),
-            F.expr("(i - 1) * 4 div n_tot + 1").cast("long").alias("q"),
-        )
-
-    s0 = seg(o.filter(F.col("o_orderdate") < split)).select(
-        "ck", F.col("q").alias("q0")
+    per = o.groupBy(
+        (F.col("o_orderdate") >= split).cast("int").alias("period"),
+        F.col("o_custkey").alias("tie"),
+    ).agg(F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias("key"))
+    ranked = _ranked_nosort(
+        per.select("period", "key", "tie", F.col("key").alias("val")),
+        with_totals=True,
+        grp="period",
     )
-    s1 = seg(o.filter(F.col("o_orderdate") >= split)).select(
-        "ck", F.col("q").alias("q1")
+    q = F.expr("(i - 1) * 4 div n_tot + 1")
+    segs = ranked.groupBy("tie").agg(
+        *[
+            F.max(F.when(F.col("period") == p, q)).alias(f"q{p}")
+            for p in (0, 1)
+        ]
     )
     return (
-        s0.join(s1, "ck", "full_outer")
-        .select(
+        segs.select(
             F.coalesce("q0", F.lit(0)).cast("long").alias("seg_from"),
             F.coalesce("q1", F.lit(0)).cast("long").alias("seg_to"),
         )
@@ -4720,9 +4669,7 @@ def ds_abc_classification(spark, sf_dir):
 
     Determinism: class boundaries are integer cross-products
     (cum_top·100 ≤ 80·S), never float shares; the per-class report
-    divides exact cents once. The composite rank key (rev·2³² + pk)
-    holds while per-part revenue < 2³¹ cents (documented bound; past
-    it the key moves to the struct form, same machinery).
+    divides exact cents once. Parts rank in (rev, pk) order.
 
     Scale: one per-key aggregate + one range-binned rank pass + a
     3-row class aggregate."""
@@ -4737,7 +4684,8 @@ def ds_abc_classification(spark, sf_dir):
     # broadcast instead.
     ranked = _ranked_nosort(
         per.select(
-            (F.col("rev_c") * F.lit(2**32).cast("long") + F.col("pk")).alias("key"),
+            F.col("rev_c").alias("key"),
+            F.col("pk").alias("tie"),
             F.col("rev_c").alias("val"),
         ),
         with_totals=True,

@@ -2594,7 +2594,8 @@ def sample_rolling_origin_folds(spark, sf_dir):
     "ds_mann_whitney_u",
     oracle=f"""
     WITH assigned AS (
-      SELECT CASE WHEN (user_id * {_MIX}) % 100 < 50 THEN 0 ELSE 1 END AS is_b,
+      SELECT CASE WHEN ((user_id % 100) * ({_MIX} % 100)) % 100 < 50
+                  THEN 0 ELSE 1 END AS is_b,
              CAST(ROUND(value * 100) AS BIGINT) AS cents,
              event_id
       FROM events
@@ -2635,40 +2636,32 @@ def ds_mann_whitney_u(spark, sf_dir):
     by `_ranked_nosort`'s distributed-rank machinery (range-bin against
     a one-row bound, ≤4096-row prefix-offset broadcast, per-bin
     windows), exactly the plan that computes the exact Gini. Ranks are
-    tie-broken by the deterministic (cents, event_id) composite key —
-    both engines break ties identically, so rank sums are exact integers
-    (the midrank correction matters only when tie GROUPS are large
-    relative to n; the tie-broken U and its z differ negligibly and
-    deterministically here, and the docstring is the contract). U, its
+    in (cents, event_id) order — both engines break ties identically,
+    so rank sums are exact integers (the midrank correction matters
+    only when tie GROUPS are large relative to n; the tie-broken U and
+    its z differ negligibly and deterministically here, and the
+    docstring is the contract). U, its
     normal approximation z, and the 95% verdict follow as scalar
     arithmetic on exact integers.
 
     Scale: one range-binned shuffle + per-bin parallel windows — rank
-    statistics on 100 TB without a world sort; the key encoding
-    (cents·2^44 + event_id) holds while event ids fit 44 bits and cents 18, after
-    which the same machinery runs on a composite struct key."""
-    # Round-13 (surfaced by the first SOAK run with this head): both key
-    # expressions must survive the soak's per-replica 10^12 key offsets.
-    # The A/B split runs in residue arithmetic — (u·MIX) mod 100 ==
-    # ((u mod 100)·(MIX mod 100)) mod 100 for u ≥ 0, identical values
-    # everywhere the raw product didn't overflow, no overflow anywhere.
-    # The rank key shifts cents by 2^44 (was 2^32, which the shifted
-    # event ids outgrew): order-identical wherever both encodings are
-    # injective, and injective while event_id < 2^44 and |cents| < 2^18
-    # (this corpus: ≤ 56,021 cents); beyond either bound the docstring's
-    # composite-struct fallback applies.
-    assigned = t(spark, sf_dir, "events").select(
-        F.when(
-            F.pmod(F.pmod(F.col("user_id"), 100) * (_MIX % 100), 100) < 50, 0
+    statistics on 100 TB without a world sort."""
+    # Round-13 (surfaced by the first SOAK run with this head): the A/B
+    # split must survive the soak's per-replica 10^12 key offsets, so it
+    # runs in residue arithmetic, here and in the oracle —
+    # (u·MIX) mod 100 == ((u mod 100)·(MIX mod 100)) mod 100 for u ≥ 0,
+    # identical values everywhere the raw product didn't overflow, no
+    # overflow anywhere.
+    ranked = _ranked_nosort(
+        t(spark, sf_dir, "events").select(
+            F.round(F.col("value") * 100).cast("long").alias("key"),
+            F.col("event_id").alias("tie"),
+            F.when(F.pmod(F.pmod(F.col("user_id"), 100) * (_MIX % 100), 100) < 50, 0)
+            .otherwise(1)
+            .cast("long")
+            .alias("val"),
         )
-        .otherwise(1)
-        .alias("is_b"),
-        (
-            F.round(F.col("value") * 100).cast("long") * F.lit(2**44).cast("long")
-            + F.col("event_id")
-        ).alias("key"),
     )
-    ranked = _ranked_nosort(assigned.select("key", F.col("is_b").cast("long").alias("val")))
     s = ranked.agg(
         F.sum(1 - F.col("val")).cast("long").alias("n_a"),
         F.sum("val").cast("long").alias("n_b"),
@@ -3526,9 +3519,9 @@ def ds_kruskal_wallis(spark, sf_dir):
     """Kruskal-Wallis H — the k-sample generalization of
     `ds_mann_whitney_u` (rank-based one-way ANOVA on ranks): does the
     `value` distribution differ across the five event streams? Ranks
-    come from `_ranked_nosort`'s distributed-rank machinery over the
-    unique composite key (cents, event_id) — NO global sort, ties
-    broken deterministically by the composite key in both engines
+    come from `_ranked_nosort`'s distributed-rank machinery in
+    (cents, event_id) order — NO global sort, ties broken
+    deterministically by event_id in both engines
     (same documented tie posture as `ds_mann_whitney_u`). The group
     channel rides `_ranked_nosort`'s val column as the ascii of the
     stream's first character (distinct across the five streams, and
@@ -3546,14 +3539,13 @@ def ds_kruskal_wallis(spark, sf_dir):
     without sorting the world."""
     e = t(spark, sf_dir, "events")
     gid = F.ascii(F.substring("event_type", 1, 1)).cast("long")
-    assigned = e.select(
-        gid.alias("gid"),
-        (
-            F.round(F.col("value") * 100).cast("long") * F.lit(2**32).cast("long")
-            + F.col("event_id")
-        ).alias("key"),
+    ranked = _ranked_nosort(
+        e.select(
+            F.round(F.col("value") * 100).cast("long").alias("key"),
+            F.col("event_id").alias("tie"),
+            gid.alias("val"),
+        )
     )
-    ranked = _ranked_nosort(assigned.select("key", F.col("gid").alias("val")))
     grp = ranked.groupBy(F.col("val").alias("gid")).agg(
         F.count(F.lit(1)).cast("long").alias("n_j"),
         F.sum("i").cast("long").alias("rank_sum"),
@@ -3652,45 +3644,42 @@ def ds_spearman_rho(spark, sf_dir):
     purchase frequency — the monotonic-association readout behind RFM
     sanity checks ("do big spenders also order often?"), robust to the
     heavy-tailed spend distribution that distorts `agg_corr_bivariate`'s
-    Pearson r. Both variables are ranked by `_ranked_nosort`
-    (distributed rank, no world sort) over unique composite keys
-    (metric·2³² + custkey), so ranks are distinct permutations in BOTH
-    engines and the textbook identity applies EXACTLY:
-    ρ = 1 − 6·Σd²/(n(n²−1)), with Σd² an exact long (d² ≤ n², Σ ≤ n³ —
-    fits the long lane through sf100's ~15M customers at 3.4e21… no:
-    past n ≈ 2M the sum needs the decimal lane; the composite spend key
-    itself holds while per-customer cents < 2³¹, which TPC-H's
-    ~10-orders-per-customer invariant guarantees at every SF).
+    Pearson r. Both variables are ranked by ONE grouped
+    `_ranked_nosort` call (distributed rank, no world sort; one group
+    per variable) in (metric, custkey) order, so ranks are distinct
+    permutations in BOTH engines and the textbook identity applies
+    EXACTLY: ρ = 1 − 6·Σd²/(n(n²−1)), with Σd² an exact long (d² ≤ n²,
+    Σ ≤ n³ — past n ≈ 2M customers the sum needs the decimal lane).
 
-    The custkey rides `_ranked_nosort`'s val channel, so rank→customer
-    needs no join back through the key encoding; the final equi-join of
-    the two rank relations shuffles (custkey, rank) pairs only.
+    The custkey is the tie column, so one per-customer groupBy pivots
+    the two ranks side by side and yields d.
 
-    Scale: two range-binned rank passes + one slim join + a one-row
-    aggregate; ρ is one deterministic double chain over exact
-    integers, rounded at 1e-8."""
+    Scale: one range-binned rank pass + one slim per-customer aggregate
+    + a one-row aggregate; ρ is one deterministic double chain over
+    exact integers, rounded at 1e-8."""
     o = t(spark, sf_dir, "orders")
     per = o.groupBy("o_custkey").agg(
         F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias("spend_c"),
         F.count(F.lit(1)).cast("long").alias("n_orders"),
     )
-    two32 = F.lit(2**32).cast("long")
-    r1 = _ranked_nosort(
+    ranked = _ranked_nosort(
         per.select(
-            (F.col("spend_c") * two32 + F.col("o_custkey")).alias("key"),
-            F.col("o_custkey").alias("val"),
-        )
+            F.col("o_custkey").alias("tie"),
+            F.lit(0).cast("long").alias("val"),
+            F.explode(
+                F.array(
+                    F.struct(F.lit(1).alias("var"), F.col("spend_c").alias("key")),
+                    F.struct(F.lit(2).alias("var"), F.col("n_orders").alias("key")),
+                )
+            ).alias("r"),
+        ).select("r.var", "r.key", "tie", "val"),
+        grp="var",
     )
-    r2 = _ranked_nosort(
-        per.select(
-            (F.col("n_orders") * two32 + F.col("o_custkey")).alias("key"),
-            F.col("o_custkey").alias("val"),
-        )
+    # d = r_spend − r_freq per customer
+    j = ranked.groupBy("tie").agg(
+        F.sum(F.when(F.col("var") == 1, F.col("i")).otherwise(-F.col("i"))).alias("d")
     )
-    j = r1.select(F.col("val").alias("ck"), F.col("i").alias("r_spend")).join(
-        r2.select(F.col("val").alias("ck"), F.col("i").alias("r_freq")), "ck"
-    )
-    d = F.col("r_spend") - F.col("r_freq")
+    d = F.col("d")
     s = j.agg(
         F.count(F.lit(1)).cast("long").alias("n"),
         F.sum(d * d).cast("long").alias("sum_d2"),
@@ -3768,9 +3757,9 @@ def ds_wilcoxon_signed_rank(spark, sf_dir):
     both engines), and zero differences drop per the textbook
     procedure.
 
-    |d| ranks come from `_ranked_nosort` over the unique composite key
-    (|d|·2³² + user_id) — deterministic tie-break, no world sort, the
-    sign rides the val channel. W⁺ = Σ rank·[d>0] is an exact long;
+    |d| ranks come from `_ranked_nosort` in (|d|, user_id) order —
+    deterministic tie-break, no world sort, the sign rides the val
+    channel. W⁺ = Σ rank·[d>0] is an exact long;
     the normal approximation z = (W⁺ − n(n+1)/4)/√(n(n+1)(2n+1)/24)
     is one double chain over exact integers. An all-zero-diff corpus
     yields NULL z in both engines (empty diffs → NULL sums), never
@@ -3804,9 +3793,8 @@ def ds_wilcoxon_signed_rank(spark, sf_dir):
     ).filter(F.col("d") != 0)
     ranked = _ranked_nosort(
         diffs.select(
-            (
-                F.abs(F.col("d")) * F.lit(2**32).cast("long") + F.col("user_id")
-            ).alias("key"),
+            F.abs(F.col("d")).alias("key"),
+            F.col("user_id").alias("tie"),
             (F.col("d") > 0).cast("long").alias("val"),
         )
     )
@@ -4173,14 +4161,11 @@ def ds_lift_gains_deciles(spark, sf_dir):
     IEEE ops, no rounding.
 
     Scale: one rank pass + one 10-row fold; the ranked relation
-    shuffles (key, y) pairs only."""
+    shuffles (key, tie, y) rows only."""
     li = t(spark, sf_dir, "lineitem")
     keyed = li.select(
-        (
-            (50 - F.col("l_quantity").cast("long")) * F.lit(2**44).cast("long")
-            + F.col("l_orderkey") * 8
-            + F.col("l_linenumber")
-        ).alias("key"),
+        (50 - F.col("l_quantity").cast("long")).alias("key"),
+        F.struct("l_orderkey", "l_linenumber").alias("tie"),
         (F.col("l_returnflag") == "R").cast("long").alias("val"),
     )
     # Round-12 (guide §1.2 touch each byte once): the (n, p) totals were

@@ -1,6 +1,6 @@
 """Distributed-rank helpers shared by several operator families (no
 queries): ``_ranked_nosort``, ``_quantiles_refine`` with its ``_MED_*``
-tiers, and the per-customer cents relation many consumers rank."""
+constants, and the per-customer cents relation many consumers rank."""
 
 from __future__ import annotations
 
@@ -16,24 +16,9 @@ from hadoop_fs_ceph_spark.tables import t
 # the is_exact output column verifies convergence instead of trusting it.
 _MED_B = 4096
 _MED_PASSES = 3
-# Wide-domain tier: composite keys (value·1e8 + tiebreak — the exact
-# RFM / equi-depth reformulations) span up to the full signed-long range, so
-# 3 passes at B=4096 (4096³ ≈ 6.9e10) cannot collapse them. Each pass
-# narrows the bracket WIDTH to exactly (hi − lo) div B (the selected bucket
-# spans w = (hi−lo) div B + 1 values, so hi_new − lo_new ≤ w − 1), hence
-# 4 passes at B=65536 pin ANY long bracket: floor(w₀ / 65536⁴) =
-# floor(w₀ / 2^64) = 0 — convergence by arithmetic, not luck. Round 12
-# (guide §1.2 — touch each byte once): the wide tier used 6 passes at
-# B=4096 (4096⁶ = 2^72 > 2^64); widening its buckets 16× deletes two full
-# data passes (and two per-pass localCheckpoint barriers) from every
-# wide-domain consumer while the per-pass state stays combiner-sized
-# (≤65536 count rows per refining key). The default 3-pass tier keeps
-# B=4096: its consumers' plans, docs and domain claims are unchanged.
-_MED_B_WIDE = 65536
-_MED_PASSES_WIDE = 4
 
 
-def _quantiles_refine(x, states, key="pct", weight=None, b=_MED_B):
+def _quantiles_refine(x, states, key="pct", weight=None):
     """One shared refinement pass over ALL quantile states at once: the
     bounded (key, lo, hi, k) state relation broadcasts onto the value
     relation, then each state's crossing bucket is located by its own
@@ -47,23 +32,19 @@ def _quantiles_refine(x, states, key="pct", weight=None, b=_MED_B):
     round up across an integer boundary (and loses exactness past
     2^53). Binning is WIDTH-based (b = (cents − lo) div w with
     w = ⌈range/B⌉) rather than ((cents − lo)·B) div range: the product
-    form overflows long once the value domain nears 2^63/B — and the
-    composite value·1e8 + key domains of the exact RFM/histogram
-    reformulations live there — while the width form's largest
-    intermediate is the range itself. ``agg_exact_median_nosort`` is
-    the 1-row state case. ``weight``: optional integer weight column in
-    ``x`` — bucket mass becomes Σweight instead of COUNT (k then binds
-    a WEIGHTED rank), and nothing else changes: the weighted median is
-    the same three passes. ``b``: buckets per pass — ``_MED_B`` (4096)
-    for the default 3-pass tier, ``_MED_B_WIDE`` (65536) for the 4-pass
-    wide-domain tier (see the tier comment above); either way the
-    per-pass state stays ≤b count rows per refining key."""
+    form overflows long once the value domain nears 2^63/B, while the
+    width form's largest intermediate is the range itself.
+    ``agg_exact_median_nosort`` is the 1-row state case. ``weight``:
+    optional integer weight column in ``x`` — bucket mass becomes
+    Σweight instead of COUNT (k then binds a WEIGHTED rank), and nothing
+    else changes: the weighted median is the same three passes. The per-pass state stays ≤``_MED_B`` count
+    rows per refining key."""
     bound = (
         x.join(F.broadcast(states), key)
         if key in x.columns
         else x.crossJoin(F.broadcast(states))
     )
-    w_expr = f"((hi - lo) div {b}) + 1"
+    w_expr = f"((hi - lo) div {_MED_B}) + 1"
     binned = (
         bound.filter(F.col("cents").between(F.col("lo"), F.col("hi")))
         .select(
@@ -117,20 +98,12 @@ def _quantiles_refine(x, states, key="pct", weight=None, b=_MED_B):
         # Round-12 (guide §3.3/§5 — a materialized intermediate truncates
         # the plan): each pass references `states` TWICE (the broadcast
         # into `bound` and the final narrow join), so without a barrier
-        # the state subtree DOUBLES per pass — the 6-pass wide-domain
-        # consumers compiled 2⁶ copies of the base state into one plan
-        # (ds_rfm_segmentation: 447 Exchange / 126 BroadcastExchange
-        # nodes, ~28 s at sf0.1, nearly all AQE re-planning of repeated
-        # tiny stages). The state is ≤|states| rows (bounded by groups ×
-        # quantiles — control-plane-sized, the same class as the k-core
-        # survivor vector), so an eager localCheckpoint per pass costs
-        # one small job and keeps the compiled plan LINEAR in pass
-        # count. Measured at sf0.1: RFM 27.9 → 6.3 s (4.4×), grouped
-        # quantiles 4.3 → 2.9 s cold; the 3-pass single-state consumers
-        # (2³ = 8 copies) roughly break even — the checkpoint jobs cost
-        # what the redundant tiny stages did — and the win grows with
-        # pass count and state width. Hashes unchanged (all seven
-        # refinement consumers re-verified at sf0.001 + sf0.01).
+        # the state subtree DOUBLES per pass (a 6-pass consumer once
+        # compiled 447 Exchange nodes, ~28 s at sf0.1, nearly all AQE
+        # re-planning of repeated tiny stages). The state is ≤|states|
+        # rows (groups × quantiles — control-plane-sized), so an eager
+        # localCheckpoint per pass costs one small job and keeps the
+        # compiled plan LINEAR in pass count.
         .transform(eager_barrier)
     )
 
@@ -142,45 +115,56 @@ def _conc_customer_cents(spark, sf_dir):
     )
 
 
-def _ranked_nosort(x, bins=4096, with_totals=False):
-    """EXACT global rank + inclusive running sum over DISTINCT long keys
-    with NO single-partition window — the distributed-rank pattern:
+def _ranked_nosort(x, bins=4096, with_totals=False, grp=None):
+    """EXACT rank + inclusive running sum in ``(key, tie)`` order with NO
+    single-partition window — the distributed-rank pattern:
 
-    1. range-bin every row against a broadcast one-row (lo, hi) bound
+    1. range-bin every row on ``key`` against its (lo, hi) bound
        (map-side, width-based integer ``div`` — same overflow posture as
        ``_quantiles_refine``);
     2. one partial-merged aggregate gives per-bin (count, value-sum) —
        ≤ ``bins`` rows — whose sorted array folds sequentially into a
-       per-bin EXCLUSIVE prefix map {bin → (rows_before, value_before)};
-    3. the per-row window runs ``partitionBy(bin)`` — parallel across
-       bins, never a single task — and the broadcast prefix map turns
-       within-bin rank/running-sum into the global ones.
+       per-bin EXCLUSIVE prefix relation (bin, rows_before, value_before);
+    3. the per-row window runs ``partitionBy(bin)`` ordered by
+       ``(key, tie)`` — parallel across bins, never a single task — and
+       the broadcast prefix relation turns within-bin rank/running-sum
+       into the global ones.
 
     This is how a range-partitioned sort ranks without sorting the world
     through one task: the only global object is the ≤``bins``-row offset
-    relation. Composite keys (value·1e8 + tiebreak) spread ties across
-    the tiebreak domain, so equal VALUES never pile into one bin; a
-    pathologically clustered value distribution concentrates bins (the
-    classic range-sort skew), which AQE splits at runtime — or a
-    refinement pass re-bins the heavy range, same machinery.
+    relation. The bin is a function of ``key`` alone, so rows that share
+    a key share a bin and ``tie`` orders them inside it; ``tie`` can be
+    any orderable column (a long, or a struct for a multi-column
+    tiebreak), so no (key, tie) pair is ever packed into one long. A
+    heavily tied key concentrates one bin (the classic range-sort skew).
 
-    ``x``: columns ``key`` (distinct long) and ``val`` (long). Returns
-    ``key, val, i`` (1-based global rank by key) and ``cum`` (inclusive
-    running sum of val in key order), all exact integers.
+    ``x``: columns ``key`` (long), ``tie`` (orderable; ``(key, tie)``
+    distinct) and ``val`` (long). Returns ``key, tie, val, i`` (1-based
+    rank in ``(key, tie)`` order) and ``cum`` (inclusive running sum of
+    val in that order), all exact integers.
+
+    ``grp``: optional name of a group column of ``x``. Each group is then
+    ranked on its own — its own bounds, bins, offsets and windows, bound
+    to the rows by equi-joins on ``grp`` the way ``_quantiles_refine``
+    binds a state key — and ``grp`` leads the output columns. One grouped
+    call ranks a relation on several orders at once (explode it into one
+    group per order) in a single pass.
 
     ``with_totals=True`` additionally returns ``n_tot``/``v_tot`` (the
-    global COUNT and SUM(val)) on every row — the fold's final
-    accumulator already holds both, so exposing them through the same
-    ≤``bins``-row broadcast is FREE, where a caller-side
+    COUNT and SUM(val), per group under ``grp``) on every row — the
+    fold's final accumulator already holds both, so exposing them through
+    the same offset broadcast is FREE, where a caller-side
     ``ranked.agg(...)`` would re-execute the whole rank pipeline a
     second time (round-12, guide §1.2: it cost ds_lift_gains_deciles a
     full extra rank pass)."""
-    st = x.agg(F.min("key").alias("lo"), F.max("key").alias("hi"))
+    g = [grp] if grp else []
+    st = x.groupBy(*g).agg(F.min("key").alias("lo"), F.max("key").alias("hi"))
     w_expr = f"((hi - lo) div {bins}) + 1"
-    b = x.crossJoin(F.broadcast(st)).select(
-        "key", "val", F.expr(f"(key - lo) div ({w_expr})").alias("bin")
+    bound = x.join(F.broadcast(st), grp) if grp else x.crossJoin(F.broadcast(st))
+    b = bound.select(
+        *g, "key", "tie", "val", F.expr(f"(key - lo) div ({w_expr})").alias("bin")
     )
-    per = b.groupBy("bin").agg(
+    per = b.groupBy(*g, "bin").agg(
         F.count(F.lit(1)).alias("cnt"), F.sum("val").alias("vs")
     )
     lz = F.lit(0).cast("long")
@@ -225,39 +209,30 @@ def _ranked_nosort(x, bins=4096, with_totals=False):
         init,
         step,
     )
-    if with_totals:
-        # the fold's final accumulator c/v ARE the global totals: every
-        # bin's (cnt, vs) was added exactly once, in bin order
-        offs = (
-            per.agg(folded.alias("f"))
-            .select(
-                F.col("f.c").alias("n_tot"),
-                F.col("f.v").alias("v_tot"),
-                F.explode("f.es").alias("e"),
-            )
-            .select(
-                F.col("e.bin").alias("bin"),
-                F.col("e.cb").alias("cb"),
-                F.col("e.vb").alias("vb"),
-                "n_tot",
-                "v_tot",
-            )
+    # the fold's final accumulator c/v ARE the (per-group) totals: every
+    # bin's (cnt, vs) was added exactly once, in bin order
+    tot = ["n_tot", "v_tot"] if with_totals else []
+    offs = (
+        per.groupBy(*g)
+        .agg(folded.alias("f"))
+        .select(
+            *g,
+            F.col("f.c").alias("n_tot"),
+            F.col("f.v").alias("v_tot"),
+            F.explode("f.es").alias("e"),
         )
-    else:
-        offs = (
-            per.agg(folded["es"].alias("es"))
-            .select(F.explode("es").alias("e"))
-            .select(F.col("e.bin").alias("bin"), F.col("e.cb").alias("cb"), F.col("e.vb").alias("vb"))
-        )
-    w = Window.partitionBy("bin").orderBy("key")
-    out = b.join(F.broadcast(offs), "bin").select(
+        .select(*g, "e.bin", "e.cb", "e.vb", *tot)
+    )
+    w = Window.partitionBy(*g, "bin").orderBy("key", "tie")
+    return b.join(F.broadcast(offs), [*g, "bin"]).select(
+        *g,
         "key",
+        "tie",
         "val",
         (F.col("cb") + F.row_number().over(w)).alias("i"),
         (
             F.col("vb")
             + F.sum("val").over(w.rowsBetween(Window.unboundedPreceding, 0))
         ).alias("cum"),
-        *(["n_tot", "v_tot"] if with_totals else []),
+        *tot,
     )
-    return out

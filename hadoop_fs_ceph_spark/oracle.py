@@ -21,17 +21,22 @@ from hadoop_fs_ceph_spark.catalog import TESTDATA_TABLES
 
 
 def duckdb_connection(sf_dir: str):
-    """DuckDB connection with the driver's table views pre-registered."""
+    """DuckDB connection with the driver's table views pre-registered. A
+    table is one ``<name>.parquet`` file, or a directory of that name
+    holding the ``*.parquet`` part files Spark writes."""
     import duckdb
 
     con = duckdb.connect()
     con.execute("SET TimeZone='UTC'")
     for name in TESTDATA_TABLES:
         path = os.path.join(sf_dir, f"{name}.parquet")
-        if os.path.exists(path):
-            con.execute(
-                f"CREATE OR REPLACE VIEW {name} AS SELECT * FROM read_parquet('{path}')"
-            )
+        if os.path.isdir(path):
+            path = os.path.join(path, "*.parquet")
+        elif not os.path.exists(path):
+            continue
+        con.execute(
+            f"CREATE OR REPLACE VIEW {name} AS SELECT * FROM read_parquet('{path}')"
+        )
     return con
 
 

@@ -32,8 +32,6 @@ INTENTIONAL_CROSS: dict[str, str] = {
     "ds_abc_classification": "one-row revenue-total + one-row bounds + ≤4096-row rank-offset relation broadcasts (hash-joined on bin) (distributed-rank pass)",
     "ds_mood_median_test": "one-row grand-median/chi2/margin broadcasts onto the ≤k-row class relation",
     "ds_kruskal_wallis": "one-row bounds + ≤4096-row rank-offset relation (hash-joined on bin) + one-row H-stat broadcasts (distributed-rank pass)",
-    "ds_spearman_rho": "one-row bounds + ≤4096-row rank-offset relation broadcasts (hash-joined on bin) (two distributed-rank passes)",
-    "ds_segment_migration_matrix": "one-row period-count + one-row bounds + ≤4096-row rank-offset relation broadcasts (hash-joined on bin) (two distributed-rank passes)",
     "ds_wilcoxon_signed_rank": "one-row corpus-midpoint + one-row bounds + ≤4096-row rank-offset relation broadcasts (hash-joined on bin) (distributed-rank pass)",
     "profile_freshness_lag": "one-row corpus-watermark broadcast onto the per-stream aggregate",
     "ds_tpcds_q23_frequent_best": "one-row max-lifetime-spend broadcast gating the best-customer cut",
@@ -56,7 +54,7 @@ INTENTIONAL_CROSS: dict[str, str] = {
     "sim_ann_recall_report": "sampled query-batch broadcast (truth pass)",
     "ds_pareto_concentration": "one-row totals/bounds + ≤4096-row rank-offset relation broadcasts (hash-joined on bin) (distributed-rank pass)",
     "agg_gini_concentration": "one-row bounds + ≤4096-row rank-offset relation broadcasts (hash-joined on bin) (distributed-rank pass)",
-    "ds_rfm_segmentation": "one-row corpus-max-date broadcast",
+    "ds_rfm_segmentation": "one-row corpus-max-date broadcast onto the per-customer relation (recency)",
     "sample_temporal_split": "one-row corpus-horizon (max_ts/test_start/train_end) broadcast",
     "graph_triangle_count": "one-row edge-count broadcast joined to one-row count",
     "graph_reciprocity": "two one-row edge/reciprocal counts cross-joined",
@@ -248,9 +246,9 @@ BOUNDED_COLLECT: dict[str, str] = {
     # pre-barrier sight (plans/inspect.py audit_with_barriers over the
     # barrier.py capture hook), the flags fire again on what the barrier
     # hides, and the seven entries below are RE-DERIVED from that view
-    # (VERDICT r12 item 3). The refine state stays ≤4096 rows by
-    # construction (≤65536 for the 4-pass wide-domain tier — still
-    # combiner-sized; tests/test_plans.py pins the truncated plan shape).
+    # (VERDICT r12 item 3). The refine state stays ≤4096 rows per
+    # refining key by construction (tests/test_plans.py pins the
+    # truncated plan shape).
     "agg_exact_median_nosort": _REFINE_COLLECT,
     "agg_exact_median_by_group_nosort": _REFINE_COLLECT,
     "agg_exact_weighted_median_nosort": _REFINE_COLLECT,
@@ -259,15 +257,15 @@ BOUNDED_COLLECT: dict[str, str] = {
     "agg_quantile_sketch_error": _REFINE_COLLECT,
     "profile_equidepth_histogram": _REFINE_COLLECT,
     "agg_trimmed_mean_nosort": _REFINE_COLLECT,
-    "ds_rfm_segmentation": _REFINE_COLLECT,
+    "ds_rfm_segmentation": "≤4096-row bin/offset relation per RFM dimension (3 rank groups) collected into the broadcast rank state (one grouped distributed-rank pass)",
     "agg_gini_concentration": _REFINE_COLLECT,
     "ds_pareto_concentration": _REFINE_COLLECT,
     "ds_mann_whitney_u": _REFINE_COLLECT,
     "ds_auc_exact": "≤50-row score-value histogram array, sequential integer fold",
     "ds_lift_gains_deciles": _REFINE_COLLECT,
     "ds_kruskal_wallis": _REFINE_COLLECT,
-    "ds_spearman_rho": _REFINE_COLLECT,
-    "ds_segment_migration_matrix": _REFINE_COLLECT,
+    "ds_spearman_rho": "≤4096-row bin/offset relation per ranked variable (2 rank groups) collected into the broadcast rank state (one grouped distributed-rank pass)",
+    "ds_segment_migration_matrix": "≤4096-row bin/offset relation per period (2 rank groups) collected into the broadcast rank state (one grouped distributed-rank pass)",
     "ds_abc_classification": _REFINE_COLLECT,
     "ds_wilcoxon_signed_rank": _REFINE_COLLECT,
     "agg_gini_concentration_binned": "collected 64-bin contribution array, sequential fold",

@@ -63,9 +63,13 @@ def _file_signature(spark: SparkSession, path: str) -> tuple | None:
 
 def relation_bytes(spark: SparkSession, path: str) -> int:
     """Total length of the files under ``path`` as its storage layer lists
-    them (so an ``s3a://`` or ``cephrgw://`` table is sized too); 0 when the
-    path cannot be listed."""
-    return sum(length for _, length, _ in _file_signature(spark, path) or ())
+    them (so an ``s3a://`` or ``cephrgw://`` table is sized too). Raises
+    ``FileNotFoundError`` when the path cannot be listed: a size of 0 would
+    read as an empty relation to the callers that size work by it."""
+    files = _file_signature(spark, path)
+    if files is None:
+        raise FileNotFoundError(path)
+    return sum(length for _, length, _ in files)
 
 
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:

@@ -1499,55 +1499,87 @@ def test_gini_binned_edge_shapes(spark, tmp_path):
 
 
 def test_ranked_nosort_matches_window_rank(spark):
-    """_ranked_nosort's global rank + inclusive running sum must equal
-    the single-partition-window formulation on adversarial key
-    distributions: clustered keys (bin skew), negative composites
-    (Pareto's descending encoding), and a singleton relation."""
+    """_ranked_nosort's rank + inclusive running sum must equal the
+    window formulation ordered by (key, tie) — per group when ``grp`` is
+    given — on adversarial distributions: clustered keys (bin skew),
+    negated keys (Pareto's descending order), a singleton relation,
+    duplicate keys split by distinct ties, ties past 2^32 (where a packed
+    key·2^32 + tie long collides), a struct tie, and a grouped call."""
     from pyspark.sql import Window
 
     from hadoop_fs_ceph_spark.operators.ranking import _ranked_nosort
 
+    flat = "key long, tie long, val long"
     cases = {
-        "clustered": [(k, k % 7 + 1) for k in list(range(50)) + list(range(10**12, 10**12 + 50))],
-        "negative": [(-v * 100_000_000 + i, v) for i, v in enumerate([5, 5, 5, 9, 1, 7, 7])],
-        "singleton": [(42, 17)],
+        "clustered": (
+            flat,
+            [(k, 0, k % 7 + 1) for k in list(range(50)) + list(range(10**12, 10**12 + 50))],
+        ),
+        "negative": (flat, [(-v, i, v) for i, v in enumerate([5, 5, 5, 9, 1, 7, 7])]),
+        "singleton": (flat, [(42, 0, 17)]),
+        "duplicate_keys": (flat, [(k % 5, k * 37 % 101, k % 3 + 1) for k in range(60)]),
+        "wide_ties": (
+            flat,
+            [
+                (k % 3, t, k + 1)
+                for k, t in enumerate(
+                    [2**32, 2**32 + 1, 1, 2**40, 2**62, 2**33, 7, 2**62 + 5, 2**32 - 1]
+                )
+            ],
+        ),
+        "struct_tie": (
+            "key long, tie struct<a:long,b:long>, val long",
+            [(k % 4, (k % 3, -k), k) for k in range(40)],
+        ),
+        "grouped": (
+            "grp int, key long, tie long, val long",
+            [(g, (k * g) % 9 - 4, k, k % 5 + g) for g in (1, 2, 3) for k in range(30)],
+        ),
     }
-    for name, rows in cases.items():
-        x = spark.createDataFrame(rows, "key long, val long")
+    for name, (schema, rows) in cases.items():
+        x = spark.createDataFrame(rows, schema)
+        grp = "grp" if "grp" in x.columns else None
+        ids = [c for c in ("grp", "key", "tie") if c in x.columns]
         got = {
-            r["key"]: (r["i"], r["cum"])
-            for r in _ranked_nosort(x, bins=8).collect()
+            tuple(r[c] for c in ids): (r["i"], r["cum"])
+            for r in _ranked_nosort(x, bins=8, grp=grp).collect()
         }
-        w = Window.orderBy("key")
+        w = Window.partitionBy(*([grp] if grp else [])).orderBy("key", "tie")
         want = {
-            r["key"]: (r["i"], r["cum"])
+            tuple(r[c] for c in ids): (r["i"], r["cum"])
             for r in x.select(
-                "key",
+                *ids,
                 F.row_number().over(w).alias("i"),
                 F.sum("val").over(w.rowsBetween(Window.unboundedPreceding, 0)).alias("cum"),
             ).collect()
         }
-        assert got == want, name
+        assert len(got) == len(rows) and got == want, name
 
 
 def test_ranked_nosort_with_totals_rides_global_count_and_sum(spark):
     """with_totals=True must put the EXACT global COUNT/SUM(val) on every
     row (they ride the offset fold's final accumulator — round 12 removed
     a second full rank pass in ds_lift_gains_deciles with them), and must
-    not perturb the rank/cum columns."""
+    not perturb the rank/cum columns. Under ``grp`` the totals are each
+    group's own."""
     from hadoop_fs_ceph_spark.operators.ranking import _ranked_nosort
 
-    rows = [(k * 997 % 1009, k % 7 + 1) for k in range(200)]
-    x = spark.createDataFrame(rows, "key long, val long")
+    rows = [(k * 997 % 1009, 0, k % 7 + 1) for k in range(200)]
+    x = spark.createDataFrame(rows, "key long, tie long, val long")
     got = _ranked_nosort(x, bins=8, with_totals=True).collect()
     n = len(rows)
-    v = sum(val for _, val in rows)
+    v = sum(val for _, _, val in rows)
     assert all(r["n_tot"] == n and r["v_tot"] == v for r in got)
     base = {
         r["key"]: (r["i"], r["cum"])
         for r in _ranked_nosort(x, bins=8).collect()
     }
     assert {r["key"]: (r["i"], r["cum"]) for r in got} == base
+
+    xg = x.withColumn("g", F.col("key") % 3)
+    for r in _ranked_nosort(xg, bins=8, with_totals=True, grp="g").collect():
+        mine = [val for key, _, val in rows if key % 3 == r["g"]]
+        assert (r["n_tot"], r["v_tot"]) == (len(mine), sum(mine))
 
 
 def test_grouped_exact_quantiles_match_sorted_truth(spark, sf_dir):
@@ -2251,16 +2283,13 @@ def test_key_discovery_finds_orderkey(spark, sf_dir):
 def test_spearman_self_correlation_is_one(spark, sf_dir):
     """ρ(X, X) = 1 exactly under the Σd² identity (d ≡ 0); checked by
     running the registered query's machinery on one variable ranked
-    against itself via the composite-key encoding."""
+    against itself in (value, orderkey) order."""
     from hadoop_fs_ceph_spark.operators.ranking import _ranked_nosort
 
     o = t(spark, sf_dir, "orders").limit(500)
     per = o.select(
-        (
-            F.round(F.col("o_totalprice") * 100).cast("long")
-            * F.lit(2**32).cast("long")
-            + F.col("o_orderkey")
-        ).alias("key"),
+        F.round(F.col("o_totalprice") * 100).cast("long").alias("key"),
+        F.col("o_orderkey").alias("tie"),
         F.col("o_orderkey").alias("val"),
     )
     r = _ranked_nosort(per)

@@ -602,7 +602,16 @@ def test_sparse_cosine_pair_agg_no_pair_exchange(spark, sf_dir):
     )
 
 
-@pytest.mark.parametrize("name", ["agg_trimmed_mean_nosort", "agg_gini_concentration"])
+@pytest.mark.parametrize(
+    "name",
+    [
+        "agg_trimmed_mean_nosort",
+        "agg_gini_concentration",
+        "ds_rfm_segmentation",
+        "ds_spearman_rho",
+        "ds_segment_migration_matrix",
+    ],
+)
 def test_ranked_nosort_offsets_hash_joined_not_map_probed(spark, sf_dir, name):
     """_ranked_nosort must attach its ≤bins-row offset relation with a
     broadcast-hash JOIN on bin (O(1) probe per row), never as a one-row
@@ -623,13 +632,12 @@ def test_ranked_nosort_offsets_hash_joined_not_map_probed(spark, sf_dir, name):
         # Round-12: _quantiles_refine localCheckpoints its ≤|states|-row
         # state each pass, so the compiled plan is LINEAR in pass count.
         # Without the barrier the state subtree DOUBLES per pass (each
-        # pass references it twice) — the 6-pass RFM plan compiled 447
+        # pass references it twice) — a 6-pass plan compiled 447
         # Exchange / 126 BroadcastExchange nodes and spent ~28 s at
         # sf0.1, nearly all AQE re-planning of repeated tiny stages.
-        # Bounds are ~2× the observed post-fix counts (12 and 4) so a
+        # The bound is ~2× the observed post-fix count (4) so a
         # reintroduced doubling trips immediately while plan-shape
         # noise does not.
-        ("ds_rfm_segmentation", 24),
         ("agg_exact_median_nosort", 10),
     ],
 )

@@ -121,40 +121,6 @@ def test_histogram_refinement_median_property(spark, vals):
     assert got["lo"] == got["hi"] == expected
 
 
-def test_histogram_refinement_wide_tier_four_passes(spark):
-    """The 4-pass wide tier (b=_MED_B_WIDE=65536) must pin the exact
-    lower median on a bracket FAR beyond the default tier's reach —
-    width ~6.9e18, near the long limit, where even 4 passes at B=4096
-    (4096⁴ ≈ 2.8e14) could not collapse the range. Pins the round-12
-    §26a arithmetic claim: each pass divides the surviving width by
-    exactly B, so 65536⁴ = 2^64 covers any long bracket (hi−lo must
-    itself fit in a signed long, the machinery's standing
-    precondition). Negative lo included to exercise signed narrowing."""
-    from pyspark.sql import functions as F
-
-    from hadoop_fs_ceph_spark.operators.ranking import (
-        _MED_B_WIDE,
-        _MED_PASSES_WIDE,
-        _quantiles_refine,
-    )
-
-    vals = [-(2**61), -12345, 0, 7, 10**15 + 17, 2**62]  # width ≈ 6.9e18
-    x = spark.createDataFrame([(v,) for v in vals], "cents long")
-    base = x.agg(
-        F.min("cents").alias("lo"),
-        F.max("cents").alias("hi"),
-        F.count(F.lit(1)).alias("n"),
-    )
-    states = base.selectExpr(
-        "CAST(50 AS INT) AS pct", "lo", "hi", "(n + 1) div 2 AS k"
-    )
-    for _ in range(_MED_PASSES_WIDE):
-        states = _quantiles_refine(x, states, b=_MED_B_WIDE)
-    got = states.collect()[0]
-    expected = sorted(vals)[(len(vals) + 1) // 2 - 1]
-    assert got["lo"] == got["hi"] == expected
-
-
 def test_histogram_refinement_honest_beyond_domain(spark):
     """Past the 4096^3 range bound three passes cannot collapse the
     range — the machinery must leave a still-valid bracket (lo <= true

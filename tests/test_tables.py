@@ -156,4 +156,5 @@ def test_relation_bytes_sizes_without_os(spark, sf_dir, tmp_path, monkeypatch):
     assert relation_bytes(spark, str(tmp_path / "documents.parquet")) == 300 * MiB
     assert _spc_slices(spark, str(tmp_path)) == 2
     assert stream_state_width(str(tmp_path)) == 9
-    assert relation_bytes(spark, str(tmp_path / "missing.parquet")) == 0
+    with pytest.raises(FileNotFoundError):
+        relation_bytes(spark, str(tmp_path / "missing.parquet"))
