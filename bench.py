@@ -9,8 +9,8 @@ Every mode, and ``tools/time_heads.py``, times queries through one run path:
 execution, no driver collection, so timings measure the distributed plan,
 not toPandas) and records ``fn_s`` + ``action_s`` with the
 ``perfbench.probes.StageCounters`` of exactly that run; ``suite`` runs one
-cold pass over a head set. Each mode starts from ``session``, all but the
-soak warm up with ``warm_up``, and ``confs`` holds conf overrides.
+cold pass over a head set. Each mode starts from ``session`` and warms up
+with ``warm_up``, and ``confs`` holds conf overrides.
 
 The compact line carries a NOISE-AWARE verdict against the previous round:
 its per-query cold walls and spreads are read back from the newest same-SF
@@ -352,7 +352,7 @@ def _prebuild_layouts(spark, sf_dir: str) -> float:
     the build seconds (0.0 when the session already holds the layout);
     the default suite reports it as ``layout_build_sec`` and names the
     layouts in the compact line (``_OWNED_LAYOUTS``)."""
-    from hadoop_fs_ceph_spark.operators.tpcds_suite4 import ensure_q14_layout
+    from hadoop_fs_ceph_spark.operators.tpcds import ensure_q14_layout
 
     _, sec = ensure_q14_layout(spark, sf_dir)
     return round(sec, 3)
@@ -630,6 +630,8 @@ def soak_main() -> None:
                 for n in bench_specs
             }
 
+        # the first timed suite must not pay JVM warm-up the second does not
+        warm_up(spark, bench_specs, small_dir)
         small = run_suite(small_dir)
         big = run_suite(soak_dir)
     finally:

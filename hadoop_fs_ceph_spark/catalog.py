@@ -36,6 +36,9 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
+from hadoop_fs_ceph_spark.sources import writers
+from hadoop_fs_ceph_spark.sources.readers import _file_signature
+
 TESTDATA_TABLES = (
     "region",
     "nation",
@@ -70,10 +73,12 @@ class Catalog:
 
     # -- mount-time discovery -------------------------------------------------
     def register_testdata(self, sf_dir: str) -> None:
-        """Register every driver table present under ``sf_dir``."""
+        """Register every driver table present under ``sf_dir``, found
+        through the Hadoop ``FileSystem`` of its URI (so an ``s3a://`` or
+        ``viewfs://`` root is discovered too)."""
         for name in TESTDATA_TABLES:
             path = os.path.join(sf_dir, f"{name}.parquet")
-            if os.path.exists(path):
+            if _file_signature(self.spark, path) is not None:
                 self.register(name, path, "parquet")
 
     def register(
@@ -134,10 +139,7 @@ class Catalog:
         (CephRgwFileSystem.java:263-271): ``overwrite`` replaces,
         ``errorifexists`` fails on existing target, ``append`` adds files.
         """
-        writer = df.write.format(format).mode(mode)
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.save(path)
+        writers.write_table(df, path, format, mode, partition_by)
         self.register(name, path, format)
 
     def rename_table(self, old: str, new: str) -> None:

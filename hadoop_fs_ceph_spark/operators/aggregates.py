@@ -1,6 +1,6 @@
 """Aggregation family: multi-key + HAVING, distinct, rollup/cube/grouping
-sets, statistical moments, percentiles, ordered collect, min_by/max_by,
-approximate distinct.
+sets, statistical moments, weighted stats, percentiles, ordered collect
+and listagg, boolean and bitwise folds, min_by/max_by, approximate distinct.
 
 All shuffles here carry only the group keys (partial aggregation is
 map-side); rollup/cube expand rows *after* partial aggregation in Spark's
@@ -1767,4 +1767,144 @@ def agg_skyline_2d(spark, sf_dir):
         )
         .select(F.col("pk").alias("l_partkey"), "qty", "rev_c")
         .orderBy("qty", "rev_c", "l_partkey")
+    )
+
+
+@query(
+    "agg_bool_family",
+    oracle="""
+    SELECT o_orderstatus,
+           CAST(COUNT_IF(o_orderpriority = '1-URGENT') AS BIGINT) AS n_urgent,
+           BOOL_AND(o_totalprice > 0) AS all_positive,
+           BOOL_OR(o_totalprice > 400000) AS any_jumbo,
+           CAST(COUNT_IF(o_totalprice BETWEEN 100000 AND 200000) AS BIGINT) AS n_mid
+    FROM orders
+    GROUP BY o_orderstatus
+    ORDER BY o_orderstatus
+    """,
+    tags=("aggregate", "boolean", "count_if"),
+)
+def agg_bool_family(spark, sf_dir):
+    """Boolean-logic aggregates per order status: conditional counting
+    (count_if), universal/existential quantifiers over a group (bool_and
+    / bool_or). All exact integer/boolean results — no float hazard — and
+    all computed in one hash-aggregate pass with map-side partials."""
+    o = t(spark, sf_dir, "orders")
+    return (
+        o.groupBy("o_orderstatus")
+        .agg(
+            F.count_if(F.col("o_orderpriority") == "1-URGENT").alias("n_urgent"),
+            F.bool_and(F.col("o_totalprice") > 0).alias("all_positive"),
+            F.bool_or(F.col("o_totalprice") > 400000).alias("any_jumbo"),
+            F.count_if(F.col("o_totalprice").between(100000, 200000)).alias("n_mid"),
+        )
+        .orderBy("o_orderstatus")
+    )
+
+
+@query(
+    "agg_weighted_stats",
+    oracle="""
+    SELECT l_returnflag,
+           (CAST(SUM(CAST(ROUND(l_quantity * l_extendedprice * 100.0) AS BIGINT)) AS BIGINT)
+            / 100.0)
+           / (CAST(SUM(CAST(ROUND(l_quantity * 1000000.0) AS BIGINT)) AS BIGINT)
+              / 1000000.0) AS wavg_price,
+           CAST(SUM(CAST(ROUND(l_quantity * 1000000.0) AS BIGINT)) AS BIGINT) / 1000000.0
+             AS total_weight
+    FROM lineitem
+    GROUP BY l_returnflag
+    ORDER BY l_returnflag
+    """,
+    tags=("aggregate", "weighted"),
+)
+def agg_weighted_stats(spark, sf_dir):
+    """Quantity-weighted mean price per return flag — the weighted
+    aggregate every sample-weighted training pipeline needs. Both the
+    weighted sum and the weight total use fixed-point integer
+    accumulation (order-independent, canonical.py), so the final double
+    division is a single identical rounding in both engines."""
+    li = t(spark, sf_dir, "lineitem")
+
+    def fix(col, scale):
+        shift = float(10**scale)
+        return F.sum(F.round(col * F.lit(shift)).cast("long")).cast("double") / F.lit(shift)
+
+    q, p = F.col("l_quantity"), F.col("l_extendedprice")
+    return (
+        li.groupBy("l_returnflag")
+        .agg(
+            (fix(q * p, 2) / fix(q, 6)).alias("wavg_price"),
+            fix(q, 6).alias("total_weight"),
+        )
+        .orderBy("l_returnflag")
+    )
+
+
+@query(
+    "agg_string_agg",
+    oracle="""
+    SELECT c_mktsegment,
+           COUNT(*) AS n,
+           string_agg(c_name, ',' ORDER BY c_name) AS names_csv
+    FROM customer
+    WHERE c_custkey % 100 = 0
+    GROUP BY c_mktsegment
+    ORDER BY c_mktsegment
+    """,
+    tags=("aggregate", "string", "listagg"),
+)
+def agg_string_agg(spark, sf_dir):
+    """Ordered string aggregation: listagg WITHIN GROUP (ORDER BY)
+    per market segment — the SQL:2023 spelling Spark 4 added, vs
+    DuckDB's string_agg ORDER BY. The deterministic intra-group
+    order is the whole point: an unordered concat is
+    partition-order-dependent and can never hash-match. The modulo
+    sample bounds string width at any SF; at 100 TB ordered listagg
+    is a sort-based aggregate, so group width — not table size — is
+    the cost driver."""
+    c = t(spark, sf_dir, "customer").filter(F.col("c_custkey") % 100 == 0)
+    return (
+        c.groupBy("c_mktsegment")
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.expr("listagg(c_name, ',') WITHIN GROUP (ORDER BY c_name)").alias(
+                "names_csv"
+            ),
+        )
+        .orderBy("c_mktsegment")
+    )
+
+
+@query(
+    "agg_bitwise_fold",
+    oracle="""
+    SELECT o_orderstatus,
+           CAST(bit_and(o_orderkey) AS BIGINT) AS all_bits,
+           CAST(bit_or(o_orderkey) AS BIGINT) AS any_bits,
+           CAST(bit_xor(o_orderkey) AS BIGINT) AS parity_bits,
+           COUNT(*) AS n
+    FROM orders
+    GROUP BY o_orderstatus
+    ORDER BY o_orderstatus
+    """,
+    tags=("aggregate", "bitwise"),
+)
+def agg_bitwise_fold(spark, sf_dir):
+    """Bitwise aggregate folds (bit_and/bit_or/bit_xor) per order
+    status — commutative+associative integer reductions, so they
+    combine map-side and are order-independent by construction (the
+    only aggregate family that needs NO canonicalization tricks).
+    bit_xor is the classic distributed set-checksum: XOR of all ids
+    detects single-row divergence between two replicas for free."""
+    o = t(spark, sf_dir, "orders")
+    return (
+        o.groupBy("o_orderstatus")
+        .agg(
+            F.bit_and("o_orderkey").alias("all_bits"),
+            F.bit_or("o_orderkey").alias("any_bits"),
+            F.bit_xor("o_orderkey").alias("parity_bits"),
+            F.count(F.lit(1)).alias("n"),
+        )
+        .orderBy("o_orderstatus")
     )

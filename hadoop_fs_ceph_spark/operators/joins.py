@@ -1,4 +1,5 @@
-"""Join family: inner/outer/semi/anti/cross/theta/as-of; broadcast vs SMJ.
+"""Join family: inner/outer/semi/anti/cross/theta/as-of/null-safe;
+broadcast vs SMJ.
 
 Scale posture per join:
 * fact⋈dim joins broadcast the dimension explicitly (``F.broadcast``) —
@@ -1460,4 +1461,63 @@ def join_aqe_skew_split(spark, sf_dir):
             F.sum("cents").cast("long").alias("cents"),
         )
         .orderBy("o_orderpriority")
+    )
+
+
+@query(
+    "join_null_safe_keys",
+    oracle="""
+    WITH a AS (
+      SELECT o_orderkey,
+             CASE WHEN o_orderkey % 5 = 0 THEN NULL ELSE o_orderstatus END AS k,
+             o_totalprice
+      FROM orders WHERE o_orderkey % 2 = 0
+    ),
+    b AS (
+      SELECT CASE WHEN n_nationkey % 5 = 0 THEN NULL
+                  ELSE list_extract(['F','O','P'], CAST(n_nationkey % 3 AS INTEGER) + 1)
+             END AS k,
+             n_nationkey
+      FROM nation
+    )
+    SELECT a.k AS status_key, COUNT(*) AS n_pairs,
+           CAST(SUM(b.n_nationkey) AS BIGINT) AS nation_sum
+    FROM a JOIN b ON a.k IS NOT DISTINCT FROM b.k
+    GROUP BY a.k
+    ORDER BY a.k NULLS FIRST
+    """,
+    tags=("join", "null-safe"),
+)
+def join_null_safe_keys(spark, sf_dir):
+    """Null-safe equi-join (`<=>` / IS NOT DISTINCT FROM): NULL keys
+    match each other instead of vanishing — the semantics dimension the
+    plain equi-join family can't express. Spark still plans this as a
+    hash-partitioned equi-join (keys wrapped in a null-coalescing
+    struct), NOT a nested loop, so the scale posture is the same as any
+    shuffle join; NULL becomes one join group, which at skewed scale is
+    handled like any hot key (AQE skew split)."""
+    o = t(spark, sf_dir, "orders").filter(F.col("o_orderkey") % 2 == 0)
+    a = o.select(
+        "o_orderkey",
+        F.when(F.col("o_orderkey") % 5 == 0, F.lit(None))
+        .otherwise(F.col("o_orderstatus"))
+        .alias("k"),
+        "o_totalprice",
+    )
+    n = t(spark, sf_dir, "nation")
+    statuses = F.array(F.lit("F"), F.lit("O"), F.lit("P"))
+    b = n.select(
+        F.when(F.col("n_nationkey") % 5 == 0, F.lit(None))
+        .otherwise(F.element_at(statuses, (F.col("n_nationkey") % 3).cast("int") + 1))
+        .alias("kb"),
+        "n_nationkey",
+    )
+    return (
+        a.join(b, a.k.eqNullSafe(b.kb))
+        .groupBy(a.k.alias("status_key"))
+        .agg(
+            F.count(F.lit(1)).alias("n_pairs"),
+            F.sum("n_nationkey").alias("nation_sum"),
+        )
+        .orderBy(F.col("status_key").asc_nulls_first())
     )

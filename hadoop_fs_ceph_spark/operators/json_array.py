@@ -1,4 +1,5 @@
-"""JSON / map / array / higher-order function family.
+"""JSON / VARIANT / map / array / higher-order function family, with
+array set algebra.
 
 Exercised on ``events.props`` (JSON strings) and ``embeddings.embedding``
 (array<float>, dim 64) plus tokenized ``documents.text``.
@@ -279,3 +280,97 @@ def fn_variant_shred(spark, sf_dir):
         F.try_variant_get(v, "$.missing", "string").alias("missing"),
         F.schema_of_variant(v).alias("vschema"),
     )
+
+
+@query(
+    "fn_variant_family",
+    oracle="""
+    SELECT event_id,
+           CAST(json_extract(props, '$.k') AS INTEGER) AS k_int,
+           json_extract_string(props, '$.k') AS k_str,
+           CAST(json_extract(props, '$.k') AS BIGINT) * 2 AS k_doubled,
+           json_extract_string(props, '$.missing') AS absent,
+           (json_extract(props, '$.k') IS NOT NULL) AS has_k
+    FROM events
+    WHERE event_id % 11 = 0
+    ORDER BY event_id
+    """,
+    tags=("function", "json", "variant"),
+)
+def fn_variant_family(spark, sf_dir):
+    """Semi-structured VARIANT surface (Spark 4): parse once with
+    try_parse_json, then typed path extraction via variant_get —
+    int, string (numeric→string cast), arithmetic on the typed value,
+    a missing path (NULL in both engines), and an existence flag.
+    VARIANT stores a parsed binary encoding, so repeated path reads
+    skip re-tokenizing the JSON text — the 100 TB win over
+    get_json_object, which re-parses the string per call. Oracle is
+    DuckDB's JSON path family over the same props column."""
+    e = t(spark, sf_dir, "events").filter(F.col("event_id") % 11 == 0)
+    v = F.try_parse_json("props")
+    return e.select(
+        "event_id",
+        F.variant_get(v, "$.k", "int").alias("k_int"),
+        F.variant_get(v, "$.k", "string").alias("k_str"),
+        (F.variant_get(v, "$.k", "long") * 2).alias("k_doubled"),
+        F.variant_get(v, "$.missing", "string").alias("absent"),
+        F.variant_get(v, "$.k", "long").isNotNull().alias("has_k"),
+    ).orderBy("event_id")
+
+
+@query(
+    "fn_array_setops",
+    oracle="""
+    WITH halves AS (
+      SELECT doc_id,
+             string_split(text, ' ') AS tok,
+             len(string_split(text, ' ')) AS n
+      FROM documents WHERE doc_id % 11 = 3 AND len(string_split(text, ' ')) >= 2
+    ),
+    ab AS (
+      SELECT doc_id,
+             tok[1 : CAST(n // 2 AS INTEGER)] AS a,
+             tok[CAST(n // 2 + 1 AS INTEGER) : CAST(n AS INTEGER)] AS b
+      FROM halves
+    )
+    SELECT doc_id,
+           len(list_distinct(list_concat(a, b))) AS n_union,
+           len(list_distinct(list_filter(a, x -> NOT list_contains(b, x))))
+             AS n_except,
+           len(list_distinct(list_filter(a, x -> list_contains(b, x))))
+             AS n_inter,
+           list_has_any(a, b) AS overlap,
+           len(flatten([a, b])) AS flat_n,
+           array_to_string(list_sort(list_distinct(list_concat(a, b))), ' ')
+             AS union_csv
+    FROM ab
+    ORDER BY doc_id
+    """,
+    tags=("function", "array", "setops"),
+)
+def fn_array_setops(spark, sf_dir):
+    """Array set algebra on each document's two token halves:
+    array_union / array_except / array_intersect (all distinct-set
+    semantics), arrays_overlap, and flatten — the vocabulary-diff
+    primitives behind incremental dedup (what's new in this shard vs
+    the last) and split-half consistency checks. Sorted-CSV output
+    pins the set content, not just its size; everything is per-row
+    JVM codegen over the scan, zero shuffle before the sample sort."""
+    d = t(spark, sf_dir, "documents").filter(F.col("doc_id") % 11 == 3)
+    halves = d.select(
+        "doc_id", F.split("text", " ").alias("tok")
+    ).withColumn("n", F.size("tok")).filter(F.col("n") >= 2)
+    ab = halves.select(
+        "doc_id",
+        F.slice("tok", 1, (F.col("n") / 2).cast("int")).alias("a"),
+        F.expr("slice(tok, CAST(n / 2 AS INT) + 1, n - CAST(n / 2 AS INT))").alias("b"),
+    )
+    return ab.select(
+        "doc_id",
+        F.size(F.array_union("a", "b")).alias("n_union"),
+        F.size(F.array_except("a", "b")).alias("n_except"),
+        F.size(F.array_intersect("a", "b")).alias("n_inter"),
+        F.arrays_overlap("a", "b").alias("overlap"),
+        F.size(F.flatten(F.array("a", "b"))).alias("flat_n"),
+        F.array_join(F.array_sort(F.array_union("a", "b")), " ").alias("union_csv"),
+    ).orderBy("doc_id")

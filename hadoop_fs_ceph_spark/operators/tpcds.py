@@ -1,0 +1,3283 @@
+"""TPC-DS query shapes adapted to the driver's star schema, each named by
+the TPC-DS query whose plan shape it reproduces (``ds_tpcds_q<N>_*``),
+plus three composite shapes (``ds_yoy_growth``, ``ds_channel_rollup``,
+``ds_cross_channel_customers``).
+
+Conventions, shared by every query here:
+
+* Channels: ``orders`` stands in for the store/web/catalog channel facts,
+  with ``o_orderpriority`` as the discriminator (``_CHANNEL_SQL`` /
+  ``_channel_col``: express = 1-URGENT/2-HIGH, standard = 3-MEDIUM, the
+  rest economy). Queries that need two facts of different grain use
+  line-grain ``lineitem`` revenue as "store" and header-grain ``orders``
+  revenue as "web".
+* Returns: ``l_returnflag = 'R'``.
+* Money: revenue is ``_REV`` / ``_rev_col()``; sums are fixed-point from
+  ``canonical.py``, or exact integer cents (``_REV_CENTS``), so every
+  ratio or screen compares bit-identical operands in Spark and DuckDB.
+  A predicate that needs exactness cross-multiplies instead of dividing.
+* Dimensions: ``part``/``customer``/``supplier``/``nation`` (``events``
+  plays the time-of-day fact for Q88).
+
+Scale posture (100 TB): facts reduce to (key, partial) rows BEFORE any
+join, window or set operation; self-joins run on already-aggregated
+relations orders of magnitude smaller than the fact; dimension joins
+broadcast only spec-bounded relations (nation) or rely on AQE for
+SF-scaled dims; window state is bounded by the partition key's
+cardinality; an ORDER BY feeding a LIMIT is TakeOrderedAndProject, never
+a global sort.
+"""
+
+from __future__ import annotations
+
+from pyspark.sql import Window
+from pyspark.sql import functions as F
+
+from hadoop_fs_ceph_spark import scratch
+from hadoop_fs_ceph_spark.canonical import dsum, sql_davg, sql_dstddev_samp, sql_dsum
+from hadoop_fs_ceph_spark.registry import query
+from hadoop_fs_ceph_spark.tables import dim, t
+
+_REV = "l_extendedprice * (1 - l_discount)"
+_REV_CENTS = "CAST(ROUND(l_extendedprice * (1 - l_discount) * 100.0) AS BIGINT)"
+
+
+def _rev_col():
+    return F.col("l_extendedprice") * (1 - F.col("l_discount"))
+
+
+_CHANNEL_SQL = """CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH') THEN 'express'
+                  WHEN o_orderpriority = '3-MEDIUM' THEN 'standard'
+                  ELSE 'economy' END"""
+
+
+def _channel_col():
+    return (
+        F.when(F.col("o_orderpriority").isin("1-URGENT", "2-HIGH"), "express")
+        .when(F.col("o_orderpriority") == "3-MEDIUM", "standard")
+        .otherwise("economy")
+    )
+
+
+@query(
+    "ds_yoy_growth",
+    oracle=f"""
+    WITH yearly AS (
+      SELECT o_custkey, EXTRACT(year FROM o_orderdate) AS yr,
+             {sql_dsum("o_totalprice", "rev")}
+      FROM orders
+      WHERE EXTRACT(year FROM o_orderdate) IN (1997, 1998)
+      GROUP BY o_custkey, yr
+    )
+    SELECT a.o_custkey, a.rev AS rev_1997, b.rev AS rev_1998,
+           b.rev / a.rev AS growth
+    FROM yearly a JOIN yearly b ON a.o_custkey = b.o_custkey
+    WHERE a.yr = 1997 AND b.yr = 1998 AND b.rev > 1.2 * a.rev
+    ORDER BY growth DESC, a.o_custkey
+    """,
+    tags=("tpcds", "self-join", "yoy"),
+)
+def ds_yoy_growth(spark, sf_dir):
+    """Year-over-year revenue growth per customer (TPC-DS Q11 shape): one
+    per-customer-per-year aggregate consumed twice — the 1997 side joined
+    to the 1998 side on the customer key, keeping customers who grew
+    >20%. Both join inputs come from the SAME shuffle (grouping key
+    covers the join key), so Catalyst co-partitions them with no extra
+    exchange. Growth is a single double division of two fixed-point
+    sums — deterministic cross-engine."""
+    o = t(spark, sf_dir, "orders").withColumn("yr", F.year("o_orderdate"))
+    yearly = (
+        o.filter(F.col("yr").isin(1997, 1998))
+        .groupBy("o_custkey", "yr")
+        .agg(dsum("o_totalprice", "rev"))
+    )
+    a = yearly.filter(F.col("yr") == 1997).select(
+        "o_custkey", F.col("rev").alias("rev_1997")
+    )
+    b = yearly.filter(F.col("yr") == 1998).select(
+        F.col("o_custkey").alias("ck"), F.col("rev").alias("rev_1998")
+    )
+    return (
+        a.join(b, a.o_custkey == b.ck)
+        .filter(F.col("rev_1998") > 1.2 * F.col("rev_1997"))
+        .select(
+            "o_custkey",
+            "rev_1997",
+            "rev_1998",
+            (F.col("rev_1998") / F.col("rev_1997")).alias("growth"),
+        )
+        .orderBy(F.col("growth").desc(), "o_custkey")
+    )
+
+
+@query(
+    "ds_channel_rollup",
+    oracle=f"""
+    SELECT channel, o_orderstatus,
+           COUNT(*) AS n, {sql_dsum("o_totalprice", "revenue")},
+           GROUPING(channel) + 2 * GROUPING(o_orderstatus) AS gid
+    FROM (
+      SELECT 'express' AS channel, o_orderstatus, o_totalprice
+      FROM orders WHERE o_orderpriority IN ('1-URGENT', '2-HIGH')
+      UNION ALL
+      SELECT 'standard' AS channel, o_orderstatus, o_totalprice
+      FROM orders WHERE o_orderpriority NOT IN ('1-URGENT', '2-HIGH')
+    )
+    GROUP BY ROLLUP (channel, o_orderstatus)
+    ORDER BY gid, channel, o_orderstatus
+    """,
+    tags=("tpcds", "union", "rollup"),
+)
+def ds_channel_rollup(spark, sf_dir):
+    """Multi-channel sales report (TPC-DS Q5 shape): two channel
+    relations (express vs standard priority, standing in for store/web
+    tables) tagged and UNION ALLed, then ROLLUP over (channel, status)
+    gives per-channel-status, per-channel, and grand-total rows in one
+    pass. grouping() flags disambiguate synthesized NULLs from data
+    NULLs. The union is append-only (no shuffle); the rollup shuffles
+    once on the group keys after map-side partials."""
+    o = t(spark, sf_dir, "orders")
+    express = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
+    tagged = o.withColumn(
+        "channel", F.when(express, F.lit("express")).otherwise(F.lit("standard"))
+    )
+    return (
+        tagged.rollup("channel", "o_orderstatus")
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            dsum("o_totalprice", "revenue"),
+            (
+                F.grouping("channel") + F.lit(2) * F.grouping("o_orderstatus")
+            ).alias("gid"),
+        )
+        .orderBy("gid", "channel", "o_orderstatus")
+    )
+
+
+@query(
+    "ds_cross_channel_customers",
+    oracle="""
+    SELECT COUNT(*) AS n_loyal FROM (
+      SELECT o_custkey FROM orders WHERE EXTRACT(year FROM o_orderdate) = 1996
+      INTERSECT
+      SELECT o_custkey FROM orders WHERE EXTRACT(year FROM o_orderdate) = 1997
+      INTERSECT
+      SELECT o_custkey FROM orders WHERE EXTRACT(year FROM o_orderdate) = 1998
+    )
+    """,
+    tags=("tpcds", "intersect", "setop"),
+)
+def ds_cross_channel_customers(spark, sf_dir):
+    """Customers active in all three years (TPC-DS Q38 shape): a chain of
+    INTERSECTs over deduplicated key sets, then a count. Spark compiles
+    each INTERSECT to a distinct + left-semi join on the key — the sets
+    shrink monotonically left to right, so the cheapest plan puts the
+    most selective year first at scale (here sizes are comparable)."""
+    o = t(spark, sf_dir, "orders").withColumn("yr", F.year("o_orderdate"))
+
+    def keys(year: int):
+        return o.filter(F.col("yr") == year).select("o_custkey")
+
+    loyal = keys(1996).intersect(keys(1997)).intersect(keys(1998))
+    return loyal.agg(F.count(F.lit(1)).alias("n_loyal"))
+
+
+@query(
+    "ds_tpcds_q3_brand_report",
+    oracle=f"""
+    SELECT EXTRACT(year FROM o_orderdate) AS yr, p_brand,
+           {sql_dsum(_REV, "revenue")}
+    FROM lineitem
+    JOIN orders ON l_orderkey = o_orderkey
+    JOIN part   ON l_partkey = p_partkey
+    WHERE p_type IN ('STANDARD', 'SMALL')
+    GROUP BY yr, p_brand
+    ORDER BY yr, revenue DESC, p_brand
+    LIMIT 40
+    """,
+    tags=("tpcds", "star-join", "topn"),
+    bench=True,
+)
+def ds_tpcds_q3_brand_report(spark, sf_dir):
+    """TPC-DS Q3: the canonical star top-N — fact filtered through one
+    dimension predicate (item manufacturer → part type), dated through a
+    second (date_dim → orders), grouped by (year, brand), best rows
+    first. Plan: part-type filter reaches the part scan (pushed); the
+    fact is pre-aggregated to (partkey, year) grain BEFORE the part join
+    (r9 cluster-shape rehearsal: with auto-broadcast off, the part join
+    is a shuffle — reducing facts ~4× first is the two-phase plan a
+    100 TB run wants regardless of join strategy). The two-phase
+    fixed-point sum keeps integer micro-units until the final division,
+    so it is bit-identical to the single-phase dsum (integer sums are
+    associative) and the DuckDB oracle is untouched. ORDER+LIMIT
+    compiles to TakeOrderedAndProject — no global sort at any scale."""
+    li = t(spark, sf_dir, "lineitem")
+    o = t(spark, sf_dir, "orders").select("o_orderkey", F.year("o_orderdate").alias("yr"))
+    p = t(spark, sf_dir, "part").filter(F.col("p_type").isin("STANDARD", "SMALL")).select(
+        "p_partkey", "p_brand"
+    )
+    pre = (
+        li.join(o, li.l_orderkey == o.o_orderkey)
+        .groupBy("l_partkey", "yr")
+        .agg(
+            F.sum(F.round(_rev_col() * F.lit(1e6)).cast("long")).alias("_micro")
+        )
+    )
+    return (
+        pre.join(p, pre.l_partkey == p.p_partkey)
+        .groupBy("yr", "p_brand")
+        .agg((F.sum("_micro").cast("double") / F.lit(1e6)).alias("revenue"))
+        .orderBy("yr", F.col("revenue").desc(), "p_brand")
+        .limit(40)
+    )
+
+
+@query(
+    "ds_tpcds_q7_segment_profile",
+    oracle=f"""
+    SELECT p_type,
+           COUNT(*) AS n_lines,
+           {sql_dsum("l_quantity", "sum_qty")},
+           {sql_dsum("l_extendedprice", "sum_price")},
+           {sql_dsum("l_discount", "sum_disc")}
+    FROM lineitem
+    JOIN orders   ON l_orderkey = o_orderkey
+    JOIN customer ON o_custkey = c_custkey
+    JOIN part     ON l_partkey = p_partkey
+    WHERE c_mktsegment = 'BUILDING'
+    GROUP BY p_type
+    ORDER BY p_type
+    """,
+    tags=("tpcds", "star-join", "profile"),
+)
+def ds_tpcds_q7_segment_profile(spark, sf_dir):
+    """TPC-DS Q7: demographic purchase profile — item-level averages for
+    one customer segment across every product class. Sums are emitted as
+    fixed-point canonicals (the averages are sum/n, derivable by any
+    consumer; emitting sums keeps the hash exact). Four-table star: the
+    segment filter prunes customer before its join, part joins on the
+    item key, one partial-merged aggregate on the 6-value p_type."""
+    li = t(spark, sf_dir, "lineitem")
+    o = t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+    c = (
+        t(spark, sf_dir, "customer")
+        .filter(F.col("c_mktsegment") == "BUILDING")
+        .select("c_custkey")
+    )
+    p = t(spark, sf_dir, "part").select("p_partkey", "p_type")
+    return (
+        li.join(o, li.l_orderkey == o.o_orderkey)
+        .join(c, o.o_custkey == c.c_custkey)
+        .join(p, li.l_partkey == p.p_partkey)
+        .groupBy("p_type")
+        .agg(
+            F.count(F.lit(1)).alias("n_lines"),
+            dsum("l_quantity", "sum_qty"),
+            dsum("l_extendedprice", "sum_price"),
+            dsum("l_discount", "sum_disc"),
+        )
+        .orderBy("p_type")
+    )
+
+
+@query(
+    "ds_tpcds_q19_cross_border_brands",
+    oracle=f"""
+    SELECT p_brand, {sql_dsum(_REV, "revenue")}, COUNT(*) AS n_lines
+    FROM lineitem
+    JOIN orders   ON l_orderkey = o_orderkey
+    JOIN customer ON o_custkey = c_custkey
+    JOIN supplier ON l_suppkey = s_suppkey
+    JOIN part     ON l_partkey = p_partkey
+    WHERE c_nationkey <> s_nationkey
+      AND EXTRACT(year FROM o_orderdate) = 1997
+    GROUP BY p_brand
+    ORDER BY revenue DESC, p_brand
+    """,
+    tags=("tpcds", "star-join", "geography"),
+)
+def ds_tpcds_q19_cross_border_brands(spark, sf_dir):
+    """TPC-DS Q19: brand revenue where the buyer's geography differs from
+    the seller's (store zip != customer zip in DS; nations here) — the
+    'out-of-area purchases' report. The geography mismatch is a residual
+    predicate on the joined row (not an equi-key), applied after the two
+    entity joins; everything else is standard star wiring with the year
+    filter pushed to the orders scan."""
+    li = t(spark, sf_dir, "lineitem")
+    o = t(spark, sf_dir, "orders").filter(F.year("o_orderdate") == 1997).select(
+        "o_orderkey", "o_custkey"
+    )
+    c = t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
+    s = t(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
+    p = t(spark, sf_dir, "part").select("p_partkey", "p_brand")
+    return (
+        li.join(o, li.l_orderkey == o.o_orderkey)
+        .join(c, o.o_custkey == c.c_custkey)
+        .join(s, li.l_suppkey == s.s_suppkey)
+        .filter(F.col("c_nationkey") != F.col("s_nationkey"))
+        .join(p, li.l_partkey == p.p_partkey)
+        .groupBy("p_brand")
+        .agg(dsum(_rev_col(), "revenue"), F.count(F.lit(1)).alias("n_lines"))
+        .orderBy(F.col("revenue").desc(), "p_brand")
+    )
+
+
+@query(
+    "ds_tpcds_q34_ticket_band",
+    oracle="""
+    WITH tickets AS (
+      SELECT l_orderkey, COUNT(*) AS n_items
+      FROM lineitem GROUP BY l_orderkey
+      HAVING COUNT(*) BETWEEN 5 AND 7
+    )
+    SELECT o_custkey,
+           CAST(COUNT(*) AS BIGINT) AS n_tickets,
+           CAST(SUM(n_items) AS BIGINT) AS total_items
+    FROM tickets JOIN orders ON l_orderkey = o_orderkey
+    GROUP BY o_custkey
+    HAVING COUNT(*) >= 2
+    ORDER BY n_tickets DESC, total_items DESC, o_custkey
+    """,
+    tags=("tpcds", "having", "band"),
+)
+def ds_tpcds_q34_ticket_band(spark, sf_dir):
+    """TPC-DS Q34/Q73: customers with repeated mid-size baskets — count
+    items per ticket, keep tickets in the [5,7] band, then count
+    qualifying tickets per customer and keep repeaters. Two HAVING
+    tiers; the first aggregate shrinks lineitem to one row per order
+    BEFORE the orders join, so the join input is already order-grained
+    (the shape that matters at 100 TB: never join the raw item fact to
+    get a per-order property)."""
+    li = t(spark, sf_dir, "lineitem")
+    o = t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+    tickets = (
+        li.groupBy("l_orderkey")
+        .agg(F.count(F.lit(1)).alias("n_items"))
+        .filter(F.col("n_items").between(5, 7))
+    )
+    return (
+        tickets.join(o, tickets.l_orderkey == o.o_orderkey)
+        .groupBy("o_custkey")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n_tickets"),
+            F.sum("n_items").cast("long").alias("total_items"),
+        )
+        .filter(F.col("n_tickets") >= 2)
+        .orderBy(F.col("n_tickets").desc(), F.col("total_items").desc(), "o_custkey")
+    )
+
+
+@query(
+    "ds_tpcds_q51_cumulative_channels",
+    oracle=f"""
+    WITH monthly AS (
+      SELECT DATE_TRUNC('month', o_orderdate) AS mon,
+             CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
+                  THEN 'express' ELSE 'standard' END AS channel,
+             {sql_dsum("o_totalprice", "rev")}
+      FROM orders
+      WHERE EXTRACT(year FROM o_orderdate) IN (1997, 1998)
+      GROUP BY mon, channel
+    ),
+    cum AS (
+      SELECT mon, channel, rev,
+             SUM(CAST(ROUND(rev * 1000000.0) AS BIGINT))
+               OVER (PARTITION BY channel ORDER BY mon) AS cum_fix
+      FROM monthly
+    ),
+    wide AS (
+      SELECT mon,
+             CAST(MAX(CASE WHEN channel = 'express' THEN cum_fix END) AS DOUBLE)
+               / 1000000.0 AS express_cum,
+             CAST(MAX(CASE WHEN channel = 'standard' THEN cum_fix END) AS DOUBLE)
+               / 1000000.0 AS standard_cum
+      FROM cum GROUP BY mon
+    )
+    SELECT mon, express_cum, standard_cum
+    FROM wide
+    WHERE express_cum > standard_cum
+    ORDER BY mon
+    """,
+    tags=("tpcds", "window", "cumulative"),
+)
+def ds_tpcds_q51_cumulative_channels(spark, sf_dir):
+    """TPC-DS Q51: cumulative revenue race between two channels — monthly
+    aggregates per channel, running totals via a window, channels pivoted
+    wide, keep the months where the express channel's cumulative leads.
+    The window runs over MONTHLY rows (24 per channel), never over facts:
+    aggregate-then-window is the Q51 discipline that keeps window state
+    tiny at any scale. Running sums accumulate the fixed-point integers
+    (exact, order-independent) and convert to double once at the end —
+    bit-identical to the oracle's window over BIGINTs."""
+    o = t(spark, sf_dir, "orders").withColumn("yr", F.year("o_orderdate"))
+    express = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
+    monthly = (
+        o.filter(F.col("yr").isin(1997, 1998))
+        .withColumn("mon", F.date_trunc("month", "o_orderdate"))
+        .withColumn("channel", F.when(express, "express").otherwise("standard"))
+        .groupBy("mon", "channel")
+        .agg(
+            F.sum(F.round(F.col("o_totalprice") * 1e6).cast("long")).alias("rev_fix")
+        )
+    )
+    w = Window.partitionBy("channel").orderBy("mon")
+    cum = monthly.withColumn("cum_fix", F.sum("rev_fix").over(w))
+    wide = (
+        cum.groupBy("mon")
+        .pivot("channel", ["express", "standard"])
+        .agg(F.max("cum_fix"))
+        .select(
+            "mon",
+            (F.col("express").cast("double") / 1e6).alias("express_cum"),
+            (F.col("standard").cast("double") / 1e6).alias("standard_cum"),
+        )
+    )
+    return wide.filter(F.col("express_cum") > F.col("standard_cum")).orderBy("mon")
+
+
+@query(
+    "ds_tpcds_q59_wow_ratio",
+    oracle=f"""
+    WITH weekly AS (
+      SELECT EXTRACT(year FROM o_orderdate) AS yr,
+             EXTRACT(week FROM o_orderdate) AS wk,
+             dayofweek(o_orderdate) + 1 AS dow,  -- DuckDB Sun=0, Spark Sun=1
+             {sql_dsum("o_totalprice", "rev")}
+      FROM orders
+      WHERE EXTRACT(year FROM o_orderdate) IN (1997, 1998)
+        AND EXTRACT(week FROM o_orderdate) <= 52
+      GROUP BY yr, wk, dow
+    )
+    SELECT a.wk, a.dow, a.rev AS rev_1997, b.rev AS rev_1998,
+           b.rev / a.rev AS ratio
+    FROM weekly a JOIN weekly b
+      ON a.wk = b.wk AND a.dow = b.dow AND a.yr = 1997 AND b.yr = 1998
+    ORDER BY a.wk, a.dow
+    """,
+    tags=("tpcds", "self-join", "seasonality"),
+)
+def ds_tpcds_q59_wow_ratio(spark, sf_dir):
+    """TPC-DS Q59: week-over-week sales by weekday — the same
+    (week, weekday) cell compared across two years via a self-join of
+    one weekly aggregate (Q59 pivots weekdays wide then joins stores
+    year-over-year; the join-on-(wk,dow) form is the same dataflow with
+    the pivot deferred to the consumer). Both self-join inputs reuse a
+    single shuffle (grouping key ⊇ join key). Week 53 is excluded: it
+    exists in only some years, so the ratio cell would be unmatched —
+    the same guard the DS spec applies via its 52-week date_dim slice.
+    DuckDB/Spark agree on ISO weekofyear and on Sunday=1 dayofweek."""
+    o = t(spark, sf_dir, "orders")
+    weekly = (
+        o.withColumn("yr", F.year("o_orderdate"))
+        .filter(F.col("yr").isin(1997, 1998))
+        .withColumn("wk", F.weekofyear("o_orderdate"))
+        .filter(F.col("wk") <= 52)
+        .withColumn("dow", F.dayofweek("o_orderdate"))
+        .groupBy("yr", "wk", "dow")
+        .agg(dsum("o_totalprice", "rev"))
+    )
+    a = weekly.filter(F.col("yr") == 1997).select(
+        "wk", "dow", F.col("rev").alias("rev_1997")
+    )
+    b = weekly.filter(F.col("yr") == 1998).select(
+        F.col("wk").alias("wk2"), F.col("dow").alias("dow2"), F.col("rev").alias("rev_1998")
+    )
+    return (
+        a.join(b, (a.wk == b.wk2) & (a.dow == b.dow2))
+        .select(
+            "wk",
+            "dow",
+            "rev_1997",
+            "rev_1998",
+            (F.col("rev_1998") / F.col("rev_1997")).alias("ratio"),
+        )
+        .orderBy("wk", "dow")
+    )
+
+
+@query(
+    "ds_tpcds_q89_monthly_deviation",
+    oracle=f"""
+    WITH monthly AS (
+      SELECT p_brand, EXTRACT(month FROM o_orderdate) AS mon,
+             {sql_dsum(_REV, "rev")}
+      FROM lineitem
+      JOIN orders ON l_orderkey = o_orderkey
+      JOIN part   ON l_partkey = p_partkey
+      WHERE EXTRACT(year FROM o_orderdate) = 1997
+      GROUP BY p_brand, mon
+    ),
+    yearly AS (
+      SELECT p_brand,
+             CAST(SUM(CAST(ROUND(rev * 1000000.0) AS BIGINT)) AS DOUBLE)
+               / 1000000.0 AS tot,
+             COUNT(*) AS n_months
+      FROM monthly GROUP BY p_brand
+    )
+    SELECT m.p_brand, m.mon, m.rev,
+           y.tot / y.n_months AS avg_monthly,
+           m.rev - y.tot / y.n_months AS deviation
+    FROM monthly m JOIN yearly y ON m.p_brand = y.p_brand
+    WHERE ABS(m.rev - y.tot / y.n_months) > 0.3 * (y.tot / y.n_months)
+    ORDER BY deviation, m.p_brand, m.mon
+    """,
+    tags=("tpcds", "deviation", "screen"),
+)
+def ds_tpcds_q89_monthly_deviation(spark, sf_dir):
+    """TPC-DS Q89: months that deviate sharply from a brand's average
+    monthly revenue — the anomaly screen merchandisers run. Q89 uses
+    AVG() OVER (PARTITION BY brand); windowed AVG over doubles is
+    accumulation-order-sensitive cross-engine, so the deterministic
+    formulation keeps the EXACT micro-unit integers per month and takes
+    a window SUM of them over the brand partition (integer window sums
+    are order-independent) — one fact aggregation instead of the
+    join-back CTE the oracle phrases, which would make Spark re-execute
+    the whole fact pipeline for the second reference (2× fact scans at
+    100 TB). Window state is the ≤25×12-row aggregated series. The
+    deviation predicate and ordering use raw IEEE ops on identical
+    operands (no rounding), so the hash matches bit-for-bit."""
+    li = t(spark, sf_dir, "lineitem")
+    o = t(spark, sf_dir, "orders").filter(F.year("o_orderdate") == 1997).select(
+        "o_orderkey", F.month("o_orderdate").alias("mon")
+    )
+    p = t(spark, sf_dir, "part").select("p_partkey", "p_brand")
+    monthly = (
+        li.join(o, li.l_orderkey == o.o_orderkey)
+        .join(p, li.l_partkey == p.p_partkey)
+        .groupBy("p_brand", "mon")
+        .agg(F.sum(F.round(_rev_col() * F.lit(1e6)).cast("long")).alias("_micro"))
+        .withColumn("rev", F.col("_micro").cast("double") / F.lit(1e6))
+    )
+    wb = Window.partitionBy("p_brand")
+    avg_m = (F.sum("_micro").over(wb).cast("double") / F.lit(1e6)) / F.count(
+        F.lit(1)
+    ).over(wb)
+    return (
+        monthly.withColumn("avg_monthly", avg_m)
+        .withColumn("deviation", F.col("rev") - F.col("avg_monthly"))
+        .filter(F.abs(F.col("deviation")) > 0.3 * F.col("avg_monthly"))
+        .select("p_brand", "mon", "rev", "avg_monthly", "deviation")
+        .orderBy("deviation", "p_brand", "mon")
+    )
+
+
+@query(
+    "ds_tpcds_q36_margin_rollup_rank",
+    oracle=f"""
+    WITH g AS (
+      SELECT n_name, p_type,
+             CAST(GROUPING(n_name) + GROUPING(p_type) AS INTEGER)
+               AS lochierarchy,
+             CAST(GROUPING(p_type) AS INTEGER) AS gp,
+             {sql_dsum(_REV, "revenue")},
+             {sql_dsum("l_quantity", "qty")}
+      FROM lineitem
+      JOIN supplier ON l_suppkey = s_suppkey
+      JOIN nation   ON s_nationkey = n_nationkey
+      JOIN part     ON l_partkey = p_partkey
+      GROUP BY ROLLUP (n_name, p_type)
+    )
+    SELECT lochierarchy, n_name, p_type, revenue,
+           revenue / qty AS rev_per_unit,
+           CAST(RANK() OVER (
+             PARTITION BY lochierarchy,
+                          CASE WHEN gp = 1 THEN NULL ELSE n_name END
+             ORDER BY revenue / qty DESC, n_name NULLS FIRST,
+                      p_type NULLS FIRST
+           ) AS INTEGER) AS rank_within_parent
+    FROM g
+    ORDER BY lochierarchy DESC, n_name NULLS FIRST, p_type NULLS FIRST
+    """,
+    tags=("tpcds", "rollup", "rank"),
+)
+def ds_tpcds_q36_margin_rollup_rank(spark, sf_dir):
+    """TPC-DS Q36: revenue-per-unit hierarchy — ROLLUP over
+    (nation, part-type) with a RANK *within each parent* at every
+    hierarchy level (the 'rank children under their parent' report).
+    The rank partition key is (lochierarchy, parent): detail rows rank
+    among siblings of the same nation, nation rows rank among nations,
+    the grand total ranks alone. Like Q67, the fact is reduced to the
+    LEAF grain by a plain groupBy BEFORE the ROLLUP (Spark expands
+    grouping sets before the partial aggregate, so rolling up raw facts
+    would triple the aggregation input; rolling up the ≤150-row leaf
+    relation is free and exact — fixed-point micro-unit sums are
+    associative). The window input is the rolled-up relation
+    (≤ 25·6+25+1 rows) — window-over-aggregate, never over facts.
+    Ratio = division of two fixed-point sums (bit-identical
+    cross-engine); rank ties broken by the full key."""
+    li = t(spark, sf_dir, "lineitem")
+    s = t(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
+    n = dim(spark, sf_dir, "nation").select("n_nationkey", "n_name")
+    p = t(spark, sf_dir, "part").select("p_partkey", "p_type")
+    # two-phase leaf (the Q3/Q67 trade): reduce the fact to the numeric
+    # (suppkey, partkey) grain BEFORE the dimension joins — the first
+    # exchange carries (2 longs, 2 longs) rows, the dim joins probe the
+    # reduced relation, and the second aggregate re-sums exact
+    # micro-units after keys widen to names (integer sums associative —
+    # bit-identical, oracle untouched).
+    pre = li.groupBy("l_suppkey", "l_partkey").agg(
+        F.sum(F.round(_rev_col() * F.lit(1e6)).cast("long")).alias("_pr"),
+        F.sum(F.round(F.col("l_quantity") * F.lit(1e6)).cast("long")).alias("_pq"),
+    )
+    leaf = (
+        pre.join(s, pre.l_suppkey == s.s_suppkey)
+        .join(n, s.s_nationkey == n.n_nationkey)
+        .join(p, pre.l_partkey == p.p_partkey)
+        .groupBy("n_name", "p_type")
+        .agg(
+            F.sum("_pr").alias("_rev6"),
+            F.sum("_pq").alias("_qty6"),
+        )
+    )
+    g = (
+        leaf.rollup("n_name", "p_type")
+        .agg(
+            (F.grouping("n_name") + F.grouping("p_type")).cast("int").alias(
+                "lochierarchy"
+            ),
+            (F.sum("_rev6").cast("double") / F.lit(1e6)).alias("revenue"),
+            (F.sum("_qty6").cast("double") / F.lit(1e6)).alias("qty"),
+            F.grouping("p_type").cast("int").alias("_gp"),
+        )
+    )
+    parent = F.when(F.col("_gp") == 1, F.lit(None)).otherwise(F.col("n_name"))
+    w = Window.partitionBy("lochierarchy", parent).orderBy(
+        (F.col("revenue") / F.col("qty")).desc(),
+        F.col("n_name").asc_nulls_first(),
+        F.col("p_type").asc_nulls_first(),
+    )
+    return (
+        g.withColumn("rev_per_unit", F.col("revenue") / F.col("qty"))
+        .withColumn("rank_within_parent", F.rank().over(w))
+        .select(
+            "lochierarchy", "n_name", "p_type", "revenue",
+            "rev_per_unit", "rank_within_parent",
+        )
+        .orderBy(
+            F.col("lochierarchy").desc(),
+            F.col("n_name").asc_nulls_first(),
+            F.col("p_type").asc_nulls_first(),
+        )
+    )
+
+
+@query(
+    "ds_tpcds_q88_time_buckets",
+    oracle="""
+    SELECT
+      CAST(COUNT(*) FILTER (WHERE EXTRACT(hour FROM ts) < 3)  AS BIGINT) AS h00_02,
+      CAST(COUNT(*) FILTER (WHERE EXTRACT(hour FROM ts) BETWEEN 3 AND 5) AS BIGINT) AS h03_05,
+      CAST(COUNT(*) FILTER (WHERE EXTRACT(hour FROM ts) BETWEEN 6 AND 8) AS BIGINT) AS h06_08,
+      CAST(COUNT(*) FILTER (WHERE EXTRACT(hour FROM ts) BETWEEN 9 AND 11) AS BIGINT) AS h09_11,
+      CAST(COUNT(*) FILTER (WHERE EXTRACT(hour FROM ts) BETWEEN 12 AND 14) AS BIGINT) AS h12_14,
+      CAST(COUNT(*) FILTER (WHERE EXTRACT(hour FROM ts) BETWEEN 15 AND 17) AS BIGINT) AS h15_17,
+      CAST(COUNT(*) FILTER (WHERE EXTRACT(hour FROM ts) BETWEEN 18 AND 20) AS BIGINT) AS h18_20,
+      CAST(COUNT(*) FILTER (WHERE EXTRACT(hour FROM ts) >= 21) AS BIGINT) AS h21_23
+    FROM events
+    WHERE value > 10
+    """,
+    tags=("tpcds", "conditional-agg", "single-row"),
+)
+def ds_tpcds_q88_time_buckets(spark, sf_dir):
+    """TPC-DS Q88: store traffic by time-of-day band — the spec writes it
+    as EIGHT scalar subqueries cross-joined into one row; the Spark-first
+    formulation is ONE conditional aggregate over a single scan (8
+    count_if columns), which is what a columnar engine should execute:
+    one pass, map-side partials, a 1-row result. The oracle keeps
+    DuckDB's FILTER form — same semantics, and the hash match proves
+    the one-pass rewrite exact."""
+    e = t(spark, sf_dir, "events").filter(F.col("value") > 10)
+    h = F.hour("ts")
+
+    def band(lo, hi, name):
+        return F.count_if((h >= lo) & (h <= hi)).cast("long").alias(name)
+
+    return e.agg(
+        band(0, 2, "h00_02"),
+        band(3, 5, "h03_05"),
+        band(6, 8, "h06_08"),
+        band(9, 11, "h09_11"),
+        band(12, 14, "h12_14"),
+        band(15, 17, "h15_17"),
+        band(18, 20, "h18_20"),
+        band(21, 23, "h21_23"),
+    )
+
+
+@query(
+    "ds_tpcds_q93_returns_adjusted",
+    oracle=f"""
+    WITH adj AS (
+      SELECT o_custkey,
+             CASE WHEN l_returnflag = 'R'
+                  THEN -(l_extendedprice * (1 - l_discount))
+                  ELSE l_extendedprice * (1 - l_discount) END AS signed_rev
+      FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+    )
+    SELECT o_custkey, {sql_dsum("signed_rev", "net_revenue")}
+    FROM adj
+    GROUP BY o_custkey
+    ORDER BY net_revenue DESC, o_custkey
+    LIMIT 100
+    """,
+    tags=("tpcds", "returns", "topn"),
+)
+def ds_tpcds_q93_returns_adjusted(spark, sf_dir):
+    """TPC-DS Q93: customer value net of returns — returned lines
+    (store_returns in DS; the R return flag here) flip sign instead of
+    being joined against a separate returns table, then net revenue per
+    customer, top 100. The sign flip is a map-side CASE (no
+    returns-table join needed in this schema — where one exists the
+    shape adds one equi-join on the line key); TakeOrdered for the
+    top-N. Signed fixed-point sums stay exact under cancellation —
+    doubles would lose associativity exactly where positives and
+    negatives interleave."""
+    li = t(spark, sf_dir, "lineitem")
+    o = t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+    signed = F.when(F.col("l_returnflag") == "R", -_rev_col()).otherwise(_rev_col())
+    return (
+        li.join(o, li.l_orderkey == o.o_orderkey)
+        .select("o_custkey", signed.alias("signed_rev"))
+        .groupBy("o_custkey")
+        .agg(dsum("signed_rev", "net_revenue"))
+        .orderBy(F.col("net_revenue").desc(), "o_custkey")
+        .limit(100)
+    )
+
+
+@query(
+    "ds_tpcds_q23_frequent_best",
+    oracle=f"""
+    WITH frequent_parts AS (
+      SELECT l_partkey
+      FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+      WHERE EXTRACT(year FROM o_orderdate) IN (1996, 1997)
+      GROUP BY l_partkey
+      HAVING COUNT(DISTINCT l_orderkey) >= 3
+    ),
+    best_customers AS (
+      SELECT o_custkey
+      FROM orders
+      GROUP BY o_custkey
+      HAVING SUM(CAST(ROUND(o_totalprice * 1000000.0) AS BIGINT)) >
+        (SELECT 0.5 * MAX(s) FROM (
+           SELECT SUM(CAST(ROUND(o_totalprice * 1000000.0) AS BIGINT)) AS s
+           FROM orders GROUP BY o_custkey))
+    )
+    SELECT EXTRACT(month FROM o_orderdate) AS mon,
+           {sql_dsum(_REV, "revenue")},
+           COUNT(*) AS n_lines
+    FROM lineitem
+    JOIN orders ON l_orderkey = o_orderkey
+    WHERE EXTRACT(year FROM o_orderdate) = 1998
+      AND l_partkey IN (SELECT l_partkey FROM frequent_parts)
+      AND o_custkey IN (SELECT o_custkey FROM best_customers)
+    GROUP BY mon
+    ORDER BY mon
+    """,
+    tags=("tpcds", "cte", "semi-join"),
+    bench=True,
+)
+def ds_tpcds_q23_frequent_best(spark, sf_dir):
+    """TPC-DS Q23 (the hardest DS shape): revenue from BEST customers
+    buying FREQUENT items — two independently-derived qualification
+    sets (items sold in ≥3 distinct orders across two years; customers
+    whose lifetime spend exceeds half the maximum) intersected against
+    a third year's fact via two LEFT SEMI joins. The spend threshold is
+    a 1-row aggregate-of-aggregate (broadcast scalar); both
+    qualification relations are key-only projections, so the semi
+    joins ship nothing but keys. Fixed-point spend comparison keeps the
+    >50%-of-max cut deterministic cross-engine."""
+    li = t(spark, sf_dir, "lineitem")
+    o = t(spark, sf_dir, "orders")
+    li_dated = li.join(
+        o.select("o_orderkey", "o_custkey", F.year("o_orderdate").alias("yr"),
+                 F.month("o_orderdate").alias("mon")),
+        li.l_orderkey == o.o_orderkey,
+    )
+    frequent = (
+        li_dated.filter(F.col("yr").isin(1996, 1997))
+        .groupBy("l_partkey")
+        .agg(F.count_distinct("l_orderkey").alias("n_ord"))
+        .filter(F.col("n_ord") >= 3)
+        .select("l_partkey")
+    )
+    spend = o.groupBy("o_custkey").agg(
+        F.sum(F.round(F.col("o_totalprice") * 1e6).cast("long")).alias("spend_fix")
+    )
+    max_spend = spend.agg(F.max("spend_fix").alias("mx"))
+    best = (
+        spend.crossJoin(F.broadcast(max_spend))
+        .filter(F.col("spend_fix") > 0.5 * F.col("mx"))
+        .select("o_custkey")
+    )
+    return (
+        li_dated.filter(F.col("yr") == 1998)
+        .join(frequent, "l_partkey", "left_semi")
+        .join(best, "o_custkey", "left_semi")
+        .groupBy("mon")
+        .agg(dsum(_rev_col(), "revenue"), F.count(F.lit(1)).alias("n_lines"))
+        .orderBy("mon")
+    )
+
+
+@query(
+    "ds_tpcds_q66_monthly_matrix",
+    oracle=f"""
+    WITH base AS (
+      SELECT n_name, EXTRACT(month FROM o_orderdate) AS mon,
+             l_extendedprice * (1 - l_discount) AS rev
+      FROM lineitem
+      JOIN orders   ON l_orderkey = o_orderkey
+      JOIN supplier ON l_suppkey = s_suppkey
+      JOIN nation   ON s_nationkey = n_nationkey
+      WHERE EXTRACT(year FROM o_orderdate) = 1997
+    )
+    SELECT n_name,
+           {sql_dsum("CASE WHEN mon <= 3 THEN rev ELSE 0 END", "q1_rev")},
+           {sql_dsum("CASE WHEN mon BETWEEN 4 AND 6 THEN rev ELSE 0 END", "q2_rev")},
+           {sql_dsum("CASE WHEN mon BETWEEN 7 AND 9 THEN rev ELSE 0 END", "q3_rev")},
+           {sql_dsum("CASE WHEN mon >= 10 THEN rev ELSE 0 END", "q4_rev")},
+           {sql_dsum("rev", "total_rev")}
+    FROM base
+    GROUP BY n_name
+    ORDER BY n_name
+    """,
+    tags=("tpcds", "matrix", "conditional-agg"),
+    bench=True,
+)
+def ds_tpcds_q66_monthly_matrix(spark, sf_dir):
+    """TPC-DS Q66: the warehouse shipping matrix — one row per entity
+    (warehouse in DS, supplier nation here) with the year's revenue
+    unrolled into per-period columns. Q66 writes 12 SUM(CASE) columns;
+    four quarterly ones keep the shape while staying readable. ONE scan,
+    ONE aggregate: the matrix pivot is map-side CASE arithmetic inside
+    the same partial agg — never 4 self-joins. The nation dim is
+    spec-bounded → broadcast."""
+    li = t(spark, sf_dir, "lineitem")
+    o = t(spark, sf_dir, "orders").filter(F.year("o_orderdate") == 1997).select(
+        "o_orderkey", F.month("o_orderdate").alias("mon")
+    )
+    s = t(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
+    n = dim(spark, sf_dir, "nation").select("n_nationkey", "n_name")
+    base = (
+        li.join(o, li.l_orderkey == o.o_orderkey)
+        .join(s, li.l_suppkey == s.s_suppkey)
+        .join(n, s.s_nationkey == n.n_nationkey)
+        .select("n_name", "mon", _rev_col().alias("rev"))
+    )
+    def qsum(cond, name):
+        return dsum(F.when(cond, F.col("rev")).otherwise(F.lit(0.0)), name)
+
+    return (
+        base.groupBy("n_name")
+        .agg(
+            qsum(F.col("mon") <= 3, "q1_rev"),
+            qsum(F.col("mon").between(4, 6), "q2_rev"),
+            qsum(F.col("mon").between(7, 9), "q3_rev"),
+            qsum(F.col("mon") >= 10, "q4_rev"),
+            dsum("rev", "total_rev"),
+        )
+        .orderBy("n_name")
+    )
+
+
+_CHANNELS = ["express", "standard", "economy"]
+
+
+# Shared with ds_tpcds_q14_bucketed: the bucketed layout twin computes the
+# SAME answer, so it pins the same oracle.
+Q14_ORACLE = f"""
+    WITH dated AS (
+      SELECT l_partkey,
+             {_CHANNEL_SQL} AS channel,
+             EXTRACT(year FROM o_orderdate) AS yr,
+             l_extendedprice * (1 - l_discount) AS rev
+      FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+    ),
+    cross_items AS (
+      SELECT l_partkey FROM dated WHERE channel = 'express' AND yr IN (1996, 1997)
+      INTERSECT
+      SELECT l_partkey FROM dated WHERE channel = 'standard' AND yr IN (1996, 1997)
+      INTERSECT
+      SELECT l_partkey FROM dated WHERE channel = 'economy' AND yr IN (1996, 1997)
+    ),
+    sales AS (
+      SELECT d.channel, p.p_brand,
+             SUM(CAST(ROUND(d.rev * 100.0) AS BIGINT)) AS rev_fix,
+             COUNT(*) AS n_lines
+      FROM dated d
+      JOIN part p ON d.l_partkey = p.p_partkey
+      WHERE d.yr = 1998
+        AND d.l_partkey IN (SELECT l_partkey FROM cross_items)
+      GROUP BY d.channel, p.p_brand
+    ),
+    gate AS (SELECT CAST(SUM(rev_fix) AS BIGINT) AS tot,
+                    COUNT(*) AS ng FROM sales)
+    SELECT channel, p_brand,
+           CAST(rev_fix AS DOUBLE) / 100.0 AS revenue,
+           n_lines
+    FROM sales, gate
+    WHERE rev_fix * ng > tot
+    ORDER BY channel, p_brand
+    """
+
+
+def _q14_report(dated, p):
+    """Everything downstream of the `dated` fact join in Q14 — shared by
+    the plain and bucketed-layout variants (identical answer; only the
+    physical layout of the two fact inputs differs)."""
+    chbit = (
+        F.when(F.col("channel") == "express", 1)
+        .when(F.col("channel") == "standard", 2)
+        .otherwise(4)
+    )
+    cross_items = (
+        dated.filter(F.col("yr").isin(1996, 1997))
+        .groupBy("l_partkey")
+        .agg(F.bit_or(chbit).alias("_m"))
+        .filter(F.col("_m") == 7)
+        .select("l_partkey")
+    )
+    grain_aggs = []
+    for i, c in enumerate(_CHANNELS):
+        hit = F.col("channel") == c
+        grain_aggs.append(
+            F.sum(
+                F.when(hit, F.round(F.col("rev") * 100.0).cast("long"))
+            ).alias(f"rf_{i}")
+        )
+        grain_aggs.append(F.count(F.when(hit, F.lit(1))).alias(f"nl_{i}"))
+    grain = dated.filter(F.col("yr") == 1998).groupBy("l_partkey").agg(*grain_aggs)
+    cells = F.array(
+        *[
+            F.struct(
+                F.lit(c).alias("channel"),
+                F.col(f"rf_{i}").alias("rev_fix"),
+                F.col(f"nl_{i}").alias("n_lines"),
+            )
+            for i, c in enumerate(_CHANNELS)
+        ]
+    )
+    sales = (
+        grain.join(cross_items, "l_partkey", "left_semi")
+        .join(p, F.col("l_partkey") == p.p_partkey)
+        .select("p_brand", F.explode(cells).alias("c"))
+        .select("p_brand", "c.channel", "c.rev_fix", "c.n_lines")
+        .filter(F.col("n_lines") > 0)
+        .groupBy("channel", "p_brand")
+        .agg(F.sum("rev_fix").alias("rev_fix"), F.sum("n_lines").alias("n_lines"))
+    )
+    wall = Window.partitionBy()
+    return (
+        sales.withColumn("tot", F.sum("rev_fix").over(wall))
+        .withColumn("ng", F.count(F.lit(1)).over(wall))
+        .filter(F.col("rev_fix") * F.col("ng") > F.col("tot"))
+        .select(
+            "channel",
+            "p_brand",
+            (F.col("rev_fix").cast("double") / 100.0).alias("revenue"),
+            "n_lines",
+        )
+        .orderBy("channel", "p_brand")
+    )
+
+
+@query(
+    "ds_tpcds_q14_cross_channel",
+    oracle=Q14_ORACLE,
+    tags=("tpcds", "intersect", "cte", "semi-join"),
+    bench=True,
+)
+def ds_tpcds_q14_cross_channel(spark, sf_dir):
+    """TPC-DS Q14: cross-channel items — the INTERSECT-into-shared-CTE
+    shape. Items sold through ALL THREE channels (order-priority tiers
+    stand in for store/catalog/web) over two base years become one
+    qualification set (`cross_items`, two INTERSECTs = two hash-distinct
+    semi-join stages on a key-only projection); the report year's sales
+    of those items, per (channel, brand), are then gated to
+    above-average groups via a one-row totals broadcast (Q14's
+    avg_sales scalar subquery). The gate compares integer cross-products
+    (rev_fix·n_groups > total_fix) — exact in both engines, no division.
+
+    Scale (round-9 single-scan replan; round-10 shuffle mitigation — the
+    oracle keeps the spec's INTERSECT/CTE phrasing, the Spark plan does
+    not): the three INTERSECT legs each re-executed the fact join (the
+    r8 plan paid 8 fact scans), so qualification became ONE aggregate
+    set-identical to the 3-way INTERSECT; r9's form (count DISTINCT
+    channel = 3 + a fact-grain semi join) still shuffled distinct
+    (part, channel) PAIRS for the distinct-count and every 1998 fact
+    row into the semi join — the ×100 soak measured 2.0 GiB. Round 10
+    replaces both (VERDICT r9 item 4):
+    * qualification = GROUP BY l_partkey BIT_OR(channel bit) = 7 — a
+      single-phase aggregate whose map-side combine emits ONE long per
+      (mapper, part) instead of up to three pair rows, and still
+      set-identical to the INTERSECT (3 channels ⇔ mask 7);
+    * the 1998 slice pivots to PART grain first (per-channel
+      conditional integer sums), so the semi join and the part join
+      probe a |parts|-row relation, not fact rows — and both REUSE the
+      pivot's l_partkey hash partitioning (no new exchange on the big
+      side; verified in the plan). The channel rows are re-exploded
+      from the pivot cells after the joins (empty cells dropped, so
+      the (channel, brand) aggregate sees exactly the original groups
+      and integer sums re-associate bit-identically).
+    Measured same-session: sf0.1 shuffle 1915 → 693 KiB (2.8×), ×10
+    soak 19.9 → 6.5 MiB (3.1×), wall 2.85 → 2.34 s, hash unchanged.
+    The remaining floor is the two lineitem⋈orders SMJs — inherent
+    while the year/channel live in orders and the layout is unbucketed
+    (a deployment that owns the layout co-buckets both on the order
+    key, the src_bucketed_join pattern, and removes that too). The
+    avg_sales gate stays the integer window SUM over the bounded
+    sales spine (allowlisted). Fact scans: 8 → 2 (pinned).
+    `ds_tpcds_q14_bucketed` (tpcds_suite4) is the owned-layout twin:
+    both fact inputs bucketed on the order key remove those two SMJ
+    exchanges (zero-Exchange legs plan-pinned, same answer)."""
+    li = t(spark, sf_dir, "lineitem")
+    o = t(spark, sf_dir, "orders").select(
+        "o_orderkey",
+        _channel_col().alias("channel"),
+        F.year("o_orderdate").alias("yr"),
+    )
+    dated = li.join(o, li.l_orderkey == o.o_orderkey).select(
+        "l_partkey", "channel", "yr", _rev_col().alias("rev")
+    )
+    p = t(spark, sf_dir, "part").select("p_partkey", "p_brand")
+    return _q14_report(dated, p)
+
+
+@query(
+    "ds_tpcds_q64_wide_star_two_period",
+    oracle="""
+    WITH wide AS (
+      SELECT p.p_brand, cn.n_name AS cust_nation, sn.n_name AS supp_nation,
+             EXTRACT(year FROM o.o_orderdate) AS yr,
+             SUM(CAST(ROUND(l.l_extendedprice * (1 - l.l_discount) * 1000000.0)
+                 AS BIGINT)) AS rev_fix,
+             COUNT(*) AS n_lines
+      FROM lineitem l
+      JOIN orders o    ON l.l_orderkey = o.o_orderkey
+      JOIN customer c  ON o.o_custkey = c.c_custkey
+      JOIN nation cn   ON c.c_nationkey = cn.n_nationkey
+      JOIN part p      ON l.l_partkey = p.p_partkey
+      JOIN supplier s  ON l.l_suppkey = s.s_suppkey
+      JOIN nation sn   ON s.s_nationkey = sn.n_nationkey
+      WHERE EXTRACT(year FROM o.o_orderdate) IN (1997, 1998)
+      GROUP BY p.p_brand, cust_nation, supp_nation, yr
+    )
+    SELECT a.p_brand, a.cust_nation, a.supp_nation,
+           CAST(a.rev_fix AS DOUBLE) / 1000000.0 AS rev_1997,
+           CAST(b.rev_fix AS DOUBLE) / 1000000.0 AS rev_1998,
+           a.n_lines AS n_1997, b.n_lines AS n_1998
+    FROM wide a JOIN wide b
+      ON a.p_brand = b.p_brand AND a.cust_nation = b.cust_nation
+     AND a.supp_nation = b.supp_nation AND a.yr = 1997 AND b.yr = 1998
+    WHERE b.rev_fix > a.rev_fix
+    ORDER BY a.p_brand, a.cust_nation, a.supp_nation
+    """,
+    tags=("tpcds", "wide-join", "self-join", "two-period"),
+)
+def ds_tpcds_q64_wide_star_two_period(spark, sf_dir):
+    """TPC-DS Q64: the widest multi-join in the suite (~17 relations in
+    DS; 7 here — both facts' full dimension closure: orders, customer,
+    customer-nation, part, supplier, supplier-nation around lineitem),
+    aggregated per dimension spine and YEAR, then the two periods
+    self-joined on the spine keeping spines whose revenue GREW (Q64's
+    cnt1 <= cnt2 sales-pair condition). The integer fixed-point compare
+    makes the growth cut deterministic cross-engine.
+
+    Scale: the wide join reduces to ONE aggregate BEFORE the period
+    self-join, so the self-join runs on |brands × nations²| spine rows,
+    not fact rows; nation is spec-bounded (25) and explicitly broadcast
+    twice under distinct aliases; the remaining joins shuffle on their
+    FK keys — at 100 TB AQE picks shuffle-hash for customer/part/
+    supplier, and the spine self-join is a few thousand rows on any
+    cluster."""
+    li = t(spark, sf_dir, "lineitem")
+    o = t(spark, sf_dir, "orders").filter(
+        F.year("o_orderdate").isin(1997, 1998)
+    ).select("o_orderkey", "o_custkey", F.year("o_orderdate").alias("yr"))
+    c = t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
+    cn = dim(spark, sf_dir, "nation").select(
+        F.col("n_nationkey").alias("cn_key"), F.col("n_name").alias("cust_nation")
+    )
+    p = t(spark, sf_dir, "part").select("p_partkey", "p_brand")
+    s = t(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
+    sn = dim(spark, sf_dir, "nation").select(
+        F.col("n_nationkey").alias("sn_key"), F.col("n_name").alias("supp_nation")
+    )
+    wide = (
+        li.join(o, li.l_orderkey == o.o_orderkey)
+        .join(c, o.o_custkey == c.c_custkey)
+        .join(F.broadcast(cn), c.c_nationkey == F.col("cn_key"))
+        .join(p, li.l_partkey == p.p_partkey)
+        .join(s, li.l_suppkey == s.s_suppkey)
+        .join(F.broadcast(sn), s.s_nationkey == F.col("sn_key"))
+        .groupBy("p_brand", "cust_nation", "supp_nation", "yr")
+        .agg(
+            F.sum(F.round(_rev_col() * 1000000.0).cast("long")).alias("rev_fix"),
+            F.count(F.lit(1)).alias("n_lines"),
+        )
+    )
+    a = wide.filter(F.col("yr") == 1997).select(
+        "p_brand", "cust_nation", "supp_nation",
+        F.col("rev_fix").alias("rev_a"), F.col("n_lines").alias("n_1997"),
+    )
+    b = wide.filter(F.col("yr") == 1998).select(
+        F.col("p_brand").alias("pb"), F.col("cust_nation").alias("cn"),
+        F.col("supp_nation").alias("sn"),
+        F.col("rev_fix").alias("rev_b"), F.col("n_lines").alias("n_1998"),
+    )
+    return (
+        a.join(
+            b,
+            (a.p_brand == b.pb) & (a.cust_nation == b.cn) & (a.supp_nation == b.sn),
+        )
+        .filter(F.col("rev_b") > F.col("rev_a"))
+        .select(
+            "p_brand", "cust_nation", "supp_nation",
+            (F.col("rev_a").cast("double") / 1000000.0).alias("rev_1997"),
+            (F.col("rev_b").cast("double") / 1000000.0).alias("rev_1998"),
+            "n_1997", "n_1998",
+        )
+        .orderBy("p_brand", "cust_nation", "supp_nation")
+    )
+
+
+@query(
+    "ds_tpcds_q72_inventory_shortfall",
+    oracle="""
+    WITH demand AS (
+      SELECT l_partkey,
+             epoch_us(o_orderdate) // 604800000000 AS wk,
+             SUM(CAST(ROUND(l_quantity * 1000.0) AS BIGINT)) AS d_qty,
+             COUNT(*) AS n_lines
+      FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+      GROUP BY l_partkey, wk
+    ),
+    supply AS (
+      SELECT l_partkey,
+             epoch_us(l_shipdate) // 604800000000 + 1 AS wk,
+             SUM(CAST(ROUND(l_quantity * 1000.0) AS BIGINT)) AS s_qty
+      FROM lineitem
+      GROUP BY l_partkey, wk
+    )
+    SELECT d.wk,
+           COUNT(*) AS n_parts_short,
+           CAST(SUM(d.d_qty - COALESCE(s.s_qty, 0)) AS DOUBLE) / 1000.0
+             AS shortfall_qty,
+           CAST(SUM(d.n_lines) AS BIGINT) AS n_lines
+    FROM demand d LEFT JOIN supply s
+      ON d.l_partkey = s.l_partkey AND d.wk = s.wk
+    WHERE d.d_qty > COALESCE(s.s_qty, 0)
+    GROUP BY d.wk
+    ORDER BY d.wk
+    """,
+    tags=("tpcds", "triple-fact", "date-shift", "outer-join"),
+    bench=True,
+)
+def ds_tpcds_q72_inventory_shortfall(spark, sf_dir):
+    """TPC-DS Q72: the inventory/date triple-fact — the suite's
+    notorious largest join (catalog_sales × inventory × date chain with
+    a shifted-date condition and an inv_quantity < sales_quantity cut).
+    Adapted: demand = ordered quantity per (part, order-week); supply =
+    shipped quantity landing the FOLLOWING week (the d_date_sk + 5 date
+    shift, at week grain); a LEFT join keeps fully-unsupplied weeks
+    (Q72's LEFT OUTER promotion/returns legs), and the output reports
+    stockout weeks. Weeks are integer epoch-µs divisions — identical
+    arithmetic both engines.
+
+    Scale: THE Q72 lesson is aggregate-before-join — both facts reduce
+    to (part, week) grain BEFORE any join, so no |lineitem|²-shaped
+    intermediate ever exists, and the shifted week is computed map-side
+    (no non-equi range join). Round-12 (guide §1.2/§2.3/§2.4, the Q9/Q17
+    discipline): demand and supply live at the SAME (part, week) grain,
+    so the former demand⋈supply LEFT join collapses into ONE conditional
+    aggregation — each line emits a demand row at its order week and a
+    supply row at its ship week + 1 (a 2× map-side explode of three
+    narrow columns), one groupBy computes d_qty/n_lines/s_qty per cell,
+    and the LEFT-join-plus-filter is exactly d_qty > s_qty (demand-less
+    cells have NULL d_qty and never pass; unsupplied demand cells see
+    s_qty = 0 — LEFT semantics preserved). Before: two lineitem scans,
+    two (part, week) exchanges, one left join; after: ONE lineitem scan
+    (pinned in tests/test_plans.py) and one (part, week) exchange whose
+    map-side partial agg reduces the exploded rows to the same cell
+    count the two old exchanges carried combined. Measured at sf0.1:
+    a WASH locally (1.55 vs 1.58 s cold isolated — the saved second
+    scan reads page-cached parquet and the saved cell join was
+    broadcast at this size), kept for the cluster posture where the
+    fact scan is real I/O and the cell join is a real SMJ: one fact
+    pass instead of two, one exchange instead of two, zero joins
+    between fact-derived relations. Hash-identical to the unchanged
+    DuckDB oracle at sf0.001 + sf0.01."""
+    li = t(spark, sf_dir, "lineitem")
+    o = t(spark, sf_dir, "orders").select(
+        "o_orderkey",
+        F.expr("unix_micros(cast(o_orderdate as timestamp)) div 604800000000").alias("o_wk"),
+    )
+    q_line = F.round(F.col("l_quantity") * 1000.0).cast("long")
+    ship_wk = (
+        F.expr("unix_micros(cast(l_shipdate as timestamp)) div 604800000000") + 1
+    )
+    cells = (
+        li.join(o, li.l_orderkey == o.o_orderkey)
+        .select(
+            "l_partkey",
+            q_line.alias("q"),
+            F.explode(
+                F.array(
+                    F.struct(F.col("o_wk").alias("wk"), F.lit(True).alias("dm")),
+                    F.struct(ship_wk.cast("long").alias("wk"), F.lit(False).alias("dm")),
+                )
+            ).alias("e"),
+        )
+        .select("l_partkey", "q", "e.wk", "e.dm")
+        .groupBy("l_partkey", "wk")
+        .agg(
+            F.sum(F.when(F.col("dm"), F.col("q"))).alias("d_qty"),
+            F.count(F.when(F.col("dm"), F.lit(1))).alias("n_lines"),
+            F.coalesce(
+                F.sum(F.when(~F.col("dm"), F.col("q"))), F.lit(0).cast("long")
+            ).alias("s_qty"),
+        )
+    )
+    return (
+        cells.filter(F.col("d_qty") > F.col("s_qty"))
+        .groupBy("wk")
+        .agg(
+            F.count(F.lit(1)).alias("n_parts_short"),
+            (F.sum(F.col("d_qty") - F.col("s_qty")).cast("double") / 1000.0).alias(
+                "shortfall_qty"
+            ),
+            F.sum("n_lines").cast("long").alias("n_lines"),
+        )
+        .orderBy("wk")
+    )
+
+
+@query(
+    "ds_tpcds_q67_rollup_rank_spine",
+    oracle=f"""
+    WITH g AS (
+      SELECT p_type, p_brand, EXTRACT(year FROM o_orderdate) AS yr,
+             EXTRACT(month FROM o_orderdate) AS mon, n_name,
+             {sql_dsum(_REV, "sumsales")}
+      FROM lineitem
+      JOIN orders   ON l_orderkey = o_orderkey
+      JOIN part     ON l_partkey = p_partkey
+      JOIN supplier ON l_suppkey = s_suppkey
+      JOIN nation   ON s_nationkey = n_nationkey
+      GROUP BY ROLLUP (p_type, p_brand, yr, mon, n_name)
+    )
+    SELECT p_type, p_brand, yr, mon, n_name, sumsales, rk
+    FROM (
+      SELECT p_type, p_brand, yr, mon, n_name, sumsales,
+             CAST(RANK() OVER (
+               PARTITION BY p_type
+               ORDER BY sumsales DESC, p_brand NULLS FIRST, yr NULLS FIRST,
+                        mon NULLS FIRST, n_name NULLS FIRST
+             ) AS INTEGER) AS rk
+      FROM g
+    )
+    WHERE rk <= 100
+    ORDER BY p_type NULLS FIRST, rk, p_brand NULLS FIRST, yr NULLS FIRST,
+             mon NULLS FIRST, n_name NULLS FIRST
+    """,
+    tags=("tpcds", "rollup", "rank", "window"),
+    bench=True,
+)
+def ds_tpcds_q67_rollup_rank_spine(spark, sf_dir):
+    """TPC-DS Q67 (VERDICT r8 item 6): the widest windowed rollup in the
+    suite — a FIVE-level ROLLUP over the full reporting spine
+    (category/brand/year/month/region ← p_type/p_brand/yr/mon/n_name),
+    then a RANK over sumsales within the top-level category INCLUDING
+    the super-aggregate rows, keeping each category's 100 best spine
+    rows. This is the 'best sellers at every hierarchy level in one
+    pass' report, and the classic Q67 stress: the window input is the
+    ROLLED-UP relation, never the fact.
+
+    Scale shape — the canonical Q67 rewrite: Spark expands grouping sets
+    BEFORE the partial aggregate, so a naive ROLLUP over the joined fact
+    would feed 6× the fact rows into aggregation. Instead the fact is
+    reduced to the LEAF grain first (one plain groupBy over the 5 spine
+    columns — map-side partials on raw rows), and the ROLLUP runs over
+    the leaf relation (~3 orders of magnitude smaller), which is exact
+    because fixed-point micro-unit sums are associative. The rank
+    partitions by p_type (≤7 groups incl. the NULL super-aggregate) so
+    no partition approaches the all-rows window that makes naive Q67
+    plans fall over; rk ≤ 100 cuts to ≤ 700 rows before the final
+    order. Rank ties are broken by the full spine (NULLS FIRST both
+    engines) so rk itself is deterministic, not just the cut. Sums are
+    fixed-point (canonical.py) — bit-identical cross-engine."""
+    li = t(spark, sf_dir, "lineitem")
+    o = t(spark, sf_dir, "orders").select(
+        "o_orderkey",
+        F.year("o_orderdate").alias("yr"),
+        F.month("o_orderdate").alias("mon"),
+    )
+    p = t(spark, sf_dir, "part").select("p_partkey", "p_type", "p_brand")
+    s = t(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
+    n = dim(spark, sf_dir, "nation").select("n_nationkey", "n_name")
+    # ONE-phase leaf (round-10 replan of the r9 "two-phase" trade): the
+    # r9 plan reduced the fact to (l_partkey, l_suppkey, yr, mon) grain
+    # before the dim joins, but that grain never consolidates on
+    # TPC-H-shaped data — distinct (part, supp, month) combos outnumber
+    # lines at EVERY scale factor (measured here: 599,869 groups from
+    # ~600k lines; at sf1000 partsupp×months ≈ 67B combos vs 6B lines),
+    # so the extra exchange moved the whole fact for zero reduction.
+    # Aggregating once at the named leaf grain removes that full-fact
+    # exchange: measured A/B same-session at sf0.1 — default shape
+    # 1.84s → 1.85s (tie), cluster-shape rehearsal 5.91s → 5.17s
+    # (−12%, one fewer wide exchange at 200 partitions). A hierarchical
+    # 5-level rollup (replacing Expand with chained re-aggregates) was
+    # also measured and REJECTED: 2.10–2.26s vs 1.85s — Expand's 6×
+    # fan-out over the 255k-row leaf is cheaper than 5 extra stages.
+    leaf = (
+        li.join(o, li.l_orderkey == o.o_orderkey)
+        .join(p, li.l_partkey == p.p_partkey)
+        .join(s, li.l_suppkey == s.s_suppkey)
+        .join(n, s.s_nationkey == n.n_nationkey)
+        .groupBy("p_type", "p_brand", "yr", "mon", "n_name")
+        .agg(F.sum(F.round(_rev_col() * F.lit(1e6)).cast("long")).alias("_micro"))
+    )
+    g = (
+        leaf.rollup("p_type", "p_brand", "yr", "mon", "n_name")
+        .agg((F.sum("_micro").cast("double") / F.lit(1e6)).alias("sumsales"))
+    )
+    w = Window.partitionBy("p_type").orderBy(
+        F.col("sumsales").desc(),
+        F.col("p_brand").asc_nulls_first(),
+        F.col("yr").asc_nulls_first(),
+        F.col("mon").asc_nulls_first(),
+        F.col("n_name").asc_nulls_first(),
+    )
+    return (
+        g.withColumn("rk", F.rank().over(w).cast("int"))
+        .filter(F.col("rk") <= 100)
+        .select("p_type", "p_brand", "yr", "mon", "n_name", "sumsales", "rk")
+        .orderBy(
+            F.col("p_type").asc_nulls_first(),
+            "rk",
+            F.col("p_brand").asc_nulls_first(),
+            F.col("yr").asc_nulls_first(),
+            F.col("mon").asc_nulls_first(),
+            F.col("n_name").asc_nulls_first(),
+        )
+    )
+
+
+@query(
+    "ds_tpcds_q78_channel_ratio_dropouts",
+    oracle=f"""
+    WITH ret AS (
+      SELECT l_orderkey AS ro, l_linenumber AS rl
+      FROM lineitem WHERE l_returnflag = 'R'
+    ),
+    clean AS (
+      SELECT l.* FROM lineitem l
+      LEFT JOIN ret ON l.l_orderkey = ret.ro AND l.l_linenumber = ret.rl
+      WHERE ret.ro IS NULL
+    ),
+    std AS (
+      SELECT EXTRACT(year FROM o_orderdate) AS yr, o_custkey,
+             {sql_dsum(_REV, "std_rev")},
+             {sql_dsum("l_quantity", "std_qty")}
+      FROM clean JOIN orders ON l_orderkey = o_orderkey
+      WHERE o_orderpriority NOT IN ('1-URGENT', '2-HIGH')
+      GROUP BY yr, o_custkey
+    ),
+    exp AS (
+      SELECT EXTRACT(year FROM o_orderdate) AS yr, o_custkey,
+             {sql_dsum(_REV, "exp_rev")},
+             {sql_dsum("l_quantity", "exp_qty")}
+      FROM clean JOIN orders ON l_orderkey = o_orderkey
+      WHERE o_orderpriority IN ('1-URGENT', '2-HIGH')
+      GROUP BY yr, o_custkey
+    )
+    SELECT std.yr, std.o_custkey AS custkey, std_rev, exp_rev,
+           exp_rev / std_rev AS channel_ratio,
+           CAST(std_qty AS BIGINT) AS std_qty,
+           CAST(exp_qty AS BIGINT) AS exp_qty
+    FROM std JOIN exp ON std.yr = exp.yr AND std.o_custkey = exp.o_custkey
+    WHERE std_rev > 0
+    ORDER BY channel_ratio DESC, std.yr, custkey
+    LIMIT 100
+    """,
+    tags=("tpcds", "anti-join", "multi-channel", "ratio"),
+)
+def ds_tpcds_q78_channel_ratio_dropouts(spark, sf_dir):
+    """TPC-DS Q78 (VERDICT r8 item 6): multi-channel yearly ratios with
+    RETURN DROPOUTS — each channel's per-(year, customer) sales are
+    computed over only the fact rows with NO matching return (Q78's
+    `ws_order_number IS NULL` left-join dropout, expressed here as a
+    LEFT ANTI join of lineitem against the returned line keys), then the
+    two channels join on (year, customer) and the express/standard
+    revenue ratio ranks the customers whose urgent-channel spend most
+    outweighs their standard spend. Channels come from o_orderpriority
+    (the module's channel discriminator); returns from l_returnflag='R'.
+
+    Scale shape: the anti-join is key-only on its build side
+    ((orderkey, linenumber) pairs — no payload) and Spark executes it as
+    a real LeftAnti hash join, the cheapest dropout form; both channel
+    aggregates reduce to (year, customer) grain BEFORE the cross-channel
+    join, so that join carries two already-small relations; the final
+    ORDER+LIMIT is a TakeOrdered. The ratio divides two fixed-point sums
+    — bit-identical cross-engine."""
+    li = t(spark, sf_dir, "lineitem")
+    ret = li.filter(F.col("l_returnflag") == "R").select(
+        F.col("l_orderkey").alias("ro"), F.col("l_linenumber").alias("rl")
+    )
+    clean = li.join(
+        ret,
+        (li.l_orderkey == ret.ro) & (li.l_linenumber == ret.rl),
+        "left_anti",
+    )
+    o = t(spark, sf_dir, "orders").select(
+        "o_orderkey",
+        "o_custkey",
+        "o_orderpriority",
+        F.year("o_orderdate").alias("yr"),
+    )
+    joined = clean.join(o, clean.l_orderkey == o.o_orderkey)
+    express = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
+
+    def channel(pred, rev_name, qty_name):
+        return (
+            joined.filter(pred)
+            .groupBy("yr", "o_custkey")
+            .agg(
+                dsum(_rev_col(), rev_name),
+                dsum("l_quantity", qty_name),
+            )
+        )
+
+    std = channel(~express, "std_rev", "std_qty")
+    exp = channel(express, "exp_rev", "exp_qty")
+    return (
+        std.join(exp, ["yr", "o_custkey"])
+        .filter(F.col("std_rev") > 0)
+        .select(
+            "yr",
+            F.col("o_custkey").alias("custkey"),
+            "std_rev",
+            "exp_rev",
+            (F.col("exp_rev") / F.col("std_rev")).alias("channel_ratio"),
+            F.col("std_qty").cast("long").alias("std_qty"),
+            F.col("exp_qty").cast("long").alias("exp_qty"),
+        )
+        .orderBy(F.col("channel_ratio").desc(), "yr", "custkey")
+        .limit(100)
+    )
+
+
+@query(
+    "ds_tpcds_q47_monthly_neighbors",
+    oracle=f"""
+    WITH monthly AS (
+      SELECT p_brand, EXTRACT(year FROM o_orderdate) AS yr,
+             EXTRACT(month FROM o_orderdate) AS mon,
+             {sql_dsum(_REV, "rev")}
+      FROM lineitem
+      JOIN orders ON l_orderkey = o_orderkey
+      JOIN part   ON l_partkey = p_partkey
+      GROUP BY p_brand, yr, mon
+    ),
+    yearly AS (
+      SELECT p_brand, yr,
+             CAST(SUM(CAST(ROUND(rev * 1000000.0) AS BIGINT)) AS DOUBLE)
+               / 1000000.0 AS tot,
+             COUNT(*) AS n_months
+      FROM monthly GROUP BY p_brand, yr
+    ),
+    series AS (
+      SELECT m.p_brand, m.yr, m.mon, m.rev,
+             y.tot / y.n_months AS avg_monthly,
+             LAG(m.rev)  OVER (PARTITION BY m.p_brand ORDER BY m.yr, m.mon)
+               AS prev_rev,
+             LEAD(m.rev) OVER (PARTITION BY m.p_brand ORDER BY m.yr, m.mon)
+               AS next_rev
+      FROM monthly m JOIN yearly y ON m.p_brand = y.p_brand AND m.yr = y.yr
+    )
+    SELECT p_brand, mon, rev, avg_monthly, prev_rev, next_rev,
+           rev - avg_monthly AS deviation
+    FROM series
+    WHERE yr = 1997 AND avg_monthly > 0
+      AND ABS(rev - avg_monthly) / avg_monthly > 0.1
+    ORDER BY deviation, p_brand, mon
+    LIMIT 60
+    """,
+    tags=("tpcds", "window", "lag-lead", "deviation"),
+    bench=True,
+)
+def ds_tpcds_q47_monthly_neighbors(spark, sf_dir):
+    """TPC-DS Q47: months deviating >10% from the brand's yearly average,
+    reported WITH the neighboring months' values (Q47's psum/nsum via
+    LAG/LEAD over the monthly series). The average uses the Q89
+    deterministic form — per-(brand, year) fixed-point re-sum of the
+    exact monthly canonicals joined back — because windowed AVG over
+    doubles is accumulation-order-sensitive cross-engine; LAG/LEAD move
+    values without arithmetic, so they are exact in both engines given
+    the total (yr, mon) order within each brand partition (unique by
+    construction: the series is grouped at that grain).
+
+    Scale shape: the windows run over the AGGREGATED series (brand ×
+    month ≈ 25×84 rows here; bounded by |brands|·|months| at any SF),
+    never over facts — window state is dimension-sized. The fact is
+    scanned ONCE into the (brand, yr, mon) partial aggregate; the
+    yearly average comes from a window SUM of the exact micro-unit
+    integers over (brand, yr) rather than the oracle's join-back CTE —
+    the join-back form makes Spark re-execute the whole fact
+    aggregation for the second reference (Q89's plan pays 2× fact
+    scans for exactly this reason), while the window form reuses the
+    one series and integer window sums are order-independent, so the
+    hash still matches bit-for-bit. TakeOrdered for the final LIMIT.
+    Reference parity: SURVEY §2B window family (reference has no
+    relational operators; CephRgwFileSystem.java is a FileSystem
+    connector — this extends the engine contract)."""
+    li = t(spark, sf_dir, "lineitem")
+    o = t(spark, sf_dir, "orders").select(
+        "o_orderkey",
+        F.year("o_orderdate").alias("yr"),
+        F.month("o_orderdate").alias("mon"),
+    )
+    p = t(spark, sf_dir, "part").select("p_partkey", "p_brand")
+    monthly = (
+        li.join(o, li.l_orderkey == o.o_orderkey)
+        .join(p, li.l_partkey == p.p_partkey)
+        .groupBy("p_brand", "yr", "mon")
+        .agg(
+            F.sum(F.round(_rev_col() * F.lit(1e6)).cast("long")).alias("_micro")
+        )
+        .withColumn("rev", F.col("_micro").cast("double") / F.lit(1e6))
+    )
+    wy = Window.partitionBy("p_brand", "yr")
+    w = Window.partitionBy("p_brand").orderBy("yr", "mon")
+    series = (
+        monthly.withColumn(
+            "avg_monthly",
+            (F.sum("_micro").over(wy).cast("double") / F.lit(1e6))
+            / F.count(F.lit(1)).over(wy),
+        )
+        .withColumn("prev_rev", F.lag("rev").over(w))
+        .withColumn("next_rev", F.lead("rev").over(w))
+    )
+    return (
+        series.filter(
+            (F.col("yr") == 1997)
+            & (F.col("avg_monthly") > 0)
+            & (F.abs(F.col("rev") - F.col("avg_monthly")) / F.col("avg_monthly") > 0.1)
+        )
+        .select(
+            "p_brand",
+            "mon",
+            "rev",
+            "avg_monthly",
+            "prev_rev",
+            "next_rev",
+            (F.col("rev") - F.col("avg_monthly")).alias("deviation"),
+        )
+        .orderBy("deviation", "p_brand", "mon")
+        .limit(60)
+    )
+
+
+@query(
+    "ds_tpcds_q75_yoy_item_delta",
+    oracle=f"""
+    WITH sales AS (
+      SELECT EXTRACT(year FROM o_orderdate) AS yr, p_brand,
+             {sql_dsum("CASE WHEN l_returnflag = 'R' THEN -l_quantity ELSE l_quantity END", "cnt", 0)},
+             {sql_dsum("CASE WHEN l_returnflag = 'R' THEN -(" + _REV + ") ELSE " + _REV + " END", "amt")}
+      FROM lineitem
+      JOIN orders ON l_orderkey = o_orderkey
+      JOIN part   ON l_partkey = p_partkey
+      GROUP BY yr, p_brand
+    )
+    SELECT p.yr AS prev_year, c.yr AS yr, c.p_brand,
+           p.cnt AS prev_cnt, c.cnt AS cur_cnt,
+           c.cnt / p.cnt AS cnt_ratio,
+           c.cnt - p.cnt AS sales_cnt_diff,
+           c.amt - p.amt AS sales_amt_diff
+    FROM sales c JOIN sales p
+      ON c.p_brand = p.p_brand AND c.yr = p.yr + 1
+    WHERE p.cnt > 0 AND c.cnt / p.cnt < 0.97
+    ORDER BY sales_cnt_diff, c.p_brand, yr
+    LIMIT 60
+    """,
+    tags=("tpcds", "yoy", "returns", "self-join"),
+)
+def ds_tpcds_q75_yoy_item_delta(spark, sf_dir):
+    """TPC-DS Q75: items whose net sales count SHRANK year-over-year —
+    the spec unions three channel facts, nets each against its returns
+    table, aggregates to item grain per year, self-joins consecutive
+    years and keeps ratio < 0.9 (0.97 here, sized to the fixture's
+    spread so both oracle scales return rows). Returns net out as a
+    map-side sign flip (the module's returns convention), so no
+    returns-table join is needed; where one exists the shape adds one
+    equi-join on the line key before the aggregate.
+
+    Scale shape: ONE full-fact scan into the signed (year, brand)
+    partial aggregate; the YoY self-join then carries a |brands|·|years|
+    relation (~175 rows here, dimension-sized at any SF). Signed
+    fixed-point sums stay exact under cancellation — quantity at scale 0
+    (integer-valued), revenue at the house 1e-6. The ratio and deltas
+    divide/subtract identical exact doubles, so the DuckDB hash matches
+    bit-for-bit. TakeOrdered for the LIMIT."""
+    li = t(spark, sf_dir, "lineitem")
+    o = t(spark, sf_dir, "orders").select(
+        "o_orderkey", F.year("o_orderdate").alias("yr")
+    )
+    p = t(spark, sf_dir, "part").select("p_partkey", "p_brand")
+    ret = F.col("l_returnflag") == "R"
+    sales = (
+        li.join(o, li.l_orderkey == o.o_orderkey)
+        .join(p, li.l_partkey == p.p_partkey)
+        .groupBy("yr", "p_brand")
+        .agg(
+            dsum(F.when(ret, -F.col("l_quantity")).otherwise(F.col("l_quantity")), "cnt", 0),
+            dsum(F.when(ret, -_rev_col()).otherwise(_rev_col()), "amt"),
+        )
+    )
+    cur = sales.select(
+        F.col("yr"),
+        F.col("p_brand"),
+        F.col("cnt").alias("cur_cnt"),
+        F.col("amt").alias("cur_amt"),
+    )
+    prev = sales.select(
+        (F.col("yr") + 1).alias("yr"),
+        F.col("p_brand"),
+        F.col("yr").alias("prev_year"),
+        F.col("cnt").alias("prev_cnt"),
+        F.col("amt").alias("prev_amt"),
+    )
+    return (
+        cur.join(prev, ["yr", "p_brand"])
+        .filter((F.col("prev_cnt") > 0) & (F.col("cur_cnt") / F.col("prev_cnt") < 0.97))
+        .select(
+            "prev_year",
+            "yr",
+            "p_brand",
+            "prev_cnt",
+            "cur_cnt",
+            (F.col("cur_cnt") / F.col("prev_cnt")).alias("cnt_ratio"),
+            (F.col("cur_cnt") - F.col("prev_cnt")).alias("sales_cnt_diff"),
+            (F.col("cur_amt") - F.col("prev_amt")).alias("sales_amt_diff"),
+        )
+        .orderBy("sales_cnt_diff", "p_brand", "yr")
+        .limit(60)
+    )
+
+
+@query(
+    "ds_tpcds_q39_demand_cov_pairs",
+    oracle=f"""
+    WITH g AS (
+      SELECT l_suppkey, EXTRACT(month FROM o_orderdate) AS mon,
+             COUNT(*) AS n,
+             {sql_dsum(_REV, "s1")},
+             {sql_dsum("(" + _REV + ") * (" + _REV + ")", "s2", 4)}
+      FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+      WHERE EXTRACT(year FROM o_orderdate) = 1997
+      GROUP BY l_suppkey, mon
+      HAVING COUNT(*) >= 5
+    ),
+    f AS (
+      SELECT l_suppkey, mon, n,
+             SQRT((s2 - s1 * s1 / CAST(n AS DOUBLE))
+                  / (CAST(n AS DOUBLE) - 1.0))
+               / (s1 / CAST(n AS DOUBLE)) AS cov
+      FROM g
+      WHERE s1 > 0
+    )
+    SELECT a.l_suppkey, a.mon,
+           a.cov AS cov_mon, b.cov AS cov_next,
+           a.n AS n_mon, b.n AS n_next
+    FROM f a JOIN f b
+      ON a.l_suppkey = b.l_suppkey AND b.mon = a.mon + 1
+    WHERE a.cov > 0.6 AND b.cov > 0.6
+    ORDER BY a.l_suppkey, a.mon
+    """,
+    tags=("tpcds", "stats", "self-join", "cov"),
+)
+def ds_tpcds_q39_demand_cov_pairs(spark, sf_dir):
+    """TPC-DS Q39: demand-variability screen — per (supplier, month)
+    revenue coefficient of variation (stddev/mean), keeping only
+    suppliers where two CONSECUTIVE months both exceed the threshold
+    (Q39's inv1 JOIN inv2 ON d_moy+1). CoV derives from fixed-point
+    first/second moments (the dstddev_samp scheme): the per-group sums
+    are exact integers, and every double op after them — sqrt, the two
+    divisions — is a scalar on identical operands in both engines, so
+    the hash matches bit-for-bit. n ≥ 5 gates sample-stddev noise
+    (and n ≥ 2 validity); the second-moment scale (1e4) keeps
+    |rev²·10⁴| ≈ 1e14 per row well under 2^63 for per-group sums.
+
+    Scale shape: one fact scan into a (supplier, month) partial
+    aggregate carrying three numbers; the oracle phrases the
+    consecutive-month pairing as a self-join, but the Spark plan uses
+    LEAD over the aggregated series instead (next month's cov/n are
+    value movement, no arithmetic) gated on lead(mon) == mon+1 — the
+    self-join form re-executes the whole fact aggregation for each side
+    (4 scans in the physical plan), while the window form scans ONCE and
+    its state is |suppliers|·12 rows, dimension-sized at any SF. Same
+    rows, same hash. The full-series sort is the final presentation
+    ORDER BY only."""
+    li = t(spark, sf_dir, "lineitem")
+    o = (
+        t(spark, sf_dir, "orders")
+        .filter(F.year("o_orderdate") == 1997)
+        .select("o_orderkey", F.month("o_orderdate").alias("mon"))
+    )
+    rev = _rev_col()
+    g = (
+        li.join(o, li.l_orderkey == o.o_orderkey)
+        .groupBy("l_suppkey", "mon")
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            dsum(rev, "s1"),
+            dsum(rev * rev, "s2", 4),
+        )
+        .filter(F.col("n") >= 5)
+    )
+    nd = F.col("n").cast("double")
+    f = g.filter(F.col("s1") > 0).select(
+        "l_suppkey",
+        "mon",
+        "n",
+        (
+            F.sqrt((F.col("s2") - F.col("s1") * F.col("s1") / nd) / (nd - F.lit(1.0)))
+            / (F.col("s1") / nd)
+        ).alias("cov"),
+    )
+    w = Window.partitionBy("l_suppkey").orderBy("mon")
+    return (
+        f.withColumn("next_mon", F.lead("mon").over(w))
+        .withColumn("cov_next", F.lead("cov").over(w))
+        .withColumn("n_next", F.lead("n").over(w))
+        .filter(
+            (F.col("next_mon") == F.col("mon") + 1)
+            & (F.col("cov") > 0.6)
+            & (F.col("cov_next") > 0.6)
+        )
+        .select(
+            "l_suppkey",
+            "mon",
+            F.col("cov").alias("cov_mon"),
+            "cov_next",
+            F.col("n").alias("n_mon"),
+            "n_next",
+        )
+        .orderBy("l_suppkey", "mon")
+    )
+
+
+@query(
+    "ds_tpcds_q95_multi_supplier_clean",
+    oracle=f"""
+    WITH multi AS (
+      SELECT l_orderkey FROM lineitem
+      GROUP BY l_orderkey HAVING COUNT(DISTINCT l_suppkey) >= 2
+    ),
+    ret AS (
+      SELECT DISTINCT l_orderkey FROM lineitem WHERE l_returnflag = 'R'
+    ),
+    q AS (
+      SELECT o_orderkey, EXTRACT(month FROM o_orderdate) AS mon,
+             o_totalprice
+      FROM orders
+      WHERE EXTRACT(year FROM o_orderdate) = 1997
+        AND o_orderkey IN (SELECT l_orderkey FROM multi)
+        AND o_orderkey NOT IN (SELECT l_orderkey FROM ret)
+    )
+    SELECT mon,
+           CAST(COUNT(*) AS BIGINT) AS n_orders,
+           {sql_dsum("o_totalprice", "total_value")}
+    FROM q
+    GROUP BY mon
+    ORDER BY mon
+    """,
+    tags=("tpcds", "semi-join", "anti-join", "exists-chain"),
+)
+def ds_tpcds_q95_multi_supplier_clean(spark, sf_dir):
+    """TPC-DS Q95: the EXISTS/NOT-EXISTS reachability chain — orders
+    fulfilled from AT LEAST TWO distinct suppliers (Q95's 'shipped from
+    more than one warehouse' two-hop EXISTS self-join) with NO returned
+    line (the NOT EXISTS against web_returns), reported monthly. The
+    spec phrases both conditions as correlated self-joins over the fact;
+    the Spark-first form derives each qualification set ONCE — the
+    multi-supplier set as a key-grain aggregate (count DISTINCT supplier
+    ≥ 2 is set-identical to the pairwise ws1/ws2 self-join EXISTS), the
+    returns set as a distinct key projection — and applies them as one
+    LEFT SEMI and one LEFT ANTI join on key-only relations.
+
+    Scale shape: one fact scan per qualification set plus the orders
+    scan, each reduced to key grain before any join (the semi/anti build
+    sides carry 8-byte keys, no payload); the monthly aggregate's spine
+    is 12 rows. No self-join of raw fact rows ever materializes — the
+    pairwise EXISTS form would shuffle fact×avg_lines_per_order rows.
+    Fixed-point value sums keep the hash exact."""
+    li = t(spark, sf_dir, "lineitem")
+    multi = (
+        li.groupBy("l_orderkey")
+        .agg(F.count_distinct("l_suppkey").alias("_ns"))
+        .filter(F.col("_ns") >= 2)
+        .select("l_orderkey")
+    )
+    ret = (
+        li.filter(F.col("l_returnflag") == "R")
+        .select("l_orderkey")
+        .distinct()
+    )
+    o = (
+        t(spark, sf_dir, "orders")
+        .filter(F.year("o_orderdate") == 1997)
+        .select(
+            "o_orderkey",
+            F.month("o_orderdate").alias("mon"),
+            "o_totalprice",
+        )
+    )
+    return (
+        o.join(multi, o.o_orderkey == multi.l_orderkey, "left_semi")
+        .join(ret, o.o_orderkey == ret.l_orderkey, "left_anti")
+        .groupBy("mon")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n_orders"),
+            dsum("o_totalprice", "total_value"),
+        )
+        .orderBy("mon")
+    )
+
+
+@query(
+    "ds_tpcds_q4_channel_growth_screen",
+    oracle="""
+    WITH s AS (
+      SELECT o_custkey,
+             o_orderpriority IN ('1-URGENT', '2-HIGH') AS express,
+             EXTRACT(year FROM o_orderdate) AS yr,
+             SUM(CAST(ROUND(o_totalprice * 1000000.0) AS BIGINT)) AS spend_fix
+      FROM orders
+      WHERE EXTRACT(year FROM o_orderdate) IN (1996, 1997)
+      GROUP BY o_custkey, express, yr
+    ),
+    wide AS (
+      SELECT o_custkey,
+             SUM(CASE WHEN express AND yr = 1996 THEN spend_fix END) AS e1,
+             SUM(CASE WHEN express AND yr = 1997 THEN spend_fix END) AS e2,
+             SUM(CASE WHEN NOT express AND yr = 1996 THEN spend_fix END) AS s1,
+             SUM(CASE WHEN NOT express AND yr = 1997 THEN spend_fix END) AS s2
+      FROM s GROUP BY o_custkey
+    )
+    SELECT o_custkey AS custkey,
+           CAST(e2 AS DOUBLE) / e1 AS express_ratio,
+           CAST(s2 AS DOUBLE) / s1 AS standard_ratio
+    FROM wide
+    WHERE e1 > 0 AND s1 > 0 AND e2 IS NOT NULL AND s2 IS NOT NULL
+      AND CAST(e2 AS DOUBLE) / e1 > CAST(s2 AS DOUBLE) / s1
+    ORDER BY express_ratio DESC, custkey
+    LIMIT 60
+    """,
+    tags=("tpcds", "yoy", "multi-channel", "pivot"),
+)
+def ds_tpcds_q4_channel_growth_screen(spark, sf_dir):
+    """TPC-DS Q4: customers whose premium-channel spend GREW FASTER than
+    their standard-channel spend year-over-year — the spec builds six
+    year_total CTE slices (3 channels × 2 years) and joins them all at
+    customer grain; the Spark-first form computes ONE aggregate at
+    (customer, channel, year) grain and PIVOTs the four cells with
+    conditional sums, replacing five self-joins of the same subtree
+    with map-side CASE — one fact scan instead of six.
+
+    Scale shape: the only full-relation work is the single orders scan
+    into the (customer, channel, year) partial aggregate; the pivot is
+    a second aggregate at customer grain (strictly fewer rows); the
+    ratio screen and ORDER+LIMIT (TakeOrdered) run on the pivoted
+    relation. Spend is fixed-point (exact longs); each ratio divides
+    the same exact operands in both engines, and the cross-channel
+    comparison compares those identical doubles — hash-exact. NULL
+    cells (customer absent from a channel-year) are filtered exactly
+    like Q4's inner joins drop them."""
+    o = (
+        t(spark, sf_dir, "orders")
+        .filter(F.year("o_orderdate").isin(1996, 1997))
+        .select(
+            "o_custkey",
+            F.col("o_orderpriority").isin("1-URGENT", "2-HIGH").alias("express"),
+            F.year("o_orderdate").alias("yr"),
+            "o_totalprice",
+        )
+    )
+    s = o.groupBy("o_custkey", "express", "yr").agg(
+        F.sum(F.round(F.col("o_totalprice") * F.lit(1e6)).cast("long")).alias(
+            "spend_fix"
+        )
+    )
+
+    def cell(express, yr):
+        return F.sum(
+            F.when(
+                (F.col("express") == express) & (F.col("yr") == yr),
+                F.col("spend_fix"),
+            )
+        )
+
+    wide = s.groupBy("o_custkey").agg(
+        cell(True, 1996).alias("e1"),
+        cell(True, 1997).alias("e2"),
+        cell(False, 1996).alias("s1"),
+        cell(False, 1997).alias("s2"),
+    )
+    e_ratio = F.col("e2").cast("double") / F.col("e1")
+    s_ratio = F.col("s2").cast("double") / F.col("s1")
+    return (
+        wide.filter(
+            (F.col("e1") > 0)
+            & (F.col("s1") > 0)
+            & F.col("e2").isNotNull()
+            & F.col("s2").isNotNull()
+            & (e_ratio > s_ratio)
+        )
+        .select(
+            F.col("o_custkey").alias("custkey"),
+            e_ratio.alias("express_ratio"),
+            s_ratio.alias("standard_ratio"),
+        )
+        .orderBy(F.col("express_ratio").desc(), "custkey")
+        .limit(60)
+    )
+
+
+_Q17_LEG = """
+      SELECT o_custkey AS ck, p_brand AS b, l_quantity AS q
+      FROM lineitem
+      JOIN orders ON l_orderkey = o_orderkey
+      JOIN part   ON l_partkey = p_partkey
+      WHERE EXTRACT(year FROM o_orderdate) = 1997
+        AND EXTRACT(quarter FROM o_orderdate) IN {quarters}{extra}
+"""
+
+
+@query(
+    "ds_tpcds_q17_sale_return_repurchase",
+    oracle=f"""
+    WITH sales AS ({_Q17_LEG.format(quarters="(1, 2)", extra="")}),
+    ret AS ({_Q17_LEG.format(quarters="(1, 2)", extra=" AND l_returnflag = 'R'")}),
+    rep AS ({_Q17_LEG.format(quarters="(3, 4)", extra="")}),
+    tri AS (
+      SELECT s.b AS p_brand, s.q AS sq, r.q AS rq, c.q AS cq
+      FROM sales s
+      JOIN ret r ON s.ck = r.ck AND s.b = r.b
+      JOIN rep c ON s.ck = c.ck AND s.b = c.b
+    )
+    SELECT p_brand,
+           COUNT(*) AS n_triples,
+           {sql_davg("sq", "s_qty_mean", 0)},
+           {sql_dstddev_samp("sq", "s_qty_std", 0, 0)},
+           {sql_davg("rq", "r_qty_mean", 0)},
+           {sql_dstddev_samp("rq", "r_qty_std", 0, 0)},
+           {sql_davg("cq", "c_qty_mean", 0)},
+           {sql_dstddev_samp("cq", "c_qty_std", 0, 0)}
+    FROM tri
+    GROUP BY p_brand
+    HAVING COUNT(*) >= 2
+    ORDER BY p_brand
+    """,
+    tags=("tpcds", "triple-fact", "chain-join", "stats"),
+    bench=True,
+)
+def ds_tpcds_q17_sale_return_repurchase(spark, sf_dir):
+    """TPC-DS Q17: the sale → return → repurchase chain — customers who
+    bought an item (H1 1997), returned it in the same window, and
+    bought the same item again in H2; per item, the count and the
+    quantity mean/stdev of each leg (Q17's store_sales ⋈ store_returns
+    ⋈ catalog_sales with its three quantity stat triples). Adapted to
+    the fixture's star: item grain = p_brand (the (customer, partkey)
+    chain is near-empty at oracle scales — 1-3 triples — while brand
+    grain gives a stable 10-24 group spine at both), returns = the
+    module's l_returnflag = 'R' convention, repurchase channel = the
+    later half-year.
+
+    Round-12 optimization (guide §1.2 "the distributed algorithm" /
+    §2.3 "aggregate before you shuffle"): the three legs collapse to
+    ONE conditional-aggregation pass. The legs differ only in row
+    predicates (quarter ∈ {1,2} / + returnflag = 'R' / quarter ∈
+    {3,4}), so one lineitem⋈orders(1997)⋈part join grouped by
+    (customer, brand) computes all nine per-cell moments as
+    SUM(CASE)/COUNT(CASE) columns, and the three-way INNER chain join
+    on (ck, b) is exactly the filter n_s > 0 AND n_r > 0 AND n_c > 0
+    (a cell survives the chain iff present in all three legs, and for
+    surviving cells each leg's moments equal the conditional sums).
+    Before: 3 lineitem + 3 orders + 3 part scans, two (ck, b)
+    sort-merge joins (18 scan nodes, 22 exchanges at sf0.1); after:
+    one scan of each table and zero cell-grain joins — the fact is
+    read ONCE (pinned at 1 in tests/test_plans.py; the year-1997
+    orders filter is year(o_orderdate), which parquet cannot prune, so
+    each removed orders leg was a full scan).
+
+    Scale/skew shape (round-10 rewrite, caught by the FIRST --skew run
+    of this head): the fan-out product S×R×C per (customer, brand) is
+    the CUBE of a hot customer's per-brand line counts — the planted
+    whale (25% of orders) made one task materialize ~10⁹ joined rows
+    and pinned a core for >12 minutes. The triple relation is never
+    materialized now: each leg aggregates to (customer, brand) grain
+    FIRST — count, Σq, Σq² per cell, map-side combinable — and the
+    chain join carries ONE row per cell per leg; the per-brand stats
+    of the fan-out product derive arithmetically (for the sales leg,
+    Σ_triples q = Σ_cells s1ₛ·n_r·n_c and Σ_triples q² =
+    Σ_cells s2ₛ·n_r·n_c; symmetrically for the other legs;
+    N = Σ n_s·n_r·n_c), which equals the materialized form EXACTLY —
+    integer arithmetic throughout (quantities are integer-valued, so
+    all moments are exact at scale 0; per-cell products stay under
+    2⁶³ until a single customer exceeds ~10⁶ lines per brand per leg,
+    a documented bound far past any plausible whale). The mean/stdev
+    chains divide the same exact operands as the oracle's materialized
+    form — hash-exact. HAVING N ≥ 2 gates the sample-stdev
+    denominator. Whale cost after the rewrite: one (ck, b) cell row —
+    the skew rehearsal's planted whale is now ~free."""
+    li = t(spark, sf_dir, "lineitem")
+    p = t(spark, sf_dir, "part").select("p_partkey", "p_brand")
+    o = (
+        t(spark, sf_dir, "orders")
+        .filter(F.year("o_orderdate") == 1997)
+        .select(
+            "o_orderkey", "o_custkey", F.quarter("o_orderdate").alias("_qtr")
+        )
+    )
+    q = F.round(F.col("l_quantity")).cast("long")
+    in_s = F.col("_qtr").isin(1, 2)
+    in_r = in_s & (F.col("l_returnflag") == "R")
+    in_c = F.col("_qtr").isin(3, 4)
+
+    def leg_aggs(cond, tag):
+        return [
+            F.count(F.when(cond, F.lit(1))).alias(f"n_{tag}"),
+            F.sum(F.when(cond, q)).alias(f"s1_{tag}"),
+            F.sum(F.when(cond, q * q)).alias(f"s2_{tag}"),
+        ]
+
+    cells = (
+        li.join(o, li.l_orderkey == o.o_orderkey)
+        .join(p, li.l_partkey == p.p_partkey)
+        .groupBy(F.col("o_custkey").alias("ck"), F.col("p_brand").alias("b"))
+        .agg(*leg_aggs(in_s, "s"), *leg_aggs(in_r, "r"), *leg_aggs(in_c, "c"))
+        .filter(
+            (F.col("n_s") > 0) & (F.col("n_r") > 0) & (F.col("n_c") > 0)
+        )
+    )
+    n_s, n_r, n_c = F.col("n_s"), F.col("n_r"), F.col("n_c")
+    brand = (
+        cells.groupBy(F.col("b").alias("p_brand"))
+        .agg(
+            F.sum(n_s * n_r * n_c).alias("N"),
+            F.sum(F.col("s1_s") * n_r * n_c).alias("S1s"),
+            F.sum(F.col("s2_s") * n_r * n_c).alias("S2s"),
+            F.sum(F.col("s1_r") * n_s * n_c).alias("S1r"),
+            F.sum(F.col("s2_r") * n_s * n_c).alias("S2r"),
+            F.sum(F.col("s1_c") * n_s * n_r).alias("S1c"),
+            F.sum(F.col("s2_c") * n_s * n_r).alias("S2c"),
+        )
+        .filter(F.col("N") >= 2)
+    )
+
+    def stats(s1, s2, mean_alias, std_alias):
+        # identical double chains to canonical.sql_davg/sql_dstddev_samp
+        # over the materialized fan-out: s1/s2 here ARE those fixsums
+        nd = F.col("N").cast("double")
+        s1d = F.col(s1).cast("double")
+        s2d = F.col(s2).cast("double")
+        return [
+            (s1d / nd).alias(mean_alias),
+            F.sqrt((s2d - s1d * s1d / nd) / (nd - F.lit(1.0))).alias(std_alias),
+        ]
+
+    return (
+        brand.select(
+            "p_brand",
+            F.col("N").alias("n_triples"),
+            *stats("S1s", "S2s", "s_qty_mean", "s_qty_std"),
+            *stats("S1r", "S2r", "r_qty_mean", "r_qty_std"),
+            *stats("S1c", "S2c", "c_qty_mean", "c_qty_std"),
+        )
+        .orderBy("p_brand")
+    )
+
+
+@query(
+    "ds_tpcds_q92_excess_discount",
+    oracle="""
+    WITH j AS (
+      SELECT l_partkey,
+             EXTRACT(month FROM o_orderdate) AS mon,
+             CAST(ROUND((l_extendedprice * l_discount) * 1000000.0)
+                  AS BIGINT) AS micro
+      FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+      WHERE EXTRACT(year FROM o_orderdate) = 1997
+    ),
+    g AS (
+      SELECT mon, micro,
+             SUM(micro) OVER (PARTITION BY l_partkey) AS s,
+             COUNT(*)   OVER (PARTITION BY l_partkey) AS n
+      FROM j
+    )
+    SELECT CAST(mon AS INTEGER) AS mon,
+           COUNT(*) AS n_lines,
+           CAST(CAST(SUM(micro) AS BIGINT) AS DOUBLE) / 1000000.0
+             AS excess_total
+    FROM g
+    WHERE CAST(micro AS DOUBLE) / 1000000.0
+            > 1.3 * ((CAST(s AS DOUBLE) / 1000000.0) / CAST(n AS DOUBLE))
+    GROUP BY mon
+    ORDER BY mon
+    """,
+    tags=("tpcds", "scalar-subquery", "window", "excess"),
+)
+def ds_tpcds_q92_excess_discount(spark, sf_dir):
+    """TPC-DS Q92: excess discount — lines whose discount amount exceeds
+    1.3× the AVERAGE discount amount for the same item over the window
+    (Q92's correlated scalar subquery `ws_ext_discount_amt > 1.3 *
+    (SELECT AVG(...) WHERE same item)`), reported as the monthly count
+    and total of qualifying discount. The correlated subquery is
+    replanned as a WINDOW average over the item partition: the
+    join-back form (aggregate per item, rejoin to lines) re-executes
+    the fact subtree — 2 scans, the Q89-class defect — while the
+    window form scans ONCE (pinned at 1 in tests/test_plans.py) and
+    its state per partition is one running (sum, count).
+
+    Determinism: per-line discount micro-units are exact BIGINTs; the
+    window SUM/COUNT are exact; the average and the 1.3× gate are the
+    same scalar double chain on identical operands in both engines, so
+    the qualifying SET is identical and the fixed-point total
+    hash-matches. Scale shape: one fact scan, one hash exchange on
+    l_partkey for the window (partition count = |parts|, balanced),
+    then a 12-row monthly aggregate — no join at all."""
+    li = t(spark, sf_dir, "lineitem").select(
+        "l_partkey", "l_orderkey", "l_extendedprice", "l_discount"
+    )
+    o = (
+        t(spark, sf_dir, "orders")
+        .filter(F.year("o_orderdate") == 1997)
+        .select("o_orderkey", F.month("o_orderdate").alias("mon"))
+    )
+    j = li.join(o, li.l_orderkey == o.o_orderkey).select(
+        "l_partkey",
+        "mon",
+        F.round((F.col("l_extendedprice") * F.col("l_discount")) * F.lit(1e6))
+        .cast("long")
+        .alias("micro"),
+    )
+    w = Window.partitionBy("l_partkey")
+    g = j.withColumn("s", F.sum("micro").over(w)).withColumn(
+        "n", F.count(F.lit(1)).over(w)
+    )
+    avg_d = (F.col("s").cast("double") / F.lit(1e6)) / F.col("n").cast("double")
+    return (
+        g.filter(F.col("micro").cast("double") / F.lit(1e6) > F.lit(1.3) * avg_d)
+        .groupBy("mon")
+        .agg(
+            F.count(F.lit(1)).alias("n_lines"),
+            (F.sum("micro").cast("double") / F.lit(1e6)).alias("excess_total"),
+        )
+        .orderBy("mon")
+    )
+
+
+@query(
+    "ds_tpcds_q58_three_channel_agreement",
+    oracle="""
+    WITH g AS (
+      SELECT p_brand, o_orderpriority AS ch,
+             CAST(CAST(SUM(CAST(ROUND((l_extendedprice * (1 - l_discount))
+                    * 1000000.0) AS BIGINT)) AS BIGINT) AS BIGINT) AS m
+      FROM lineitem
+      JOIN orders ON l_orderkey = o_orderkey
+      JOIN part   ON l_partkey = p_partkey
+      WHERE EXTRACT(year FROM o_orderdate) = 1997
+        AND o_orderpriority IN ('1-URGENT', '2-HIGH', '3-MEDIUM')
+      GROUP BY p_brand, ch
+    ),
+    wide AS (
+      SELECT p_brand,
+             CAST(SUM(CASE WHEN ch = '1-URGENT' THEN m END) AS BIGINT) AS m1,
+             CAST(SUM(CASE WHEN ch = '2-HIGH' THEN m END) AS BIGINT) AS m2,
+             CAST(SUM(CASE WHEN ch = '3-MEDIUM' THEN m END) AS BIGINT) AS m3
+      FROM g GROUP BY p_brand
+    )
+    SELECT p_brand,
+           CAST(m1 AS DOUBLE) / 1000000.0 AS urgent_rev,
+           CAST(m2 AS DOUBLE) / 1000000.0 AS high_rev,
+           CAST(m3 AS DOUBLE) / 1000000.0 AS medium_rev,
+           CAST(m1 + m2 + m3 AS DOUBLE) / 3.0 / 1000000.0 AS avg_rev
+    FROM wide
+    WHERE m1 IS NOT NULL AND m2 IS NOT NULL AND m3 IS NOT NULL
+      AND CAST(m1 AS DOUBLE) BETWEEN 0.85 * (CAST(m1 + m2 + m3 AS DOUBLE) / 3.0)
+                                 AND 1.15 * (CAST(m1 + m2 + m3 AS DOUBLE) / 3.0)
+      AND CAST(m2 AS DOUBLE) BETWEEN 0.85 * (CAST(m1 + m2 + m3 AS DOUBLE) / 3.0)
+                                 AND 1.15 * (CAST(m1 + m2 + m3 AS DOUBLE) / 3.0)
+      AND CAST(m3 AS DOUBLE) BETWEEN 0.85 * (CAST(m1 + m2 + m3 AS DOUBLE) / 3.0)
+                                 AND 1.15 * (CAST(m1 + m2 + m3 AS DOUBLE) / 3.0)
+    ORDER BY p_brand
+    """,
+    tags=("tpcds", "multi-channel", "agreement", "pivot"),
+)
+def ds_tpcds_q58_three_channel_agreement(spark, sf_dir):
+    """TPC-DS Q58: three-channel revenue agreement — items whose revenue
+    in each of three channels sits within a band of the three-channel
+    average (Q58's ss_item_rev BETWEEN 0.9·avg AND 1.1·avg triple,
+    applied across store/catalog/web). Channels map to the three
+    equal-prior order priorities (1-URGENT / 2-HIGH / 3-MEDIUM — equal
+    expected share, so agreement is a property of the data rather than
+    structurally impossible; band widened to ±15%, sized so BOTH
+    oracle scales return rows: 1 brand at sf0.001, 16 at sf0.01).
+
+    The spec phrases this as three per-channel CTEs three-way-joined
+    at item grain; the Spark-first form computes ONE (brand, channel)
+    aggregate and PIVOTs with conditional sums (the Q4 pattern) — one
+    fact scan (pinned) instead of three, and the agreement screen runs
+    on the pivoted brand-grain relation (25 rows at any SF).
+
+    Determinism: per-cell revenue is an exact micro-unit BIGINT all
+    the way through the pivot (the conditional SUM moves integers, not
+    doubles); the band compare and the reported averages are identical
+    scalar double chains on those exact integers in both engines —
+    hash-exact with no rounding convention needed."""
+    li = t(spark, sf_dir, "lineitem")
+    o = (
+        t(spark, sf_dir, "orders")
+        .filter(
+            (F.year("o_orderdate") == 1997)
+            & F.col("o_orderpriority").isin("1-URGENT", "2-HIGH", "3-MEDIUM")
+        )
+        .select("o_orderkey", F.col("o_orderpriority").alias("ch"))
+    )
+    p = t(spark, sf_dir, "part").select("p_partkey", "p_brand")
+    g = (
+        li.join(o, li.l_orderkey == o.o_orderkey)
+        .join(p, li.l_partkey == p.p_partkey)
+        .groupBy("p_brand", "ch")
+        .agg(
+            F.sum(
+                F.round(
+                    (F.col("l_extendedprice") * (1 - F.col("l_discount")))
+                    * F.lit(1e6)
+                ).cast("long")
+            ).alias("m")
+        )
+    )
+
+    def cell(ch):
+        return F.sum(F.when(F.col("ch") == ch, F.col("m"))).cast("long")
+
+    wide = g.groupBy("p_brand").agg(
+        cell("1-URGENT").alias("m1"),
+        cell("2-HIGH").alias("m2"),
+        cell("3-MEDIUM").alias("m3"),
+    )
+    s_d = (F.col("m1") + F.col("m2") + F.col("m3")).cast("double")
+    avg3 = s_d / F.lit(3.0)
+
+    def within(m):
+        md = F.col(m).cast("double")
+        return (md >= F.lit(0.85) * avg3) & (md <= F.lit(1.15) * avg3)
+
+    return (
+        wide.filter(
+            F.col("m1").isNotNull()
+            & F.col("m2").isNotNull()
+            & F.col("m3").isNotNull()
+            & within("m1")
+            & within("m2")
+            & within("m3")
+        )
+        .select(
+            "p_brand",
+            (F.col("m1").cast("double") / F.lit(1e6)).alias("urgent_rev"),
+            (F.col("m2").cast("double") / F.lit(1e6)).alias("high_rev"),
+            (F.col("m3").cast("double") / F.lit(1e6)).alias("medium_rev"),
+            (s_d / F.lit(3.0) / F.lit(1e6)).alias("avg_rev"),
+        )
+        .orderBy("p_brand")
+    )
+
+
+@query(
+    "ds_tpcds_q31_seasonal_share",
+    oracle=f"""
+    WITH store AS (
+      SELECT o_custkey, EXTRACT(quarter FROM o_orderdate) AS q,
+             SUM({_REV_CENTS}) AS rev
+      FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+      WHERE EXTRACT(year FROM o_orderdate) = 1997
+        AND EXTRACT(quarter FROM o_orderdate) <= 3
+      GROUP BY o_custkey, q
+    ),
+    web AS (
+      SELECT o_custkey, EXTRACT(quarter FROM o_orderdate) AS q,
+             SUM(CAST(ROUND(o_totalprice * 100.0) AS BIGINT)) AS rev
+      FROM orders
+      WHERE EXTRACT(year FROM o_orderdate) = 1997
+        AND EXTRACT(quarter FROM o_orderdate) <= 3
+      GROUP BY o_custkey, q
+    ),
+    sn AS (
+      SELECT c_nationkey AS nk,
+             SUM(CASE WHEN q = 1 THEN rev ELSE 0 END) AS ss1,
+             SUM(CASE WHEN q = 2 THEN rev ELSE 0 END) AS ss2,
+             SUM(CASE WHEN q = 3 THEN rev ELSE 0 END) AS ss3
+      FROM store JOIN customer ON o_custkey = c_custkey
+      GROUP BY nk
+    ),
+    wn AS (
+      SELECT c_nationkey AS nk,
+             SUM(CASE WHEN q = 1 THEN rev ELSE 0 END) AS ws1,
+             SUM(CASE WHEN q = 2 THEN rev ELSE 0 END) AS ws2,
+             SUM(CASE WHEN q = 3 THEN rev ELSE 0 END) AS ws3
+      FROM web JOIN customer ON o_custkey = c_custkey
+      GROUP BY nk
+    )
+    SELECT n_name,
+           ROUND(CAST(ws2 AS DOUBLE) / ws1, 8) AS web_g2,
+           ROUND(CAST(ss2 AS DOUBLE) / ss1, 8) AS store_g2,
+           ROUND(CAST(ws3 AS DOUBLE) / ws2, 8) AS web_g3,
+           ROUND(CAST(ss3 AS DOUBLE) / ss2, 8) AS store_g3
+    FROM sn JOIN wn ON sn.nk = wn.nk
+    JOIN nation ON n_nationkey = sn.nk
+    WHERE ss1 > 0 AND ss2 > 0 AND ss3 > 0
+      AND ws1 > 0 AND ws2 > 0 AND ws3 > 0
+      AND CAST(ws2 AS HUGEINT) * ss1 > CAST(ss2 AS HUGEINT) * ws1
+      AND CAST(ws3 AS HUGEINT) * ss2 > CAST(ss3 AS HUGEINT) * ws2
+    ORDER BY n_name
+    """,
+    tags=("tpcds", "two-fact", "seasonal", "growth-agreement"),
+)
+def ds_tpcds_q31_seasonal_share(spark, sf_dir):
+    """TPC-DS Q31: the multi-fact correlated-growth screen — per region
+    (county in DS, customer nation here), quarter-over-quarter growth is
+    computed INDEPENDENTLY on two fact tables (line-grain lineitem
+    revenue = store_sales; header-grain orders revenue = web_sales) and
+    regions are kept only where the web series strictly outgrew the
+    store series across BOTH 1997 Q1→Q2 and Q2→Q3 transitions.
+
+    Exactness: both series are integer cents; the growth comparisons
+    cross-multiply (ws2·ss1 > ss2·ws1) instead of dividing — in Spark
+    the operands are cast decimal(20,0), which holds EVERY possible
+    BIGINT (≤ 9.3·10¹⁸ < 10²⁰, so the cast itself can never NULL a
+    region the way a decimal(18,0) cast silently would past 10¹⁸
+    cents), and the product (< 8.7·10³⁷) fits Spark's precision-capped
+    decimal(38,0) exactly — mirrored by HUGEINT in the oracle. The
+    reported growth ratios are single rounded doubles from exact ints.
+
+    Scale shape: each fact pre-aggregates to (custkey, quarter) grain
+    BEFORE the customer join — the dimension join probes customer-grain
+    partials, never fact rows — then collapses to nation grain with
+    quarterly conditional sums (3 cells per nation per fact). The spine
+    join runs on two ≤|nations|-row relations; the nation dim
+    broadcasts. Orders is scanned twice by construction (it IS both a
+    fact and the store leg's date/channel source) — the inherent
+    two-fact shape, pinned in test_plans."""
+    dec = "decimal(20,0)"  # holds any BIGINT; product fits decimal(38,0)
+    li = t(spark, sf_dir, "lineitem").select(
+        "l_orderkey", _rev_col().alias("rev")
+    )
+    o = t(spark, sf_dir, "orders").filter(F.year("o_orderdate") == 1997).filter(
+        F.quarter("o_orderdate") <= 3
+    )
+    store = (
+        li.join(
+            o.select("o_orderkey", "o_custkey", F.quarter("o_orderdate").alias("q")),
+            li.l_orderkey == F.col("o_orderkey"),
+        )
+        .groupBy("o_custkey", "q")
+        .agg(F.sum(F.round(F.col("rev") * 100.0).cast("long")).alias("rev"))
+    )
+    web = o.groupBy("o_custkey", F.quarter("o_orderdate").alias("q")).agg(
+        F.sum(F.round(F.col("o_totalprice") * 100.0).cast("long")).alias("rev")
+    )
+    c = t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
+
+    def pivot(fact, prefix):
+        cells = [
+            F.sum(F.when(F.col("q") == i, F.col("rev")).otherwise(F.lit(0)))
+            .alias(f"{prefix}{i}")
+            for i in (1, 2, 3)
+        ]
+        return (
+            fact.join(c, fact.o_custkey == c.c_custkey)
+            .groupBy(F.col("c_nationkey").alias("nk"))
+            .agg(*cells)
+        )
+
+    sn, wn = pivot(store, "ss"), pivot(web, "ws")
+    n = dim(spark, sf_dir, "nation").select("n_nationkey", "n_name")
+    joined = sn.join(wn, "nk").join(n, F.col("nk") == n.n_nationkey)
+    pos = None
+    for col in ("ss1", "ss2", "ss3", "ws1", "ws2", "ws3"):
+        cond = F.col(col) > 0
+        pos = cond if pos is None else (pos & cond)
+    grew = (
+        F.col("ws2").cast(dec) * F.col("ss1").cast(dec)
+        > F.col("ss2").cast(dec) * F.col("ws1").cast(dec)
+    ) & (
+        F.col("ws3").cast(dec) * F.col("ss2").cast(dec)
+        > F.col("ss3").cast(dec) * F.col("ws2").cast(dec)
+    )
+    return (
+        joined.filter(pos & grew)
+        .select(
+            "n_name",
+            F.round(F.col("ws2").cast("double") / F.col("ws1"), 8).alias("web_g2"),
+            F.round(F.col("ss2").cast("double") / F.col("ss1"), 8).alias("store_g2"),
+            F.round(F.col("ws3").cast("double") / F.col("ws2"), 8).alias("web_g3"),
+            F.round(F.col("ss3").cast("double") / F.col("ss2"), 8).alias("store_g3"),
+        )
+        .orderBy("n_name")
+    )
+
+
+_Q49_TOPK = 10
+
+
+_Q49_GRAIN_SQL = f"""
+      SELECT {_CHANNEL_SQL} AS channel, l_partkey,
+             CAST(ROUND(SUM(CASE WHEN l_returnflag = 'R' THEN l_quantity
+                                 ELSE 0 END)) AS BIGINT) AS ret_qty,
+             CAST(ROUND(SUM(l_quantity)) AS BIGINT) AS sold_qty,
+             SUM(CASE WHEN l_returnflag = 'R' THEN {_REV_CENTS}
+                      ELSE 0 END) AS ret_amt,
+             SUM({_REV_CENTS}) AS sold_amt
+      FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+      GROUP BY channel, l_partkey
+      HAVING ret_qty > 0 AND sold_amt > 0
+"""
+
+
+def _q49_channel_sql(ch: str) -> str:
+    """One spec-style channel block: rank the channel's parts by both
+    return ratios (ppm, exact integer division), keep either top-10."""
+    return f"""
+      SELECT channel, l_partkey, ret_qty_ppm, ret_amt_ppm,
+             CASE WHEN qty_rank <= {_Q49_TOPK} THEN qty_rank END AS qty_rank,
+             CASE WHEN amt_rank <= {_Q49_TOPK} THEN amt_rank END AS amt_rank
+      FROM (
+        SELECT channel, l_partkey,
+               CAST((1000000 * ret_qty) // sold_qty AS BIGINT) AS ret_qty_ppm,
+               CAST((1000000 * ret_amt) // sold_amt AS BIGINT) AS ret_amt_ppm,
+               RANK() OVER (ORDER BY (1000000 * ret_qty) // sold_qty DESC,
+                            l_partkey) AS qty_rank,
+               RANK() OVER (ORDER BY (1000000 * ret_amt) // sold_amt DESC,
+                            l_partkey) AS amt_rank
+        FROM grain WHERE channel = '{ch}'
+      )
+      WHERE qty_rank <= {_Q49_TOPK} OR amt_rank <= {_Q49_TOPK}
+"""
+
+
+def _q49_grain(spark, sf_dir):
+    """The (channel, part) return-ratio grain both Q49 phases rank: one
+    fact scan, conditional exact sums, ppm integer ratios."""
+    li = t(spark, sf_dir, "lineitem").select(
+        "l_orderkey", "l_partkey", "l_quantity", "l_returnflag",
+        _rev_col().alias("rev"),
+    )
+    o = t(spark, sf_dir, "orders").select(
+        "o_orderkey", _channel_col().alias("channel")
+    )
+    ret = F.col("l_returnflag") == "R"
+    cents = F.round(F.col("rev") * 100.0).cast("long")
+    return (
+        li.join(o, li.l_orderkey == o.o_orderkey)
+        .groupBy("channel", "l_partkey")
+        .agg(
+            F.round(F.sum(F.when(ret, F.col("l_quantity")).otherwise(0.0)))
+            .cast("long")
+            .alias("ret_qty"),
+            F.round(F.sum("l_quantity")).cast("long").alias("sold_qty"),
+            F.sum(F.when(ret, cents).otherwise(F.lit(0))).alias("ret_amt"),
+            F.sum(cents).alias("sold_amt"),
+        )
+        .filter((F.col("ret_qty") > 0) & (F.col("sold_amt") > 0))
+        .select(
+            "channel",
+            "l_partkey",
+            F.expr("(1000000 * ret_qty) div sold_qty").alias("ret_qty_ppm"),
+            F.expr("(1000000 * ret_amt) div sold_amt").alias("ret_amt_ppm"),
+        )
+    )
+
+
+def _q49_candidates(grain):
+    """Phase 1 of the Q49 two-phase top-k: each input partition's local
+    top-``_Q49_TOPK`` per channel for BOTH orderings. The candidate
+    union is provably ≤ channels · partitions · 2·TOPK rows (each
+    (channel, partition) cell contributes the union of two ≤TOPK
+    lists) and provably CONTAINS every global top-TOPK row — pinned,
+    including at the 200-partition cluster posture where P is largest,
+    in tests/test_invariants.py::test_tier6_q49_candidates_bounded_at_cluster_posture."""
+    pid = grain.withColumn("_pid", F.spark_partition_id())
+    w_q = Window.partitionBy("channel", "_pid").orderBy(
+        F.col("ret_qty_ppm").desc(), "l_partkey"
+    )
+    w_a = Window.partitionBy("channel", "_pid").orderBy(
+        F.col("ret_amt_ppm").desc(), "l_partkey"
+    )
+    return (
+        pid.withColumn("_lq", F.row_number().over(w_q))
+        .withColumn("_la", F.row_number().over(w_a))
+        .filter((F.col("_lq") <= _Q49_TOPK) | (F.col("_la") <= _Q49_TOPK))
+        .drop("_pid", "_lq", "_la")
+    )
+
+
+@query(
+    "ds_tpcds_q49_worst_returns",
+    oracle=f"""
+    WITH grain AS ({_Q49_GRAIN_SQL})
+    SELECT * FROM ({_q49_channel_sql("express")})
+    UNION ALL
+    SELECT * FROM ({_q49_channel_sql("standard")})
+    UNION ALL
+    SELECT * FROM ({_q49_channel_sql("economy")})
+    ORDER BY channel, l_partkey
+    """,
+    tags=("tpcds", "rank-union", "returns", "ratio"),
+    bench=True,  # round 12 (VERDICT r11 item 6): measured at the
+    # 200-partition rehearsal/soak/skew postures so the phase-2
+    # exchange's P-dependence is observed, not just argued
+)
+def ds_tpcds_q49_worst_returns(spark, sf_dir):
+    """TPC-DS Q49: per-channel worst-return screen — for every
+    (channel, part) with at least one return, the return-to-sold ratio
+    in QUANTITY and in CURRENCY, each ranked within the channel worst
+    (highest) first; parts in the top-{_Q49_TOPK} of EITHER ranking
+    survive, with ranks beyond the cutoff reported NULL (a row can make
+    the currency list while being unranked on quantity). The oracle
+    keeps the spec's three-channel rank-union phrasing.
+
+    Exactness: ratios are exact parts-per-million integers
+    ((10⁶·ret) div sold — no float division feeds a rank), and the rank
+    order (ratio DESC, partkey) is total, so RANK == ROW_NUMBER and the
+    survivor set is deterministic cross-engine.
+
+    Scale shape: ONE fact scan (pinned) aggregated to (channel, part)
+    grain with conditional sums; the ranking then runs TWO-PHASE
+    because a window partitioned only by channel (3 partitions) would
+    sort |parts|-row partitions in single tasks at 100 TB: phase 1
+    takes each input partition's local top-{_Q49_TOPK} per channel per
+    ordering (row_number over (channel, spark_partition_id) — per-task
+    state is {_Q49_TOPK} rows, the TakeOrdered map side as dataflow);
+    phase 2 ranks the ≤ 2·{_Q49_TOPK}·P-row candidate union exactly.
+    Candidates provably contain every globally-top-{_Q49_TOPK} row (a
+    global top-k row is its own partition's top-k), and candidate-set
+    ranks equal global ranks for every rank ≤ {_Q49_TOPK} (all rows
+    ahead of a global top-k row are themselves candidates), so the
+    two-phase result is bit-identical to the oracle's global windows."""
+    cand = _q49_candidates(_q49_grain(spark, sf_dir))
+    # phase 2: exact ranks over the bounded candidate set
+    g_q = Window.partitionBy("channel").orderBy(
+        F.col("ret_qty_ppm").desc(), "l_partkey"
+    )
+    g_a = Window.partitionBy("channel").orderBy(
+        F.col("ret_amt_ppm").desc(), "l_partkey"
+    )
+    ranked = cand.withColumn("qr", F.rank().over(g_q)).withColumn(
+        "ar", F.rank().over(g_a)
+    )
+    return (
+        ranked.filter((F.col("qr") <= _Q49_TOPK) | (F.col("ar") <= _Q49_TOPK))
+        .select(
+            "channel",
+            "l_partkey",
+            "ret_qty_ppm",
+            "ret_amt_ppm",
+            F.when(F.col("qr") <= _Q49_TOPK, F.col("qr")).alias("qty_rank"),
+            F.when(F.col("ar") <= _Q49_TOPK, F.col("ar")).alias("amt_rank"),
+        )
+        .orderBy("channel", "l_partkey")
+    )
+
+
+# Layout generations already built this session, keyed by sf_dir tag.
+# The bucketed twin is a LAYOUT, not a query step: a deployment writes it
+# once per data generation and every order-keyed join reuses it, so the
+# bench must not re-pay the two fact rewrites on every (cold, warm, warm)
+# timing pass.
+_Q14_LAYOUT: dict[str, dict] = {}
+
+
+def ensure_q14_layout(spark, sf_dir):
+    """Build the co-bucketed Q14 fact twin ONCE per (session, sf_dir).
+
+    Returns ``(names, build_seconds)`` — ``build_seconds`` is 0.0 when the
+    layout already exists in this session's catalog (bench.py calls this
+    before its timing loop and reports the build cost as a separate
+    ``layout_build_sec`` figure, so the per-query number times the REPORT
+    alone and regressions in the query can no longer hide in write noise).
+
+    Each fact is ``repartition(8, key)`` before ``bucketBy(8, key) +
+    sortBy(key)``: repartition and bucketing use the same Murmur3 hash, so
+    every write task holds exactly one bucket → ONE file per bucket (the
+    precondition for any engine to trust the sortBy order, and cheaper
+    bucket planning). The layout's pinned claim is ZERO EXCHANGE on the
+    order-keyed legs; a LOCAL per-bucket Sort remains in the plan because
+    Spark ≥3.0 does not propagate bucketed sort order by default
+    (SPARK-28632 — recoverable via the legacy outputOrdering flag on a
+    deployment that wants it). That Sort moves zero bytes; the exchange
+    was the 100 TB cost, and it is gone (plan-pinned with a plain-Q14
+    control in tests/test_plans.py::test_q14_bucketed_join_legs_no_exchange)."""
+    import time as _time
+
+    tag = scratch.tag(sf_dir)
+    names = {tbl: f"q14b_{tbl}_{tag}" for tbl in ("orders", "lineitem")}
+    if _Q14_LAYOUT.get(tag) and all(
+        spark.catalog.tableExists(n) for n in names.values()
+    ):
+        return names, 0.0
+    t0 = _time.perf_counter()
+    for tbl, key, cols in (
+        ("orders", "o_orderkey", ["o_orderkey", "o_orderpriority", "o_orderdate"]),
+        (
+            "lineitem",
+            "l_orderkey",
+            ["l_orderkey", "l_partkey", "l_extendedprice", "l_discount"],
+        ),
+    ):
+        (
+            t(spark, sf_dir, tbl)
+            .select(*cols)
+            .repartition(8, F.col(key))
+            .write.bucketBy(8, key)
+            .sortBy(key)
+            .option("path", scratch.path(sf_dir, f"q14_bucketed_{tbl}"))
+            .mode("overwrite")
+            .format("parquet")
+            .saveAsTable(names[tbl])
+        )
+    _Q14_LAYOUT[tag] = names
+    return names, _time.perf_counter() - t0
+
+
+@query(
+    "ds_tpcds_q14_bucketed",
+    oracle=Q14_ORACLE,
+    tags=("tpcds", "bucketed", "layout", "intersect"),
+    bench=True,
+)
+def ds_tpcds_q14_bucketed(spark, sf_dir):
+    """Q14 on an OWNED co-bucketed layout — same answer, same oracle as
+    `ds_tpcds_q14_cross_channel`, different physics: the two fact
+    inputs are written ``repartition(8, key) → bucketBy(8, orderkey) +
+    sortBy`` once per session (`ensure_q14_layout`; one file per
+    bucket), so the lineitem⋈orders sort-merge join reads
+    pre-co-located buckets with ZERO exchange on either order-keyed leg
+    (pinned with a plain-Q14 control in
+    tests/test_plans.py::test_q14_bucketed_join_legs_no_exchange; a
+    local no-network per-bucket Sort remains — SPARK-28632).
+    This is the measured close of the r10 verdict's Q14 finding: after
+    the round-10 qualification rewrite, the residual ×100 shuffle was
+    the two inherent fact SMJs — inherent only while the layout is
+    rented (plain parquet). A deployment that owns the layout buckets
+    both facts on the order key once and every order-keyed join in the
+    workload stops shuffling the facts forever; the remaining
+    exchanges carry part-grain aggregates only.
+
+    Timing contract (round-12): the layout build is excluded from this
+    head's wall-clock — bench.py builds the twin before its timing loop
+    and reports the cost separately as ``layout_build_sec``, the way a
+    deployment pays it (once per layout generation, amortized over the
+    workload). The head therefore times the REPORT alone and is
+    directly comparable against plain Q14."""
+    names, _ = ensure_q14_layout(spark, sf_dir)
+    li = spark.table(names["lineitem"])
+    o = spark.table(names["orders"]).select(
+        "o_orderkey",
+        _channel_col().alias("channel"),
+        F.year("o_orderdate").alias("yr"),
+    )
+    dated = li.join(o, li.l_orderkey == o.o_orderkey).select(
+        "l_partkey", "channel", "yr", _rev_col().alias("rev")
+    )
+    p = t(spark, sf_dir, "part").select("p_partkey", "p_brand")
+    return _q14_report(dated, p)
+
+
+@query(
+    "ds_tpcds_q93_returns_adjusted_net",
+    oracle="""
+    WITH r AS (
+      SELECT l_orderkey, l_linenumber,
+             (CAST(ROUND(l_extendedprice * (1 - l_discount) * 100.0) AS BIGINT)
+              // CAST(ROUND(l_quantity) AS BIGINT))
+             * LEAST(CAST(ROUND(l_quantity) AS BIGINT), 10) AS refund_cents
+      FROM lineitem WHERE l_returnflag = 'R'
+    ),
+    net AS (
+      SELECT l.l_orderkey,
+             CAST(ROUND(l.l_extendedprice * (1 - l.l_discount) * 100.0)
+                  AS BIGINT) - COALESCE(r.refund_cents, 0) AS net_cents
+      FROM lineitem l LEFT JOIN r
+        ON l.l_orderkey = r.l_orderkey AND l.l_linenumber = r.l_linenumber
+    )
+    SELECT o_custkey, CAST(SUM(net_cents) AS BIGINT) AS net_cents_total,
+           COUNT(*) AS n_lines
+    FROM net JOIN orders ON net.l_orderkey = o_orderkey
+    GROUP BY o_custkey
+    ORDER BY net_cents_total DESC, o_custkey
+    LIMIT 20
+    """,
+    tags=("tpcds", "returns", "line-grain-join", "netting"),
+)
+def ds_tpcds_q93_returns_adjusted_net(spark, sf_dir):
+    """TPC-DS Q93: returns-adjusted customer value — net sales computed
+    by LEFT-joining the fact against the returns table AT LINE GRAIN
+    (store_sales ⋈ store_returns on (item, ticket) in the spec; here the
+    returns relation is the fact's own R-flagged subset keyed
+    (l_orderkey, l_linenumber)) and subtracting the per-line refund,
+    then ranking customers by net spend. The refund is PARTIAL — the
+    first 10 units of a returned line ((cents div qty)·LEAST(qty, 10),
+    exact integer arithmetic) — which keeps the netting non-degenerate
+    (a full-refund model collapses to a returnflag filter and never
+    exercises the join). Distinct from Q75's item-grain conditional
+    netting: the line-grain LEFT join is the shape whose scale cost is
+    a fact-sized composite-key join.
+
+    Scale shape: both join inputs derive from the SAME lineitem scan
+    projected to the composite key, so the left join shuffles on
+    (l_orderkey, l_linenumber) with exchange reuse between the two
+    sides; the orders join is the standard fact⋈fact SMJ on the order
+    key; the per-customer aggregate is map-side combined; top-20 is
+    TakeOrdered. All money stays exact BIGINT cents end to end."""
+    li = t(spark, sf_dir, "lineitem")
+    cents = F.round(F.col("l_extendedprice") * (1 - F.col("l_discount")) * 100.0).cast(
+        "long"
+    )
+    qty = F.round(F.col("l_quantity")).cast("long")
+    r = (
+        li.filter(F.col("l_returnflag") == "R")
+        .select(
+            "l_orderkey",
+            "l_linenumber",
+            (F.expr(
+                "(cast(round(l_extendedprice * (1 - l_discount) * 100.0) as bigint)"
+                " div cast(round(l_quantity) as bigint))"
+            ) * F.least(qty, F.lit(10))).alias("refund_cents"),
+        )
+    )
+    net = (
+        li.select("l_orderkey", "l_linenumber", cents.alias("cents"))
+        .join(r, ["l_orderkey", "l_linenumber"], "left")
+        .select(
+            "l_orderkey",
+            (F.col("cents") - F.coalesce("refund_cents", F.lit(0))).alias(
+                "net_cents"
+            ),
+        )
+    )
+    o = t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+    return (
+        net.join(o, net.l_orderkey == o.o_orderkey)
+        .groupBy("o_custkey")
+        .agg(
+            F.sum("net_cents").cast("long").alias("net_cents_total"),
+            F.count(F.lit(1)).alias("n_lines"),
+        )
+        .orderBy(F.col("net_cents_total").desc(), "o_custkey")
+        .limit(20)
+    )
+
+
+@query(
+    "ds_tpcds_q34_band_buyers",
+    oracle="""
+    WITH per_order AS (
+      SELECT l_orderkey, COUNT(*) AS n_lines FROM lineitem GROUP BY l_orderkey
+    ),
+    band AS (
+      SELECT l_orderkey FROM per_order WHERE n_lines BETWEEN 5 AND 7
+    ),
+    per_cust AS (
+      SELECT o_custkey, CAST(COUNT(*) AS BIGINT) AS n_band_orders
+      FROM band JOIN orders ON l_orderkey = o_orderkey
+      GROUP BY o_custkey
+      HAVING COUNT(*) >= 2
+    )
+    SELECT c.c_custkey, c.c_name, p.n_band_orders
+    FROM per_cust p JOIN customer c ON p.o_custkey = c.c_custkey
+    ORDER BY p.n_band_orders DESC, c.c_custkey
+    LIMIT 50
+    """,
+    tags=("tpcds", "count-band", "join-back"),
+)
+def ds_tpcds_q34_band_buyers(spark, sf_dir):
+    """TPC-DS Q34: the count-band buyer screen — orders whose line count
+    falls in a target band (15–20 items per ticket in the spec; 5–7
+    here, matching TPC-H basket geometry), rolled up to customers who
+    placed at least two such orders, joined back to the dimension for
+    display names. The defining shape is the DOUBLE aggregate with a
+    band predicate BETWEEN the two (order grain → band filter →
+    customer grain → HAVING), then a key join to the dim only for the
+    survivors — the dim join probes a post-HAVING relation, never facts.
+
+    Scale shape: the order-grain count is one map-side-combined
+    aggregate of a key-only projection; the band filter drops most
+    orders before anything joins; the customer aggregate runs on
+    band-order keys only; the final dim join input is bounded by the
+    HAVING. Top-50 on a total (count DESC, custkey) key is
+    TakeOrdered."""
+    li = t(spark, sf_dir, "lineitem").select("l_orderkey")
+    band = (
+        li.groupBy("l_orderkey")
+        .agg(F.count(F.lit(1)).alias("n_lines"))
+        .filter(F.col("n_lines").between(5, 7))
+        .select("l_orderkey")
+    )
+    o = t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+    per_cust = (
+        band.join(o, band.l_orderkey == o.o_orderkey)
+        .groupBy("o_custkey")
+        .agg(F.count(F.lit(1)).cast("long").alias("n_band_orders"))
+        .filter(F.col("n_band_orders") >= 2)
+    )
+    c = t(spark, sf_dir, "customer").select("c_custkey", "c_name")
+    return (
+        per_cust.join(c, per_cust.o_custkey == c.c_custkey)
+        .select("c_custkey", "c_name", "n_band_orders")
+        .orderBy(F.col("n_band_orders").desc(), "c_custkey")
+        .limit(50)
+    )
+
+
+_ORD_CENTS = "CAST(ROUND(o_totalprice * 100.0) AS BIGINT)"
+
+
+_DEC = "decimal(20,0)"  # holds any BIGINT; product fits decimal(38,0)
+
+
+@query(
+    "ds_tpcds_q11_year_total_growth",
+    oracle=f"""
+    WITH store AS (
+      SELECT o_custkey, EXTRACT(year FROM o_orderdate) AS yr,
+             CAST(SUM({_REV_CENTS}) AS BIGINT) AS cents
+      FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+      WHERE EXTRACT(year FROM o_orderdate) IN (1996, 1997)
+      GROUP BY o_custkey, yr
+    ),
+    web AS (
+      SELECT o_custkey, EXTRACT(year FROM o_orderdate) AS yr,
+             CAST(SUM({_ORD_CENTS}) AS BIGINT) AS cents
+      FROM orders
+      WHERE EXTRACT(year FROM o_orderdate) IN (1996, 1997)
+      GROUP BY o_custkey, yr
+    ),
+    sw AS (
+      SELECT o_custkey,
+             SUM(CASE WHEN yr = 1996 THEN cents END) AS s1,
+             SUM(CASE WHEN yr = 1997 THEN cents END) AS s2
+      FROM store GROUP BY o_custkey
+    ),
+    ww AS (
+      SELECT o_custkey,
+             SUM(CASE WHEN yr = 1996 THEN cents END) AS w1,
+             SUM(CASE WHEN yr = 1997 THEN cents END) AS w2
+      FROM web GROUP BY o_custkey
+    )
+    SELECT sw.o_custkey AS custkey, c_name,
+           ROUND(CAST(w2 AS DOUBLE) / w1, 8) AS web_growth,
+           ROUND(CAST(s2 AS DOUBLE) / s1, 8) AS store_growth
+    FROM sw JOIN ww ON sw.o_custkey = ww.o_custkey
+    JOIN customer ON c_custkey = sw.o_custkey
+    WHERE s1 > 0 AND w1 > 0 AND s2 IS NOT NULL AND w2 IS NOT NULL
+      AND CAST(w2 AS HUGEINT) * s1 > CAST(s2 AS HUGEINT) * w1
+    ORDER BY web_growth DESC, custkey
+    LIMIT 100
+    """,
+    tags=("tpcds", "year-total", "two-fact", "pivot"),
+)
+def ds_tpcds_q11_year_total_growth(spark, sf_dir):
+    """TPC-DS Q11/Q74: customers whose web-channel year_total grew
+    strictly faster than their store-channel year_total between two
+    years. The spec materializes FOUR year_total subqueries (channel ×
+    year, each scanning its fact end-to-end) and chains three customer-
+    grain self-joins; the Spark-first form computes ONE aggregate per
+    fact at (customer, year) grain and pivots the two year cells with
+    conditional sums — two fact scans total (the irreducible two-channel
+    minimum) instead of four, and one spine join instead of three.
+
+    Exactness: both year_totals are integer cents; the growth comparison
+    cross-multiplies (w2·s1 > s2·w1) with decimal(20,0) operands — the
+    cast holds every BIGINT (no silent NULL past 10¹⁸, the Q31 ADVICE
+    class) and the product is exact in decimal(38,0), HUGEINT in the
+    oracle. Reported growth ratios are single rounded doubles from the
+    same exact ints, so ORDER BY them is cross-engine stable (custkey
+    tiebreak).
+
+    Scale shape: year_total lives at CUSTOMER grain — at 100 TB that
+    relation is billions of rows, which is exactly why the four-subquery
+    spec form hurts (each self-join re-shuffles it). Here each fact
+    pre-aggregates map-side to (custkey, yr), pivots to one row per
+    customer (strictly fewer rows), and the two pivots join on the one
+    customer-hash exchange each; the customer DIM joins back only for
+    screen SURVIVORS (≤ the LIMIT after TakeOrdered at the driver's
+    pace, but expressed as a join so the optimizer may reorder — the
+    survivor relation is already ≪ dim size). Q74 is the same dataflow
+    with week-windowed totals; the year slice is the tested form.
+    Reference parity: CephRgwFileSystem.java:106-110 feeds the lake;
+    the engine layer is ours."""
+    li = t(spark, sf_dir, "lineitem").select(
+        "l_orderkey",
+        F.round(
+            F.col("l_extendedprice") * (1 - F.col("l_discount")) * 100.0
+        )
+        .cast("long")
+        .alias("cents"),
+    )
+    o = (
+        t(spark, sf_dir, "orders")
+        .filter(F.year("o_orderdate").isin(1996, 1997))
+        .select(
+            "o_orderkey",
+            "o_custkey",
+            F.year("o_orderdate").alias("yr"),
+            F.round(F.col("o_totalprice") * 100.0).cast("long").alias("ocents"),
+        )
+    )
+    store = (
+        li.join(o.select("o_orderkey", "o_custkey", "yr"), li.l_orderkey == o.o_orderkey)
+        .groupBy("o_custkey", "yr")
+        .agg(F.sum("cents").alias("cents"))
+    )
+    web = o.groupBy("o_custkey", "yr").agg(F.sum("ocents").alias("cents"))
+
+    def pivot(fact, p1, p2):
+        return fact.groupBy("o_custkey").agg(
+            F.sum(F.when(F.col("yr") == 1996, F.col("cents"))).alias(p1),
+            F.sum(F.when(F.col("yr") == 1997, F.col("cents"))).alias(p2),
+        )
+
+    sw = pivot(store, "s1", "s2")
+    ww = pivot(web, "w1", "w2")
+    grew = F.col("w2").cast(_DEC) * F.col("s1").cast(_DEC) > F.col("s2").cast(
+        _DEC
+    ) * F.col("w1").cast(_DEC)
+    surv = sw.join(ww, "o_custkey").filter(
+        (F.col("s1") > 0)
+        & (F.col("w1") > 0)
+        & F.col("s2").isNotNull()
+        & F.col("w2").isNotNull()
+        & grew
+    )
+    c = t(spark, sf_dir, "customer").select("c_custkey", "c_name")
+    return (
+        surv.join(c, surv.o_custkey == c.c_custkey)
+        .select(
+            F.col("o_custkey").alias("custkey"),
+            "c_name",
+            F.round(F.col("w2").cast("double") / F.col("w1"), 8).alias("web_growth"),
+            F.round(F.col("s2").cast("double") / F.col("s1"), 8).alias(
+                "store_growth"
+            ),
+        )
+        .orderBy(F.col("web_growth").desc(), "custkey")
+        .limit(100)
+    )
+
+
+_Q2_DOW_CASES = ",\n             ".join(
+    f"CAST(SUM(CASE WHEN dayofweek(d) + 1 = {i} THEN cents ELSE 0 END)"
+    f" AS BIGINT) AS d{i}"
+    for i in range(1, 8)
+)
+
+
+_Q2_RATIOS = ",\n           ".join(
+    f"CASE WHEN a.d{i} > 0 THEN ROUND(CAST(b.d{i} AS DOUBLE) / a.d{i}, 6) END"
+    f" AS dow{i}_ratio"
+    for i in range(1, 8)
+)
+
+
+@query(
+    "ds_tpcds_q2_week_spine_yoy",
+    oracle=f"""
+    WITH u AS (
+      SELECT l_shipdate AS d, {_REV_CENTS} AS cents FROM lineitem
+      UNION ALL
+      SELECT o_orderdate AS d, {_ORD_CENTS} AS cents FROM orders
+    ),
+    weekly AS (
+      SELECT EXTRACT(year FROM d) AS yr, EXTRACT(week FROM d) AS wk,
+             {_Q2_DOW_CASES}
+      FROM u
+      WHERE EXTRACT(year FROM d) IN (1997, 1998)
+        AND EXTRACT(week FROM d) <= 52
+      GROUP BY yr, wk
+    )
+    SELECT a.wk,
+           {_Q2_RATIOS}
+    FROM weekly a JOIN weekly b ON a.wk = b.wk AND a.yr = 1997 AND b.yr = 1998
+    ORDER BY a.wk
+    """,
+    tags=("tpcds", "week-spine", "union-facts", "wide-pivot"),
+)
+def ds_tpcds_q2_week_spine_yoy(spark, sf_dir):
+    """TPC-DS Q2: the week-of-year spine — two channels UNIONED before
+    aggregation (spec: web+catalog; here line-grain ship-dated lineitem
+    revenue + header-grain order revenue, two independent fact scans, no
+    join), one row per (year, week) with the seven weekday sums pivoted
+    WIDE via conditional aggregation, then the spine self-joined
+    year-over-year on the week key to report per-weekday growth ratios.
+
+    Exactness: weekday cells are integer cents (order-independent sums);
+    each reported ratio is ONE double division of exact ints, guarded
+    NULL when the base-year cell is zero (identical CASE in both
+    engines), rounded once. Week 53 excluded as in Q59 — it exists in
+    only some ISO years, so its YoY cell would be unmatched.
+
+    Scale shape: the union is scan-level concatenation (no shuffle);
+    the weekly aggregate map-side-combines into ≤ 52 8-column rows per
+    side, so the YoY self-join and everything after runs on a ≤52-row
+    relation — at 100 TB the entire cost is the fact scans feeding
+    partial aggregates, which is the floor. Catalyst pushes each spine
+    side's year filter THROUGH the aggregate into the scans (yr is a
+    grouping key), so each fact appears twice in the plan but each scan
+    reads ONLY its own year — total bytes = one two-year pass, with
+    partition/row-group pruning doing the split instead of an in-memory
+    tee (fact-scan counts pinned in test_plans). Reference parity:
+    CephRgwFileSystem.java:106-110 feeds the lake; the engine layer is
+    ours."""
+    li = t(spark, sf_dir, "lineitem").select(
+        F.col("l_shipdate").alias("d"),
+        F.round(
+            F.col("l_extendedprice") * (1 - F.col("l_discount")) * 100.0
+        )
+        .cast("long")
+        .alias("cents"),
+    )
+    o = t(spark, sf_dir, "orders").select(
+        F.col("o_orderdate").alias("d"),
+        F.round(F.col("o_totalprice") * 100.0).cast("long").alias("cents"),
+    )
+    u = li.unionByName(o)
+    weekly = (
+        u.withColumn("yr", F.year("d"))
+        .filter(F.col("yr").isin(1997, 1998))
+        .withColumn("wk", F.weekofyear("d"))
+        .filter(F.col("wk") <= 52)
+        .withColumn("dow", F.dayofweek("d"))
+        .groupBy("yr", "wk")
+        .agg(
+            *[
+                F.sum(
+                    F.when(F.col("dow") == i, F.col("cents")).otherwise(F.lit(0))
+                ).alias(f"d{i}")
+                for i in range(1, 8)
+            ]
+        )
+    )
+    a = weekly.filter(F.col("yr") == 1997).drop("yr")
+    b = weekly.filter(F.col("yr") == 1998).drop("yr")
+    bb = b.select(
+        F.col("wk").alias("wk2"), *[F.col(f"d{i}").alias(f"b{i}") for i in range(1, 8)]
+    )
+    ratios = [
+        F.when(
+            F.col(f"d{i}") > 0,
+            F.round(F.col(f"b{i}").cast("double") / F.col(f"d{i}"), 6),
+        ).alias(f"dow{i}_ratio")
+        for i in range(1, 8)
+    ]
+    return (
+        a.join(bb, a.wk == bb.wk2)
+        .select("wk", *ratios)
+        .orderBy("wk")
+    )
+
+
+_Q21_PIVOT = "1997-06-01"  # the date-shift pivot; window = pivot ± 30 days
+
+
+@query(
+    "ds_tpcds_q21_inventory_date_split",
+    oracle=f"""
+    WITH net AS (
+      SELECT l_suppkey,
+             CASE WHEN l_shipdate <  TIMESTAMP '{_Q21_PIVOT}'
+                  THEN CASE WHEN l_returnflag = 'R'
+                            THEN -CAST(ROUND(l_quantity) AS BIGINT)
+                            ELSE  CAST(ROUND(l_quantity) AS BIGINT) END
+                  ELSE 0 END AS q_before,
+             CASE WHEN l_shipdate >= TIMESTAMP '{_Q21_PIVOT}'
+                  THEN CASE WHEN l_returnflag = 'R'
+                            THEN -CAST(ROUND(l_quantity) AS BIGINT)
+                            ELSE  CAST(ROUND(l_quantity) AS BIGINT) END
+                  ELSE 0 END AS q_after
+      FROM lineitem
+      WHERE l_shipdate >= TIMESTAMP '{_Q21_PIVOT}' - INTERVAL 30 DAY
+        AND l_shipdate <  TIMESTAMP '{_Q21_PIVOT}' + INTERVAL 30 DAY
+    ),
+    g AS (
+      SELECT l_suppkey,
+             CAST(SUM(q_before) AS BIGINT) AS inv_before,
+             CAST(SUM(q_after) AS BIGINT) AS inv_after
+      FROM net GROUP BY l_suppkey
+    )
+    SELECT s_name, inv_before, inv_after,
+           ROUND(CAST(inv_after AS DOUBLE) / inv_before, 6) AS shift_ratio
+    FROM g JOIN supplier ON s_suppkey = l_suppkey
+    WHERE inv_before > 0 AND inv_after > 0
+      AND 2 * inv_after <= 3 * inv_before
+      AND 2 * inv_before <= 3 * inv_after
+    ORDER BY s_name
+    """,
+    tags=("tpcds", "date-split", "band-gate", "returns-net"),
+)
+def ds_tpcds_q21_inventory_date_split(spark, sf_dir):
+    """TPC-DS Q21/Q40: the date-shifted inventory split — per warehouse
+    (supplier here; the spec's (warehouse, item) grain is adapted UP one
+    level because the fixture's item×60-day cells are too sparse to
+    exercise the band at any test SF — the SHAPE under test is the
+    date-shifted conditional split + band gate, which is grain-blind),
+    net movement in the 30 days BEFORE a pivot date vs the 30 days
+    after, keeping cells whose after/before ratio stays inside the
+    [2/3, 3/2] band (the spec's stability screen around a price-change
+    date). Q40's refinement is folded in: returned units
+    (l_returnflag = 'R') count NEGATIVE, so both windows measure net
+    movement, not gross.
+
+    Exactness: quantities are exact per-row integers (round-then-sum,
+    order-independent); the band gate is pure integer cross-multiplied
+    arithmetic (2·after ≤ 3·before ∧ 2·before ≤ 3·after — no division
+    feeds a predicate; BIGINT is ample: net units per cell < 10¹⁴ at
+    100 TB and the 3× product stays < 2⁶³); the reported ratio is one
+    rounded double from the same exact ints.
+
+    Scale shape: ONE fact scan (pinned in test_plans) with the 60-day
+    date window pushed into the parquet scan (PushedFilters — at 100 TB
+    with date-partitioned layout this is partition pruning, reading 60
+    days of a multi-year fact); conditional sums collapse to warehouse
+    grain map-side; the band gate filters the aggregated relation; only
+    SURVIVORS join the supplier dim (bounded, broadcastable — at the
+    spec's (warehouse, item) grain the same plan holds with a wider
+    groupBy key). Reference parity: CephRgwFileSystem.java:106-110
+    feeds the lake; the engine layer is ours."""
+    pivot = F.lit(_Q21_PIVOT).cast("timestamp")
+    lo = F.date_sub(pivot, 30).cast("timestamp")
+    hi = F.date_add(pivot, 30).cast("timestamp")
+    qty = F.round("l_quantity").cast("long")
+    signed = F.when(F.col("l_returnflag") == "R", -qty).otherwise(qty)
+    g = (
+        t(spark, sf_dir, "lineitem")
+        .filter((F.col("l_shipdate") >= lo) & (F.col("l_shipdate") < hi))
+        .groupBy("l_suppkey")
+        .agg(
+            F.sum(F.when(F.col("l_shipdate") < pivot, signed).otherwise(F.lit(0)))
+            .cast("long")
+            .alias("inv_before"),
+            F.sum(F.when(F.col("l_shipdate") >= pivot, signed).otherwise(F.lit(0)))
+            .cast("long")
+            .alias("inv_after"),
+        )
+        .filter(
+            (F.col("inv_before") > 0)
+            & (F.col("inv_after") > 0)
+            & (2 * F.col("inv_after") <= 3 * F.col("inv_before"))
+            & (2 * F.col("inv_before") <= 3 * F.col("inv_after"))
+        )
+    )
+    s = t(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
+    return (
+        g.join(s, g.l_suppkey == s.s_suppkey)
+        .select(
+            "s_name",
+            "inv_before",
+            "inv_after",
+            F.round(
+                F.col("inv_after").cast("double") / F.col("inv_before"), 6
+            ).alias("shift_ratio"),
+        )
+        .orderBy("s_name")
+    )
+
+
+@query(
+    "ds_tpcds_q9_quantity_buckets",
+    oracle="""
+    WITH b AS (
+      SELECT CAST(FLOOR((l_quantity - 1) / 10) AS BIGINT) AS bucket,
+             CAST(COUNT(*) AS BIGINT) AS n_lines,
+             CAST(SUM(CAST(ROUND(l_extendedprice * 100.0) AS BIGINT)) AS BIGINT)
+               AS price_cents,
+             CAST(SUM(CAST(ROUND(l_discount * 100.0) AS BIGINT)) AS BIGINT)
+               AS disc_pct
+      FROM lineitem GROUP BY 1
+    ),
+    w AS (
+      SELECT bucket, n_lines, price_cents, disc_pct,
+             CAST(SUM(n_lines) OVER () AS BIGINT) AS total
+      FROM b
+    )
+    SELECT bucket, n_lines,
+           CASE WHEN 5 * n_lines > total
+                THEN 'high_volume' ELSE 'low_volume' END AS branch,
+           CASE WHEN 5 * n_lines > total
+                THEN price_cents / n_lines
+                ELSE disc_pct / n_lines END AS chosen_avg
+    FROM w ORDER BY bucket
+    """,
+    tags=("analytics", "tpcds", "conditional-aggregation", "single-scan"),
+)
+def ds_tpcds_q9_quantity_buckets(spark, sf_dir):
+    """TPC-DS Q9 (quantity-band conditional averages), fixture-adapted:
+    the spec runs FIFTEEN scalar subqueries — five ss_quantity bands,
+    each scanning store_sales three times (count, avg A, avg B) — and a
+    CASE per band picks which average to report by comparing the count
+    to a literal threshold. Rewritten as the single-scan form: ONE
+    conditional-aggregation pass grouped by the derived decade bucket
+    of l_quantity computes every band's count and BOTH candidate sums
+    (extended-price cents / discount points), and the per-band CASE
+    picks between the two exact-integer averages afterward. The spec's
+    literal count thresholds are replaced by the scale-free
+    above-average-density gate 5·n_lines > total (integer
+    cross-multiply — exact in both engines at any SF, and non-vacuous
+    at every fixture SF: the mid-quantity decades sit above the mean,
+    the first and last below it).
+
+    Scale shape: 15 fact scans become ONE (pinned in
+    test_fact_scan_count_pinned); the aggregate partial-merges
+    map-side onto a 5-value key, so the shuffle is five rows of three
+    integers; the total is a window over that 5-row relation
+    (allowlisted — the Q14 cross-channel precedent: a gate broadcast
+    whose input re-derived the total would re-execute the fact
+    aggregate, the window reuses it); averages are raw divisions of
+    exact integers (bit-identical cross-engine, no rounding step).
+    Spec parity: TPC-DS Q9 (store_sales → lineitem, ss_quantity bands
+    1-20..81-100 → l_quantity decades 1-10..41-50, the reason-table
+    one-row vehicle dropped — the band rows ARE the report)."""
+    from pyspark.sql import Window
+
+    li = t(spark, sf_dir, "lineitem")
+    b = li.groupBy(
+        F.floor((F.col("l_quantity") - 1) / 10).cast("long").alias("bucket")
+    ).agg(
+        F.count(F.lit(1)).alias("n_lines"),
+        F.sum(F.round(F.col("l_extendedprice") * 100.0).cast("long"))
+        .cast("long")
+        .alias("price_cents"),
+        F.sum(F.round(F.col("l_discount") * 100.0).cast("long"))
+        .cast("long")
+        .alias("disc_pct"),
+    )
+    w = b.withColumn(
+        "total", F.sum("n_lines").over(Window.partitionBy()).cast("long")
+    )
+    hi = 5 * F.col("n_lines") > F.col("total")
+    return (
+        w.select(
+            "bucket",
+            "n_lines",
+            F.when(hi, "high_volume").otherwise("low_volume").alias("branch"),
+            F.when(hi, F.col("price_cents") / F.col("n_lines"))
+            .otherwise(F.col("disc_pct") / F.col("n_lines"))
+            .alias("chosen_avg"),
+        )
+        .orderBy("bucket")
+    )

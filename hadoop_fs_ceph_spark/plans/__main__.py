@@ -106,6 +106,11 @@ def main() -> None:
             print(f"{name}: ERROR {e}")
             flagged += 1
             continue
+        finally:
+            # a query may persist() an intermediate that a later query
+            # plans as an InMemoryRelation; drop it so each query is
+            # audited as it plans alone, whatever ran before
+            spark.catalog.clearCache()
         print(line)
         for p in real:
             print(f"  !! {p}")

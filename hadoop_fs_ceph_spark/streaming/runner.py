@@ -13,10 +13,10 @@ import os
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from hadoop_fs_ceph_spark import scratch
-from hadoop_fs_ceph_spark.sources.readers import read_parquet, relation_bytes
+from hadoop_fs_ceph_spark.sources.readers import relation_bytes
+from hadoop_fs_ceph_spark.tables import events_ts, read_events
 
 # --- streaming-state audit capture ------------------------------------------
 # When the scale-audit CLI (plans/__main__.py --all) audits a streaming
@@ -48,15 +48,11 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Schema comes from a batch read (streaming file sources require an
     explicit schema — inference would be an extra full pass at scale).
-    ``ts`` is normalized to a zoned TIMESTAMP exactly like the batch path
-    in ``tables.t`` — handles both the old NANOS-as-long fixtures and the
-    current TIMESTAMP(MICROS) no-tz fixtures (Spark 4 reads the latter as
-    TIMESTAMP_NTZ, which ``withWatermark`` rejects).
+    ``ts`` follows the batch path's rules (``tables.read_events``,
+    ``tables.events_ts``).
     """
     path = os.path.join(sf_dir, "events.parquet")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    raw_schema = read_parquet(spark, path).schema
+    raw_schema = read_events(spark, path).schema
     if os.path.isdir(path):
         # Spark-written layout (e.g. the soak replicas): events.parquet is
         # a DIRECTORY of part files — stream it directly; the glob filter
@@ -71,12 +67,7 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             .option("pathGlobFilter", "events.parquet")
             .parquet(sf_dir)
         )
-    ts_dtype = dict(stream.dtypes).get("ts")
-    if ts_dtype == "bigint":
-        stream = stream.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-    elif ts_dtype == "timestamp_ntz":
-        stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
-    return stream
+    return events_ts(spark, stream)
 
 
 def stream_state_width(sf_dir: str, table: str = "events") -> int:

@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import os
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -32,31 +33,51 @@ def dim(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one driver table (parquet) from the scale-factor directory.
 
-    ``events.ts`` has shipped in two parquet physical types across fixture
-    generations: TIMESTAMP(NANOS) (read as raw nanos via ``nanosAsLong`` and
-    floored to µs) and TIMESTAMP(MICROS) without timezone (Spark 4 infers
-    ``TIMESTAMP_NTZ``). Either way we normalize to a zoned ``TIMESTAMP`` so
-    ``unix_micros()`` / ``withWatermark()`` accept it; the session timezone is
-    pinned UTC so the NTZ→LTZ cast is the identity wall-clock mapping and both
-    engines (Spark, DuckDB) see identical µs timestamps.
-
     The schema is resolved once per file listing (``read_parquet``): a
-    repeat load runs no Spark job. The ``events`` confs are set before the
-    read so ``nanosAsLong`` is part of the cache key; they stay here rather
-    than in ``get_spark`` because the external driver calls
-    ``__spark_entry__.entry`` on a session it built itself.
+    repeat load runs no Spark job. ``events`` goes through ``read_events``
+    and ``events_ts``.
     """
     path = os.path.join(sf_dir, f"{name}.parquet")
     if name == "events":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        # Pin the session to UTC so ts rendering matches DuckDB regardless of
-        # how the consuming session was built (all other tables have no ts).
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
-        df = read_parquet(spark, path)
-        ts_dtype = dict(df.dtypes).get("ts")
-        if ts_dtype == "bigint":  # old fixtures: nanos-as-long
-            df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-        elif ts_dtype == "timestamp_ntz":  # current fixtures: µs no-tz
-            df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-        return df
+        return events_ts(spark, read_events(spark, path))
     return read_parquet(spark, path)
+
+
+def read_events(spark: SparkSession, path: str) -> DataFrame:
+    """``read_parquet`` of an ``events`` table, raw ``ts`` included.
+
+    The fixtures store ``ts`` as TIMESTAMP(MICROS), which reads under any
+    session conf. A file written by pandas stores TIMESTAMP(NANOS), which
+    Spark reads only under ``nanosAsLong`` (as raw nanos). Only such a file
+    makes this set that conf, and on the session: the scan reads the file
+    again when the query runs.
+    """
+    try:
+        return read_parquet(spark, path)
+    except AnalysisException as e:
+        if e.getCondition() != "PARQUET_TYPE_ILLEGAL":
+            raise
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    return read_parquet(spark, path)
+
+
+def events_ts(spark: SparkSession, df: DataFrame) -> DataFrame:
+    """The ``events.ts`` rules, for the batch (``t``) and the stream
+    (``streaming.events_stream``) alike.
+
+    ``ts`` becomes a zoned ``TIMESTAMP`` so ``unix_micros()`` /
+    ``withWatermark()`` accept it: TIMESTAMP(MICROS) without timezone,
+    which Spark 4 infers as ``TIMESTAMP_NTZ``, is cast; raw nanos
+    (``read_events``) are floored to µs. The session timezone is pinned to
+    UTC first, so the NTZ→LTZ cast is the identity wall-clock mapping and
+    both engines (Spark, DuckDB) see identical µs timestamps. The pin stays
+    here rather than in ``get_spark`` because the external driver calls
+    ``__spark_entry__.entry`` on a session it built itself.
+    """
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    ts_dtype = dict(df.dtypes).get("ts")
+    if ts_dtype == "bigint":
+        return df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
+    if ts_dtype == "timestamp_ntz":
+        return df.withColumn("ts", F.col("ts").cast("timestamp"))
+    return df

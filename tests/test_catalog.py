@@ -56,3 +56,14 @@ def test_table_files_metadata(cat, sf_dir):
     for r in rows:
         assert r.file_size > 0
         assert r.file_name.endswith(".parquet")
+
+
+def test_mount_discovers_tables_through_storage_layer(spark, sf_dir, monkeypatch):
+    """Tables are found through the Hadoop ``FileSystem`` listing, so a
+    root that ``os`` cannot see (``s3a://``, ``viewfs://``) mounts too."""
+
+    def refuse(*args, **kwargs):
+        raise AssertionError("discovered through os, not the storage layer")
+
+    monkeypatch.setattr(os.path, "exists", refuse)
+    assert Catalog(spark, sf_dir).list_tables() == sorted(TESTDATA_TABLES)

@@ -188,3 +188,27 @@ def test_engine_scratch_paths_come_from_scratch_module():
         if pat.search(line)
     ]
     assert not offenders, offenders
+
+
+def test_operator_modules_are_named_for_their_family():
+    """Each operator module is named for the family it holds, never for the
+    round that added it (a name ending in a digit, ``_suite`` or
+    ``_lite``): the TPC-H, TPC-DS and function waves once sat in twelve
+    such modules. ``analytics_suite`` is the analytics family's own name.
+    And every module that declares ``@query`` is imported by
+    ``operators/__init__.py``: a forgotten import leaves its queries
+    silently absent from ``load_all()``."""
+    ops = REPO / "hadoop_fs_ceph_spark" / "operators"
+    modules = sorted(p for p in ops.glob("*.py") if p.stem != "__init__")
+    round_named = [
+        p.name
+        for p in modules
+        if re.search(r"(\d|_suite|_lite)$", p.stem) and p.stem != "analytics_suite"
+    ]
+    assert not round_named, f"operator modules named after a round: {round_named}"
+    registered = {s.fn.__module__.rsplit(".", 1)[-1] for s in load_all().values()}
+    declaring = {p.stem for p in modules if "@query(" in p.read_text(encoding="utf-8")}
+    assert declaring <= registered, (
+        f"modules declare @query but none of their queries is in load_all() "
+        f"(missing import in operators/__init__.py?): {sorted(declaring - registered)}"
+    )

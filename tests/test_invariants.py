@@ -3147,8 +3147,7 @@ def test_tier6_q49_two_phase_equals_naive_global_window(spark, sf_dir):
 
     out = load_all()["ds_tpcds_q49_worst_returns"].fn(spark, sf_dir)
     # naive re-derivation from the same grain the operator aggregates
-    from hadoop_fs_ceph_spark.operators.tpcds_suite import _channel_col, _rev_col
-    from hadoop_fs_ceph_spark.operators.tpcds_suite4 import _Q49_TOPK
+    from hadoop_fs_ceph_spark.operators.tpcds import _Q49_TOPK, _channel_col, _rev_col
 
     li = t(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_partkey", "l_quantity", "l_returnflag",
@@ -3205,7 +3204,7 @@ def test_tier6_q49_rank_lists_bounded_and_dense(spark, sf_dir):
     row) would leave a gap here."""
     from collections import defaultdict
 
-    from hadoop_fs_ceph_spark.operators.tpcds_suite4 import _Q49_TOPK
+    from hadoop_fs_ceph_spark.operators.tpcds import _Q49_TOPK
 
     rows = load_all()["ds_tpcds_q49_worst_returns"].fn(spark, sf_dir).collect()
     assert rows
@@ -3472,7 +3471,7 @@ def test_tier6_q49_candidates_bounded_at_cluster_posture(spark, sf_dir):
     with spark.sql.shuffle.partitions=200 (the 1000-executor planner
     shape). The candidate count must also never undercut the final
     survivor count (containment)."""
-    from hadoop_fs_ceph_spark.operators.tpcds_suite4 import (
+    from hadoop_fs_ceph_spark.operators.tpcds import (
         _Q49_TOPK,
         _q49_candidates,
         _q49_grain,

@@ -652,3 +652,28 @@ def test_quantile_refine_plan_stays_truncated(spark, sf_dir, name, max_exchanges
         f"{name}: {n} Exchange nodes — the refinement state subtree is "
         "duplicating across passes again (missing localCheckpoint barrier?)"
     )
+
+
+def test_plans_cli_audits_each_query_on_a_clean_cache(spark, sf_dir, monkeypatch, capsys):
+    """``python -m hadoop_fs_ceph_spark.plans`` prints the same line for a
+    query whatever it audited before. ``agg_exact_median_nosort`` persists
+    the per-customer cents relation that ``agg_gini_concentration`` also
+    builds; left cached, the second query plans against it and its line
+    changes with the list it was audited in."""
+    import sys
+
+    import hadoop_fs_ceph_spark.plans.__main__ as cli
+
+    monkeypatch.setattr(cli, "get_spark", lambda *args, **kwargs: spark)
+
+    def audit(*names):
+        spark.catalog.clearCache()
+        monkeypatch.setattr(sys, "argv", ["plans", *names, sf_dir])
+        with pytest.raises(SystemExit):
+            cli.main()
+        out = capsys.readouterr().out.splitlines()
+        return [ln for ln in out if ln.startswith("agg_gini_concentration:")]
+
+    alone = audit("agg_gini_concentration")
+    assert alone
+    assert audit("agg_exact_median_nosort", "agg_gini_concentration") == alone

@@ -87,7 +87,7 @@ def test_child_q14_layout_build_leaves_parent_layout_intact(spark, sf_dir):
         """
         import sys
         from hadoop_fs_ceph_spark import scratch
-        from hadoop_fs_ceph_spark.operators.tpcds_suite4 import ensure_q14_layout
+        from hadoop_fs_ceph_spark.operators.tpcds import ensure_q14_layout
         from hadoop_fs_ceph_spark.session import get_spark
 
         spark = get_spark("q14-layout-child", master="local[2]",

@@ -15,7 +15,7 @@ from pyspark.errors import AnalysisException
 from hadoop_fs_ceph_spark.sources import readers
 from hadoop_fs_ceph_spark.operators.similarity import _spc_slices
 from hadoop_fs_ceph_spark.sources.readers import read_parquet, relation_bytes
-from hadoop_fs_ceph_spark.streaming import stream_state_width
+from hadoop_fs_ceph_spark.streaming import events_stream, stream_state_width
 from hadoop_fs_ceph_spark.tables import t
 
 _groups = itertools.count()
@@ -158,3 +158,18 @@ def test_relation_bytes_sizes_without_os(spark, sf_dir, tmp_path, monkeypatch):
     assert stream_state_width(str(tmp_path)) == 9
     with pytest.raises(FileNotFoundError):
         relation_bytes(spark, str(tmp_path / "missing.parquet"))
+
+
+def test_events_load_keeps_caller_nanos_conf_and_types_ts_alike(spark, sf_dir):
+    """Loading the fixture ``events`` (batch or stream) leaves the caller's
+    ``nanosAsLong`` as it was: it is a schema-cache key, so flipping it
+    would re-infer every table read after. Both paths read ``ts`` as the
+    same zoned TIMESTAMP."""
+    from bench import confs
+
+    key = "spark.sql.legacy.parquet.nanosAsLong"
+    with confs(spark, {key: "false"}):
+        batch = t(spark, sf_dir, "events")
+        stream = events_stream(spark, sf_dir)
+        assert spark.conf.get(key) == "false"
+    assert dict(batch.dtypes)["ts"] == dict(stream.dtypes)["ts"] == "timestamp"

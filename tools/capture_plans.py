@@ -33,7 +33,7 @@ def main() -> None:
     os.makedirs(out_dir, exist_ok=True)
     spark = get_spark("capture-plans", driver_memory="24g")
     spark.sparkContext.setLogLevel("ERROR")
-    from hadoop_fs_ceph_spark.operators.tpcds_suite4 import ensure_q14_layout
+    from hadoop_fs_ceph_spark.operators.tpcds import ensure_q14_layout
 
     ensure_q14_layout(spark, sf_dir)
     for name in names:
