@@ -31,7 +31,8 @@ shows up as a blow-up here). Results splice into ``SCALE.md``.
 sf×1 and an sf×N dataset the same way (N = $SPARK_GRAFT_SOAK_REPLICAS,
 default 10; ×100 ≈ sf10 is the deep tier, see ``_build_soak_tables``), so
 the two differ in scale alone, runs every headline query at BOTH scales
-recording wall-clock and shuffle read/write bytes, and splices the
+(two passes each, alternating 1x, Nx, 1x, Nx) recording wall-clock and
+shuffle read/write bytes, and splices the
 per-query table into ``SCALE.md``'s SOAK{N} section.
 
 ``python bench.py --skew`` runs the HOT-KEY rehearsal: the headline suite
@@ -58,7 +59,7 @@ from dataclasses import dataclass
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from hadoop_fs_ceph_spark.registry import load_all
-from hadoop_fs_ceph_spark.session import get_spark
+from hadoop_fs_ceph_spark.session import _cpus, get_spark
 from hadoop_fs_ceph_spark.tables import DEFAULT_SF_DIR
 from perfbench.probes import StageCounters, StageProbe
 
@@ -597,6 +598,46 @@ def _build_soak_tables(spark, src_dir: str, dst_dir: str, replicas: int) -> None
         out.write.mode("overwrite").parquet(f"{dst_dir}/{name}.parquet")
 
 
+def soak_labels(base_dir: str, replicas: int) -> tuple[str, str]:
+    """Names of the soak's two tiers: the data dir's basename (``sf0.01``)
+    and, for a ``sf<scale>`` name, the scale its replicas add up to
+    (``sf0.02-equivalent`` at 2 replicas)."""
+    small = os.path.basename(os.path.normpath(base_dir))
+    m = re.fullmatch(r"sf(\d+(?:\.\d+)?)", small)
+    if m is None:
+        return small, f"{small} x{replicas}"
+    return small, f"sf{float(m.group(1)) * replicas:g}-equivalent"
+
+
+def soak_header(base_dir: str, replicas: int, cores: int, build_sec: float) -> list[str]:
+    """The SCALE.md soak section down to its table header, labelled with
+    the data dir's scale and the ``local[cores]`` master the run used."""
+    small, big = soak_labels(base_dir, replicas)
+    return [
+        f"## Measured soak: {small} -> {replicas}x ({big})",
+        "",
+        f"Data: `{base_dir}` × {replicas} replicas, re-keyed per replica "
+        f"(`bench.py::_build_soak_tables` — referential integrity holds within "
+        f"each replica; documents/embeddings are content-decorrelated across "
+        f"replicas so duplicate DENSITY stays constant, which is how real "
+        f"corpora scale; build took {build_sec}s). The {small} tier is the same "
+        f"builder at 1 replica, so both tiers share a file layout. Every "
+        f"headline query ran at both scales on the same session "
+        f"(local[{cores}], tiers timed alternately 1x, {replicas}x, 1x, "
+        f"{replicas}x, min wall of each tier's 2 passes; shuffle bytes diffed "
+        f"from the Spark AppStatusStore around each tier's first pass).",
+        "",
+        "Verdict `linear` = wall-clock ratio <= replicas × 1.5 (slack for "
+        "host-contention bursts) or big-scale wall < 2 s (fixed scheduling "
+        "cost dominates). A `SUPERLINEAR` row means the plan does NOT "
+        "survive the decade and must be fixed.",
+        "",
+        f"| query | wall {small} (s) | wall {big} (s) | ratio | shufW {small} | "
+        f"shufW {big} | shufW ratio | verdict |",
+        "|---|---|---|---|---|---|---|---|",
+    ]
+
+
 def soak_main() -> None:
     import shutil
     import tempfile
@@ -613,14 +654,21 @@ def soak_main() -> None:
         _build_soak_tables(spark, base_dir, soak_dir, replicas)
         build_sec = round(time.perf_counter() - t0, 1)
 
-        def run_suite(sf_dir: str) -> dict[str, dict[str, float]]:
-            # owned layouts are built once per data dir, outside the
-            # timed passes (a deployment pays them per generation)
-            _prebuild_layouts(spark, sf_dir)
-            # wall = min of two passes (damps host-contention bursts);
-            # shuffle bytes from pass 1 (they are deterministic)
-            first = dict(suite(spark, bench_specs, sf_dir))
-            second = dict(suite(spark, bench_specs, sf_dir))
+        # owned layouts are built once per data dir, outside the timed
+        # passes (a deployment pays them per generation)
+        warm_up(spark, bench_specs, small_dir)
+        _prebuild_layouts(spark, soak_dir)
+        # tiers alternate (1x, Nx, 1x, Nx) and each keeps the min wall of
+        # its two passes, so neither tier owns the session's cold start and
+        # a host-contention burst hits one pass, not one tier; shuffle bytes
+        # come from each tier's first pass (they are deterministic)
+        passes: dict[str, list[dict]] = {small_dir: [], soak_dir: []}
+        for _ in range(2):
+            for sf_dir in (small_dir, soak_dir):
+                passes[sf_dir].append(dict(suite(spark, bench_specs, sf_dir)))
+
+        def tier(sf_dir: str) -> dict[str, dict[str, float]]:
+            first, second = passes[sf_dir]
             return {
                 n: {
                     "wall": round(min(first[n].wall, second[n].wall), 3),
@@ -630,10 +678,7 @@ def soak_main() -> None:
                 for n in bench_specs
             }
 
-        # the first timed suite must not pay JVM warm-up the second does not
-        warm_up(spark, bench_specs, small_dir)
-        small = run_suite(small_dir)
-        big = run_suite(soak_dir)
+        small, big = tier(small_dir), tier(soak_dir)
     finally:
         shutil.rmtree(small_dir, ignore_errors=True)
         shutil.rmtree(soak_dir, ignore_errors=True)
@@ -651,28 +696,8 @@ def soak_main() -> None:
         ok = wall_ratio <= replicas * 1.5 or b["wall"] < 2.0
         rows.append((name, s, b, wall_ratio, sw_ratio, ok))
 
-    md = [
-        f"## Measured soak: sf0.1 -> {replicas}x (sf{replicas / 10:g}-equivalent)",
-        "",
-        f"Data: `{base_dir}` × {replicas} replicas, re-keyed per replica "
-        f"(`bench.py::_build_soak_tables` — referential integrity holds within "
-        f"each replica; documents/embeddings are content-decorrelated across "
-        f"replicas so duplicate DENSITY stays constant, which is how real "
-        f"corpora scale; build took {build_sec}s). The sf0.1 tier is the same "
-        f"builder at 1 replica, so both tiers share a file layout. Every "
-        f"headline query ran at "
-        "both scales on the same session (local[32], min wall of 2 passes; "
-        "shuffle bytes diffed from the Spark AppStatusStore around pass 1).",
-        "",
-        "Verdict `linear` = wall-clock ratio <= replicas × 1.5 (slack for "
-        "host-contention bursts) or big-scale wall < 2 s (fixed scheduling "
-        "cost dominates). A `SUPERLINEAR` row means the plan does NOT "
-        "survive the decade and must be fixed.",
-        "",
-        "| query | wall sf0.1 (s) | wall sf1 (s) | ratio | shufW sf0.1 | "
-        "shufW sf1 | shufW ratio | verdict |",
-        "|---|---|---|---|---|---|---|---|",
-    ]
+    md = soak_header(base_dir, replicas, _cpus(), build_sec)
+    small_label, big_label = soak_labels(base_dir, replicas)
 
     def _mb(n: float) -> str:
         return f"{n / 1048576:.1f} MiB" if n >= 1048576 else f"{n / 1024:.0f} KiB"
@@ -694,13 +719,13 @@ def soak_main() -> None:
     tot_b = sum(b["wall"] for _, _, b, _, _, _ in rows)
     md += [
         "",
-        f"**Totals:** sf0.1 = {tot_s:.1f}s, sf1-equivalent = {tot_b:.1f}s "
+        f"**Totals:** {small_label} = {tot_s:.1f}s, {big_label} = {tot_b:.1f}s "
         f"(ratio {tot_b / tot_s:.1f}x over {replicas}x data, "
         f"{sum(1 for r in rows if not r[5])} superlinear).",
         "",
         "Shuffle-bytes ratios above the data ratio are expected only where "
-        "the sf0.1 baseline was beneath broadcast/local thresholds; wall "
-        "ratios are the gate.",
+        f"the {small_label} baseline was beneath broadcast/local thresholds; "
+        "wall ratios are the gate.",
     ]
     _splice_scale_section(f"SOAK{replicas}", md)
 

@@ -28,10 +28,8 @@ def plan_of(df: DataFrame, mode: str = "formatted", execute: bool = False) -> st
     if execute:
         df.collect()
         return df._jdf.queryExecution().executedPlan().toString()
-    jvm = df.sparkSession._jvm
-    return df._jdf.queryExecution().explainString(
-        jvm.org.apache.spark.sql.execution.ExplainMode.fromString(mode)
-    )
+    explain_mode = getattr(df.sparkSession._jvm, "org.apache.spark.sql.execution.ExplainMode")
+    return df._jdf.queryExecution().explainString(explain_mode.fromString(mode))
 
 
 def scan_info(plan: str) -> list[dict[str, str]]:

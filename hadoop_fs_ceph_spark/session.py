@@ -30,6 +30,33 @@ generator is first used, and refuses to set it on a running session. So it
 only takes effect on a session ``get_spark`` creates in a new JVM. A
 session built elsewhere, such as the one an external driver passes to
 ``__spark_entry__.entry(spark)``, keeps Spark's default of 100.
+
+Two pins cut the driver-side cost of building and starting every query;
+``extra_conf`` overrides either one (it is applied after them):
+
+- ``spark.python.sql.dataFrameDebugging.enabled=false``. With it on,
+  PySpark wraps every column function (``F.col``, ``F.sum``, ...; about 26
+  per lake benchmark head) so that it walks the Python stack and sends the
+  call site to the JVM, about 8 py4j round trips per call. Switched off, a
+  runtime error still names the failing expression, but no longer the
+  Python line that built it. Pass
+  ``extra_conf={"spark.python.sql.dataFrameDebugging.enabled": "true"}``
+  to get the lines back. PySpark reads the flag once per process, the first
+  time a wrapped function runs with an active session, and keeps that
+  value: set it before the first DataFrame is built, not on a running
+  session.
+- ``spark.sql.ui.explainMode=simple``. Spark renders a plan description at
+  every SQL execution start and at every adaptive re-plan, for the UI and
+  the event log, whether or not a UI runs. The default *formatted* mode
+  numbers every operator, prints the tree and then a detail block per
+  operator; ``simple`` prints the tree alone. Nothing in the engine reads
+  the description (``plans.inspect.plan_of`` passes its own mode). A
+  deployment that reads plans in the Spark UI or the history server can
+  pass ``extra_conf={"spark.sql.ui.explainMode": "formatted"}``.
+
+JVM classes are looked up in one step, ``getattr(jvm, "org.x.Y")``: an
+attribute chain from ``jvm`` makes one py4j round trip per name, and each
+of them is a failed class load across the whole classpath.
 """
 
 from __future__ import annotations
@@ -57,7 +84,7 @@ def codegen_compiles(spark: SparkSession) -> int:
     """Classes Janino has compiled in this JVM so far (Spark's
     ``CodegenMetrics`` compile count); a class served from the cache adds
     nothing."""
-    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    metrics = getattr(spark._jvm, "org.apache.spark.metrics.source.CodegenMetrics")
     return metrics.METRIC_COMPILATION_TIME().getCount()
 
 
@@ -167,6 +194,9 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.sql.streaming.schemaInference", "true")
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_MAX_ENTRIES))
+        # the two driver-cost pins of the module docstring
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        .config("spark.sql.ui.explainMode", "simple")
     )
     for k, v in (storage_conf or {}).items():
         builder = builder.config(f"spark.hadoop.{k}", v)

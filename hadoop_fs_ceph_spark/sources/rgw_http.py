@@ -650,7 +650,7 @@ def probe_s3a_loadable(spark) -> bool:
     the pyspark wheel). The waiver test pins this so the day the class
     appears, the real ``s3a://`` round-trip must replace the loopback."""
     try:
-        spark._jvm.java.lang.Class.forName("org.apache.hadoop.fs.s3a.S3AFileSystem")
+        getattr(spark._jvm, "java.lang.Class").forName("org.apache.hadoop.fs.s3a.S3AFileSystem")
         return True
     except Exception:
         return False

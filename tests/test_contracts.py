@@ -212,3 +212,20 @@ def test_operator_modules_are_named_for_their_family():
         f"modules declare @query but none of their queries is in load_all() "
         f"(missing import in operators/__init__.py?): {sorted(declaring - registered)}"
     )
+
+
+def test_jvm_classes_are_looked_up_in_one_step():
+    """Package code names a JVM class in one lookup,
+    ``getattr(jvm, "org.apache.hadoop.fs.Path")``, never as an attribute
+    chain ``jvm.org.apache.hadoop.fs.Path``: py4j resolves a chain one name
+    at a time, one round trip each, and every step is a failed class load
+    across the whole classpath (about 2 ms of JVM CPU per chain)."""
+    pkg = REPO / "hadoop_fs_ceph_spark"
+    pat = re.compile(r"jvm\.(org|java|javax|scala|com|py4j)\.")
+    offenders = [
+        f"{p.relative_to(REPO)}:{i}"
+        for p in sorted(pkg.rglob("*.py"))
+        for i, line in enumerate(p.read_text(encoding="utf-8").splitlines(), 1)
+        if pat.search(line)
+    ]
+    assert not offenders, offenders

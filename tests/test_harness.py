@@ -1,7 +1,7 @@
 """The shared measured-run pieces of bench.py and tools/time_heads.py:
 the conf context manager, the suite loop's per-head stage counters, the
-``--all`` sweep's skip records and ``--conf`` for confs a live session
-refuses."""
+``--all`` sweep's skip records, ``--conf`` for confs a live session
+refuses, and the labels of the soak section bench.py splices."""
 
 import os
 import subprocess
@@ -13,7 +13,7 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
 sys.path.insert(0, os.path.join(ROOT, "tools"))
 
-from bench import confs, run, suite  # noqa: E402
+from bench import confs, run, soak_header, soak_labels, suite  # noqa: E402
 from hadoop_fs_ceph_spark.registry import load_all  # noqa: E402
 from time_heads import time_heads  # noqa: E402
 
@@ -122,3 +122,14 @@ def test_time_heads_conf_reaches_core_confs(sf_dir):
     lines = proc.stdout.splitlines()
     assert "conf spark.ui.retainedStages=50" in lines
     assert '"q6_forecast_revenue"' in lines[-1]
+
+
+def test_soak_header_names_the_data_scale_and_host():
+    md = "\n".join(soak_header("/data/tpch/sf0.01", 2, 4, 1.5))
+    assert "## Measured soak: sf0.01 -> 2x (sf0.02-equivalent)" in md
+    assert "The sf0.01 tier" in md
+    assert "local[4]" in md
+    assert "| wall sf0.01 (s) | wall sf0.02-equivalent (s) |" in md
+    assert "sf0.1" not in md and "local[32]" not in md
+    assert soak_labels("/data/sf0.1/", 10) == ("sf0.1", "sf1-equivalent")
+    assert soak_labels("/data/lake", 3) == ("lake", "lake x3")

@@ -38,6 +38,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from hadoop_fs_ceph_spark.plans.inspect import plan_of
 from hadoop_fs_ceph_spark.sources.avro_lite import (
     _Cursor,
     _enc_long,
@@ -537,11 +538,7 @@ def test_cephfs_like_filter_pushdown_plan_and_semantics(spark, tmp_path):
     q = load().filter(cond)
     # the rendered physical tree omits PushedFilters for Python scans;
     # the formatted explain carries them in the BatchScan detail block
-    plan = q._jdf.queryExecution().explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-            "formatted"
-        )
-    )
+    plan = plan_of(q, "formatted")
     pushed = re.search(r"PushedFilters: \[([^\]]*)\]", plan)
     assert pushed, plan[:1500]
     assert "GreaterThan(id,100)" in pushed.group(1), pushed.group(1)
@@ -569,11 +566,7 @@ def test_cephfs_like_filter_pushdown_plan_and_semantics(spark, tmp_path):
     nulls = load().filter(F.col("name").isNull())
     p2 = re.search(
         r"PushedFilters: \[([^\]]*)\]",
-        nulls._jdf.queryExecution().explainString(
-            spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-                "formatted"
-            )
-        ),
+        plan_of(nulls, "formatted"),
     )
     assert p2 and "IsNull(name)" in p2.group(1), p2
     assert nulls.count() == sum(1 for i in range(500) if i % 11 == 0)

@@ -4,12 +4,15 @@ CephRgwFileSystem.java:98-147, re-expressed as Hadoop s3a options) and
 the split-sizing lever (virtual block size, CephRgwFileSystem.java:112 →
 spark.sql.files.maxPartitionBytes), the Python-worker daemon that
 imports the installed pyspark instead of Spark's zipped copy, and the
-generated-code cache that holds a whole benchmark pass."""
+generated-code cache that holds a whole benchmark pass, and the driver
+cost of building a query: its Python-to-JVM round trips."""
 
+import collections
 import os
 import zipfile
 
 import pytest
+from py4j import protocol
 from pyspark.errors import AnalysisException
 
 from hadoop_fs_ceph_spark.registry import load_all
@@ -19,6 +22,7 @@ from hadoop_fs_ceph_spark.session import (
     get_spark,
     s3a_storage_conf,
 )
+from hadoop_fs_ceph_spark.sources.readers import read_parquet
 from hadoop_fs_ceph_spark.worker_daemon import worker_path
 from perfbench.workloads import LAKE_HEADS
 
@@ -100,6 +104,65 @@ def test_second_pass_of_lake_heads_compiles_nothing(spark, sf_dir):
 
     one_pass()
     assert one_pass() == 0
+
+
+def test_driver_cost_pins_applied_and_overridable(spark):
+    debugging = "spark.python.sql.dataFrameDebugging.enabled"
+    explain = "spark.sql.ui.explainMode"
+    assert spark.conf.get(debugging) == "false"
+    assert spark.conf.get(explain) == "simple"
+    try:
+        s = get_spark("pins-test", extra_conf={explain: "formatted"})
+        assert s.conf.get(explain) == "formatted"
+    finally:
+        spark.conf.set(explain, "simple")
+
+
+def py4j_round_trips(spark, fn) -> collections.Counter:
+    """Python-to-JVM commands sent while ``fn()`` runs: ``release`` counts
+    py4j's notices that a Python proxy was garbage collected (their number
+    follows the collector, not the code), ``call`` every other command."""
+    client = spark.sparkContext._gateway._gateway_client
+    send, sent = client.send_command, collections.Counter()
+
+    def counting(command, *args, **kwargs):
+        release = command.startswith(protocol.MEMORY_COMMAND_NAME)
+        sent["release" if release else "call"] += 1
+        return send(command, *args, **kwargs)
+
+    client.send_command = counting
+    try:
+        fn()
+    finally:
+        del client.send_command
+    return sent
+
+
+def test_read_parquet_hit_round_trips(spark, sf_dir):
+    """A kept relation is served in a fixed, small number of round trips:
+    the file signature, the session id, the key confs, and the Dataset
+    around a new instance of the relation. 31 measured with relation reuse
+    and one-step class lookups; 37 when a hit re-read the path with its
+    kept schema and looked ``Path`` up as an attribute chain."""
+    path = os.path.join(sf_dir, "orders.parquet")
+    read_parquet(spark, path)
+    sent = py4j_round_trips(spark, lambda: read_parquet(spark, path))
+    assert sent["call"] <= 31, sent
+
+
+def test_lake_heads_build_round_trips(spark, sf_dir):
+    """Building the DataFrames of the lake benchmark's 9 heads, after a warm
+    pass, stays within the round trips measured at sf0.001: 1806 in total,
+    200.7 per head, against 4250 (472.2 per head) before relation reuse,
+    one-step class lookups and the dataFrameDebugging pin."""
+    specs = load_all()
+    for head in LAKE_HEADS:
+        specs[head].fn(spark, sf_dir)
+    per_head = {
+        head: py4j_round_trips(spark, lambda: specs[head].fn(spark, sf_dir))["call"]
+        for head in LAKE_HEADS
+    }
+    assert sum(per_head.values()) <= 1806, per_head
 
 
 def test_python_workers_import_installed_pyspark(spark):

@@ -1,5 +1,5 @@
-"""Parquet schema resolution: ``read_parquet`` infers a path's schema once
-per file listing and session inference confs, and ``tables.t`` goes
+"""Parquet relation reuse: ``read_parquet`` resolves a path once per
+session, file listing and captured session confs, and ``tables.t`` goes
 through it; ``relation_bytes`` sizes a table from the same listing."""
 
 import itertools
@@ -78,20 +78,73 @@ def test_binary_as_string_conf_is_part_of_the_key(spark, tmp_path):
         spark.conf.set(key, saved)
 
 
+def kept_fields(path):
+    """Column names of the relation ``read_parquet`` keeps for ``path``."""
+    return list(readers._relations[path][1].schema().fieldNames())
+
+
 def test_one_entry_per_path(spark, tmp_path):
     a, b = str(tmp_path / "a"), str(tmp_path / "b")
     write(spark, a, 1)
     write(spark, b, 2)
-    before = len(readers._schemas)
+    before = len(readers._relations)
     read_parquet(spark, a)
     read_parquet(spark, b)
-    assert len(readers._schemas) == before + 2
-    assert readers._schemas[a][1] != readers._schemas[b][1]
+    assert len(readers._relations) == before + 2
+    assert kept_fields(a) != kept_fields(b)
 
     write(spark, a, 3)
     read_parquet(spark, a)
-    assert len(readers._schemas) == before + 2
-    assert readers._schemas[a][1].fieldNames() == ["c0", "c1", "c2"]
+    assert len(readers._relations) == before + 2
+    assert kept_fields(a) == ["c0", "c1", "c2"]
+
+
+def test_two_hits_self_join_like_uncached_reads(spark, sf_dir):
+    """Each hit is a new instance of the kept relation, with its own
+    attribute ids, so two hits join on their own columns."""
+    path = os.path.join(sf_dir, "orders.parquet")
+    read_parquet(spark, path)
+    (o1, o2), n = jobs_run(spark, lambda: (read_parquet(spark, path), read_parquet(spark, path)))
+    assert n == 0
+    p1, p2 = spark.read.parquet(path), spark.read.parquet(path)
+    want = p1.join(p2, p1.o_custkey == p2.o_custkey).count()
+    assert o1.join(o2, o1.o_custkey == o2.o_custkey).count() == want > 0
+
+
+def test_new_session_resolves_its_own_relation(spark, tmp_path):
+    path = str(tmp_path / "tbl")
+    write(spark, path, 2)
+    read_parquet(spark, path)
+    other = spark.newSession()
+    df, n = jobs_run(spark, lambda: read_parquet(other, path))
+    assert n >= 1
+    assert df.sparkSession._jsparkSession.sessionUUID() == other._jsparkSession.sessionUUID()
+    assert sorted(df.collect()) == sorted(spark.read.parquet(path).collect())
+
+
+def test_session_time_zone_is_part_of_the_key(spark, tmp_path):
+    """Timestamp partition values are parsed in the session time zone when
+    the relation is built, so a hit across a time-zone change would hand
+    back the old instants."""
+    path = str(tmp_path / "tsp")
+    spark.createDataFrame([(1, "2020-01-01 00:00:00")], "id long, ts string").write.partitionBy(
+        "ts"
+    ).parquet(path)
+    key = "spark.sql.session.timeZone"
+    saved = spark.conf.get(key)
+
+    def epoch(df):
+        return df.select(F.col("ts").cast("long")).first()[0]
+
+    try:
+        spark.conf.set(key, "UTC")
+        utc = epoch(read_parquet(spark, path))
+        spark.conf.set(key, "America/Los_Angeles")
+        la, n = jobs_run(spark, lambda: read_parquet(spark, path))
+        assert n >= 1
+        assert epoch(la) == epoch(spark.read.parquet(path)) == utc + 8 * 3600
+    finally:
+        spark.conf.set(key, saved)
 
 
 def test_hit_on_lineitem_collects_the_uncached_rows(spark, sf_dir):
@@ -128,7 +181,7 @@ def test_unlistable_path_is_spark_error_and_not_kept(spark, tmp_path):
     path = str(tmp_path / "missing")
     with pytest.raises(AnalysisException):
         read_parquet(spark, path)
-    assert path not in readers._schemas
+    assert path not in readers._relations
 
 
 def test_relation_bytes_sizes_without_os(spark, sf_dir, tmp_path, monkeypatch):
