@@ -1,7 +1,7 @@
 """Headline bench: run the bench-tagged declared queries at $SPARK_GRAFT_SF_DIR.
 
-``python bench.py`` prints two JSON lines: a verbose record, then the
-compact driver-contract line (``_compact_line``):
+``python bench.py`` prints one JSON line, the driver-contract line
+(``_compact_line``):
   {"metric": "...", "value": total_sec, "unit": "sec", "queries": {...}, "sf": ...}
 
 Every mode, and ``tools/time_heads.py``, times queries through one run path:
@@ -58,6 +58,7 @@ from dataclasses import dataclass
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from hadoop_fs_ceph_spark import scratch
 from hadoop_fs_ceph_spark.registry import load_all
 from hadoop_fs_ceph_spark.session import _cpus, get_spark
 from hadoop_fs_ceph_spark.tables import DEFAULT_SF_DIR
@@ -195,8 +196,9 @@ def _prev_round_compact(repo_dir: str, sf) -> tuple[dict | None, str | None]:
                 obj = json.loads(line)
             except ValueError:
                 continue
-            # the verbose line also has "queries" but carries
-            # "calib_probes"; adopting it would zero every previous spread
+            # older tails (BENCH_r05-r08) also hold a verbose line with
+            # "queries" and "calib_probes"; adopting it would zero every
+            # previous spread
             if "queries" in obj and "calib_probes" not in obj:
                 return obj, os.path.basename(path)
     return None, None
@@ -365,23 +367,16 @@ def main() -> None:
     sf = float(m.group(1)) if m else None
     layout_build_sec = warm_up(spark, bench_specs, sf_dir)
 
-    # Host-speed calibration probes, reported alongside the timings so
-    # cross-round comparisons can normalize for container/CPU variance
-    # (round-to-round runs land on different hosts; a 1.5-2x per-core
-    # frequency difference otherwise reads as a code regression):
-    # * calib_spark_sec — fixed 32-partition JVM aggregate (parallel
-    #   throughput incl. codegen path)
-    # * calib_py_sec — fixed single-thread Python loop (scalar speed)
-    def _calibrate() -> tuple[float, float]:
+    # Host-speed calibration probe (calib_spark_sec: a fixed 32-partition
+    # JVM aggregate, parallel throughput incl. the codegen path), reported
+    # with the timings so cross-round comparisons can normalize for
+    # container/CPU variance: round-to-round runs land on different hosts,
+    # and a 1.5-2x per-core frequency difference otherwise reads as a code
+    # regression.
+    def _calibrate() -> float:
         start = time.perf_counter()
         spark.range(0, 200_000_000, 1, 32).selectExpr("sum(id * 3 % 7)").collect()
-        c_spark = round(time.perf_counter() - start, 3)
-        start = time.perf_counter()
-        acc = 0
-        for i in range(5_000_000):
-            acc += i * i % 97
-        c_py = round(time.perf_counter() - start, 3)
-        return c_spark, c_py
+        return round(time.perf_counter() - start, 3)
 
     calibs = [_calibrate()]
 
@@ -398,7 +393,7 @@ def main() -> None:
     # * COLD (the headline `queries` dict): every run starts with a cleared
     #   SQL cache, so operators that persist() intermediates pay their full
     #   pipeline — the number a first execution at 100 TB pays.
-    # * WARM (`queries_warm`): an immediate re-run with the persisted
+    # * WARM (`total_warm`): an immediate re-run with the persisted
     #   intermediates still cached — the steady-state of a pipeline that
     #   keeps its signature/gram tables materialized, and the semantics
     #   earlier BENCH_r* rounds effectively reported (min of back-to-back
@@ -426,57 +421,22 @@ def main() -> None:
     spread = {
         n: round(max(v[1:]) - min(v[1:]), 3) for n, v in cold_samples.items()
     }
-    spread_warm = {
-        n: round(max(v[1:]) - min(v[1:]), 3) for n, v in warm_samples.items()
-    }
 
     calibs.append(_calibrate())
-    total = round(sum(timings.values()), 3)
     # Normalization: 4 interleaved probes (pre / between passes / post),
     # MEDIAN spark-calib — min undersells sustained contention, mean is
     # hostage to one burst. calib_ref pins the round-3 host (0.285 s) so
     # normalized numbers are comparable across rounds: they are what this
-    # suite would have clocked on the r3 reference host. Per-query
-    # normalized values make the cross-round like-for-like table one
-    # subtraction instead of a hand-scaled estimate.
+    # suite would have clocked on the r3 reference host; the noise verdict
+    # and the "common" subtotal compare rounds in those units.
     calib_ref = 0.285
-    calib_spark = sorted(c[0] for c in calibs)[len(calibs) // 2]
+    calib_spark = sorted(calibs)[len(calibs) // 2]
     scale = calib_ref / calib_spark
     prev, prev_name = _prev_round_compact(
         os.path.dirname(os.path.abspath(__file__)), sf
     )
     noise = _noise_verdicts(prev, timings, spread, scale)
-    print(
-        json.dumps(
-            {
-                "metric": "headline_queries_total_wall_clock",
-                "value": total,
-                "unit": "sec",
-                "queries": timings,
-                "queries_warm": warm,
-                "spread": spread,
-                "spread_warm": spread_warm,
-                "queries_normalized": {
-                    n: round(v * scale, 3) for n, v in timings.items()
-                },
-                "queries_exec_sec": exec_sec,
-                "total_warm": round(sum(warm.values()), 3),
-                "sf": sf,
-                "passes": _PASSES,
-                "calib_spark_sec": calib_spark,
-                "calib_py_sec": sorted(c[1] for c in calibs)[len(calibs) // 2],
-                "calib_probes": calibs,
-                "calib_ref": calib_ref,
-                "layout_build_sec": layout_build_sec,
-                "total_normalized": round(total * scale, 3),
-                "total_warm_normalized": round(sum(warm.values()) * scale, 3),
-                "noise_prev_artifact": prev_name,
-                "noise_vs_prev": noise,
-            }
-        )
-    )
-
-    # Final COMPACT line: see _compact_line (round-13 driver-contract
+    # The one stdout line: see _compact_line (round-13 driver-contract
     # shape — a plain "queries" dict the driver's PERF comparator parses,
     # plus the like-for-like "common" subtotal and per-query spread /
     # executor-task-time arrays while they fit the tail-capture budget).
@@ -496,7 +456,6 @@ def main() -> None:
             layout_build_sec,
         )
     )
-
 
 
 def _splice_scale_section(marker: str, md_lines: list[str]) -> None:
@@ -639,49 +598,41 @@ def soak_header(base_dir: str, replicas: int, cores: int, build_sec: float) -> l
 
 
 def soak_main() -> None:
-    import shutil
-    import tempfile
-
     spark, base_dir, bench_specs = session("bench-soak", driver_memory="48g")
     replicas = int(os.environ.get("SPARK_GRAFT_SOAK_REPLICAS", "10"))
-    small_dir = tempfile.mkdtemp(prefix="spark_graft_soak1_")
-    soak_dir = tempfile.mkdtemp(prefix="spark_graft_soak_")
-    try:
-        # the 1x tier goes through the same builder as the Nx tier, so the
-        # two share a file layout and the wall ratio measures scale alone
-        _build_soak_tables(spark, base_dir, small_dir, 1)
-        t0 = time.perf_counter()
-        _build_soak_tables(spark, base_dir, soak_dir, replicas)
-        build_sec = round(time.perf_counter() - t0, 1)
+    small_dir, soak_dir = scratch.fresh("soak1"), scratch.fresh("soak")
+    # the 1x tier goes through the same builder as the Nx tier, so the
+    # two share a file layout and the wall ratio measures scale alone
+    _build_soak_tables(spark, base_dir, small_dir, 1)
+    t0 = time.perf_counter()
+    _build_soak_tables(spark, base_dir, soak_dir, replicas)
+    build_sec = round(time.perf_counter() - t0, 1)
 
-        # owned layouts are built once per data dir, outside the timed
-        # passes (a deployment pays them per generation)
-        warm_up(spark, bench_specs, small_dir)
-        _prebuild_layouts(spark, soak_dir)
-        # tiers alternate (1x, Nx, 1x, Nx) and each keeps the min wall of
-        # its two passes, so neither tier owns the session's cold start and
-        # a host-contention burst hits one pass, not one tier; shuffle bytes
-        # come from each tier's first pass (they are deterministic)
-        passes: dict[str, list[dict]] = {small_dir: [], soak_dir: []}
-        for _ in range(2):
-            for sf_dir in (small_dir, soak_dir):
-                passes[sf_dir].append(dict(suite(spark, bench_specs, sf_dir)))
+    # owned layouts are built once per data dir, outside the timed
+    # passes (a deployment pays them per generation)
+    warm_up(spark, bench_specs, small_dir)
+    _prebuild_layouts(spark, soak_dir)
+    # tiers alternate (1x, Nx, 1x, Nx) and each keeps the min wall of
+    # its two passes, so neither tier owns the session's cold start and
+    # a host-contention burst hits one pass, not one tier; shuffle bytes
+    # come from each tier's first pass (they are deterministic)
+    passes: dict[str, list[dict]] = {small_dir: [], soak_dir: []}
+    for _ in range(2):
+        for sf_dir in (small_dir, soak_dir):
+            passes[sf_dir].append(dict(suite(spark, bench_specs, sf_dir)))
 
-        def tier(sf_dir: str) -> dict[str, dict[str, float]]:
-            first, second = passes[sf_dir]
-            return {
-                n: {
-                    "wall": round(min(first[n].wall, second[n].wall), 3),
-                    "shuffle_write": first[n].stages.shuffle_write_bytes,
-                    "shuffle_read": first[n].stages.shuffle_read_bytes,
-                }
-                for n in bench_specs
+    def tier(sf_dir: str) -> dict[str, dict[str, float]]:
+        first, second = passes[sf_dir]
+        return {
+            n: {
+                "wall": round(min(first[n].wall, second[n].wall), 3),
+                "shuffle_write": first[n].stages.shuffle_write_bytes,
+                "shuffle_read": first[n].stages.shuffle_read_bytes,
             }
+            for n in bench_specs
+        }
 
-        small, big = tier(small_dir), tier(soak_dir)
-    finally:
-        shutil.rmtree(small_dir, ignore_errors=True)
-        shutil.rmtree(soak_dir, ignore_errors=True)
+    small, big = tier(small_dir), tier(soak_dir)
 
     rows = []
     for name in bench_specs:
@@ -1005,34 +956,28 @@ def _build_skew_tables(spark, src_dir: str, dst_dir: str) -> dict:
 
 
 def skew_main() -> None:
-    import shutil
-    import tempfile
-
     spark, sf_dir, bench_specs = session("bench-skew")
-    skew_dir = tempfile.mkdtemp(prefix="spark_graft_skew_")
-    try:
-        t0 = time.perf_counter()
-        hot = _build_skew_tables(spark, sf_dir, skew_dir)
-        build_sec = round(time.perf_counter() - t0, 1)
+    skew_dir = scratch.fresh("skew")
+    t0 = time.perf_counter()
+    hot = _build_skew_tables(spark, sf_dir, skew_dir)
+    build_sec = round(time.perf_counter() - t0, 1)
 
-        def run_suite(data_dir: str, with_hash: bool) -> dict[str, Run]:
-            # owned layouts built once per data dir, outside the timing
-            _prebuild_layouts(spark, data_dir)
-            return dict(suite(spark, bench_specs, data_dir, content_hash=with_hash))
+    def run_suite(data_dir: str, with_hash: bool) -> dict[str, Run]:
+        # owned layouts built once per data dir, outside the timing
+        _prebuild_layouts(spark, data_dir)
+        return dict(suite(spark, bench_specs, data_dir, content_hash=with_hash))
 
-        # warm codegen once, then run every suite at the cluster shape
-        warm_up(spark, bench_specs, sf_dir)
-        with confs(spark, {**_SKEW_CONF, **_SKEW_AQE_ON}):
-            uniform = run_suite(sf_dir, with_hash=False)
-            skew_on = run_suite(skew_dir, with_hash=True)
-            with confs(spark, _SKEW_AQE_OFF):
-                skew_off = run_suite(skew_dir, with_hash=True)
-            # drift bracket re-runs uniform under the SAME conf as the
-            # first uniform pass (skew-split back on), so the per-query
-            # min() compares like with like
-            uniform2 = run_suite(sf_dir, with_hash=False)
-    finally:
-        shutil.rmtree(skew_dir, ignore_errors=True)
+    # warm codegen once, then run every suite at the cluster shape
+    warm_up(spark, bench_specs, sf_dir)
+    with confs(spark, {**_SKEW_CONF, **_SKEW_AQE_ON}):
+        uniform = run_suite(sf_dir, with_hash=False)
+        skew_on = run_suite(skew_dir, with_hash=True)
+        with confs(spark, _SKEW_AQE_OFF):
+            skew_off = run_suite(skew_dir, with_hash=True)
+        # drift bracket re-runs uniform under the SAME conf as the
+        # first uniform pass (skew-split back on), so the per-query
+        # min() compares like with like
+        uniform2 = run_suite(sf_dir, with_hash=False)
 
     rows, bad = [], []
     for name in bench_specs:

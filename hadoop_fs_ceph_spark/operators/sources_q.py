@@ -1853,6 +1853,34 @@ def src_parquet_bloom_write(spark, sf_dir):
     return _orders_agg(spark.read.parquet(root))
 
 
+def _footer_zones(root: str, part_col: str, stat_col: str) -> list[tuple]:
+    """(partition value, rows, min, max of ``stat_col``) for each
+    ``part_col=<value>`` directory under ``root``, folded from the parquet
+    footers' row-group statistics: no data page is read."""
+    import pyarrow.parquet as pq
+
+    rows = []
+    for ent in sorted(os.listdir(root)):
+        if not ent.startswith(f"{part_col}="):
+            continue
+        n, mn, mx = 0, None, None
+        pdir = os.path.join(root, ent)
+        for fn in sorted(os.listdir(pdir)):
+            if not fn.endswith(".parquet"):
+                continue
+            md = pq.ParquetFile(os.path.join(pdir, fn)).metadata
+            names = [md.schema.column(i).name for i in range(md.num_columns)]
+            idx = names.index(stat_col)
+            for rg in range(md.num_row_groups):
+                g = md.row_group(rg)
+                n += g.num_rows
+                st = g.column(idx).statistics
+                mn = st.min if mn is None else min(mn, st.min)
+                mx = st.max if mx is None else max(mx, st.max)
+        rows.append((ent.split("=", 1)[1], n, float(mn), float(mx)))
+    return rows
+
+
 @query(
     "src_footer_stats_audit",
     oracle="""
@@ -1884,8 +1912,6 @@ def src_footer_stats_audit(spark, sf_dir):
     Cited pattern: parquet-mr footer stats contract; the reference's
     getFileStatus/listStatus surface (CephRgwFileSystem.java) is the
     metadata tier this audit exercises end-to-end."""
-    import pyarrow.parquet as pq
-
     li = t(spark, sf_dir, "lineitem").select("l_returnflag", "l_quantity")
     root = scratch.path(sf_dir, "footer_stats")
     (
@@ -1894,28 +1920,9 @@ def src_footer_stats_audit(spark, sf_dir):
         .partitionBy("l_returnflag")
         .parquet(root)
     )
-    rows = []
-    for ent in sorted(os.listdir(root)):
-        if not ent.startswith("l_returnflag="):
-            continue
-        flag = ent.split("=", 1)[1]
-        n, mn, mx = 0, None, None
-        pdir = os.path.join(root, ent)
-        for fn in sorted(os.listdir(pdir)):
-            if not fn.endswith(".parquet"):
-                continue
-            md = pq.ParquetFile(os.path.join(pdir, fn)).metadata
-            names = [md.schema.column(i).name for i in range(md.num_columns)]
-            idx = names.index("l_quantity")
-            for rg in range(md.num_row_groups):
-                g = md.row_group(rg)
-                n += g.num_rows
-                st = g.column(idx).statistics
-                mn = st.min if mn is None else min(mn, st.min)
-                mx = st.max if mx is None else max(mx, st.max)
-        rows.append((flag, n, float(mn), float(mx)))
     return spark.createDataFrame(
-        rows, "l_returnflag string, n_rows long, min_qty double, max_qty double"
+        _footer_zones(root, "l_returnflag", "l_quantity"),
+        "l_returnflag string, n_rows long, min_qty double, max_qty double",
     ).orderBy("l_returnflag")
 
 
@@ -2028,8 +2035,6 @@ def src_scan_pruning_plan(spark, sf_dir):
     column in a real lakehouse) and the verdict is a map-side CASE.
     The reference's metadata tier (listStatus/getFileStatus,
     CephRgwFileSystem.java) is exactly what it exercises."""
-    import pyarrow.parquet as pq
-
     o = t(spark, sf_dir, "orders").withColumn(
         "file_month", F.month("o_orderdate").cast("long")
     )
@@ -2040,26 +2045,10 @@ def src_scan_pruning_plan(spark, sf_dir):
         .partitionBy("file_month")
         .parquet(root)
     )
-    rows = []
-    for ent in sorted(os.listdir(root)):
-        if not ent.startswith("file_month="):
-            continue
-        mo = int(ent.split("=", 1)[1])
-        n, mn, mx = 0, None, None
-        pdir = os.path.join(root, ent)
-        for fn in sorted(os.listdir(pdir)):
-            if not fn.endswith(".parquet"):
-                continue
-            md = pq.ParquetFile(os.path.join(pdir, fn)).metadata
-            names = [md.schema.column(i).name for i in range(md.num_columns)]
-            idx = names.index("o_totalprice")
-            for rg in range(md.num_row_groups):
-                g = md.row_group(rg)
-                n += g.num_rows
-                st = g.column(idx).statistics
-                mn = st.min if mn is None else min(mn, st.min)
-                mx = st.max if mx is None else max(mx, st.max)
-        rows.append((mo, n, float(mn), float(mx)))
+    rows = [
+        (int(mo), n, mn, mx)
+        for mo, n, mn, mx in _footer_zones(root, "file_month", "o_totalprice")
+    ]
     zones = spark.createDataFrame(
         rows, "file_month long, n_rows long, zmin double, zmax double"
     )
@@ -2393,7 +2382,7 @@ def src_rgw_http_roundtrip(spark, sf_dir):
     Scale: swap `endpoint` for a real RGW URL and this is the production
     path — disjoint ranged GETs per task, zero coordination, listing is
     the only O(#objects) step (paginated in real RGW)."""
-    from hadoop_fs_ceph_spark.sources.pydatasource import register_python_sources
+    from hadoop_fs_ceph_spark.sources.pydatasource import list_data_files, register_python_sources
     from hadoop_fs_ceph_spark.sources.rgw_http import LoopbackRgw
 
     register_python_sources(spark)
@@ -2407,13 +2396,9 @@ def src_rgw_http_roundtrip(spark, sf_dir):
     out = scratch.path(sf_dir, "rgw_docs_back")
     creds = ("AKIDEXAMPLE", "wJalrXUtnFEMI/K7MDENG+bPxRfiCYEXAMPLEKEY")
     with LoopbackRgw(page_size=2, credentials=creds) as rgw:
-        for fname in sorted(os.listdir(path)):
-            if fname.startswith(("_", ".")) or not os.path.isfile(
-                os.path.join(path, fname)
-            ):
-                continue
-            with open(os.path.join(path, fname), "rb") as fh:
-                rgw.put("lake", f"docs/{fname}", fh.read())
+        for full in list_data_files(path):
+            with open(full, "rb") as fh:
+                rgw.put("lake", f"docs/{os.path.basename(full)}", fh.read())
         back = (
             spark.read.format("rgw_http")
             .schema("doc_id bigint, lang string, source string, n_chars bigint")
@@ -2515,7 +2500,7 @@ def src_rgw_multipart_write(spark, sf_dir):
     is up. Hash-matching the oracle on the original parquet proves the
     part-boundary assembly byte-lossless THROUGH the line-split reader.
     """
-    from hadoop_fs_ceph_spark.sources.pydatasource import register_python_sources
+    from hadoop_fs_ceph_spark.sources.pydatasource import list_data_files, register_python_sources
     from hadoop_fs_ceph_spark.sources.rgw_http import LoopbackRgw, multipart_put
 
     register_python_sources(spark)
@@ -2529,16 +2514,12 @@ def src_rgw_multipart_write(spark, sf_dir):
     out = scratch.path(sf_dir, "rgw_mp_back")
     creds = ("AKIDEXAMPLE", "wJalrXUtnFEMI/K7MDENG+bPxRfiCYEXAMPLEKEY")
     with LoopbackRgw(credentials=creds) as rgw:
-        for fname in sorted(os.listdir(path)):
-            if fname.startswith(("_", ".")) or not os.path.isfile(
-                os.path.join(path, fname)
-            ):
-                continue
-            with open(os.path.join(path, fname), "rb") as fh:
+        for full in list_data_files(path):
+            with open(full, "rb") as fh:
                 multipart_put(
                     rgw.endpoint,
                     "lake",
-                    f"docs/{fname}",
+                    f"docs/{os.path.basename(full)}",
                     fh.read(),
                     part_size=2048,  # many parts per object, line-agnostic cuts
                     creds=creds,

@@ -4,7 +4,8 @@ under one per-process root, made on first use and removed at exit by the
 process that made it, so processes on one data dir never share files.
 
 ``tag`` names a data dir for scratch paths and session-catalog tables
-(basename + 8 hex of the full path: same-named dirs never collide);
+(basename with every non-word character as ``_``, so it is a valid table
+identifier, + 8 hex of the full path: same-named dirs never collide);
 ``path`` is stable within the process; ``fresh`` is new on every call."""
 
 from __future__ import annotations
@@ -12,6 +13,7 @@ from __future__ import annotations
 import atexit
 import hashlib
 import os
+import re
 import shutil
 import tempfile
 import threading
@@ -40,7 +42,7 @@ def _remove(root_dir: str, owner: int) -> None:
 def tag(sf_dir: str) -> str:
     norm = os.path.normpath(os.path.abspath(sf_dir))
     digest = hashlib.sha256(norm.encode()).hexdigest()[:8]
-    return f"{os.path.basename(norm).replace('.', '_')}_{digest}"
+    return re.sub(r"\W", "_", os.path.basename(norm), flags=re.ASCII) + "_" + digest
 
 
 def path(sf_dir: str, name: str) -> str:

@@ -18,13 +18,12 @@ The kept relation is keyed by everything it captured when it was built:
   read through ``spark.newSession()`` resolves its own;
 - the path's file signature (every file's path, length and modification
   time), so a rewritten table is listed again;
-- the session values of ``_RELATION_CONFS``: the footer type mapping and
-  schema merge, and the partition-column typing, whose timestamp values
-  follow ``spark.sql.session.timeZone``. The list comes from the confs
-  Spark 4.1's ``DataSource.resolveRelation``, ``ParquetFileFormat``,
-  ``PartitioningAwareFileIndex`` and ``PartitioningUtils`` read while
-  building a relation; confs read only when a scan runs (filter pushdown,
-  the vectorized reader, rebase modes) stay live and are not in the key.
+- the session's whole conf map (``RuntimeConfig.getAll``), kept as a JVM
+  object and compared on the JVM side (three round trips): a relation
+  captures the footer type mapping, schema merge and partition-column
+  typing (timestamps in ``spark.sql.session.timeZone``) of the confs it
+  was built under. Any conf change resolves the path again, so no list of
+  the confs Spark reads there has to follow Spark upgrades.
 
 A hit wraps ``relation.newInstance()`` (fresh attribute ids, so a self-join
 of two hits resolves as two reads) in a Dataset through
@@ -39,44 +38,35 @@ from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
-# Session confs a parquet relation captures when it is built: the footer
-# type mapping, which footers are read and merged, the typing and parsing of
-# partition-directory values (timestamps in the session time zone), and
-# whether the reader builds a V1 or a V2 relation.
-_RELATION_CONFS = (
-    "spark.sql.legacy.parquet.nanosAsLong",
-    "spark.sql.parquet.binaryAsString",
-    "spark.sql.parquet.int96AsTimestamp",
-    "spark.sql.parquet.inferTimestampNTZ.enabled",
-    "spark.sql.parquet.reader.respectUnknownTypeAnnotation.enabled",
-    "spark.sql.parquet.mergeSchema",
-    "spark.sql.parquet.respectSummaryFiles",
-    "spark.sql.caseSensitive",
-    "spark.sql.sources.partitionColumnTypeInference.enabled",
-    "spark.sql.session.timeZone",
-    "spark.sql.timestampType",
-    "spark.sql.legacy.timeParserPolicy",
-    "spark.sql.sources.validatePartitionColumns",
-    "spark.sql.files.ignoreInvalidPartitionPaths",
-    "spark.sql.sources.useV1SourceList",
-)
+# path -> (key, conf map, analyzed JVM relation): one entry per path,
+# replaced when its key or the session's confs change.
+_relations: dict[str, tuple[tuple, JavaObject, JavaObject]] = {}
 
-# path -> (key, analyzed JVM relation): one entry per path, replaced when
-# its key changes.
-_relations: dict[str, tuple[tuple, JavaObject]] = {}
+
+def _status(spark: SparkSession, path: str) -> tuple[JavaObject, JavaObject]:
+    """The Hadoop ``FileSystem`` of ``path``'s URI (local, ``s3a://``,
+    ``cephrgw://``) and the path's ``FileStatus`` there; raises
+    ``Py4JJavaError`` when the path does not exist."""
+    root = getattr(spark._jvm, "org.apache.hadoop.fs.Path")(path)
+    fs = root.getFileSystem(spark._jsparkSession.sessionState().newHadoopConf())
+    return fs, fs.getFileStatus(root)
+
+
+def is_directory(spark: SparkSession, path: str) -> bool:
+    """Whether ``path`` is a directory, as its storage layer reports it."""
+    return _status(spark, path)[1].isDirectory()
 
 
 def _file_signature(spark: SparkSession, path: str) -> tuple | None:
     """Sorted (path, length, modification time) of every file under ``path``,
-    listed through the Hadoop ``FileSystem`` of its URI (local, ``s3a://``,
-    ``cephrgw://``) without a Spark job; None when it cannot be listed (a
-    missing path or a glob), which leaves the read uncached."""
+    listed through its Hadoop ``FileSystem`` without a Spark job; None when
+    it cannot be listed (a missing path or a glob), which leaves the read
+    uncached."""
     # getFileStatus/listStatus, not listFiles: its LocatedFileStatus looks up
     # block locations and owners, about 11 ms per local file.
     try:
-        root = getattr(spark._jvm, "org.apache.hadoop.fs.Path")(path)
-        fs = root.getFileSystem(spark._jsparkSession.sessionState().newHadoopConf())
-        todo, files = [fs.getFileStatus(root)], []
+        fs, status = _status(spark, path)
+        todo, files = [status], []
         while todo:
             status = todo.pop()
             if status.isDirectory():
@@ -103,25 +93,20 @@ def relation_bytes(spark: SparkSession, path: str) -> int:
 
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     """``spark.read.parquet(path)`` resolved once per session, file listing
-    and ``_RELATION_CONFS`` values (see the module docstring); a hit runs no
-    Spark job and lists nothing but the signature. The key is taken before
-    the read, so files rewritten during the read only cause a miss on the
-    next call."""
+    and conf map (see the module docstring); a hit runs no Spark job and
+    lists nothing but the signature. The key is taken before the read, so
+    files rewritten during the read only cause a miss on the next call."""
     files = _file_signature(spark, path)
     if files is None:
         return spark.read.parquet(path)
     jsession = spark._jsparkSession
-    key = (
-        jsession.sessionUUID(),
-        files,
-        tuple(spark.conf.get(k, None) for k in _RELATION_CONFS),
-    )
+    key, conf = (jsession.sessionUUID(), files), jsession.conf().getAll()
     hit = _relations.get(path)
-    if hit is not None and hit[0] == key:
+    if hit is not None and hit[0] == key and hit[1].equals(conf):
         dataset = getattr(spark._jvm, "org.apache.spark.sql.classic.Dataset")
-        return DataFrame(dataset.ofRows(jsession, hit[1].newInstance()), spark)
+        return DataFrame(dataset.ofRows(jsession, hit[2].newInstance()), spark)
     df = spark.read.parquet(path)
-    _relations[path] = (key, df._jdf.queryExecution().analyzed())
+    _relations[path] = (key, conf, df._jdf.queryExecution().analyzed())
     return df
 
 

@@ -15,7 +15,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 
 from hadoop_fs_ceph_spark import scratch
-from hadoop_fs_ceph_spark.sources.readers import relation_bytes
+from hadoop_fs_ceph_spark.sources.readers import is_directory, relation_bytes
 from hadoop_fs_ceph_spark.tables import events_ts, read_events
 
 # --- streaming-state audit capture ------------------------------------------
@@ -53,15 +53,16 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     path = os.path.join(sf_dir, "events.parquet")
     raw_schema = read_events(spark, path).schema
-    if os.path.isdir(path):
+    if is_directory(spark, path):
         # Spark-written layout (e.g. the soak replicas): events.parquet is
         # a DIRECTORY of part files — stream it directly; the glob filter
         # below would reject every part-*.parquet inside it.
         stream = spark.readStream.schema(raw_schema).parquet(path)
     else:
         # Single-file fixture layout: the file stream source requires a
-        # *directory*; stream the sf_dir and glob-filter down to the
-        # events table file(s).
+        # *directory* (Spark 4.1 refuses a file path: "basePath must be a
+        # directory"); stream the sf_dir and glob-filter down to the events
+        # table file(s).
         stream = (
             spark.readStream.schema(raw_schema)
             .option("pathGlobFilter", "events.parquet")

@@ -174,15 +174,16 @@ def test_operators_md_matches_registry():
 
 def test_engine_scratch_paths_come_from_scratch_module():
     """Engine-owned local paths have one owner, ``scratch.py``: no other
-    package file calls tempfile.gettempdir/mkdtemp or spells an
-    ``hfcs_`` path (six such roots and three data-dir tag spellings once
-    drifted apart, and two processes on one data dir deleted each other's
-    Q14 bucket files)."""
+    package file, and neither ``bench.py`` nor ``tools/``, calls
+    tempfile.gettempdir/mkdtemp or spells an ``hfcs_`` path (six such
+    roots and three data-dir tag spellings once drifted apart, and two
+    processes on one data dir deleted each other's Q14 bucket files)."""
     pkg = REPO / "hadoop_fs_ceph_spark"
+    files = [*pkg.rglob("*.py"), REPO / "bench.py", *(REPO / "tools").glob("*.py")]
     pat = re.compile(r"gettempdir|mkdtemp|[\"']hfcs_")
     offenders = [
         f"{p.relative_to(REPO)}:{i}"
-        for p in sorted(pkg.rglob("*.py"))
+        for p in sorted(files)
         if p != pkg / "scratch.py"
         for i, line in enumerate(p.read_text(encoding="utf-8").splitlines(), 1)
         if pat.search(line)

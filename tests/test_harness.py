@@ -1,8 +1,10 @@
 """The shared measured-run pieces of bench.py and tools/time_heads.py:
 the conf context manager, the suite loop's per-head stage counters, the
 ``--all`` sweep's skip records, ``--conf`` for confs a live session
-refuses, and the labels of the soak section bench.py splices."""
+refuses, the labels of the soak section bench.py splices, and the one
+stdout line of the headline bench."""
 
+import json
 import os
 import subprocess
 import sys
@@ -13,6 +15,7 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
 sys.path.insert(0, os.path.join(ROOT, "tools"))
 
+import bench  # noqa: E402
 from bench import confs, run, soak_header, soak_labels, suite  # noqa: E402
 from hadoop_fs_ceph_spark.registry import load_all  # noqa: E402
 from time_heads import time_heads  # noqa: E402
@@ -133,3 +136,19 @@ def test_soak_header_names_the_data_scale_and_host():
     assert "sf0.1" not in md and "local[32]" not in md
     assert soak_labels("/data/sf0.1/", 10) == ("sf0.1", "sf1-equivalent")
     assert soak_labels("/data/lake", 3) == ("lake", "lake x3")
+
+
+def test_bench_prints_only_the_driver_contract_line(spark, sf_dir, monkeypatch, capsys):
+    """``python bench.py`` prints one line, the compact driver-contract
+    line, with the key set of the checked-in r13 artifact's line."""
+    specs = load_all()
+    heads = {n: specs[n] for n in ("q1_pricing_summary", "q3_shipping_priority")}
+    monkeypatch.setattr(bench, "session", lambda app: (spark, sf_dir, heads))
+    bench.main()
+    lines = capsys.readouterr().out.splitlines()
+    assert len(lines) == 1, lines
+    with open(os.path.join(ROOT, "BENCH_r13.json")) as f:
+        r13 = json.load(f)["parsed"]
+    line = json.loads(lines[0])
+    assert set(line) == set(r13)
+    assert set(line["queries"]) == set(heads) and line["sf"] == 0.001

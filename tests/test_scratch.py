@@ -43,6 +43,9 @@ def test_fresh_returns_distinct_empty_dirs_under_one_root():
         assert os.path.dirname(d) == scratch.root()
         assert os.path.basename(d).startswith("sink-")
     assert os.path.basename(scratch.root()).startswith("hfcs-")
+    # a fresh dir used as a data dir (bench.py's soak and skew tiers) still
+    # tags into a valid table identifier
+    assert scratch.tag(p).isidentifier()
 
 
 def test_root_is_removed_at_exit_only_by_the_process_that_made_it():

@@ -5,9 +5,14 @@
   windows within 10 minutes of the max event time.
 * batch equivalence: the complete-mode streaming aggregate equals the same
   aggregation run as a batch query.
+* the events source picks its layout (one file or a directory of parts)
+  through the storage layer, never through ``os``.
 """
 
+import os
+
 import pyspark.sql.functions as F
+import pytest
 
 from hadoop_fs_ceph_spark.streaming import events_stream, run_to_memory
 from hadoop_fs_ceph_spark.tables import t
@@ -140,3 +145,24 @@ def test_rocksdb_state_store_materializes_ssts(spark, sf_dir, tmp_path):
         if f.endswith(".sst") or r.endswith("SSTs")
     ]
     assert ssts, "no RocksDB SST artifacts under the checkpoint state dir"
+
+
+@pytest.mark.parametrize("layout", ["file", "directory"])
+def test_events_stream_layout_comes_from_storage_layer(
+    spark, sf_dir, tmp_path, monkeypatch, layout
+):
+    """The file-or-directory choice reads the path's Hadoop ``FileStatus``,
+    so a root ``os`` cannot see (``s3a://``, ``viewfs://``) streams too."""
+    data_dir = sf_dir
+    if layout == "directory":
+        data_dir = str(tmp_path)
+        src = os.path.join(sf_dir, "events.parquet")
+        dst = os.path.join(data_dir, "events.parquet")
+        spark.read.parquet(src).repartition(3).write.parquet(dst)
+
+    def refuse(*args, **kwargs):
+        raise AssertionError("layout chosen through os, not the storage layer")
+
+    monkeypatch.setattr(os.path, "isdir", refuse)
+    drained = run_to_memory(events_stream(spark, data_dir), f"t_layout_{layout}", "append")
+    assert drained.count() == t(spark, sf_dir, "events").count() > 0

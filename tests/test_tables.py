@@ -1,5 +1,5 @@
 """Parquet relation reuse: ``read_parquet`` resolves a path once per
-session, file listing and captured session confs, and ``tables.t`` goes
+session, file listing and session conf map, and ``tables.t`` goes
 through it; ``relation_bytes`` sizes a table from the same listing."""
 
 import itertools
@@ -78,9 +78,28 @@ def test_binary_as_string_conf_is_part_of_the_key(spark, tmp_path):
         spark.conf.set(key, saved)
 
 
+def test_any_conf_change_resolves_again(spark, tmp_path):
+    """The key holds the session's whole conf map, not a list of the confs
+    a relation is known to capture: a conf no such list named still makes
+    the next read resolve the path again, and so does putting it back."""
+    path = str(tmp_path / "tbl")
+    write(spark, path, 2)
+    key = "spark.sql.parquet.filterPushdown"
+    saved = spark.conf.get(key)
+    read_parquet(spark, path)
+    try:
+        spark.conf.set(key, "false")
+        _, n_changed = jobs_run(spark, lambda: read_parquet(spark, path))
+        _, n_hit = jobs_run(spark, lambda: read_parquet(spark, path))
+    finally:
+        spark.conf.set(key, saved)
+    _, n_restored = jobs_run(spark, lambda: read_parquet(spark, path))
+    assert n_changed >= 1 and n_hit == 0 and n_restored >= 1
+
+
 def kept_fields(path):
     """Column names of the relation ``read_parquet`` keeps for ``path``."""
-    return list(readers._relations[path][1].schema().fieldNames())
+    return list(readers._relations[path][2].schema().fieldNames())
 
 
 def test_one_entry_per_path(spark, tmp_path):
