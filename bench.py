@@ -10,7 +10,7 @@ execution, no driver collection, so timings measure the distributed plan,
 not toPandas) and records ``fn_s`` + ``action_s`` with the
 ``perfbench.probes.StageCounters`` of exactly that run; ``suite`` runs one
 cold pass over a head set. Each mode starts from ``session`` and warms up
-with ``warm_up``, and ``confs`` holds conf overrides.
+with ``warm_up``; conf overrides go through the engine's ``session.confs``.
 
 The compact line carries a NOISE-AWARE verdict against the previous round:
 its per-query cold walls and spreads are read back from the newest same-SF
@@ -53,14 +53,13 @@ import os
 import re
 import sys
 import time
-from contextlib import contextmanager
 from dataclasses import dataclass
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from hadoop_fs_ceph_spark import scratch
 from hadoop_fs_ceph_spark.registry import load_all
-from hadoop_fs_ceph_spark.session import _cpus, get_spark
+from hadoop_fs_ceph_spark.session import _cpus, confs, get_spark
 from hadoop_fs_ceph_spark.tables import DEFAULT_SF_DIR
 from perfbench.probes import StageCounters, StageProbe
 
@@ -120,25 +119,6 @@ def suite(spark, specs: dict, sf_dir: str, *, content_hash: bool = False, head_c
             yield name, rec
         finally:
             spark.catalog.clearCache()
-
-
-@contextmanager
-def confs(spark, overrides: dict):
-    """Hold ``overrides`` on the session for the block, then put back every
-    key's prior value. Keys that had none are unset, not skipped, and this
-    holds when the block raises too: an override must never leak into
-    whatever runs on the session next."""
-    saved = {k: spark.conf.get(k, None) for k in overrides}
-    try:
-        for k, v in overrides.items():
-            spark.conf.set(k, v)
-        yield
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
 
 
 def session(app: str, *, bench_only: bool = True, driver_memory: str = "24g", extra_conf=None):

@@ -17,6 +17,19 @@ accumulation:
 * integer SUM — exact and order-independent;
 * final int→double conversion and division — identical single roundings.
 
+This module is the one place that spells the rule; operator modules call
+it. Four layers, each built on the one before, each with an ``sql_*`` twin
+that DuckDB (or Spark SQL) runs:
+
+* ``units(x, s)`` — the per-row term ``round(x * 10^s)`` as a long
+  (``sql_units``: ``CAST(ROUND((x) * 10^s.0) AS BIGINT)``);
+* ``fixed(x, s)`` — the exact integer ``SUM`` of ``units`` (``sql_fixed``
+  adds the outer ``CAST(... AS BIGINT)``, since DuckDB sums to HUGEINT);
+  a window sum is ``fixed(...).over(w)`` / ``SUM({sql_units(...)}) OVER``;
+* ``fixsum(x, s)`` — ``fixed`` as a double divided by ``10^s``;
+* ``dsum``/``davg``/``dstddev_samp``/``dvar_samp`` — aliased aggregates
+  built from ``fixsum``.
+
 This declares aggregate semantics at an explicit 10^-s precision, like money
 types. Choose ``scale`` so that ``|x|·10^s`` stays well under 2^63 / row
 count (defaults: 6 for values ≤ ~1e6; drop to 4 for second moments).
@@ -33,30 +46,51 @@ def _c(col: Column | str) -> Column:
     return F.col(col) if isinstance(col, str) else col
 
 
-def _fixsum(col: Column | str, scale: int) -> Column:
-    shift = float(10**scale)
-    return F.sum(F.round(_c(col) * F.lit(shift)).cast("long")).cast("double") / F.lit(shift)
+def units(col: Column | str, scale: int) -> Column:
+    """Per-row fixed-point term: ``x`` in units of 10^-scale, as a long."""
+    # A bare float becomes the same double literal as ``F.lit``, in the JVM
+    # call that multiplies: one py4j round trip instead of two.
+    return F.round(_c(col) * 10.0**scale).cast("long")
 
 
-def _sql_fixsum(expr: str, scale: int) -> str:
-    shift = f"{10**scale}.0"
+def fixed(col: Column | str, scale: int) -> Column:
+    """Exact, order-independent integer sum of ``units`` (a long)."""
+    return F.sum(units(col, scale))
+
+
+def fixsum(col: Column | str, scale: int) -> Column:
+    """``fixed`` back in the value's own units, as a double."""
+    return fixed(col, scale).cast("double") / 10.0**scale
+
+
+def _shift(scale: int) -> str:
+    return f"{10**scale}.0"
+
+
+def sql_units(expr: str, scale: int) -> str:
     # Parenthesized so textual substitution into larger expressions keeps
     # the same evaluation (and hence IEEE rounding) order as the Spark side.
-    return (
-        f"(CAST(CAST(SUM(CAST(ROUND(({expr}) * {shift}) AS BIGINT)) AS BIGINT) AS DOUBLE)"
-        f" / {shift})"
-    )
+    return f"CAST(ROUND(({expr}) * {_shift(scale)}) AS BIGINT)"
+
+
+def sql_fixed(expr: str, scale: int) -> str:
+    # DuckDB sums BIGINT to HUGEINT; the outer cast keeps Spark's long.
+    return f"CAST(SUM({sql_units(expr, scale)}) AS BIGINT)"
+
+
+def sql_fixsum(expr: str, scale: int) -> str:
+    return f"(CAST({sql_fixed(expr, scale)} AS DOUBLE) / {_shift(scale)})"
 
 
 # ---------------------------------------------------------------- Spark side
 def dsum(col: Column | str, alias: str, scale: int = 6) -> Column:
     """Order-independent SUM over doubles at fixed 10^-scale precision."""
-    return _fixsum(col, scale).alias(alias)
+    return fixsum(col, scale).alias(alias)
 
 
 def davg(col: Column | str, alias: str, scale: int = 6) -> Column:
     """Deterministic AVG = fixed-point sum / count (double division)."""
-    return (_fixsum(col, scale) / F.count(_c(col))).alias(alias)
+    return (fixsum(col, scale) / F.count(_c(col))).alias(alias)
 
 
 def dstddev_samp(col: Column | str, alias: str, scale: int = 6, scale2: int = 4) -> Column:
@@ -64,37 +98,37 @@ def dstddev_samp(col: Column | str, alias: str, scale: int = 6, scale2: int = 4)
     sqrt((s2 - s1²/n) / (n-1)); every double op afterwards is scalar."""
     c = _c(col)
     n = F.count(c).cast("double")
-    s1 = _fixsum(c, scale)
-    s2 = _fixsum(c * c, scale2)
+    s1 = fixsum(c, scale)
+    s2 = fixsum(c * c, scale2)
     return F.sqrt((s2 - s1 * s1 / n) / (n - F.lit(1.0))).alias(alias)
 
 
 def dvar_samp(col: Column | str, alias: str, scale: int = 6, scale2: int = 4) -> Column:
     c = _c(col)
     n = F.count(c).cast("double")
-    s1 = _fixsum(c, scale)
-    s2 = _fixsum(c * c, scale2)
+    s1 = fixsum(c, scale)
+    s2 = fixsum(c * c, scale2)
     return ((s2 - s1 * s1 / n) / (n - F.lit(1.0))).alias(alias)
 
 
 # ------------------------------------------------------------------ SQL side
 def sql_dsum(expr: str, alias: str, scale: int = 6) -> str:
-    return f"{_sql_fixsum(expr, scale)} AS {alias}"
+    return f"{sql_fixsum(expr, scale)} AS {alias}"
 
 
 def sql_davg(expr: str, alias: str, scale: int = 6) -> str:
-    return f"{_sql_fixsum(expr, scale)} / COUNT({expr}) AS {alias}"
+    return f"{sql_fixsum(expr, scale)} / COUNT({expr}) AS {alias}"
 
 
 def sql_dstddev_samp(expr: str, alias: str, scale: int = 6, scale2: int = 4) -> str:
-    s1 = _sql_fixsum(expr, scale)
-    s2 = _sql_fixsum(f"({expr}) * ({expr})", scale2)
+    s1 = sql_fixsum(expr, scale)
+    s2 = sql_fixsum(f"({expr}) * ({expr})", scale2)
     n = f"CAST(COUNT({expr}) AS DOUBLE)"
     return f"SQRT(({s2} - {s1} * {s1} / {n}) / ({n} - 1.0)) AS {alias}"
 
 
 def sql_dvar_samp(expr: str, alias: str, scale: int = 6, scale2: int = 4) -> str:
-    s1 = _sql_fixsum(expr, scale)
-    s2 = _sql_fixsum(f"({expr}) * ({expr})", scale2)
+    s1 = sql_fixsum(expr, scale)
+    s2 = sql_fixsum(f"({expr}) * ({expr})", scale2)
     n = f"CAST(COUNT({expr}) AS DOUBLE)"
     return f"(({s2} - {s1} * {s1} / {n}) / ({n} - 1.0)) AS {alias}"

@@ -127,10 +127,3 @@ def sql_simhash(hashes_expr: str, bits: int = SIMHASH_BITS) -> str:
         )
         terms.append(f"CASE WHEN ({vote}) > 0 THEN CAST({2**b} AS BIGINT) ELSE CAST(0 AS BIGINT) END")
     return "(" + " + ".join(terms) + ")"
-
-
-# -------------------------------------------------- production-tier hashes
-def xxhash_tokens(tok: Column) -> Column:
-    """Production token hashing: xxhash64 per element (JVM, no Python).
-    Not oracle-portable — used by the bench/scale variants only."""
-    return F.transform(tok, lambda x: F.xxhash64(x))

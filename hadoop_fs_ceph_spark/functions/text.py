@@ -1,8 +1,10 @@
 """Text primitives: tokenization, portable string hashing, shingling,
 quality heuristics, language-ID scoring.
 
-SQL-fragment twins (``sql_*``) exist for every portable builder so the
-declared queries and their DuckDB oracles are generated from one place.
+The builders an oracle needs (``poly_hash``, ``lang_scores``,
+``token_hashes``, ``hashed_shingles``) have SQL-fragment twins (``sql_*``),
+so those declared queries and their DuckDB oracles are generated from one
+place.
 """
 
 from __future__ import annotations
@@ -56,15 +58,6 @@ def shingles(tok: Column, n: int = 3) -> Column:
             lambda i: F.concat_ws(" ", *[F.element_at(tok, i + k) for k in range(n)]),
         ),
     ).otherwise(F.array().cast("array<string>"))
-
-
-def sql_shingles(tok_expr: str, n: int = 3) -> str:
-    parts = " || ' ' || ".join(f"{tok_expr}[i + {k}]" for k in range(n))
-    return (
-        f"CASE WHEN len({tok_expr}) >= {n} THEN "
-        f"list_transform(generate_series(1, len({tok_expr}) - {n - 1}), i -> {parts}) "
-        f"ELSE [] END"
-    )
 
 
 # Tiny per-language stopword lists for the n-gram/stopword language-ID

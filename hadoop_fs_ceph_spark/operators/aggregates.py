@@ -13,15 +13,20 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from hadoop_fs_ceph_spark.canonical import (
-    _sql_fixsum as _sql_fix,
     davg,
     dstddev_samp,
     dsum,
     dvar_samp,
+    fixed,
+    fixsum,
     sql_davg,
     sql_dstddev_samp,
     sql_dsum,
     sql_dvar_samp,
+    sql_fixed,
+    sql_fixsum,
+    sql_units,
+    units,
 )
 from hadoop_fs_ceph_spark.operators.ranking import (
     _MED_PASSES,
@@ -146,10 +151,10 @@ def agg_grouping_sets(spark, sf_dir):
     li = t(spark, sf_dir, "lineitem")
     li.createOrReplaceTempView("gs_lineitem")
     return spark.sql(
-        """
+        f"""
         SELECT l_returnflag, l_shipdate,
                grouping_id(l_returnflag, l_shipdate) AS gid,
-               CAST(CAST(SUM(CAST(ROUND(l_extendedprice * 1000000.0) AS BIGINT)) AS BIGINT) AS DOUBLE) / 1000000.0 AS sum_price
+               {sql_fixsum("l_extendedprice", 6)} AS sum_price
         FROM gs_lineitem
         WHERE l_shipdate < TIMESTAMP '1995-04-01 00:00:00'
         GROUP BY GROUPING SETS ((l_returnflag), (l_shipdate), ())
@@ -305,9 +310,9 @@ def agg_approx_count_distinct(spark, sf_dir):
 
 @query(
     "agg_salted_skew",
-    oracle="""
+    oracle=f"""
     SELECT event_type, COUNT(*) AS n,
-           CAST(SUM(CAST(ROUND(value * 100.0) AS BIGINT)) AS BIGINT) AS sum_cents
+           {sql_fixed("value", 2)} AS sum_cents
     FROM events
     GROUP BY event_type
     """,
@@ -331,7 +336,7 @@ def agg_salted_skew(spark, sf_dir):
         .groupBy("event_type", "salt")
         .agg(
             F.count(F.lit(1)).alias("pn"),
-            F.sum(F.round(F.col("value") * 100.0).cast("long")).alias("psum"),
+            fixed("value", 2).alias("psum"),
         )
     )
     return salted.groupBy("event_type").agg(
@@ -393,11 +398,11 @@ def agg_hll_sketch_merge(spark, sf_dir):
     FROM (
       SELECT l_returnflag,
              CAST(COUNT(*) AS DOUBLE) AS n,
-             {_sql_fix('l_quantity', 6)} AS sx,
-             {_sql_fix('l_extendedprice', 2)} AS sy,
-             {_sql_fix('l_quantity * l_quantity', 6)} AS sxx,
-             {_sql_fix('l_extendedprice * l_extendedprice', 2)} AS syy,
-             {_sql_fix('l_quantity * l_extendedprice', 2)} AS sxy
+             {sql_fixsum('l_quantity', 6)} AS sx,
+             {sql_fixsum('l_extendedprice', 2)} AS sy,
+             {sql_fixsum('l_quantity * l_quantity', 6)} AS sxx,
+             {sql_fixsum('l_extendedprice * l_extendedprice', 2)} AS syy,
+             {sql_fixsum('l_quantity * l_extendedprice', 2)} AS sxy
       FROM lineitem GROUP BY l_returnflag
     )
     ORDER BY l_returnflag
@@ -415,20 +420,14 @@ def agg_corr_bivariate(spark, sf_dir):
     tested SF (headroom documented in canonical.py)."""
     li = t(spark, sf_dir, "lineitem")
 
-    def fix(col, scale):
-        shift = float(10**scale)
-        return (
-            F.sum(F.round(col * F.lit(shift)).cast("long")).cast("double") / F.lit(shift)
-        )
-
     q, p = F.col("l_quantity"), F.col("l_extendedprice")
     m = li.groupBy("l_returnflag").agg(
         F.count(F.lit(1)).cast("double").alias("n"),
-        fix(q, 6).alias("sx"),
-        fix(p, 2).alias("sy"),
-        fix(q * q, 6).alias("sxx"),
-        fix(p * p, 2).alias("syy"),
-        fix(q * p, 2).alias("sxy"),
+        fixsum(q, 6).alias("sx"),
+        fixsum(p, 2).alias("sy"),
+        fixsum(q * q, 6).alias("sxx"),
+        fixsum(p * p, 2).alias("syy"),
+        fixsum(q * p, 2).alias("sxy"),
     )
     n, sx, sy = F.col("n"), F.col("sx"), F.col("sy")
     sxx, syy, sxy = F.col("sxx"), F.col("syy"), F.col("sxy")
@@ -496,7 +495,7 @@ def agg_histogram_fixed(spark, sf_dir):
       GROUP BY n.n_name
     )
     SELECT n_name, revenue,
-           revenue / (CAST(SUM(CAST(ROUND(revenue * 100.0) AS BIGINT)) OVER () AS DOUBLE) / 100.0) AS share,
+           revenue / (CAST(SUM({sql_units("revenue", 2)}) OVER () AS DOUBLE) / 100.0) AS share,
            RANK() OVER (ORDER BY revenue DESC) AS rev_rank
     FROM per_nation
     ORDER BY rev_rank, n_name
@@ -529,11 +528,7 @@ def agg_percent_of_total(spark, sf_dir):
             "n_name",
             "revenue",
             (
-                F.col("revenue")
-                / (
-                    F.sum(F.round(F.col("revenue") * 100).cast("long")).over(w_all).cast("double")
-                    / 100.0
-                )
+                F.col("revenue") / (fixed("revenue", 2).over(w_all).cast("double") / 100.0)
             ).alias("share"),
             F.rank().over(Window.orderBy(F.col("revenue").desc())).alias("rev_rank"),
         )
@@ -811,10 +806,10 @@ def agg_bitmap_distinct(spark, sf_dir):
 
 @query(
     "agg_exact_median_nosort",
-    oracle="""
+    oracle=f"""
     WITH x AS (
       SELECT o_custkey,
-             CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS cents
+             {sql_fixed("o_totalprice", 2)} AS cents
       FROM orders GROUP BY o_custkey
     ),
     st AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM x),
@@ -879,7 +874,7 @@ _QNT_PCTS = (25, 50, 75, 99)
     oracle=f"""
     WITH x AS (
       SELECT o_custkey,
-             CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS cents
+             {sql_fixed("o_totalprice", 2)} AS cents
       FROM orders GROUP BY o_custkey
     ),
     st AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM x),
@@ -935,10 +930,10 @@ def agg_exact_quantiles_nosort(spark, sf_dir):
 
 @query(
     "agg_exact_median_by_group_nosort",
-    oracle="""
+    oracle=f"""
     WITH x AS (
       SELECT o_orderpriority AS grp,
-             CAST(ROUND(o_totalprice * 100) AS BIGINT) AS cents
+             {sql_units("o_totalprice", 2)} AS cents
       FROM orders
     ),
     st AS (SELECT grp, CAST(COUNT(*) AS BIGINT) AS n FROM x GROUP BY grp),
@@ -973,7 +968,7 @@ def agg_exact_median_by_group_nosort(spark, sf_dir):
     o = t(spark, sf_dir, "orders")
     x = o.select(
         F.col("o_orderpriority").alias("grp"),
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
+        units("o_totalprice", 2).alias("cents"),
     ).persist()
     base = x.groupBy("grp").agg(
         F.min("cents").alias("lo"),
@@ -998,9 +993,9 @@ def agg_exact_median_by_group_nosort(spark, sf_dir):
 
 @query(
     "agg_exact_weighted_median_nosort",
-    oracle="""
+    oracle=f"""
     WITH x AS (
-      SELECT CAST(ROUND(l_extendedprice * 100) AS BIGINT) AS cents,
+      SELECT {sql_units("l_extendedprice", 2)} AS cents,
              CAST(l_quantity AS BIGINT) AS w
       FROM lineitem
     ),
@@ -1033,7 +1028,7 @@ def agg_exact_weighted_median_nosort(spark, sf_dir):
     reproduces by construction."""
     li = t(spark, sf_dir, "lineitem")
     x = li.select(
-        F.round(F.col("l_extendedprice") * 100).cast("long").alias("cents"),
+        units("l_extendedprice", 2).alias("cents"),
         F.col("l_quantity").cast("long").alias("w"),
     ).persist()
     base = x.agg(
@@ -1056,10 +1051,10 @@ def agg_exact_weighted_median_nosort(spark, sf_dir):
 
 @query(
     "agg_exact_quantiles_by_group_nosort",
-    oracle="""
+    oracle=f"""
     WITH x AS (
       SELECT o_orderpriority AS grp,
-             CAST(ROUND(o_totalprice * 100) AS BIGINT) AS cents
+             {sql_units("o_totalprice", 2)} AS cents
       FROM orders
     ),
     st AS (SELECT grp, CAST(COUNT(*) AS BIGINT) AS n FROM x GROUP BY grp),
@@ -1095,7 +1090,7 @@ def agg_exact_quantiles_by_group_nosort(spark, sf_dir):
     o = t(spark, sf_dir, "orders")
     x0 = o.select(
         F.col("o_orderpriority").alias("grp"),
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
+        units("o_totalprice", 2).alias("cents"),
     )
     pcts = spark.range(1).select(
         F.explode(F.array(*[F.lit(p) for p in (25, 50, 75)])).alias("pct0")
@@ -1170,10 +1165,10 @@ _INC_CUTOVER = "2024-01-21"
 
 @query(
     "agg_incremental_rollup",
-    oracle="""
+    oracle=f"""
     SELECT event_type,
            CAST(COUNT(*) AS BIGINT) AS n_events,
-           CAST(SUM(CAST(ROUND(value * 1000000) AS BIGINT)) AS BIGINT) AS v6,
+           {sql_fixed("value", 6)} AS v6,
            CAST(COUNT(DISTINCT user_id) AS BIGINT) AS n_users
     FROM events
     GROUP BY event_type
@@ -1205,7 +1200,7 @@ def agg_incremental_rollup(spark, sf_dir):
         "event_type",
         "ts",
         (F.col("user_id") + 1).alias("k"),
-        F.round(F.col("value") * 1000000).cast("long").alias("v6"),
+        units("value", 6).alias("v6"),
     )
 
     def partials(df):
@@ -1249,7 +1244,7 @@ _SK_ACC = 1000  # percentile_approx accuracy: rank error <= n / accuracy
     oracle=f"""
     WITH x AS (
       SELECT o_custkey,
-             CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS cents
+             {sql_fixed("o_totalprice", 2)} AS cents
       FROM orders GROUP BY o_custkey
     ),
     st AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM x),
@@ -1403,9 +1398,9 @@ def agg_exact_mode(spark, sf_dir):
 
 @query(
     "agg_trimmed_mean_nosort",
-    oracle="""
+    oracle=f"""
     WITH x AS (
-      SELECT CAST(ROUND(o_totalprice * 100) AS BIGINT) AS cents, o_orderkey
+      SELECT {sql_units("o_totalprice", 2)} AS cents, o_orderkey
       FROM orders
     ),
     r AS (
@@ -1444,7 +1439,7 @@ def agg_trimmed_mean_nosort(spark, sf_dir):
     shuffles (bin, 24-byte rows), never the payload, and the only global
     state is the ≤4096-row offset relation."""
     x = t(spark, sf_dir, "orders").select(
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"), "o_orderkey"
+        units("o_totalprice", 2).alias("cents"), "o_orderkey"
     )
     keyed = x.select(
         F.col("cents").alias("key"),
@@ -1544,14 +1539,12 @@ def agg_hll_intersection(spark, sf_dir):
 
 @query(
     "agg_geometric_harmonic_mean",
-    oracle="""
+    oracle=f"""
     WITH m AS (
       SELECT l_returnflag,
              CAST(COUNT(*) AS BIGINT) AS n,
-             CAST(SUM(CAST(ROUND(LN(l_quantity) * 1000000.0) AS BIGINT))
-               AS BIGINT) AS ln_micro,
-             CAST(SUM(CAST(ROUND((1.0 / l_quantity) * 1000000000.0) AS BIGINT))
-               AS BIGINT) AS inv_nano
+             {sql_fixed("LN(l_quantity)", 6)} AS ln_micro,
+             {sql_fixed("1.0 / l_quantity", 9)} AS inv_nano
       FROM lineitem GROUP BY l_returnflag
     )
     SELECT l_returnflag, n,
@@ -1584,8 +1577,8 @@ def agg_geometric_harmonic_mean(spark, sf_dir):
     q = F.col("l_quantity")
     m = t(spark, sf_dir, "lineitem").groupBy("l_returnflag").agg(
         F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum(F.round(F.log(q) * 1000000.0).cast("long")).cast("long").alias("ln_micro"),
-        F.sum(F.round((1.0 / q) * 1000000000.0).cast("long")).cast("long").alias("inv_nano"),
+        fixed(F.log(q), 6).alias("ln_micro"),
+        fixed(1.0 / q, 9).alias("inv_nano"),
     )
     return m.select(
         "l_returnflag",
@@ -1674,12 +1667,11 @@ def agg_covar_family(spark, sf_dir):
 
 @query(
     "agg_skyline_2d",
-    oracle="""
+    oracle=f"""
     WITH per AS (
       SELECT l_partkey AS pk,
              CAST(SUM(CAST(l_quantity AS BIGINT)) AS BIGINT) AS qty,
-             CAST(SUM(CAST(ROUND(l_extendedprice * 100.0) AS BIGINT))
-                  AS BIGINT) AS rev_c
+             {sql_fixed("l_extendedprice", 2)} AS rev_c
       FROM lineitem GROUP BY pk
     )
     SELECT p.pk AS l_partkey, p.qty, p.rev_c
@@ -1721,7 +1713,7 @@ def agg_skyline_2d(spark, sf_dir):
     li = t(spark, sf_dir, "lineitem")
     per = li.groupBy(F.col("l_partkey").alias("pk")).agg(
         F.sum(F.col("l_quantity").cast("long")).alias("qty"),
-        F.sum(F.round(F.col("l_extendedprice") * 100).cast("long")).alias("rev_c"),
+        fixed("l_extendedprice", 2).alias("rev_c"),
     )
     vals = per.groupBy("qty").agg(F.max("rev_c").alias("vmax"))
     lz = F.lit(-1).cast("long")
@@ -1804,13 +1796,13 @@ def agg_bool_family(spark, sf_dir):
 
 @query(
     "agg_weighted_stats",
-    oracle="""
+    oracle=f"""
     SELECT l_returnflag,
-           (CAST(SUM(CAST(ROUND(l_quantity * l_extendedprice * 100.0) AS BIGINT)) AS BIGINT)
+           ({sql_fixed("l_quantity * l_extendedprice", 2)}
             / 100.0)
-           / (CAST(SUM(CAST(ROUND(l_quantity * 1000000.0) AS BIGINT)) AS BIGINT)
+           / ({sql_fixed("l_quantity", 6)}
               / 1000000.0) AS wavg_price,
-           CAST(SUM(CAST(ROUND(l_quantity * 1000000.0) AS BIGINT)) AS BIGINT) / 1000000.0
+           {sql_fixed("l_quantity", 6)} / 1000000.0
              AS total_weight
     FROM lineitem
     GROUP BY l_returnflag
@@ -1826,16 +1818,12 @@ def agg_weighted_stats(spark, sf_dir):
     division is a single identical rounding in both engines."""
     li = t(spark, sf_dir, "lineitem")
 
-    def fix(col, scale):
-        shift = float(10**scale)
-        return F.sum(F.round(col * F.lit(shift)).cast("long")).cast("double") / F.lit(shift)
-
     q, p = F.col("l_quantity"), F.col("l_extendedprice")
     return (
         li.groupBy("l_returnflag")
         .agg(
-            (fix(q * p, 2) / fix(q, 6)).alias("wavg_price"),
-            fix(q, 6).alias("total_weight"),
+            (fixsum(q * p, 2) / fixsum(q, 6)).alias("wavg_price"),
+            fixsum(q, 6).alias("total_weight"),
         )
         .orderBy("l_returnflag")
     )

@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from hadoop_fs_ceph_spark.canonical import fixed, fixsum, sql_fixed, sql_units, units
 from hadoop_fs_ceph_spark.operators.basket_common import (
     OP_CAPPED_CTES,
     capped_order_parts,
@@ -251,10 +252,10 @@ def win_cumulative_distinct(spark, sf_dir):
 
 @query(
     "ds_pareto_concentration",
-    oracle="""
+    oracle=f"""
     WITH pc AS (
       SELECT o_custkey,
-             SUM(CAST(ROUND(o_totalprice * 100.0) AS BIGINT)) AS rc
+             SUM({sql_units("o_totalprice", 2)}) AS rc
       FROM orders GROUP BY o_custkey
     ),
     tot AS (
@@ -292,7 +293,7 @@ def ds_pareto_concentration(spark, sf_dir):
     broadcast."""
     o = t(spark, sf_dir, "orders")
     pc = o.groupBy("o_custkey").agg(
-        F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias("rc")
+        fixed("o_totalprice", 2).alias("rc")
     )
     keyed = pc.select(
         (-F.col("rc")).alias("key"),
@@ -392,7 +393,7 @@ def ds_basket_lift(spark, sf_dir):
 
 @query(
     "ds_attribution_touch",
-    oracle="""
+    oracle=f"""
     WITH per AS (
       SELECT user_id,
              first_value(event_type) OVER w AS first_touch,
@@ -401,7 +402,7 @@ def ds_basket_lift(spark, sf_dir):
                ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING
              ) AS last_touch,
              CASE WHEN event_type = 'purchase'
-                  THEN CAST(ROUND(value * 1000000) AS BIGINT) ELSE 0 END AS pv6
+                  THEN {sql_units("value", 6)} ELSE 0 END AS pv6
       FROM events
       WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
     ),
@@ -432,7 +433,7 @@ def ds_attribution_touch(spark, sf_dir):
     e = t(spark, sf_dir, "events")
     pv6 = F.when(
         F.col("event_type") == "purchase",
-        F.round(F.col("value") * 1000000).cast("long"),
+        units("value", 6),
     ).otherwise(F.lit(0).cast("long"))
     per_user = e.groupBy("user_id").agg(
         F.min(F.struct("ts", "event_id", "event_type")).alias("fs"),
@@ -456,12 +457,12 @@ def ds_attribution_touch(spark, sf_dir):
 
 @query(
     "ds_rfm_segmentation",
-    oracle="""
+    oracle=f"""
     WITH m AS (
       SELECT o_custkey,
              MAX(o_orderdate) AS last_d,
              COUNT(*) AS freq,
-             CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS cents
+             {sql_fixed("o_totalprice", 2)} AS cents
       FROM orders GROUP BY o_custkey
     ),
     withr AS (
@@ -507,7 +508,7 @@ def ds_rfm_segmentation(spark, sf_dir):
     m = o.groupBy("o_custkey").agg(
         F.max("o_orderdate").alias("last_d"),
         F.count(F.lit(1)).alias("freq"),
-        F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias("cents"),
+        fixed("o_totalprice", 2).alias("cents"),
     )
     maxd = m.agg(F.max("last_d").alias("maxd"))
     dims = (
@@ -598,7 +599,7 @@ def ds_rfm_segmentation_approx(spark, sf_dir):
     m = o.groupBy("o_custkey").agg(
         F.max("o_orderdate").alias("last_d"),
         F.count(F.lit(1)).alias("freq"),
-        F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias("cents"),
+        fixed("o_totalprice", 2).alias("cents"),
     )
     maxd = m.agg(F.max("last_d").alias("maxd"))
     comp = (
@@ -676,10 +677,10 @@ def ds_rfm_segmentation_approx(spark, sf_dir):
 
 @query(
     "agg_gini_concentration",
-    oracle="""
+    oracle=f"""
     WITH x AS (
       SELECT o_custkey,
-             CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS cents
+             {sql_fixed("o_totalprice", 2)} AS cents
       FROM orders GROUP BY o_custkey
     ),
     ranked AS (
@@ -733,9 +734,9 @@ def agg_gini_concentration(spark, sf_dir):
 # matter the corpus size (the profile_ks_drift trade).
 _CONC_BINS = 64
 
-_SQL_CONC_X = """
+_SQL_CONC_X = f"""
       SELECT o_custkey,
-             CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS cents
+             {sql_fixed("o_totalprice", 2)} AS cents
       FROM orders GROUP BY o_custkey
 """
 _SQL_CONC_ST = """
@@ -941,11 +942,11 @@ def ds_pareto_concentration_binned(spark, sf_dir):
 
 @query(
     "ds_top_movers",
-    oracle="""
+    oracle=f"""
     WITH yearly AS (
       SELECT c.c_mktsegment,
              CAST(EXTRACT(year FROM o.o_orderdate) AS INTEGER) AS yr,
-             CAST(SUM(CAST(ROUND(o.o_totalprice * 100) AS BIGINT)) AS BIGINT)
+             {sql_fixed("o.o_totalprice", 2)}
                AS cents
       FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
       GROUP BY c.c_mktsegment, EXTRACT(year FROM o.o_orderdate)
@@ -980,7 +981,7 @@ def ds_top_movers(spark, sf_dir):
     yearly = (
         o.join(c, o.o_custkey == c.c_custkey)
         .groupBy("c_mktsegment", F.year("o_orderdate").alias("yr"))
-        .agg(F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias("cents"))
+        .agg(fixed("o_totalprice", 2).alias("cents"))
     )
     w = Window.partitionBy("yr").orderBy(F.col("cents").desc(), "c_mktsegment")
     ranked = yearly.select(
@@ -1768,7 +1769,7 @@ def win_holt_linear_fold(spark, sf_dir):
 
 @query(
     "ds_cohort_ltv_curve",
-    oracle="""
+    oracle=f"""
     WITH f AS (
       SELECT o_custkey, MIN(date_trunc('month', o_orderdate)) AS cohort
       FROM orders GROUP BY o_custkey
@@ -1779,7 +1780,7 @@ def win_holt_linear_fold(spark, sf_dir):
                    + EXTRACT(month FROM o.o_orderdate))
                   - (EXTRACT(year FROM f.cohort) * 12
                      + EXTRACT(month FROM f.cohort)) AS INTEGER) AS age_months,
-             CAST(SUM(CAST(ROUND(o.o_totalprice * 100) AS BIGINT)) AS BIGINT)
+             {sql_fixed("o.o_totalprice", 2)}
                AS cents
       FROM orders o JOIN f ON o.o_custkey = f.o_custkey
       GROUP BY 1, 2
@@ -1831,7 +1832,7 @@ def ds_cohort_ltv_curve(spark, sf_dir):
             .cast("int")
             .alias("age_months"),
         )
-        .agg(F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias("cents"))
+        .agg(fixed("o_totalprice", 2).alias("cents"))
     )
     cs = f.groupBy("cohort").agg(F.count(F.lit(1)).alias("n_customers"))
     w = (
@@ -1859,10 +1860,10 @@ def ds_cohort_ltv_curve(spark, sf_dir):
 
 @query(
     "ds_attribution_time_decay",
-    oracle="""
+    oracle=f"""
     WITH p AS (
       SELECT user_id, ts AS pts, event_id AS pid,
-             CAST(ROUND(value * 1000000) AS BIGINT) AS pv6
+             {sql_units("value", 6)} AS pv6
       FROM events WHERE event_type = 'purchase'
     ),
     tch AS (
@@ -1909,7 +1910,7 @@ def ds_attribution_time_decay(spark, sf_dir):
     with no in-window touch drop out (assisted conversions only), the
     standard attribution-report contract."""
     e = t(spark, sf_dir, "events")
-    pv6 = F.round(F.col("value") * 1000000).cast("long")
+    pv6 = units("value", 6)
     p = e.filter(F.col("event_type") == "purchase").select(
         "user_id", F.col("ts").alias("pts"), F.col("event_id").alias("pid"),
         pv6.alias("pv6"),
@@ -2018,7 +2019,7 @@ _ACF_MAX_LAG = 7
     oracle=f"""
     WITH daily AS (
       SELECT event_type, CAST(ts AS DATE) AS d,
-             CAST(SUM(CAST(ROUND(value * 1000000) AS BIGINT)) AS BIGINT) AS v6
+             {sql_fixed("value", 6)} AS v6
       FROM events GROUP BY 1, 2
     ),
     ks AS (SELECT CAST(unnest(generate_series(1, {_ACF_MAX_LAG})) AS INTEGER) AS lag),
@@ -2068,7 +2069,7 @@ def ds_autocorrelation(spark, sf_dir):
     e = t(spark, sf_dir, "events")
     daily = e.groupBy(
         "event_type", F.col("ts").cast("date").alias("d")
-    ).agg(F.sum(F.round(F.col("value") * 1000000).cast("long")).alias("v6"))
+    ).agg(fixed("value", 6).alias("v6"))
     ks = spark.range(1, _ACF_MAX_LAG + 1).select(
         F.col("id").cast("int").alias("lag")
     )
@@ -2192,10 +2193,10 @@ def ds_slo_burn_rate(spark, sf_dir):
 
 @query(
     "ds_theilsen_trend",
-    oracle="""
+    oracle=f"""
     WITH daily AS (
       SELECT event_type, CAST(ts AS DATE) AS d,
-             CAST(SUM(CAST(ROUND(value * 1000000) AS BIGINT)) AS BIGINT) AS v6
+             {sql_fixed("value", 6)} AS v6
       FROM events GROUP BY 1, 2
     ),
     slopes AS (
@@ -2237,7 +2238,7 @@ def ds_theilsen_trend(spark, sf_dir):
     e = t(spark, sf_dir, "events")
     daily = e.groupBy(
         "event_type", F.col("ts").cast("date").alias("d")
-    ).agg(F.sum(F.round(F.col("value") * 1000000).cast("long")).alias("v6"))
+    ).agg(fixed("value", 6).alias("v6"))
     a = daily.select(
         "event_type", F.col("d").alias("d1"), F.col("v6").alias("v1")
     )
@@ -2390,7 +2391,6 @@ def ds_conformal_interval(spark, sf_dir):
 
 
 _HW_DAYS = 64  # hard cap: fold over at most the last 64 days per series
-_HW_M = 7  # season length (weekly)
 
 
 @query(
@@ -2511,12 +2511,12 @@ def ds_holt_winters(spark, sf_dir):
 
 @query(
     "ds_ols_moments",
-    oracle="""
+    oracle=f"""
     WITH x AS (
       SELECT c.c_mktsegment AS segment,
              CAST(datediff('day', DATE '1992-01-01', CAST(o.o_orderdate AS DATE))
                   AS BIGINT) AS days,
-             CAST(ROUND(o.o_totalprice * 100) AS BIGINT) AS cents
+             {sql_units("o.o_totalprice", 2)} AS cents
       FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
     ),
     m AS (
@@ -2572,7 +2572,7 @@ def ds_ols_moments(spark, sf_dir):
         F.datediff(F.col("o_orderdate").cast("date"), F.lit("1992-01-01").cast("date"))
         .cast("long")
         .alias("days"),
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
+        units("o_totalprice", 2).alias("cents"),
     )
     d38 = "decimal(38,0)"
     m = x.groupBy("segment").agg(
@@ -2604,12 +2604,12 @@ def ds_ols_moments(spark, sf_dir):
 
 @query(
     "ds_ols_residual_outliers",
-    oracle="""
+    oracle=f"""
     WITH x AS (
       SELECT c.c_mktsegment AS segment, o.o_orderkey,
              CAST(datediff('day', DATE '1992-01-01', CAST(o.o_orderdate AS DATE))
                   AS BIGINT) AS days,
-             CAST(ROUND(o.o_totalprice * 100) AS BIGINT) AS cents
+             {sql_units("o.o_totalprice", 2)} AS cents
       FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
     ),
     m AS (
@@ -2680,7 +2680,7 @@ def ds_ols_residual_outliers(spark, sf_dir):
         F.datediff(F.col("o_orderdate").cast("date"), F.lit("1992-01-01").cast("date"))
         .cast("long")
         .alias("days"),
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
+        units("o_totalprice", 2).alias("cents"),
     )
     x = x.persist()
     d38 = "decimal(38,0)"
@@ -2726,7 +2726,7 @@ def ds_ols_residual_outliers(spark, sf_dir):
 
 @query(
     "ds_mutual_information",
-    oracle="""
+    oracle=f"""
     WITH jt AS (
       SELECT o_orderpriority AS x, o_orderstatus AS y,
              CAST(COUNT(*) AS BIGINT) AS nxy
@@ -2736,21 +2736,18 @@ def ds_ols_residual_outliers(spark, sf_dir):
     my AS (SELECT y, CAST(SUM(nxy) AS BIGINT) AS ny FROM jt GROUP BY y),
     tot AS (SELECT CAST(SUM(nxy) AS BIGINT) AS n FROM jt),
     terms AS (
-      SELECT CAST(ROUND((CAST(nxy AS DOUBLE) / n)
-               * LN((CAST(n AS DOUBLE) * nxy) / (CAST(nx AS DOUBLE) * ny))
-               * 1e12) AS BIGINT) AS mi_t,
-             CAST(ROUND(-(CAST(nxy AS DOUBLE) / n)
-               * LN(CAST(nxy AS DOUBLE) / n) * 1e12) AS BIGINT) AS hxy_t
+      SELECT {sql_units(
+                "(CAST(nxy AS DOUBLE) / n)"
+                " * LN((CAST(n AS DOUBLE) * nxy) / (CAST(nx AS DOUBLE) * ny))", 12)} AS mi_t,
+             {sql_units("-(CAST(nxy AS DOUBLE) / n) * LN(CAST(nxy AS DOUBLE) / n)", 12)} AS hxy_t
       FROM jt JOIN mx USING (x) JOIN my USING (y) CROSS JOIN tot
     ),
     hx AS (
-      SELECT CAST(SUM(CAST(ROUND(-(CAST(nx AS DOUBLE) / n)
-               * LN(CAST(nx AS DOUBLE) / n) * 1e12) AS BIGINT)) AS BIGINT) AS hx_f
+      SELECT {sql_fixed("-(CAST(nx AS DOUBLE) / n) * LN(CAST(nx AS DOUBLE) / n)", 12)} AS hx_f
       FROM mx, tot
     ),
     hy AS (
-      SELECT CAST(SUM(CAST(ROUND(-(CAST(ny AS DOUBLE) / n)
-               * LN(CAST(ny AS DOUBLE) / n) * 1e12) AS BIGINT)) AS BIGINT) AS hy_f
+      SELECT {sql_fixed("-(CAST(ny AS DOUBLE) / n) * LN(CAST(ny AS DOUBLE) / n)", 12)} AS hy_f
       FROM my, tot
     )
     SELECT CAST(SUM(mi_t) AS DOUBLE) / 1e12 AS mi_nats,
@@ -2799,23 +2796,17 @@ def ds_mutual_information(spark, sf_dir):
         .join(F.broadcast(my), "y")
     )
     nxy, nx, ny, n = (F.col(c).cast("double") for c in ("nxy", "nx", "ny", "n"))
-    mi_t = F.round((nxy / n) * F.log((n * nxy) / (nx * ny)) * 1e12).cast("long")
-    hxy_t = F.round(-(nxy / n) * F.log(nxy / n) * 1e12).cast("long")
+    mi_t = units((nxy / n) * F.log((n * nxy) / (nx * ny)), 12)
+    hxy_t = units(-(nxy / n) * F.log(nxy / n), 12)
     terms = cell.agg(
         (F.sum(mi_t).cast("double") / 1e12).alias("mi_nats"),
         (F.sum(hxy_t).cast("double") / 1e12).alias("h_joint"),
     )
     hx = mx.crossJoin(F.broadcast(tot)).agg(
-        (
-            F.sum(F.round(-(nx / n) * F.log(nx / n) * 1e12).cast("long")).cast("double")
-            / 1e12
-        ).alias("h_x")
+        fixsum(-(nx / n) * F.log(nx / n), 12).alias("h_x")
     )
     hy = my.crossJoin(F.broadcast(tot)).agg(
-        (
-            F.sum(F.round(-(ny / n) * F.log(ny / n) * 1e12).cast("long")).cast("double")
-            / 1e12
-        ).alias("h_y")
+        fixsum(-(ny / n) * F.log(ny / n), 12).alias("h_y")
     )
     return (
         terms.crossJoin(hx)
@@ -2832,13 +2823,13 @@ def ds_mutual_information(spark, sf_dir):
 
 @query(
     "ds_coarsened_exact_matching",
-    oracle="""
+    oracle=f"""
     WITH units AS (
       SELECT c.c_custkey,
              (c.c_mktsegment = 'BUILDING') AS treated,
              c.c_nationkey,
              CAST(FLOOR(c.c_acctbal / 2000.0) AS BIGINT) AS bal_bin,
-             COALESCE(SUM(CAST(ROUND(o.o_totalprice * 100.0) AS BIGINT)), 0)
+             COALESCE(SUM({sql_units("o.o_totalprice", 2)}), 0)
                AS spend_c
       FROM customer c LEFT JOIN orders o ON o.o_custkey = c.c_custkey
       GROUP BY c.c_custkey, treated, c.c_nationkey, bal_bin
@@ -2855,9 +2846,9 @@ def ds_mutual_information(spark, sf_dir):
     SELECT CAST(COUNT(*) AS BIGINT) AS n_strata,
            CAST(SUM(n_t) AS BIGINT) AS n_treated,
            CAST(SUM(n_c) AS BIGINT) AS n_control,
-           CAST(SUM(CAST(ROUND(
-             n_t * ((CAST(s_t AS DOUBLE) / 100.0) / n_t
-                  - (CAST(s_c AS DOUBLE) / 100.0) / n_c) * 100.0) AS BIGINT))
+           CAST(SUM({sql_units(
+                  "n_t * ((CAST(s_t AS DOUBLE) / 100.0) / n_t"
+                  " - (CAST(s_c AS DOUBLE) / 100.0) / n_c)", 2)})
              AS DOUBLE) / 100.0 / SUM(n_t) AS att_spend
     FROM matched
     """,
@@ -2895,9 +2886,7 @@ def ds_coarsened_exact_matching(spark, sf_dir):
             F.floor(F.col("c_acctbal") / 2000.0).cast("long").alias("bal_bin"),
         )
         .agg(
-            F.coalesce(
-                F.sum(F.round(F.col("o_totalprice") * 100).cast("long")), F.lit(0)
-            ).alias("spend_c")
+            F.coalesce(fixed("o_totalprice", 2), F.lit(0)).alias("spend_c")
         )
     )
     strata = units.groupBy("c_nationkey", "bal_bin").agg(
@@ -2907,25 +2896,21 @@ def ds_coarsened_exact_matching(spark, sf_dir):
         F.sum(F.when(~F.col("treated"), F.col("spend_c"))).alias("s_c"),
     )
     matched = strata.filter((F.col("n_t") > 0) & (F.col("n_c") > 0))
-    term = F.round(
-        F.col("n_t")
-        * (
-            (F.col("s_t").cast("double") / 100.0) / F.col("n_t")
-            - (F.col("s_c").cast("double") / 100.0) / F.col("n_c")
-        )
-        * 100.0
-    ).cast("long")
+    gap = F.col("n_t") * (
+        (F.col("s_t").cast("double") / 100.0) / F.col("n_t")
+        - (F.col("s_c").cast("double") / 100.0) / F.col("n_c")
+    )
     return matched.agg(
         F.count(F.lit(1)).alias("n_strata"),
         F.sum("n_t").alias("n_treated"),
         F.sum("n_c").alias("n_control"),
-        (F.sum(term).cast("double") / 100.0 / F.sum("n_t")).alias("att_spend"),
+        (fixsum(gap, 2) / F.sum("n_t")).alias("att_spend"),
     ).select("n_strata", "n_treated", "n_control", "att_spend")
 
 
 @query(
     "ds_price_elasticity",
-    oracle="""
+    oracle=f"""
     WITH obs AS (
       SELECT l_returnflag, LN(l_extendedprice) AS x, LN(l_quantity) AS y
       FROM lineitem WHERE l_quantity > 0 AND l_extendedprice > 0
@@ -2933,11 +2918,11 @@ def ds_coarsened_exact_matching(spark, sf_dir):
     m AS (
       SELECT l_returnflag,
              CAST(COUNT(*) AS BIGINT) AS n,
-             CAST(SUM(CAST(ROUND(x * 1000000.0) AS BIGINT)) AS BIGINT) AS sx,
-             CAST(SUM(CAST(ROUND(y * 1000000.0) AS BIGINT)) AS BIGINT) AS sy,
-             CAST(SUM(CAST(ROUND(x * x * 1000000.0) AS BIGINT)) AS BIGINT) AS sxx,
-             CAST(SUM(CAST(ROUND(y * y * 1000000.0) AS BIGINT)) AS BIGINT) AS syy,
-             CAST(SUM(CAST(ROUND(x * y * 1000000.0) AS BIGINT)) AS BIGINT) AS sxy
+             {sql_fixed("x", 6)} AS sx,
+             {sql_fixed("y", 6)} AS sy,
+             {sql_fixed("x * x", 6)} AS sxx,
+             {sql_fixed("y * y", 6)} AS syy,
+             {sql_fixed("x * y", 6)} AS sxy
       FROM obs GROUP BY l_returnflag
     )
     SELECT l_returnflag, n,
@@ -2971,16 +2956,13 @@ def ds_price_elasticity(spark, sf_dir):
     x = F.log(F.col("l_extendedprice"))
     y = F.log(F.col("l_quantity"))
 
-    def fix(col):
-        return F.sum(F.round(col * 1000000.0).cast("long"))
-
     m = li.groupBy("l_returnflag").agg(
         F.count(F.lit(1)).alias("n"),
-        fix(x).alias("sx"),
-        fix(y).alias("sy"),
-        fix(x * x).alias("sxx"),
-        fix(y * y).alias("syy"),
-        fix(x * y).alias("sxy"),
+        fixed(x, 6).alias("sx"),
+        fixed(y, 6).alias("sy"),
+        fixed(x * x, 6).alias("sxx"),
+        fixed(y * y, 6).alias("syy"),
+        fixed(x * y, 6).alias("sxy"),
     )
     n = F.col("n").cast("double")
     sx, sy = F.col("sx").cast("double"), F.col("sy").cast("double")
@@ -2998,12 +2980,12 @@ def ds_price_elasticity(spark, sf_dir):
 
 @query(
     "ds_seasonality_index",
-    oracle="""
+    oracle=f"""
     WITH daily AS (
       SELECT o_orderstatus,
              EXTRACT(month FROM o_orderdate) AS month,
              CAST(CAST(o_orderdate AS DATE) - DATE '1970-01-01' AS BIGINT) AS d,
-             SUM(CAST(ROUND(o_totalprice * 100.0) AS BIGINT)) AS rev_c
+             SUM({sql_units("o_totalprice", 2)}) AS rev_c
       FROM orders GROUP BY 1, 2, 3
     ),
     monthly AS (
@@ -3048,7 +3030,7 @@ def ds_seasonality_index(spark, sf_dir):
             ),
         )
         .groupBy("o_orderstatus", "month", "d")
-        .agg(F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias("rev_c"))
+        .agg(fixed("o_totalprice", 2).alias("rev_c"))
     )
     monthly = daily.groupBy("o_orderstatus", "month").agg(
         F.sum("rev_c").alias("rev_c"), F.count(F.lit(1)).alias("n_days")
@@ -3280,12 +3262,12 @@ def ds_growth_accounting(spark, sf_dir):
 
 @query(
     "ds_stl_decompose_lite",
-    oracle="""
+    oracle=f"""
     WITH daily AS (
       SELECT o_orderstatus AS st,
              CAST(CAST(o_orderdate AS DATE) - DATE '1970-01-01' AS BIGINT)
                AS epoch_day,
-             CAST(SUM(CAST(ROUND(o_totalprice * 100.0) AS BIGINT)) AS BIGINT)
+             {sql_fixed("o_totalprice", 2)}
                AS rev_c
       FROM orders GROUP BY st, epoch_day
     ),
@@ -3354,7 +3336,7 @@ def ds_stl_decompose_lite(spark, sf_dir):
             ).cast("long"),
         )
         .groupBy(F.col("o_orderstatus").alias("st"), "epoch_day")
-        .agg(F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias("rev_c"))
+        .agg(fixed("o_totalprice", 2).alias("rev_c"))
     )
     w7 = (
         Window.partitionBy("st").orderBy("epoch_day").rowsBetween(-3, 3)
@@ -3407,7 +3389,7 @@ _MACD_TAIL = 128
       SELECT o_orderstatus,
              CAST(CAST(o_orderdate AS DATE) - DATE '1970-01-01' AS BIGINT)
                AS epoch_day,
-             CAST(SUM(CAST(ROUND(o_totalprice * 100.0) AS BIGINT)) AS DOUBLE)
+             CAST(SUM({sql_units("o_totalprice", 2)}) AS DOUBLE)
                AS x
       FROM orders GROUP BY o_orderstatus, epoch_day
       QUALIFY row_number() OVER (PARTITION BY o_orderstatus
@@ -3475,7 +3457,7 @@ def win_macd_fold(spark, sf_dir):
         )
         .groupBy("o_orderstatus", "epoch_day")
         .agg(
-            F.sum(F.round(F.col("o_totalprice") * 100).cast("long"))
+            fixed("o_totalprice", 2)
             .cast("double")
             .alias("x")
         )
@@ -3537,11 +3519,10 @@ def win_macd_fold(spark, sf_dir):
 
 @query(
     "ds_hhi_concentration",
-    oracle="""
+    oracle=f"""
     WITH sup AS (
       SELECT s.s_nationkey AS nk, l.l_suppkey AS sk,
-             CAST(SUM(CAST(ROUND(l.l_extendedprice * 100.0) AS BIGINT))
-                  AS BIGINT) AS rev_c
+             {sql_fixed("l.l_extendedprice", 2)} AS rev_c
       FROM lineitem l JOIN supplier s ON l.l_suppkey = s.s_suppkey
       GROUP BY nk, sk
     ),
@@ -3586,9 +3567,7 @@ def ds_hhi_concentration(spark, sf_dir):
         l.join(F.broadcast(s), l.l_suppkey == s.s_suppkey)
         .groupBy(F.col("s_nationkey").alias("nk"), F.col("l_suppkey").alias("sk"))
         .agg(
-            F.sum(F.round(F.col("l_extendedprice") * 100).cast("long")).alias(
-                "rev_c"
-            )
+            fixed("l_extendedprice", 2).alias("rev_c")
         )
     )
     per = sup.groupBy("nk").agg(
@@ -3612,10 +3591,10 @@ def ds_hhi_concentration(spark, sf_dir):
 
 @query(
     "ds_decision_stump",
-    oracle="""
+    oracle=f"""
     WITH base AS (
       SELECT CAST(l_quantity AS BIGINT) AS qty,
-             CAST(ROUND(l_discount * 100) AS BIGINT) AS disc,
+             {sql_units("l_discount", 2)} AS disc,
              CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END AS y
       FROM lineitem
     ),
@@ -3647,11 +3626,10 @@ def ds_hhi_concentration(spark, sf_dir):
     scored AS (
       SELECT s.feature, s.thr, s.n_l, s.pos_l,
              t.n - s.n_l AS n_r, t.p - s.pos_l AS pos_r,
-             CAST(ROUND(
-               2.0 * (CAST(s.pos_l AS DOUBLE) * (s.n_l - s.pos_l) / s.n_l
-                      + CAST(t.p - s.pos_l AS DOUBLE)
-                        * ((t.n - s.n_l) - (t.p - s.pos_l)) / (t.n - s.n_l))
-               / t.n * 1e12) AS BIGINT) AS gini_fp
+             {sql_units(
+                "2.0 * (CAST(s.pos_l AS DOUBLE) * (s.n_l - s.pos_l) / s.n_l"
+                " + CAST(t.p - s.pos_l AS DOUBLE)"
+                " * ((t.n - s.n_l) - (t.p - s.pos_l)) / (t.n - s.n_l)) / t.n", 12)} AS gini_fp
       FROM split s, tot t
       WHERE s.n_l > 0 AND t.n - s.n_l > 0
     ),
@@ -3692,7 +3670,7 @@ def ds_decision_stump(spark, sf_dir):
     li = t(spark, sf_dir, "lineitem")
     base = li.select(
         F.col("l_quantity").cast("long").alias("qty"),
-        F.round(F.col("l_discount") * 100).cast("long").alias("disc"),
+        units("l_discount", 2).alias("disc"),
         (F.col("l_returnflag") == "R").cast("long").alias("y"),
     )
     vals = (
@@ -3752,7 +3730,7 @@ def ds_decision_stump(spark, sf_dir):
         "pos_l",
         n_r.alias("n_r"),
         pos_r.alias("pos_r"),
-        F.round(gini * 1e12).cast("long").alias("gini_fp"),
+        units(gini, 12).alias("gini_fp"),
     )
     best = (
         scored.orderBy("gini_fp", "feature", "thr")
@@ -3777,7 +3755,7 @@ def ds_decision_stump(spark, sf_dir):
     )
 
 
-_NB_LN = "CAST(ROUND(LN({num} / {den}) * 1e12) AS BIGINT)"
+_NB_LN = sql_units("LN({num} / {den})", 12)
 
 
 def _nb_sql_lik(x: str, v_dom: int) -> str:
@@ -3854,7 +3832,7 @@ def ds_naive_bayes(spark, sf_dir):
     o = t(spark, sf_dir, "orders")
 
     def ln_fp(num, den):
-        return F.round(F.log(num / den) * 1e12).cast("long")
+        return units(F.log(num / den), 12)
 
     cls = o.agg(
         F.sum((F.col("o_orderstatus") == "F").cast("long")).alias("nF"),
@@ -3928,12 +3906,12 @@ def ds_naive_bayes(spark, sf_dir):
 
 @query(
     "ds_forecast_eval",
-    oracle="""
+    oracle=f"""
     WITH daily AS (
       SELECT o_orderstatus,
              CAST(CAST(o_orderdate AS DATE) - DATE '1970-01-01' AS BIGINT)
                AS d,
-             CAST(SUM(CAST(ROUND(o_totalprice * 100.0) AS BIGINT)) AS BIGINT)
+             {sql_fixed("o_totalprice", 2)}
                AS y
       FROM orders GROUP BY o_orderstatus, d
     ),
@@ -3984,7 +3962,7 @@ def ds_forecast_eval(spark, sf_dir):
             ).cast("long"),
         )
         .groupBy("o_orderstatus", "d")
-        .agg(F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias("y"))
+        .agg(fixed("o_totalprice", 2).alias("y"))
     )
     a = daily.alias("a")
     p = daily.select(
@@ -4024,8 +4002,7 @@ _PVB_Y0, _PVB_Y1 = 1996, 1997
     WITH per AS (
       SELECT l_partkey AS pk, year(l_shipdate) AS yr,
              CAST(SUM(CAST(l_quantity AS BIGINT)) AS BIGINT) AS q,
-             CAST(SUM(CAST(ROUND(l_extendedprice * 100.0) AS BIGINT))
-                  AS BIGINT) AS r
+             {sql_fixed("l_extendedprice", 2)} AS r
       FROM lineitem WHERE year(l_shipdate) IN ({_PVB_Y0}, {_PVB_Y1})
       GROUP BY pk, yr
     ),
@@ -4094,7 +4071,7 @@ def ds_price_volume_bridge(spark, sf_dir):
         F.col("l_partkey").alias("pk"), F.year("l_shipdate").alias("yr")
     ).agg(
         F.sum(F.col("l_quantity").cast("long")).alias("q"),
-        F.sum(F.round(F.col("l_extendedprice") * 100).cast("long")).alias("r"),
+        fixed("l_extendedprice", 2).alias("r"),
     )
     w = (
         per.join(F.broadcast(p), per.pk == p.p_partkey)
@@ -4155,14 +4132,14 @@ _MIG_SPLIT = "1998-01-01"
     oracle=f"""
     WITH p0 AS (
       SELECT o_custkey AS ck,
-             CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) AS BIGINT)
+             {sql_fixed("o_totalprice", 2)}
                AS spend
       FROM orders WHERE o_orderdate < TIMESTAMP '{_MIG_SPLIT}'
       GROUP BY ck
     ),
     p1 AS (
       SELECT o_custkey AS ck,
-             CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) AS BIGINT)
+             {sql_fixed("o_totalprice", 2)}
                AS spend
       FROM orders WHERE o_orderdate >= TIMESTAMP '{_MIG_SPLIT}'
       GROUP BY ck
@@ -4207,7 +4184,7 @@ def ds_segment_migration_matrix(spark, sf_dir):
     per = o.groupBy(
         (F.col("o_orderdate") >= split).cast("int").alias("period"),
         F.col("o_custkey").alias("tie"),
-    ).agg(F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias("key"))
+    ).agg(fixed("o_totalprice", 2).alias("key"))
     ranked = _ranked_nosort(
         per.select("period", "key", "tie", F.col("key").alias("val")),
         with_totals=True,
@@ -4426,7 +4403,7 @@ def _sql_corr_pair(a: str, b: str) -> str:
     WITH daily AS (
       SELECT CAST(CAST(o_orderdate AS DATE) - DATE '1970-01-01' AS BIGINT) AS d,
              o_orderstatus,
-             CAST(SUM(CAST(ROUND(o_totalprice * 100.0) AS BIGINT)) AS BIGINT)
+             {sql_fixed("o_totalprice", 2)}
                AS rev_c
       FROM orders GROUP BY d, o_orderstatus
     ),
@@ -4468,7 +4445,7 @@ def ds_corr_matrix_series(spark, sf_dir):
             ).cast("long"),
         )
         .groupBy("d", "o_orderstatus")
-        .agg(F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias("rev_c"))
+        .agg(fixed("o_totalprice", 2).alias("rev_c"))
     )
     wide = daily.groupBy("d").agg(
         *[
@@ -4505,7 +4482,6 @@ def ds_corr_matrix_series(spark, sf_dir):
 
 
 _TB_CAP = 5          # bucket capacity, tokens
-_TB_REFILL_US = 60_000_000  # microseconds per token refill
 _TB_FP = 1_000_000   # token fixed-point scale
 _TB_TAIL = 64        # per-user event cap (state bound)
 
@@ -4629,11 +4605,10 @@ def ds_token_bucket_sim(spark, sf_dir):
 
 @query(
     "ds_abc_classification",
-    oracle="""
+    oracle=f"""
     WITH per AS (
       SELECT l_partkey AS pk,
-             CAST(SUM(CAST(ROUND(l_extendedprice * 100.0) AS BIGINT))
-                  AS BIGINT) AS rev_c
+             {sql_fixed("l_extendedprice", 2)} AS rev_c
       FROM lineitem GROUP BY pk
     ),
     tot AS (SELECT CAST(SUM(rev_c) AS BIGINT) AS s FROM per),
@@ -4675,7 +4650,7 @@ def ds_abc_classification(spark, sf_dir):
     3-row class aggregate."""
     li = t(spark, sf_dir, "lineitem")
     per = li.groupBy(F.col("l_partkey").alias("pk")).agg(
-        F.sum(F.round(F.col("l_extendedprice") * 100).cast("long")).alias("rev_c")
+        fixed("l_extendedprice", 2).alias("rev_c")
     )
     # Round-12 (guide §1.2): the revenue total used to be a second
     # aggregate over per, cross-joined back — re-executing the
@@ -4836,12 +4811,12 @@ def ds_erlang_c_staffing(spark, sf_dir):
 
 @query(
     "ds_seasonal_strength",
-    oracle="""
+    oracle=f"""
     WITH daily AS (
       SELECT o_orderstatus AS st,
              CAST(CAST(o_orderdate AS DATE) - DATE '1970-01-01' AS BIGINT)
                AS epoch_day,
-             CAST(SUM(CAST(ROUND(o_totalprice * 100.0) AS BIGINT)) AS BIGINT)
+             {sql_fixed("o_totalprice", 2)}
                AS rev_c
       FROM orders GROUP BY st, epoch_day
     ),
@@ -4926,7 +4901,7 @@ def ds_seasonal_strength(spark, sf_dir):
             ).cast("long"),
         )
         .groupBy(F.col("o_orderstatus").alias("st"), "epoch_day")
-        .agg(F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias("rev_c"))
+        .agg(fixed("o_totalprice", 2).alias("rev_c"))
     )
     w7 = Window.partitionBy("st").orderBy("epoch_day").rowsBetween(-3, 3)
     det = (

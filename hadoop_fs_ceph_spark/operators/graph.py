@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from hadoop_fs_ceph_spark.barrier import eager_barrier
+from hadoop_fs_ceph_spark.canonical import fixed, sql_fixed, sql_units, units
 from hadoop_fs_ceph_spark.operators.basket_common import (
     OP_CAPPED_CTES,
     capped_order_parts,
@@ -1284,8 +1285,7 @@ def graph_modularity_score(spark, sf_dir):
     oracle=f"""
     WITH flows AS (
       SELECT c.c_nationkey AS i, s.s_nationkey AS j,
-             CAST(SUM(CAST(ROUND(l.l_extendedprice * 100.0) AS BIGINT))
-                  AS BIGINT) AS f
+             {sql_fixed("l.l_extendedprice", 2)} AS f
       FROM lineitem l
       JOIN orders o ON l.l_orderkey = o.o_orderkey
       JOIN customer c ON o.o_custkey = c.c_custkey
@@ -1295,9 +1295,8 @@ def graph_modularity_score(spark, sf_dir):
     mi AS (SELECT i, CAST(SUM(f) AS BIGINT) AS m FROM flows GROUP BY i),
     wj AS (SELECT j, CAST(SUM(f) AS BIGINT) AS w FROM flows GROUP BY j),
     pts AS (
-      SELECT CAST(ROUND((LN(CAST(mi.m AS DOUBLE)) + LN(CAST(wj.w AS DOUBLE)))
-                        * 1e12) AS BIGINT) AS x_fp,
-             CAST(ROUND(LN(CAST(fl.f AS DOUBLE)) * 1e12) AS BIGINT) AS y_fp
+      SELECT {sql_units("LN(CAST(mi.m AS DOUBLE)) + LN(CAST(wj.w AS DOUBLE))", 12)} AS x_fp,
+             {sql_units("LN(CAST(fl.f AS DOUBLE))", 12)} AS y_fp
       FROM flows fl JOIN mi ON fl.i = mi.i JOIN wj ON fl.j = wj.j
     ),
     mom AS (
@@ -1364,7 +1363,7 @@ def graph_gravity_model(spark, sf_dir):
             F.col("c_nationkey").alias("i"), F.col("s_nationkey").alias("j")
         )
         .agg(
-            F.sum(F.round(F.col("l_extendedprice") * 100).cast("long")).alias("f")
+            fixed("l_extendedprice", 2).alias("f")
         )
         .persist()
     )
@@ -1374,18 +1373,10 @@ def graph_gravity_model(spark, sf_dir):
         flows.join(F.broadcast(mi), "i")
         .join(F.broadcast(wj), "j")
         .select(
-            F.round(
-                (
-                    F.log(F.col("m").cast("double"))
-                    + F.log(F.col("w").cast("double"))
-                )
-                * 1e12
-            )
-            .cast("long")
-            .alias("x_fp"),
-            F.round(F.log(F.col("f").cast("double")) * 1e12)
-            .cast("long")
-            .alias("y_fp"),
+            units(
+                F.log(F.col("m").cast("double")) + F.log(F.col("w").cast("double")), 12
+            ).alias("x_fp"),
+            units(F.log(F.col("f").cast("double")), 12).alias("y_fp"),
         )
     )
     mom = pts.agg(

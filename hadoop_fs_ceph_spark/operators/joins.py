@@ -18,7 +18,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from hadoop_fs_ceph_spark import scratch
-from hadoop_fs_ceph_spark.canonical import dsum, sql_dsum
+from hadoop_fs_ceph_spark.canonical import dsum, fixed, sql_dsum, sql_fixed, sql_units, units
 from hadoop_fs_ceph_spark.registry import query
 from hadoop_fs_ceph_spark.tables import dim, t
 
@@ -468,10 +468,10 @@ def join_existence_flag(spark, sf_dir):
 
 @query(
     "join_dpp_partitioned",
-    oracle="""
+    oracle=f"""
     SELECT CAST(EXTRACT(year FROM o_orderdate) AS INTEGER) AS yr,
            COUNT(*) AS n,
-           CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) AS BIGINT)
+           {sql_fixed("o_totalprice", 2)}
              AS cents
     FROM orders
     WHERE o_orderstatus = 'F'
@@ -525,7 +525,7 @@ def join_dpp_partitioned(spark, sf_dir):
         .groupBy(F.year("o_orderdate").cast("int").alias("yr"))
         .agg(
             F.count(F.lit(1)).alias("n"),
-            F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias("cents"),
+            fixed("o_totalprice", 2).alias("cents"),
         )
         .orderBy("yr")
     )
@@ -1407,10 +1407,10 @@ def join_record_linkage_fs(spark, sf_dir):
 
 @query(
     "join_aqe_skew_split",
-    oracle="""
+    oracle=f"""
     WITH f AS (
       SELECT CASE WHEN l_orderkey % 2 = 0 THEN 0 ELSE l_orderkey END AS jk,
-             CAST(ROUND(l_extendedprice * 100) AS BIGINT) AS cents
+             {sql_units("l_extendedprice", 2)} AS cents
       FROM lineitem
     ),
     d AS (SELECT o_orderkey AS jk, o_orderpriority FROM orders)
@@ -1447,7 +1447,7 @@ def join_aqe_skew_split(spark, sf_dir):
         F.when(F.col("l_orderkey") % 2 == 0, F.lit(0))
         .otherwise(F.col("l_orderkey"))
         .alias("jk"),
-        F.round(F.col("l_extendedprice") * 100).cast("long").alias("cents"),
+        units("l_extendedprice", 2).alias("cents"),
     )
     d = t(spark, sf_dir, "orders").select(
         F.col("o_orderkey").alias("jk"), "o_orderpriority"

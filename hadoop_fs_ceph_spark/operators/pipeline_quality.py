@@ -26,9 +26,14 @@ from hadoop_fs_ceph_spark.canonical import (
     davg,
     dsum,
     dvar_samp,
+    fixed,
+    fixsum,
     sql_davg,
     sql_dsum,
     sql_dvar_samp,
+    sql_fixed,
+    sql_units,
+    units,
 )
 from hadoop_fs_ceph_spark.functions.text import poly_hash, sql_poly_hash
 from hadoop_fs_ceph_spark.operators.ranking import (
@@ -644,7 +649,7 @@ def profile_equidepth_histogram(spark, sf_dir):
     the plan now survives 100 TB."""
     o = t(spark, sf_dir, "orders")
     x = o.select(
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("cents")
+        units("o_totalprice", 2).alias("cents")
     ).persist()
     base = x.agg(
         F.min("cents").alias("lo"),
@@ -1331,10 +1336,10 @@ _CUPED_CUT = "2024-01-16"
              CASE WHEN (user_id * {_MIX}) % 100 < 50
                   THEN 'control' ELSE 'treatment' END AS variant,
              CAST(SUM(CASE WHEN ts < TIMESTAMP '{_CUPED_CUT}'
-                  THEN CAST(ROUND(value * 1000000.0) AS BIGINT) ELSE 0 END)
+                  THEN {sql_units("value", 6)} ELSE 0 END)
                   AS DOUBLE) / 1000000.0 AS x,
              CAST(SUM(CASE WHEN ts >= TIMESTAMP '{_CUPED_CUT}'
-                  THEN CAST(ROUND(value * 1000000.0) AS BIGINT) ELSE 0 END)
+                  THEN {sql_units("value", 6)} ELSE 0 END)
                   AS DOUBLE) / 1000000.0 AS y
       FROM events GROUP BY user_id
     ),
@@ -1389,7 +1394,7 @@ def ds_ab_cuped_adjust(spark, sf_dir):
     bit-identical cross-engine."""
     e = t(spark, sf_dir, "events")
     cut = F.lit(_CUPED_CUT).cast("timestamp_ntz")
-    qv = F.round(F.col("value") * 1e6).cast("long")
+    qv = units("value", 6)
     per_user = e.groupBy("user_id").agg(
         (
             F.sum(F.when(F.col("ts") < cut, qv).otherwise(F.lit(0))).cast("double") / 1e6
@@ -1461,7 +1466,7 @@ _NEYMAN_TARGET = 500  # total sample budget across strata
              SQRT((s2 - s1 * s1 / nh) / (nh - 1.0)) AS sh
       FROM s
     ),
-    tot AS (SELECT CAST(SUM(CAST(ROUND(nh * sh * 100.0) AS BIGINT)) AS DOUBLE)
+    tot AS (SELECT CAST(SUM({sql_units("nh * sh", 2)}) AS DOUBLE)
                    / 100.0 AS denom FROM m),
     alloc AS (
       SELECT stratum, nh, sh,
@@ -1471,7 +1476,7 @@ _NEYMAN_TARGET = 500  # total sample budget across strata
     gated AS (
       SELECT o.o_orderpriority AS stratum,
              CASE WHEN (o.o_orderkey * {_MIX}) % 1000000
-                       < CAST(ROUND(a.rate * 1000000.0) AS BIGINT)
+                       < {sql_units("a.rate", 6)}
                   THEN 1 ELSE 0 END AS picked
       FROM orders o JOIN alloc a ON a.stratum = o.o_orderpriority
     )
@@ -1520,10 +1525,7 @@ def sample_neyman_allocation(spark, sf_dir):
     # order-independent fixed-point fold: a raw double SUM over strata is
     # association-order-dependent and could flip the gate threshold's last ulp
     tot = m.agg(
-        (
-            F.sum(F.round(F.col("nh") * F.col("sh") * 100.0).cast("long")).cast("double")
-            / 100.0
-        ).alias("denom")
+        fixsum(F.col("nh") * F.col("sh"), 2).alias("denom")
     )
     alloc = m.crossJoin(F.broadcast(tot)).select(
         "stratum",
@@ -1541,7 +1543,7 @@ def sample_neyman_allocation(spark, sf_dir):
         "rate",
         F.when(
             (F.col("o_orderkey") * _MIX) % 1_000_000
-            < F.round(F.col("rate") * 1e6).cast("long"),
+            < units("rate", 6),
             1,
         )
         .otherwise(0)
@@ -2306,13 +2308,13 @@ def sample_temporal_split(spark, sf_dir):
 
 @query(
     "ds_anova_oneway",
-    oracle="""
+    oracle=f"""
     WITH g AS (
       SELECT event_type,
              CAST(COUNT(*) AS BIGINT) AS n_g,
-             CAST(SUM(CAST(ROUND(value * 1000000.0) AS BIGINT)) AS BIGINT)
+             {sql_fixed("value", 6)}
                AS i1_g,
-             CAST(SUM(CAST(ROUND(value * value * 100.0) AS BIGINT)) AS BIGINT)
+             {sql_fixed("value * value", 2)}
                AS i2_g
       FROM events GROUP BY event_type
     ),
@@ -2382,10 +2384,8 @@ def ds_anova_oneway(spark, sf_dir):
     arithmetic inside the plan."""
     g = t(spark, sf_dir, "events").groupBy("event_type").agg(
         F.count(F.lit(1)).cast("long").alias("n_g"),
-        F.sum(F.round(F.col("value") * 1000000.0).cast("long")).alias("i1_g"),
-        F.sum(F.round(F.col("value") * F.col("value") * 100.0).cast("long")).alias(
-            "i2_g"
-        ),
+        fixed("value", 6).alias("i1_g"),
+        fixed(F.col("value") * F.col("value"), 2).alias("i2_g"),
     )
     packed = g.agg(
         F.transform(
@@ -2596,7 +2596,7 @@ def sample_rolling_origin_folds(spark, sf_dir):
     WITH assigned AS (
       SELECT CASE WHEN ((user_id % 100) * ({_MIX} % 100)) % 100 < 50
                   THEN 0 ELSE 1 END AS is_b,
-             CAST(ROUND(value * 100) AS BIGINT) AS cents,
+             {sql_units("value", 2)} AS cents,
              event_id
       FROM events
     ),
@@ -2654,7 +2654,7 @@ def ds_mann_whitney_u(spark, sf_dir):
     # overflow anywhere.
     ranked = _ranked_nosort(
         t(spark, sf_dir, "events").select(
-            F.round(F.col("value") * 100).cast("long").alias("key"),
+            units("value", 2).alias("key"),
             F.col("event_id").alias("tie"),
             F.when(F.pmod(F.pmod(F.col("user_id"), 100) * (_MIX % 100), 100) < 50, 0)
             .otherwise(1)
@@ -2984,13 +2984,13 @@ def ds_chi_square_independence(spark, sf_dir):
 
 @query(
     "ds_bh_fdr_chebyshev",
-    oracle="""
+    oracle=f"""
     WITH g AS (
       SELECT event_type,
              CAST(COUNT(*) AS BIGINT) AS n_g,
-             CAST(SUM(CAST(ROUND(value * 1000000.0) AS BIGINT)) AS BIGINT)
+             {sql_fixed("value", 6)}
                AS i1_g,
-             CAST(SUM(CAST(ROUND(value * value * 100.0) AS BIGINT)) AS BIGINT)
+             {sql_fixed("value * value", 2)}
                AS i2_g
       FROM events GROUP BY event_type
     ),
@@ -3056,8 +3056,8 @@ def ds_bh_fdr_chebyshev(spark, sf_dir):
     after lives on k rows."""
     g = t(spark, sf_dir, "events").groupBy("event_type").agg(
         F.count(F.lit(1)).cast("long").alias("n_g"),
-        F.sum(F.round(F.col("value") * 1000000.0).cast("long")).alias("i1_g"),
-        F.sum(F.round(F.col("value") * F.col("value") * 100.0).cast("long")).alias("i2_g"),
+        fixed("value", 6).alias("i1_g"),
+        fixed(F.col("value") * F.col("value"), 2).alias("i2_g"),
     )
     tot = g.agg(
         F.sum("n_g").cast("long").alias("n"),
@@ -3143,7 +3143,7 @@ def _sql_pois_weight(u: str) -> str:
       SELECT r.rep,
              {_sql_pois_weight(f"(((o.o_orderkey * 2654435761 + r.rep * 99991) "
                                f"% {_BOOT_P}) / {_BOOT_P}.0)")} AS wt,
-             CAST(ROUND(o.o_totalprice * 100) AS BIGINT) AS cents
+             {sql_units("o.o_totalprice", 2)} AS cents
       FROM orders o CROSS JOIN reps r
     ),
     means AS (
@@ -3203,7 +3203,7 @@ def sample_poisson_bootstrap(spark, sf_dir):
         .otherwise(5)
     )
     o = t(spark, sf_dir, "orders").select(
-        "o_orderkey", F.round(F.col("o_totalprice") * 100).cast("long").alias("cents")
+        "o_orderkey", units("o_totalprice", 2).alias("cents")
     )
     w = o.select("o_orderkey", "cents", reps).select(
         "rep", wt.alias("wt"), "cents"
@@ -3231,7 +3231,7 @@ def sample_poisson_bootstrap(spark, sf_dir):
 
 @query(
     "ds_diff_in_diff",
-    oracle="""
+    oracle=f"""
     WITH x AS (
       SELECT CAST(user_id % 2 AS BIGINT) AS treat,
              CASE WHEN CAST(ts AS DATE) >= DATE '2024-01-16' THEN 1 ELSE 0 END
@@ -3242,9 +3242,9 @@ def sample_poisson_bootstrap(spark, sf_dir):
     cells AS (
       SELECT treat, post,
              CAST(COUNT(*) AS BIGINT) AS n,
-             CAST(SUM(CAST(ROUND(value * 1000000.0) AS BIGINT)) AS BIGINT)
+             {sql_fixed("value", 6)}
                AS i1,
-             CAST(SUM(CAST(ROUND(value * value * 100.0) AS BIGINT)) AS BIGINT)
+             {sql_fixed("value * value", 2)}
                AS i2
       FROM x GROUP BY treat, post
     ),
@@ -3305,8 +3305,8 @@ def ds_diff_in_diff(spark, sf_dir):
     )
     cells = x.groupBy("treat", "post").agg(
         F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum(F.round(F.col("value") * 1000000.0).cast("long")).alias("i1"),
-        F.sum(F.round(F.col("value") * F.col("value") * 100.0).cast("long")).alias("i2"),
+        fixed("value", 6).alias("i1"),
+        fixed(F.col("value") * F.col("value"), 2).alias("i2"),
     )
     mean_ = (F.col("i1") / 1000000.0) / F.col("n")
     var_ = (
@@ -3469,10 +3469,10 @@ def profile_key_discovery(spark, sf_dir):
 
 @query(
     "ds_kruskal_wallis",
-    oracle="""
+    oracle=f"""
     WITH assigned AS (
       SELECT ascii(substr(event_type, 1, 1)) AS gid,
-             CAST(ROUND(value * 100) AS BIGINT) AS cents, event_id
+             {sql_units("value", 2)} AS cents, event_id
       FROM events
     ),
     ranked AS (
@@ -3541,7 +3541,7 @@ def ds_kruskal_wallis(spark, sf_dir):
     gid = F.ascii(F.substring("event_type", 1, 1)).cast("long")
     ranked = _ranked_nosort(
         e.select(
-            F.round(F.col("value") * 100).cast("long").alias("key"),
+            units("value", 2).alias("key"),
             F.col("event_id").alias("tie"),
             gid.alias("val"),
         )
@@ -3607,10 +3607,10 @@ def ds_kruskal_wallis(spark, sf_dir):
 
 @query(
     "ds_spearman_rho",
-    oracle="""
+    oracle=f"""
     WITH per AS (
       SELECT o_custkey,
-             CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) AS BIGINT)
+             {sql_fixed("o_totalprice", 2)}
                AS spend_c,
              CAST(COUNT(*) AS BIGINT) AS n_orders
       FROM orders GROUP BY o_custkey
@@ -3659,7 +3659,7 @@ def ds_spearman_rho(spark, sf_dir):
     exact integers, rounded at 1e-8."""
     o = t(spark, sf_dir, "orders")
     per = o.groupBy("o_custkey").agg(
-        F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias("spend_c"),
+        fixed("o_totalprice", 2).alias("spend_c"),
         F.count(F.lit(1)).cast("long").alias("n_orders"),
     )
     ranked = _ranked_nosort(
@@ -3702,17 +3702,17 @@ def ds_spearman_rho(spark, sf_dir):
 
 @query(
     "ds_wilcoxon_signed_rank",
-    oracle="""
+    oracle=f"""
     WITH b AS (
       SELECT (epoch_us(MIN(ts)) + epoch_us(MAX(ts))) // 2 AS mid FROM events
     ),
     per AS (
       SELECT user_id,
              CAST(SUM(CASE WHEN epoch_us(ts) < b.mid
-                           THEN CAST(ROUND(value * 100) AS BIGINT)
+                           THEN {sql_units("value", 2)}
                            ELSE 0 END) AS BIGINT) AS early_c,
              CAST(SUM(CASE WHEN epoch_us(ts) >= b.mid
-                           THEN CAST(ROUND(value * 100) AS BIGINT)
+                           THEN {sql_units("value", 2)}
                            ELSE 0 END) AS BIGINT) AS late_c
       FROM events CROSS JOIN b GROUP BY user_id
     ),
@@ -3771,7 +3771,7 @@ def ds_wilcoxon_signed_rank(spark, sf_dir):
     b = e.agg(
         F.expr("(unix_micros(MIN(ts)) + unix_micros(MAX(ts))) div 2").alias("mid")
     )
-    cents = F.round(F.col("value") * 100).cast("long")
+    cents = units("value", 2)
     per = (
         e.crossJoin(F.broadcast(b))
         .groupBy("user_id")
@@ -4258,10 +4258,10 @@ def ds_lift_gains_deciles(spark, sf_dir):
 
 @query(
     "outlier_ensemble_votes",
-    oracle="""
+    oracle=f"""
     WITH base AS (
       SELECT event_type, event_id,
-             CAST(ROUND(value * 100) AS BIGINT) AS cents
+             {sql_units("value", 2)} AS cents
       FROM events
     ),
     st AS (
@@ -4331,7 +4331,7 @@ def outlier_ensemble_votes(spark, sf_dir):
     base = t(spark, sf_dir, "events").select(
         "event_type",
         "event_id",
-        F.round(F.col("value") * 100).cast("long").alias("cents"),
+        units("value", 2).alias("cents"),
     )
     st = base.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("long").alias("n"),
@@ -4539,9 +4539,9 @@ def profile_bloom_fpp_calibration(spark, sf_dir):
 
 @query(
     "ds_mood_median_test",
-    oracle="""
+    oracle=f"""
     WITH base AS (
-      SELECT event_type, CAST(ROUND(value * 100) AS BIGINT) AS cents
+      SELECT event_type, {sql_units("value", 2)} AS cents
       FROM events
     ),
     gm AS (SELECT quantile_cont(cents, 0.50) AS med FROM base),
@@ -4562,16 +4562,14 @@ def profile_bloom_fpp_calibration(spark, sf_dir):
     ),
     chi AS (
       SELECT CAST(SUM(
-               CAST(ROUND(
-                 (n_above - CAST((n_above + n_below) AS DOUBLE) * ta / n)
-                 * (n_above - CAST((n_above + n_below) AS DOUBLE) * ta / n)
-                 / (CAST((n_above + n_below) AS DOUBLE) * ta / n) * 1e9
-               ) AS BIGINT)
-               + CAST(ROUND(
-                 (n_below - CAST((n_above + n_below) AS DOUBLE) * tb / n)
-                 * (n_below - CAST((n_above + n_below) AS DOUBLE) * tb / n)
-                 / (CAST((n_above + n_below) AS DOUBLE) * tb / n) * 1e9
-               ) AS BIGINT)
+               {sql_units(
+                  "(n_above - CAST((n_above + n_below) AS DOUBLE) * ta / n)"
+                  " * (n_above - CAST((n_above + n_below) AS DOUBLE) * ta / n)"
+                  " / (CAST((n_above + n_below) AS DOUBLE) * ta / n)", 9)}
+               + {sql_units(
+                  "(n_below - CAST((n_above + n_below) AS DOUBLE) * tb / n)"
+                  " * (n_below - CAST((n_above + n_below) AS DOUBLE) * tb / n)"
+                  " / (CAST((n_above + n_below) AS DOUBLE) * tb / n)", 9)}
              ) AS BIGINT) AS chi_fp
       FROM cls, tot
     )
@@ -4607,7 +4605,7 @@ def ds_mood_median_test(spark, sf_dir):
     Scale: one global percentile + one grouped conditional count over
     the scan; everything downstream is ≤k rows."""
     base = t(spark, sf_dir, "events").select(
-        "event_type", F.round(F.col("value") * 100).cast("long").alias("cents")
+        "event_type", units("value", 2).alias("cents")
     )
     gm = base.agg(F.expr("percentile(cents, 0.50)").alias("med"))
     cls = (
@@ -4632,12 +4630,8 @@ def ds_mood_median_test(spark, sf_dir):
     ea = row_t * F.col("ta") / F.col("n")
     eb = row_t * F.col("tb") / F.col("n")
     term = (
-        F.round((F.col("n_above") - ea) * (F.col("n_above") - ea) / ea * 1e9).cast(
-            "long"
-        )
-        + F.round(
-            (F.col("n_below") - eb) * (F.col("n_below") - eb) / eb * 1e9
-        ).cast("long")
+        units((F.col("n_above") - ea) * (F.col("n_above") - ea) / ea, 9)
+        + units((F.col("n_below") - eb) * (F.col("n_below") - eb) / eb, 9)
     )
     chi = (
         cls.crossJoin(F.broadcast(tot))
@@ -4874,7 +4868,7 @@ def profile_row_width_budget(spark, sf_dir):
     WITH per AS (
       SELECT user_id,
              CASE WHEN (user_id * {_MIX}) % 100 < 50 THEN 0 ELSE 1 END AS v,
-             CAST(SUM(CAST(ROUND(value * 100) AS BIGINT)) AS BIGINT) AS x,
+             {sql_fixed("value", 2)} AS x,
              CAST(COUNT(*) AS BIGINT) AS y
       FROM events GROUP BY user_id
     ),
@@ -4936,7 +4930,7 @@ def ds_ratio_metric_delta_method(spark, sf_dir):
     relation; the fact table is read once."""
     e = t(spark, sf_dir, "events")
     per = e.groupBy("user_id").agg(
-        F.sum(F.round(F.col("value") * 100).cast("long")).alias("x"),
+        fixed("value", 2).alias("x"),
         F.count(F.lit(1)).cast("long").alias("y"),
     ).select(
         F.when((F.col("user_id") * _MIX) % 100 < 50, 0).otherwise(1).alias("v"),

@@ -8,6 +8,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from hadoop_fs_ceph_spark.barrier import eager_barrier
+from hadoop_fs_ceph_spark.canonical import fixed
 from hadoop_fs_ceph_spark.tables import t
 
 # Exact-median refinement: bucket count per pass. Three passes cover a
@@ -111,7 +112,7 @@ def _quantiles_refine(x, states, key="pct", weight=None):
 def _conc_customer_cents(spark, sf_dir):
     o = t(spark, sf_dir, "orders")
     return o.groupBy("o_custkey").agg(
-        F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias("cents")
+        fixed("o_totalprice", 2).alias("cents")
     )
 
 

@@ -33,6 +33,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from hadoop_fs_ceph_spark.canonical import sql_units, units
 from hadoop_fs_ceph_spark.registry import query
 from hadoop_fs_ceph_spark.tables import t
 
@@ -772,7 +773,7 @@ def fn_interval_family(spark, sf_dir):
     shifts, timestampdiff in seconds/hours against day-truncation and
     a fixed epoch, exact microsecond extraction (unix_micros ≡
     epoch_us), and second-granularity snapping. Complements the
-    date-level calendar family (funcs4) at timestamp precision; all
+    date-level calendar family (scalar_funcs) at timestamp precision; all
     codegen'd JVM intrinsics, no shuffle beyond the final sample
     sort."""
     e = t(spark, sf_dir, "events").filter(F.col("event_id") % 13 == 0)
@@ -940,10 +941,10 @@ def fn_collation_family(spark, sf_dir):
 
 @query(
     "fn_xml_family",
-    oracle="""
+    oracle=f"""
     SELECT o_orderkey,
            o_orderstatus AS status_rt,
-           CAST(ROUND(o_totalprice * 100) AS BIGINT) AS cents_rt,
+           {sql_units("o_totalprice", 2)} AS cents_rt,
            CAST(EXTRACT(year FROM o_orderdate) AS INTEGER) AS yr_xpath
     FROM orders WHERE o_orderkey % 101 = 0
     ORDER BY o_orderkey
@@ -965,7 +966,7 @@ def fn_xml_family(spark, sf_dir):
         F.lit("<o><s>"),
         F.col("o_orderstatus"),
         F.lit("</s><c>"),
-        F.round(F.col("o_totalprice") * 100).cast("long").cast("string"),
+        units("o_totalprice", 2).cast("string"),
         F.lit("</c><y>"),
         F.year("o_orderdate").cast("string"),
         F.lit("</y></o>"),
@@ -989,10 +990,10 @@ def fn_xml_family(spark, sf_dir):
 
 @query(
     "fn_csv_scalar_roundtrip",
-    oracle="""
+    oracle=f"""
     SELECT o_orderkey,
            o_orderstatus AS status_rt,
-           CAST(ROUND(o_totalprice * 100) AS BIGINT) AS cents_rt,
+           {sql_units("o_totalprice", 2)} AS cents_rt,
            o_orderpriority AS priority_rt
     FROM orders WHERE o_orderkey % 103 = 0
     ORDER BY o_orderkey
@@ -1011,7 +1012,7 @@ def fn_csv_scalar_roundtrip(spark, sf_dir):
     line = F.to_csv(
         F.struct(
             F.col("o_orderstatus").alias("s"),
-            F.round(F.col("o_totalprice") * 100).cast("long").alias("c"),
+            units("o_totalprice", 2).alias("c"),
             F.col("o_orderpriority").alias("p"),
         )
     )

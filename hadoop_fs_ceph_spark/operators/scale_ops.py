@@ -28,11 +28,11 @@ from pyspark.sql import functions as F
 
 from hadoop_fs_ceph_spark.canonical import dsum, sql_dsum
 from hadoop_fs_ceph_spark.functions.similarity import cosine, sql_cosine
+from hadoop_fs_ceph_spark.operators.tpch import _REV
 from hadoop_fs_ceph_spark.registry import query
 from hadoop_fs_ceph_spark.tables import t
 
 _N_SALT = 8
-_REV = "l_extendedprice * (1 - l_discount)"
 
 
 @query(

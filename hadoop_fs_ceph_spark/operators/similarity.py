@@ -20,6 +20,7 @@ from pyspark.sql import Column, Window
 from pyspark.sql import functions as F
 
 from hadoop_fs_ceph_spark.barrier import eager_barrier
+from hadoop_fs_ceph_spark.canonical import fixsum, sql_units, units
 from hadoop_fs_ceph_spark.functions.similarity import (
     cosine,
     dot,
@@ -195,7 +196,7 @@ def sim_embedding_near_dup(spark, sf_dir):
 
 @query(
     "sim_centroid_per_label",
-    oracle="""
+    oracle=f"""
     WITH u AS (
       SELECT label, i - 1 AS pos,
              CAST(embedding[i] AS DOUBLE) AS val
@@ -203,7 +204,7 @@ def sim_embedding_near_dup(spark, sf_dir):
     ),
     m AS (
       SELECT label, pos,
-             CAST(SUM(CAST(ROUND(val * 1000000.0) AS BIGINT)) AS DOUBLE)
+             CAST(SUM({sql_units("val", 6)}) AS DOUBLE)
                / 1000000.0 / COUNT(*) AS a
       FROM u GROUP BY label, pos
     )
@@ -227,11 +228,7 @@ def sim_centroid_per_label(spark, sf_dir):
         "label", "pos", F.col("v").cast("double").alias("val")
     )
     m = exploded.groupBy("label", "pos").agg(
-        (
-            F.sum(F.round(F.col("val") * 1e6).cast("long")).cast("double")
-            / F.lit(1e6)
-            / F.count(F.lit(1))
-        ).alias("a")
+        (fixsum("val", 6) / F.count(F.lit(1))).alias("a")
     )
     return (
         m.groupBy("label")
@@ -947,8 +944,7 @@ _SQL_JL_SIGN = (
              CAST(list_reduce(list_prepend(CAST(0 AS BIGINT),
                list_transform(generate_series(0, {_JL_IN_DIM - 1}), i ->
                  {_SQL_JL_SIGN}
-                 * CAST(ROUND(CAST(embedding[i + 1] AS DOUBLE) * 1000000.0)
-                        AS BIGINT))),
+                 * {sql_units("CAST(embedding[i + 1] AS DOUBLE)", 6)})),
                (a, b) -> a + b) AS DOUBLE) / 1000000.0) AS reduced
     FROM embeddings
     """,
@@ -983,7 +979,7 @@ def sim_random_projection(spark, sf_dir):
     e = t(spark, sf_dir, "embeddings")
     qint = F.transform(
         vec_double(F.col("embedding")),
-        lambda x: F.round(x * F.lit(1e6)).cast("long"),
+        lambda x: units(x, 6),
     )
     reduced = F.element_at(
         F.transform(
@@ -1023,7 +1019,7 @@ def sim_random_projection(spark, sf_dir):
     ),
     m AS (
       SELECT cell, pos,
-             CAST(SUM(CAST(ROUND(val * 1000000.0) AS BIGINT)) AS DOUBLE)
+             CAST(SUM({sql_units("val", 6)}) AS DOUBLE)
                / 1000000.0 / COUNT(*) AS a,
              COUNT(*) AS nc
       FROM u GROUP BY cell, pos
@@ -1062,11 +1058,7 @@ def sim_kmeans_update(spark, sf_dir):
         .select("cell", "pos", F.col("v").cast("double").alias("val"))
         .groupBy("cell", "pos")
         .agg(
-            (
-                F.sum(F.round(F.col("val") * 1e6).cast("long")).cast("double")
-                / F.lit(1e6)
-                / F.count(F.lit(1))
-            ).alias("a"),
+            (fixsum("val", 6) / F.count(F.lit(1))).alias("a"),
             F.count(F.lit(1)).alias("nc"),
         )
     )
@@ -1102,7 +1094,7 @@ def sim_kmeans_update(spark, sf_dir):
     ),
     m AS (
       SELECT cell, pos,
-             CAST(SUM(CAST(ROUND(val * 1000000.0) AS BIGINT)) AS DOUBLE)
+             CAST(SUM({sql_units("val", 6)}) AS DOUBLE)
                / 1000000.0 / COUNT(*) AS a
       FROM u GROUP BY cell, pos
     ),
@@ -1154,11 +1146,7 @@ def dedup_semantic_cell_refined(spark, sf_dir):
         .select("cell", "pos", F.col("v").cast("double").alias("val"))
         .groupBy("cell", "pos")
         .agg(
-            (
-                F.sum(F.round(F.col("val") * 1e6).cast("long")).cast("double")
-                / F.lit(1e6)
-                / F.count(F.lit(1))
-            ).alias("a")
+            (fixsum("val", 6) / F.count(F.lit(1))).alias("a")
         )
         .groupBy("cell")
         .agg(
@@ -1206,7 +1194,7 @@ _KM_CHECK_EVERY = 5
     oracle=f"""
     WITH RECURSIVE exp AS (
       SELECT vec_id, i - 1 AS pos,
-             CAST(ROUND(CAST(embedding[i] AS DOUBLE) * 1000000.0) AS BIGINT) AS xu
+             {sql_units("CAST(embedding[i] AS DOUBLE)", 6)} AS xu
       FROM embeddings, (SELECT unnest(generate_series(1, 64)) AS i)
     ),
     cent(r, cell, pos, cu, shift) AS (
@@ -1295,7 +1283,7 @@ def sim_kmeans_converged(spark, sf_dir):
         .select(
             "vec_id",
             "pos",
-            F.round(F.col("v").cast("double") * 1e6).cast("long").alias("xu"),
+            units(F.col("v").cast("double"), 6).alias("xu"),
         )
         .persist()
     )
@@ -1424,12 +1412,13 @@ _PQ_K = 4  # codewords per subspace (seed vectors 0..3)
 
 def _sql_pq_dist(m: int) -> str:
     """Integer squared L2 between e's and c's m-th subvector (1e6 fixed point)."""
+    def diff(k: int) -> str:
+        e = sql_units(f"CAST(e.embedding[{k}] AS DOUBLE)", 6)
+        c = sql_units(f"CAST(c.sv[{k}] AS DOUBLE)", 6)
+        return f"({e} - {c})"
+
     terms = " + ".join(
-        f"(CAST(ROUND(CAST(e.embedding[{m * _PQ_DSUB + j + 1}] AS DOUBLE) * 1000000.0) AS BIGINT)"
-        f" - CAST(ROUND(CAST(c.sv[{m * _PQ_DSUB + j + 1}] AS DOUBLE) * 1000000.0) AS BIGINT))"
-        f" * (CAST(ROUND(CAST(e.embedding[{m * _PQ_DSUB + j + 1}] AS DOUBLE) * 1000000.0) AS BIGINT)"
-        f" - CAST(ROUND(CAST(c.sv[{m * _PQ_DSUB + j + 1}] AS DOUBLE) * 1000000.0) AS BIGINT))"
-        for j in range(_PQ_DSUB)
+        f"{diff(m * _PQ_DSUB + j + 1)} * {diff(m * _PQ_DSUB + j + 1)}" for j in range(_PQ_DSUB)
     )
     return f"({terms})"
 
@@ -1495,7 +1484,7 @@ def sim_pq_encode(spark, sf_dir):
                     c["code"].alias("code"),
                     F.transform(
                         c["sv"],
-                        lambda x: F.round(x.cast("double") * 1e6).cast("long"),
+                        lambda x: units(x.cast("double"), 6),
                     ).alias("qsv"),
                 ),
             ).alias("qcb")
@@ -1503,7 +1492,7 @@ def sim_pq_encode(spark, sf_dir):
     )
     enc = e.crossJoin(F.broadcast(cb))
     qe = F.transform(
-        "embedding", lambda x: F.round(x.cast("double") * 1e6).cast("long")
+        "embedding", lambda x: units(x.cast("double"), 6)
     )
 
     def sub_dists(qe_b):
@@ -1792,15 +1781,13 @@ def _sql_mmr_pick(sel: str, rank: int) -> str:
     WITH q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0),
     cand AS (
       SELECT e.vec_id, e.embedding,
-             CAST(ROUND({sql_cosine("e.embedding", "q.qe")} * 1e9) AS BIGINT)
-               AS sfp
+             {sql_units(sql_cosine("e.embedding", "q.qe"), 9)} AS sfp
       FROM embeddings e, q WHERE e.vec_id <> 0
       ORDER BY sfp DESC, e.vec_id LIMIT {_MMR_POOL}
     ),
     pairs AS (
       SELECT a.vec_id AS av, b.vec_id AS bv,
-             CAST(ROUND({sql_cosine("a.embedding", "b.embedding")} * 1e9)
-                  AS BIGINT) AS pfp
+             {sql_units(sql_cosine("a.embedding", "b.embedding"), 9)} AS pfp
       FROM cand a, cand b WHERE a.vec_id <> b.vec_id
     ),
     s1 AS (
@@ -1851,9 +1838,7 @@ def sim_mmr_diversify(spark, sf_dir):
         .select(
             "vec_id",
             "embedding",
-            F.round(cosine(F.col("embedding"), F.col("qe")) * 1e9)
-            .cast("long")
-            .alias("sfp"),
+            units(cosine(F.col("embedding"), F.col("qe")), 9).alias("sfp"),
         )
         .orderBy(F.col("sfp").desc(), "vec_id")
         .limit(_MMR_POOL)
@@ -1871,9 +1856,7 @@ def sim_mmr_diversify(spark, sf_dir):
         .select(
             "av",
             "bv",
-            F.round(cosine(F.col("ea"), F.col("eb")) * 1e9)
-            .cast("long")
-            .alias("pfp"),
+            units(cosine(F.col("ea"), F.col("eb")), 9).alias("pfp"),
         )
         .persist()
     )
@@ -2195,9 +2178,9 @@ def _spc_slices(spark, sf_dir) -> int:
     nd AS (SELECT CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS n_docs FROM tok),
     w AS (
       SELECT t.doc_id, t.tok,
-             CAST(ROUND(t.tf * LN((CAST(nd.n_docs AS DOUBLE) + 1.0)
-                                  / (CAST(d.dfreq AS DOUBLE) + 1.0)) * 1e6)
-                  AS BIGINT) AS wfp
+             {sql_units(
+                "t.tf * LN((CAST(nd.n_docs AS DOUBLE) + 1.0)"
+                " / (CAST(d.dfreq AS DOUBLE) + 1.0))", 6)} AS wfp
       FROM tok t JOIN df d USING (tok) CROSS JOIN nd
     ),
     nrm AS (
@@ -2263,16 +2246,13 @@ def sim_sparse_cosine_join(spark, sf_dir):
         .select(
             "doc_id",
             "tok",
-            F.round(
+            units(
                 F.col("tf")
                 * F.log(
-                    (F.col("n_docs").cast("double") + 1.0)
-                    / (F.col("dfreq").cast("double") + 1.0)
-                )
-                * 1e6
-            )
-            .cast("long")
-            .alias("wfp"),
+                    (F.col("n_docs").cast("double") + 1.0) / (F.col("dfreq").cast("double") + 1.0)
+                ),
+                6,
+            ).alias("wfp"),
         )
         .persist()
     )

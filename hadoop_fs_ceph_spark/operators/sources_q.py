@@ -16,8 +16,17 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from hadoop_fs_ceph_spark import scratch
-from hadoop_fs_ceph_spark.canonical import dsum, sql_dsum
+from hadoop_fs_ceph_spark.canonical import (
+    dsum,
+    fixed,
+    fixsum,
+    sql_dsum,
+    sql_fixed,
+    sql_units,
+    units,
+)
 from hadoop_fs_ceph_spark.registry import query
+from hadoop_fs_ceph_spark.session import confs
 from hadoop_fs_ceph_spark.sources import read_csv, read_json, read_orc, write_table
 from hadoop_fs_ceph_spark.tables import t
 
@@ -373,7 +382,7 @@ def src_text_roundtrip(spark, sf_dir):
 
 @query(
     "src_schema_evolution",
-    oracle="""
+    oracle=f"""
     WITH unioned AS (
       SELECT o_orderkey, o_totalprice, CAST(NULL AS VARCHAR) AS o_channel
       FROM orders WHERE o_orderkey % 2 = 0
@@ -383,7 +392,7 @@ def src_text_roundtrip(spark, sf_dir):
       FROM orders WHERE o_orderkey % 2 = 1
     )
     SELECT o_channel, COUNT(*) AS n,
-           CAST(SUM(CAST(ROUND(o_totalprice * 100.0) AS BIGINT)) AS BIGINT) AS cents
+           {sql_fixed("o_totalprice", 2)} AS cents
     FROM unioned GROUP BY o_channel
     """,
     tags=("source", "schema_evolution"),
@@ -407,7 +416,7 @@ def src_schema_evolution(spark, sf_dir):
     back = spark.read.option("mergeSchema", "true").parquet(path)
     return back.groupBy("o_channel").agg(
         F.count(F.lit(1)).alias("n"),
-        F.sum(F.round(F.col("o_totalprice") * 100.0).cast("long")).alias("cents"),
+        fixed("o_totalprice", 2).alias("cents"),
     )
 
 
@@ -564,22 +573,14 @@ def src_dynamic_partition_overwrite(spark, sf_dir):
     restated = o.filter(F.col("o_orderstatus") == "F").withColumn(
         "o_totalprice", F.col("o_totalprice") * 1.1
     )
-    old_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
+    with confs(spark, {"spark.sql.sources.partitionOverwriteMode": "dynamic"}):
         restated.write.mode("overwrite").partitionBy("o_orderstatus").parquet(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", old_mode)
     back = spark.read.parquet(path)
-    shift = 10**6
     return (
         back.groupBy("o_orderstatus")
         .agg(
             F.count(F.lit(1)).alias("n"),
-            (
-                F.sum(F.round(F.col("o_totalprice") * shift).cast("long")).cast("double")
-                / shift
-            ).alias("sum_price"),
+            fixsum("o_totalprice", 6).alias("sum_price"),
         )
         .orderBy("o_orderstatus")
     )
@@ -641,10 +642,10 @@ def src_time_travel(spark, sf_dir):
 
 @query(
     "src_nested_struct_roundtrip",
-    oracle="""
+    oracle=f"""
     WITH s AS (
       SELECT o_custkey, o_orderkey, o_orderdate,
-             CAST(ROUND(o_totalprice * 100) AS BIGINT) AS cents,
+             {sql_units("o_totalprice", 2)} AS cents,
              row_number() OVER (PARTITION BY o_custkey
                                 ORDER BY o_orderdate, o_orderkey) AS rn_a,
              row_number() OVER (PARTITION BY o_custkey
@@ -679,7 +680,7 @@ def src_nested_struct_roundtrip(spark, sf_dir):
                 F.struct(
                     F.col("o_orderdate").alias("d"),
                     F.col("o_orderkey").alias("k"),
-                    F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
+                    units("o_totalprice", 2).alias("cents"),
                 )
             )
         ).alias("hist")
@@ -812,9 +813,9 @@ def src_zorder_write(spark, sf_dir):
 
 @query(
     "src_catalog_rename",
-    oracle="""
+    oracle=f"""
     SELECT o_orderstatus, COUNT(*) AS n,
-           CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) AS BIGINT)
+           {sql_fixed("o_totalprice", 2)}
              AS cents
     FROM orders WHERE o_orderkey % 5 = 0
     GROUP BY o_orderstatus ORDER BY o_orderstatus
@@ -846,7 +847,7 @@ def src_catalog_rename(spark, sf_dir):
         back.groupBy("o_orderstatus")
         .agg(
             F.count(F.lit(1)).alias("n"),
-            F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias("cents"),
+            fixed("o_totalprice", 2).alias("cents"),
         )
         .orderBy("o_orderstatus")
     )
@@ -1314,11 +1315,11 @@ def src_snapshot_expiry_plan(spark, sf_dir):
 
 @query(
     "src_zonemap_overlap",
-    oracle="""
+    oracle=f"""
     WITH z AS (
       SELECT CAST(date_trunc('month', o_orderdate) AS DATE) AS part,
-             CAST(MIN(CAST(ROUND(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS lo,
-             CAST(MAX(CAST(ROUND(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS hi,
+             CAST(MIN({sql_units("o_totalprice", 2)}) AS BIGINT) AS lo,
+             CAST(MAX({sql_units("o_totalprice", 2)}) AS BIGINT) AS hi,
              CAST(COUNT(*) AS BIGINT) AS n_rows
       FROM orders GROUP BY 1
     ),
@@ -1356,8 +1357,8 @@ def src_zonemap_overlap(spark, sf_dir):
     z = o.groupBy(
         F.date_trunc("month", "o_orderdate").cast("date").alias("part")
     ).agg(
-        F.min(F.round(F.col("o_totalprice") * 100).cast("long")).alias("lo"),
-        F.max(F.round(F.col("o_totalprice") * 100).cast("long")).alias("hi"),
+        F.min(units("o_totalprice", 2)).alias("lo"),
+        F.max(units("o_totalprice", 2)).alias("hi"),
         F.count(F.lit(1)).alias("n_rows"),
     )
     a = z.select(
@@ -1672,7 +1673,7 @@ def src_csv_malformed_permissive(spark, sf_dir):
     # field would never be detected (that near-miss is the point of the
     # key_sum/date columns — and a caveat this query documents)
     good = F.col("_corrupt").isNull()
-    good_cents = F.when(good, F.round(F.col("o_totalprice") * F.lit(1000000.0)).cast("long")).otherwise(F.lit(0))
+    good_cents = F.when(good, units("o_totalprice", 6)).otherwise(F.lit(0))
     return back.agg(
         F.sum(F.when(good, 1).otherwise(0)).cast("long").alias("n_good"),
         F.sum(F.when(good, 0).otherwise(1)).cast("long").alias("n_corrupt"),
@@ -1722,13 +1723,13 @@ _DIFF_MOD_PRICE = 1.5  # planted modification applied to keys % 97 == 0
     oracle=f"""
     WITH a AS (
       SELECT o_orderkey AS k,
-             CAST(ROUND(o_totalprice * 100) AS BIGINT) AS cents
+             {sql_units("o_totalprice", 2)} AS cents
       FROM orders
     ),
     b AS (
       SELECT k,
              CASE WHEN k % 97 = 0
-                  THEN cents + CAST(ROUND({_DIFF_MOD_PRICE} * 100) AS BIGINT)
+                  THEN cents + {sql_units(_DIFF_MOD_PRICE, 2)}
                   ELSE cents END AS cents
       FROM a WHERE k % 101 <> 0
       UNION ALL
@@ -1769,7 +1770,7 @@ def profile_data_diff(spark, sf_dir):
     exchange disappears (`src_bucketed_join` shows that plan)."""
     a = t(spark, sf_dir, "orders").select(
         F.col("o_orderkey").alias("k"),
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
+        units("o_totalprice", 2).alias("cents"),
     )
     b = (
         a.filter(F.col("k") % 101 != 0)
@@ -2090,9 +2091,9 @@ def src_table_cache(spark, sf_dir):
 
 @query(
     "src_derived_partition_pruning",
-    oracle="""
+    oracle=f"""
     SELECT CAST(COUNT(*) AS BIGINT) AS n,
-           CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) AS BIGINT)
+           {sql_fixed("o_totalprice", 2)}
              AS sum_cents,
            MIN(o_orderdate) AS first_ts, MAX(o_orderdate) AS last_ts
     FROM orders
@@ -2138,8 +2139,7 @@ def src_derived_partition_pruning(spark, sf_dir):
     )
     return pruned.agg(
         F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum(F.round(F.col("o_totalprice") * 100).cast("long"))
-        .cast("long")
+        fixed("o_totalprice", 2)
         .alias("sum_cents"),
         F.min("o_orderdate").alias("first_ts"),
         F.max("o_orderdate").alias("last_ts"),
@@ -2148,19 +2148,19 @@ def src_derived_partition_pruning(spark, sf_dir):
 
 @query(
     "src_incremental_join_view",
-    oracle="""
+    oracle=f"""
     WITH a0 AS (SELECT * FROM orders WHERE o_orderkey % 10 <> 0),
     da AS (SELECT * FROM orders WHERE o_orderkey % 10 = 0),
     b0 AS (SELECT * FROM customer WHERE c_custkey % 20 <> 0),
     db AS (SELECT * FROM customer WHERE c_custkey % 20 = 0),
     j0 AS (
       SELECT c_nationkey AS nk, CAST(COUNT(*) AS BIGINT) AS n,
-             CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS s
+             {sql_fixed("o_totalprice", 2)} AS s
       FROM a0 JOIN b0 ON o_custkey = c_custkey GROUP BY nk
     ),
     dj AS (
       SELECT c_nationkey AS nk, CAST(COUNT(*) AS BIGINT) AS n,
-             CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS s
+             {sql_fixed("o_totalprice", 2)} AS s
       FROM (
         SELECT o_totalprice, c_nationkey FROM da JOIN b0 ON o_custkey = c_custkey
         UNION ALL
@@ -2177,7 +2177,7 @@ def src_derived_partition_pruning(spark, sf_dir):
     ),
     full_v AS (
       SELECT c_nationkey AS nk, CAST(COUNT(*) AS BIGINT) AS n_full,
-             CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) AS BIGINT)
+             {sql_fixed("o_totalprice", 2)}
                AS s_full
       FROM orders JOIN customer ON o_custkey = c_custkey GROUP BY nk
     )
@@ -2215,7 +2215,7 @@ def src_incremental_join_view(spark, sf_dir):
     da = o.filter(F.col("o_orderkey") % 10 == 0)
     b0 = c.filter(F.col("c_custkey") % 20 != 0)
     db = c.filter(F.col("c_custkey") % 20 == 0)
-    cents = F.round(F.col("o_totalprice") * 100).cast("long")
+    cents = units("o_totalprice", 2)
 
     def agg_nk(df):
         return df.groupBy(F.col("c_nationkey").alias("nk")).agg(
@@ -2422,9 +2422,9 @@ def src_rgw_http_roundtrip(spark, sf_dir):
 
 @query(
     "src_observe_metrics",
-    oracle="""
+    oracle=f"""
     SELECT CAST(COUNT(*) AS BIGINT) AS n_rows,
-           CAST(SUM(CAST(ROUND(l_extendedprice * 100.0) AS BIGINT)) AS BIGINT)
+           {sql_fixed("l_extendedprice", 2)}
              AS price_cents,
            CAST(SUM(CASE WHEN l_discount > 0.06 THEN 1 ELSE 0 END) AS BIGINT)
              AS n_discounted,
@@ -2455,9 +2455,7 @@ def src_observe_metrics(spark, sf_dir):
     observed = li.observe(
         obs,
         F.count(F.lit(1)).alias("n_rows"),
-        F.sum(F.round(F.col("l_extendedprice") * 100.0).cast("long")).alias(
-            "price_cents"
-        ),
+        fixed("l_extendedprice", 2).alias("price_cents"),
         F.sum((F.col("l_discount") > 0.06).cast("long")).alias("n_discounted"),
         F.sum(F.col("l_quantity").isNull().cast("long")).alias("n_null_qty"),
     )

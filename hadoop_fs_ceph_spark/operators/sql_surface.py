@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from hadoop_fs_ceph_spark import scratch
-from hadoop_fs_ceph_spark.canonical import sql_dsum
+from hadoop_fs_ceph_spark.canonical import fixed, sql_dsum, sql_fixed, sql_fixsum, sql_units
 from hadoop_fs_ceph_spark.registry import query
 from hadoop_fs_ceph_spark.tables import t
 
@@ -246,11 +246,9 @@ def sql_ddl_dml(spark, sf_dir):
             SELECT o_orderkey, o_orderstatus, o_totalprice
             FROM orders_src_ddl WHERE o_orderpriority = '1-URGENT'"""
     )
-    shift = 10**6
     return spark.sql(
         f"""SELECT o_orderstatus, COUNT(*) AS n,
-                   CAST(SUM(CAST(ROUND(o_totalprice * {shift}.0) AS BIGINT)) AS DOUBLE)
-                     / {shift}.0 AS revenue
+                   {sql_fixsum("o_totalprice", 6)} AS revenue
             FROM {name}
             GROUP BY o_orderstatus
             ORDER BY o_orderstatus"""
@@ -293,12 +291,12 @@ def sql_lateral_topk(spark, sf_dir):
 
 @query(
     "sql_modern_syntax",
-    oracle="""
+    oracle=f"""
     SELECT o_orderstatus,
            CAST(EXTRACT(year FROM o_orderdate) AS INTEGER) AS yr,
            COUNT(*) AS n_orders,
            COUNT(*) FILTER (WHERE o_totalprice > 200000) AS n_big,
-           CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT))
+           CAST(SUM({sql_units("o_totalprice", 2)})
                 FILTER (WHERE o_totalprice > 200000) AS BIGINT) AS big_cents
     FROM orders
     GROUP BY ALL
@@ -316,12 +314,12 @@ def sql_modern_syntax(spark, sf_dir):
     explicit spelling — syntax sugar, identical physical plan, so
     every aggregate scale note applies unchanged."""
     _views(spark, sf_dir, "orders")
-    return spark.sql("""
+    return spark.sql(f"""
         SELECT o_orderstatus,
                CAST(EXTRACT(year FROM o_orderdate) AS INT) AS yr,
                COUNT(*) AS n_orders,
                COUNT(*) FILTER (WHERE o_totalprice > 200000) AS n_big,
-               SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT))
+               SUM({sql_units("o_totalprice", 2)})
                  FILTER (WHERE o_totalprice > 200000) AS big_cents
         FROM orders
         GROUP BY ALL
@@ -472,9 +470,9 @@ def sql_analyze_cbo_stats(spark, sf_dir):
 
 @query(
     "sql_execute_immediate",
-    oracle="""
+    oracle=f"""
     SELECT o_orderpriority, CAST(COUNT(*) AS BIGINT) AS n_orders,
-           CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS cents
+           {sql_fixed("o_totalprice", 2)} AS cents
     FROM orders WHERE o_orderstatus = 'F'
     GROUP BY o_orderpriority ORDER BY o_orderpriority
     """,
@@ -490,10 +488,10 @@ def sql_execute_immediate(spark, sf_dir):
     oracle is the plain query."""
     _views(spark, sf_dir, "orders")
     return spark.sql(
-        """
+        f"""
         EXECUTE IMMEDIATE
           'SELECT o_orderpriority, CAST(COUNT(*) AS BIGINT) AS n_orders,
-                  CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) AS BIGINT)
+                  {sql_fixed("o_totalprice", 2)}
                     AS cents
            FROM orders WHERE o_orderstatus = ?
            GROUP BY o_orderpriority ORDER BY o_orderpriority'
@@ -504,9 +502,9 @@ def sql_execute_immediate(spark, sf_dir):
 
 @query(
     "sql_create_function",
-    oracle="""
+    oracle=f"""
     SELECT o_orderkey,
-           CAST(ROUND(o_totalprice * 100) AS BIGINT) AS cents,
+           {sql_units("o_totalprice", 2)} AS cents,
            CASE WHEN o_totalprice >= 300000 THEN 'high'
                 WHEN o_totalprice >= 150000 THEN 'mid'
                 ELSE 'low' END AS tier
@@ -526,7 +524,7 @@ def sql_create_function(spark, sf_dir):
     _views(spark, sf_dir, "orders")
     spark.sql(
         "CREATE OR REPLACE TEMPORARY FUNCTION to_cents(x DOUBLE) "
-        "RETURNS BIGINT RETURN CAST(ROUND(x * 100) AS BIGINT)"
+        f"RETURNS BIGINT RETURN {sql_units('x', 2)}"
     )
     spark.sql(
         "CREATE OR REPLACE TEMPORARY FUNCTION price_tier(x DOUBLE) "
@@ -545,9 +543,9 @@ def sql_create_function(spark, sf_dir):
 
 @query(
     "sql_session_variables",
-    oracle="""
+    oracle=f"""
     SELECT CAST(COUNT(*) AS BIGINT) AS n_above,
-           CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) AS BIGINT)
+           {sql_fixed("o_totalprice", 2)}
              AS cents_above
     FROM orders WHERE o_totalprice > 250000.0
     """,
@@ -565,9 +563,9 @@ def sql_session_variables(spark, sf_dir):
     spark.sql("DECLARE OR REPLACE VARIABLE price_floor DOUBLE DEFAULT 0.0")
     spark.sql("SET VAR price_floor = 250000.0")
     return spark.sql(
-        """
+        f"""
         SELECT CAST(COUNT(*) AS BIGINT) AS n_above,
-               CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) AS BIGINT)
+               {sql_fixed("o_totalprice", 2)}
                  AS cents_above
         FROM orders WHERE o_totalprice > price_floor
         """
@@ -598,11 +596,10 @@ def sql_pipe_syntax(spark, sf_dir):
     """
     _views(spark, sf_dir, "lineitem")
     return spark.sql(
-        """
+        f"""
         FROM lineitem
         |> WHERE l_shipdate >= TIMESTAMP '1997-01-01 00:00:00'
-        |> EXTEND CAST(ROUND(l_extendedprice * (1 - l_discount) * 1000000.0)
-                       AS BIGINT) AS rev_micros
+        |> EXTEND {sql_units("l_extendedprice * (1 - l_discount)", 6)} AS rev_micros
         |> AGGREGATE CAST(COUNT(*) AS BIGINT) AS n_lines,
                      CAST(CAST(SUM(rev_micros) AS BIGINT) AS DOUBLE)
                        / 1000000.0 AS revenue
@@ -615,10 +612,10 @@ def sql_pipe_syntax(spark, sf_dir):
 
 @query(
     "sql_identifier_clause",
-    oracle="""
+    oracle=f"""
     SELECT o_orderpriority,
            CAST(COUNT(*) AS BIGINT) AS n_orders,
-           CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) AS BIGINT)
+           {sql_fixed("o_totalprice", 2)}
              AS total_cents
     FROM orders
     GROUP BY o_orderpriority
@@ -638,10 +635,10 @@ def sql_identifier_clause(spark, sf_dir):
     — parameterization is purely a binding-time feature."""
     _views(spark, sf_dir, "orders")
     return spark.sql(
-        """
+        f"""
         SELECT IDENTIFIER(:col) AS o_orderpriority,
                CAST(COUNT(*) AS BIGINT) AS n_orders,
-               CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) AS BIGINT)
+               {sql_fixed("o_totalprice", 2)}
                  AS total_cents
         FROM IDENTIFIER(:tbl)
         GROUP BY IDENTIFIER(:col)
@@ -831,7 +828,7 @@ def sql_unpivot_clause(spark, sf_dir):
     return spark.sql(_SQL_UNPIVOT)
 
 
-_SQL_NAMED_WINDOW = """
+_SQL_NAMED_WINDOW = f"""
     SELECT o_orderstatus, epoch_day,
            CAST(SUM(rev_c) OVER w AS BIGINT) AS cum_rev_c,
            CAST(COUNT(*) OVER w AS BIGINT) AS cum_days,
@@ -840,7 +837,7 @@ _SQL_NAMED_WINDOW = """
       SELECT o_orderstatus,
              CAST(DATEDIFF(CAST(o_orderdate AS DATE), DATE '1970-01-01') AS BIGINT)
                AS epoch_day,
-             SUM(CAST(ROUND(o_totalprice * 100.0) AS BIGINT)) AS rev_c
+             SUM({sql_units("o_totalprice", 2)}) AS rev_c
       FROM orders WHERE o_orderdate < TIMESTAMP '1993-01-01 00:00:00'
       GROUP BY 1, 2
     ) daily
@@ -852,7 +849,7 @@ _SQL_NAMED_WINDOW = """
 
 @query(
     "sql_named_window",
-    oracle="""
+    oracle=f"""
     SELECT o_orderstatus, epoch_day,
            CAST(SUM(rev_c) OVER w AS BIGINT) AS cum_rev_c,
            CAST(COUNT(*) OVER w AS BIGINT) AS cum_days,
@@ -861,7 +858,7 @@ _SQL_NAMED_WINDOW = """
       SELECT o_orderstatus,
              CAST(CAST(o_orderdate AS DATE) - DATE '1970-01-01' AS BIGINT)
                AS epoch_day,
-             SUM(CAST(ROUND(o_totalprice * 100.0) AS BIGINT)) AS rev_c
+             SUM({sql_units("o_totalprice", 2)}) AS rev_c
       FROM orders WHERE o_orderdate < TIMESTAMP '1993-01-01 00:00:00'
       GROUP BY 1, 2
     ) daily
@@ -887,11 +884,11 @@ def sql_named_window(spark, sf_dir):
 
 @query(
     "sql_transpose",
-    oracle="""
+    oracle=f"""
     WITH agg AS (
       SELECT o_orderstatus,
              CAST(COUNT(*) AS BIGINT) AS n_orders,
-             CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) AS BIGINT)
+             {sql_fixed("o_totalprice", 2)}
                AS sum_cents
       FROM orders GROUP BY o_orderstatus
     )
@@ -927,8 +924,7 @@ def sql_transpose(spark, sf_dir):
     o = t(spark, sf_dir, "orders")
     agg = o.groupBy("o_orderstatus").agg(
         F.count(F.lit(1)).cast("long").alias("n_orders"),
-        F.sum(F.round(F.col("o_totalprice") * 100).cast("long"))
-        .cast("long")
+        fixed("o_totalprice", 2)
         .alias("sum_cents"),
     )
     return agg.transpose().orderBy("key")

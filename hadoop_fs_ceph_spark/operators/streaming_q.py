@@ -23,7 +23,9 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from hadoop_fs_ceph_spark import scratch
+from hadoop_fs_ceph_spark.canonical import fixsum, sql_fixsum
 from hadoop_fs_ceph_spark.registry import query
+from hadoop_fs_ceph_spark.session import confs
 from hadoop_fs_ceph_spark.streaming import (
     audit_gate,
     events_stream,
@@ -32,11 +34,6 @@ from hadoop_fs_ceph_spark.streaming import (
 )
 from hadoop_fs_ceph_spark.tables import t
 
-_FIXSUM_VALUE = (
-    "CAST(CAST(SUM(CAST(ROUND(value * 1000000.0) AS BIGINT)) AS BIGINT) AS DOUBLE) / 1000000.0"
-)
-
-
 @query(
     "stream_tumbling_window",
     oracle=f"""
@@ -44,7 +41,7 @@ _FIXSUM_VALUE = (
              + (epoch_us(ts) // 3600000000 * 3600) * INTERVAL 1 SECOND AS w_start,
            event_type,
            COUNT(*) AS n,
-           {_FIXSUM_VALUE} AS sum_value
+           {sql_fixsum("value", 6)} AS sum_value
     FROM events
     GROUP BY 1, 2
     """,
@@ -59,7 +56,7 @@ def stream_tumbling_window(spark, sf_dir):
         s.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(
             F.count(F.lit(1)).alias("n"),
-            (F.sum(F.round(F.col("value") * 1000000.0).cast("long")).cast("double") / 1000000.0).alias("sum_value"),
+            fixsum("value", 6).alias("sum_value"),
         )
         .select(F.col("w.start").alias("w_start"), "event_type", "n", "sum_value")
     )
@@ -75,7 +72,7 @@ def stream_tumbling_window(spark, sf_dir):
     SELECT TIMESTAMP '1970-01-01 00:00:00'
              + ((epoch_us(ts) // 900000000 - k) * 900) * INTERVAL 1 SECOND AS w_start,
            COUNT(*) AS n,
-           {_FIXSUM_VALUE} AS sum_value
+           {sql_fixsum("value", 6)} AS sum_value
     FROM events CROSS JOIN (SELECT unnest(generate_series(0, 3)) AS k)
     GROUP BY 1
     """,
@@ -90,7 +87,7 @@ def stream_sliding_window(spark, sf_dir):
         s.groupBy(F.window("ts", "1 hour", "15 minutes").alias("w"))
         .agg(
             F.count(F.lit(1)).alias("n"),
-            (F.sum(F.round(F.col("value") * 1000000.0).cast("long")).cast("double") / 1000000.0).alias("sum_value"),
+            fixsum("value", 6).alias("sum_value"),
         )
         .select(F.col("w.start").alias("w_start"), "n", "sum_value")
     )
@@ -200,7 +197,7 @@ def stream_running_count(spark, sf_dir):
     oracle=f"""
     SELECT c.c_mktsegment,
            COUNT(*) AS n_events,
-           {_FIXSUM_VALUE} AS sum_value
+           {sql_fixsum("value", 6)} AS sum_value
     FROM events e JOIN customer c ON e.user_id = c.c_custkey
     GROUP BY c.c_mktsegment
     """,
@@ -214,7 +211,7 @@ def stream_static_join(spark, sf_dir):
     joined = s.join(c, s.user_id == c.c_custkey)
     agg = joined.groupBy("c_mktsegment").agg(
         F.count(F.lit(1)).alias("n_events"),
-        (F.sum(F.round(F.col("value") * 1000000.0).cast("long")).cast("double") / 1000000.0).alias("sum_value"),
+        fixsum("value", 6).alias("sum_value"),
     )
     return run_to_memory(
         agg, "stream_static_join", "complete",
@@ -374,7 +371,7 @@ def stream_file_sink(spark, sf_dir):
 @query(
     "stream_foreachbatch_upsert",
     oracle=f"""
-    SELECT event_type, COUNT(*) AS n, {_FIXSUM_VALUE} AS sum_value
+    SELECT event_type, COUNT(*) AS n, {sql_fixsum("value", 6)} AS sum_value
     FROM events GROUP BY event_type
     """,
     tags=("streaming", "sink", "upsert"),
@@ -409,7 +406,7 @@ def stream_foreachbatch_upsert(spark, sf_dir):
     s = events_stream(spark, sf_dir)
     agg = s.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"),
-        (F.sum(F.round(F.col("value") * 1000000.0).cast("long")).cast("double") / 1000000.0).alias("sum_value"),
+        fixsum("value", 6).alias("sum_value"),
     )
     audit_gate(agg, "stream_foreachbatch_upsert", "update")
     ckpt = scratch.fresh("ckpt")
@@ -547,10 +544,10 @@ def stream_stream_outer_join(spark, sf_dir):
 @query(
     "stream_incremental_checkpoint",
     oracle=f"""
-    SELECT 1 AS phase, COUNT(*) AS n, {_FIXSUM_VALUE} AS sum_value
+    SELECT 1 AS phase, COUNT(*) AS n, {sql_fixsum("value", 6)} AS sum_value
     FROM events WHERE event_id % 10 <> 0
     UNION ALL
-    SELECT 2 AS phase, COUNT(*) AS n, {_FIXSUM_VALUE} AS sum_value
+    SELECT 2 AS phase, COUNT(*) AS n, {sql_fixsum("value", 6)} AS sum_value
     FROM events WHERE event_id % 10 = 0
     ORDER BY phase
     """,
@@ -601,7 +598,7 @@ def stream_incremental_checkpoint(spark, sf_dir):
         back.groupBy(F.col("phase").cast("int").alias("phase"))
         .agg(
             F.count(F.lit(1)).alias("n"),
-            F.expr(_FIXSUM_VALUE).alias("sum_value"),
+            fixsum("value", 6).alias("sum_value"),
         )
         .orderBy("phase")
     )
@@ -989,11 +986,10 @@ def stream_doc_quality_filter(spark, sf_dir):
 
 @query(
     "stream_python_datasource",
-    oracle="""
+    oracle=f"""
     SELECT o_orderstatus,
            COUNT(*) AS n,
-           (CAST(CAST(SUM(CAST(ROUND((o_totalprice) * 1000000.0) AS BIGINT))
-                 AS BIGINT) AS DOUBLE) / 1000000.0) AS sum_price,
+           {sql_fixsum("o_totalprice", 6)} AS sum_price,
            MIN(o_orderdate) AS first_date,
            MAX(o_orderdate) AS last_date
     FROM orders
@@ -1049,10 +1045,7 @@ def stream_python_datasource(spark, sf_dir):
     back = spark.read.parquet(out)
     return back.groupBy("o_orderstatus").agg(
         F.count(F.lit(1)).alias("n"),
-        (
-            F.sum(F.round(F.col("o_totalprice") * 1000000.0).cast("long")).cast("double")
-            / 1000000.0
-        ).alias("sum_price"),
+        fixsum("o_totalprice", 6).alias("sum_price"),
         F.min("o_orderdate").alias("first_date"),
         F.max("o_orderdate").alias("last_date"),
     )
@@ -1065,15 +1058,14 @@ _ROCKSDB_PROVIDER = (
 
 @query(
     "stream_rocksdb_state_window",
-    oracle="""
+    oracle=f"""
     WITH m AS (SELECT MAX(ts) AS mx FROM events),
     w AS (
       SELECT event_type,
              TIMESTAMP '1970-01-01 00:00:00'
                + (epoch_us(ts) // 3600000000 * 3600) * INTERVAL 1 SECOND AS w_start,
              COUNT(*) AS n,
-             CAST(SUM(CAST(ROUND(value * 1000000.0) AS BIGINT)) AS DOUBLE)
-               / 1000000.0 AS sum_value
+             {sql_fixsum("value", 6)} AS sum_value
       FROM events GROUP BY 1, 2
     )
     SELECT w.event_type, w.w_start, w.n, w.sum_value FROM w, m
@@ -1097,37 +1089,21 @@ def stream_rocksdb_state_window(spark, sf_dir):
 
     The provider is a per-query-start session conf; it is set and
     restored around the drain so sibling queries keep the default."""
-    key = "spark.sql.streaming.stateStore.providerClass"
-    try:
-        prev = spark.conf.get(key)
-    except Exception:  # noqa: BLE001 - unset conf raises in Spark 4
-        prev = None
-    spark.conf.set(key, _ROCKSDB_PROVIDER)
-    try:
+    with confs(spark, {"spark.sql.streaming.stateStore.providerClass": _ROCKSDB_PROVIDER}):
         s = events_stream(spark, sf_dir)
         agg = (
             s.withWatermark("ts", "30 minutes")
             .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
             .agg(
                 F.count(F.lit(1)).alias("n"),
-                (
-                    F.sum(F.round(F.col("value") * 1000000.0).cast("long")).cast(
-                        "double"
-                    )
-                    / 1000000.0
-                ).alias("sum_value"),
+                fixsum("value", 6).alias("sum_value"),
             )
             .select("event_type", F.col("w.start").alias("w_start"), "n", "sum_value")
         )
         return run_to_memory(
-        agg, "stream_rocksdb_state_window", "append",
-        state_width=stream_state_width(sf_dir),
-    )
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
+            agg, "stream_rocksdb_state_window", "append",
+            state_width=stream_state_width(sf_dir),
+        )
 
 
 @query(
@@ -1138,7 +1114,7 @@ def stream_rocksdb_state_window(spark, sf_dir):
            CASE WHEN event_type IN ('click', 'view') THEN 'engagement'
                 ELSE 'business' END AS feed,
            COUNT(*) AS n,
-           {_FIXSUM_VALUE} AS sum_value
+           {sql_fixsum("value", 6)} AS sum_value
     FROM events
     GROUP BY 1, 2
     """,
@@ -1175,12 +1151,7 @@ def stream_union_two_sources(spark, sf_dir):
         both.groupBy(F.window("ts", "1 hour").alias("w"), "feed")
         .agg(
             F.count(F.lit(1)).alias("n"),
-            (
-                F.sum(F.round(F.col("value") * 1000000.0).cast("long")).cast(
-                    "double"
-                )
-                / 1000000.0
-            ).alias("sum_value"),
+            fixsum("value", 6).alias("sum_value"),
         )
         .select(F.col("w.start").alias("w_start"), "feed", "n", "sum_value")
     )

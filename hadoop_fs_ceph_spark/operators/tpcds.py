@@ -12,7 +12,7 @@ Conventions, shared by every query here:
   line-grain ``lineitem`` revenue as "store" and header-grain ``orders``
   revenue as "web".
 * Returns: ``l_returnflag = 'R'``.
-* Money: revenue is ``_REV`` / ``_rev_col()``; sums are fixed-point from
+* Money: revenue is ``tpch._REV`` / ``_rev_col()``; sums are fixed-point from
   ``canonical.py``, or exact integer cents (``_REV_CENTS``), so every
   ratio or screen compares bit-identical operands in Spark and DuckDB.
   A predicate that needs exactness cross-multiplies instead of dividing.
@@ -34,17 +34,21 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from hadoop_fs_ceph_spark import scratch
-from hadoop_fs_ceph_spark.canonical import dsum, sql_davg, sql_dstddev_samp, sql_dsum
+from hadoop_fs_ceph_spark.canonical import (
+    dsum,
+    fixed,
+    sql_davg,
+    sql_dstddev_samp,
+    sql_dsum,
+    sql_fixed,
+    sql_units,
+    units,
+)
+from hadoop_fs_ceph_spark.operators.tpch import _REV, _rev_col
 from hadoop_fs_ceph_spark.registry import query
 from hadoop_fs_ceph_spark.tables import dim, t
 
-_REV = "l_extendedprice * (1 - l_discount)"
-_REV_CENTS = "CAST(ROUND(l_extendedprice * (1 - l_discount) * 100.0) AS BIGINT)"
-
-
-def _rev_col():
-    return F.col("l_extendedprice") * (1 - F.col("l_discount"))
-
+_REV_CENTS = sql_units(_REV, 2)
 
 _CHANNEL_SQL = """CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH') THEN 'express'
                   WHEN o_orderpriority = '3-MEDIUM' THEN 'standard'
@@ -220,7 +224,7 @@ def ds_tpcds_q3_brand_report(spark, sf_dir):
         li.join(o, li.l_orderkey == o.o_orderkey)
         .groupBy("l_partkey", "yr")
         .agg(
-            F.sum(F.round(_rev_col() * F.lit(1e6)).cast("long")).alias("_micro")
+            fixed(_rev_col(), 6).alias("_micro")
         )
     )
     return (
@@ -381,7 +385,7 @@ def ds_tpcds_q34_ticket_band(spark, sf_dir):
     ),
     cum AS (
       SELECT mon, channel, rev,
-             SUM(CAST(ROUND(rev * 1000000.0) AS BIGINT))
+             SUM({sql_units("rev", 6)})
                OVER (PARTITION BY channel ORDER BY mon) AS cum_fix
       FROM monthly
     ),
@@ -417,7 +421,7 @@ def ds_tpcds_q51_cumulative_channels(spark, sf_dir):
         .withColumn("channel", F.when(express, "express").otherwise("standard"))
         .groupBy("mon", "channel")
         .agg(
-            F.sum(F.round(F.col("o_totalprice") * 1e6).cast("long")).alias("rev_fix")
+            fixed("o_totalprice", 6).alias("rev_fix")
         )
     )
     w = Window.partitionBy("channel").orderBy("mon")
@@ -509,7 +513,7 @@ def ds_tpcds_q59_wow_ratio(spark, sf_dir):
     ),
     yearly AS (
       SELECT p_brand,
-             CAST(SUM(CAST(ROUND(rev * 1000000.0) AS BIGINT)) AS DOUBLE)
+             CAST(SUM({sql_units("rev", 6)}) AS DOUBLE)
                / 1000000.0 AS tot,
              COUNT(*) AS n_months
       FROM monthly GROUP BY p_brand
@@ -545,7 +549,7 @@ def ds_tpcds_q89_monthly_deviation(spark, sf_dir):
         li.join(o, li.l_orderkey == o.o_orderkey)
         .join(p, li.l_partkey == p.p_partkey)
         .groupBy("p_brand", "mon")
-        .agg(F.sum(F.round(_rev_col() * F.lit(1e6)).cast("long")).alias("_micro"))
+        .agg(fixed(_rev_col(), 6).alias("_micro"))
         .withColumn("rev", F.col("_micro").cast("double") / F.lit(1e6))
     )
     wb = Window.partitionBy("p_brand")
@@ -616,8 +620,8 @@ def ds_tpcds_q36_margin_rollup_rank(spark, sf_dir):
     # micro-units after keys widen to names (integer sums associative —
     # bit-identical, oracle untouched).
     pre = li.groupBy("l_suppkey", "l_partkey").agg(
-        F.sum(F.round(_rev_col() * F.lit(1e6)).cast("long")).alias("_pr"),
-        F.sum(F.round(F.col("l_quantity") * F.lit(1e6)).cast("long")).alias("_pq"),
+        fixed(_rev_col(), 6).alias("_pr"),
+        fixed("l_quantity", 6).alias("_pq"),
     )
     leaf = (
         pre.join(s, pre.l_suppkey == s.s_suppkey)
@@ -759,9 +763,9 @@ def ds_tpcds_q93_returns_adjusted(spark, sf_dir):
       SELECT o_custkey
       FROM orders
       GROUP BY o_custkey
-      HAVING SUM(CAST(ROUND(o_totalprice * 1000000.0) AS BIGINT)) >
+      HAVING SUM({sql_units("o_totalprice", 6)}) >
         (SELECT 0.5 * MAX(s) FROM (
-           SELECT SUM(CAST(ROUND(o_totalprice * 1000000.0) AS BIGINT)) AS s
+           SELECT SUM({sql_units("o_totalprice", 6)}) AS s
            FROM orders GROUP BY o_custkey))
     )
     SELECT EXTRACT(month FROM o_orderdate) AS mon,
@@ -803,7 +807,7 @@ def ds_tpcds_q23_frequent_best(spark, sf_dir):
         .select("l_partkey")
     )
     spend = o.groupBy("o_custkey").agg(
-        F.sum(F.round(F.col("o_totalprice") * 1e6).cast("long")).alias("spend_fix")
+        fixed("o_totalprice", 6).alias("spend_fix")
     )
     max_spend = spend.agg(F.max("spend_fix").alias("mx"))
     best = (
@@ -904,7 +908,7 @@ Q14_ORACLE = f"""
     ),
     sales AS (
       SELECT d.channel, p.p_brand,
-             SUM(CAST(ROUND(d.rev * 100.0) AS BIGINT)) AS rev_fix,
+             SUM({sql_units("d.rev", 2)}) AS rev_fix,
              COUNT(*) AS n_lines
       FROM dated d
       JOIN part p ON d.l_partkey = p.p_partkey
@@ -944,7 +948,7 @@ def _q14_report(dated, p):
         hit = F.col("channel") == c
         grain_aggs.append(
             F.sum(
-                F.when(hit, F.round(F.col("rev") * 100.0).cast("long"))
+                F.when(hit, units("rev", 2))
             ).alias(f"rf_{i}")
         )
         grain_aggs.append(F.count(F.when(hit, F.lit(1))).alias(f"nl_{i}"))
@@ -1029,7 +1033,7 @@ def ds_tpcds_q14_cross_channel(spark, sf_dir):
     key, the src_bucketed_join pattern, and removes that too). The
     avg_sales gate stays the integer window SUM over the bounded
     sales spine (allowlisted). Fact scans: 8 → 2 (pinned).
-    `ds_tpcds_q14_bucketed` (tpcds_suite4) is the owned-layout twin:
+    `ds_tpcds_q14_bucketed` (tpcds) is the owned-layout twin:
     both fact inputs bucketed on the order key remove those two SMJ
     exchanges (zero-Exchange legs plan-pinned, same answer)."""
     li = t(spark, sf_dir, "lineitem")
@@ -1047,12 +1051,11 @@ def ds_tpcds_q14_cross_channel(spark, sf_dir):
 
 @query(
     "ds_tpcds_q64_wide_star_two_period",
-    oracle="""
+    oracle=f"""
     WITH wide AS (
       SELECT p.p_brand, cn.n_name AS cust_nation, sn.n_name AS supp_nation,
              EXTRACT(year FROM o.o_orderdate) AS yr,
-             SUM(CAST(ROUND(l.l_extendedprice * (1 - l.l_discount) * 1000000.0)
-                 AS BIGINT)) AS rev_fix,
+             SUM({sql_units("l.l_extendedprice * (1 - l.l_discount)", 6)}) AS rev_fix,
              COUNT(*) AS n_lines
       FROM lineitem l
       JOIN orders o    ON l.l_orderkey = o.o_orderkey
@@ -1114,7 +1117,7 @@ def ds_tpcds_q64_wide_star_two_period(spark, sf_dir):
         .join(F.broadcast(sn), s.s_nationkey == F.col("sn_key"))
         .groupBy("p_brand", "cust_nation", "supp_nation", "yr")
         .agg(
-            F.sum(F.round(_rev_col() * 1000000.0).cast("long")).alias("rev_fix"),
+            fixed(_rev_col(), 6).alias("rev_fix"),
             F.count(F.lit(1)).alias("n_lines"),
         )
     )
@@ -1145,11 +1148,11 @@ def ds_tpcds_q64_wide_star_two_period(spark, sf_dir):
 
 @query(
     "ds_tpcds_q72_inventory_shortfall",
-    oracle="""
+    oracle=f"""
     WITH demand AS (
       SELECT l_partkey,
              epoch_us(o_orderdate) // 604800000000 AS wk,
-             SUM(CAST(ROUND(l_quantity * 1000.0) AS BIGINT)) AS d_qty,
+             SUM({sql_units("l_quantity", 3)}) AS d_qty,
              COUNT(*) AS n_lines
       FROM lineitem JOIN orders ON l_orderkey = o_orderkey
       GROUP BY l_partkey, wk
@@ -1157,7 +1160,7 @@ def ds_tpcds_q64_wide_star_two_period(spark, sf_dir):
     supply AS (
       SELECT l_partkey,
              epoch_us(l_shipdate) // 604800000000 + 1 AS wk,
-             SUM(CAST(ROUND(l_quantity * 1000.0) AS BIGINT)) AS s_qty
+             SUM({sql_units("l_quantity", 3)}) AS s_qty
       FROM lineitem
       GROUP BY l_partkey, wk
     )
@@ -1214,7 +1217,7 @@ def ds_tpcds_q72_inventory_shortfall(spark, sf_dir):
         "o_orderkey",
         F.expr("unix_micros(cast(o_orderdate as timestamp)) div 604800000000").alias("o_wk"),
     )
-    q_line = F.round(F.col("l_quantity") * 1000.0).cast("long")
+    q_line = units("l_quantity", 3)
     ship_wk = (
         F.expr("unix_micros(cast(l_shipdate as timestamp)) div 604800000000") + 1
     )
@@ -1337,7 +1340,7 @@ def ds_tpcds_q67_rollup_rank_spine(spark, sf_dir):
         .join(s, li.l_suppkey == s.s_suppkey)
         .join(n, s.s_nationkey == n.n_nationkey)
         .groupBy("p_type", "p_brand", "yr", "mon", "n_name")
-        .agg(F.sum(F.round(_rev_col() * F.lit(1e6)).cast("long")).alias("_micro"))
+        .agg(fixed(_rev_col(), 6).alias("_micro"))
     )
     g = (
         leaf.rollup("p_type", "p_brand", "yr", "mon", "n_name")
@@ -1483,7 +1486,7 @@ def ds_tpcds_q78_channel_ratio_dropouts(spark, sf_dir):
     ),
     yearly AS (
       SELECT p_brand, yr,
-             CAST(SUM(CAST(ROUND(rev * 1000000.0) AS BIGINT)) AS DOUBLE)
+             CAST(SUM({sql_units("rev", 6)}) AS DOUBLE)
                / 1000000.0 AS tot,
              COUNT(*) AS n_months
       FROM monthly GROUP BY p_brand, yr
@@ -1545,7 +1548,7 @@ def ds_tpcds_q47_monthly_neighbors(spark, sf_dir):
         .join(p, li.l_partkey == p.p_partkey)
         .groupBy("p_brand", "yr", "mon")
         .agg(
-            F.sum(F.round(_rev_col() * F.lit(1e6)).cast("long")).alias("_micro")
+            fixed(_rev_col(), 6).alias("_micro")
         )
         .withColumn("rev", F.col("_micro").cast("double") / F.lit(1e6))
     )
@@ -1850,12 +1853,12 @@ def ds_tpcds_q95_multi_supplier_clean(spark, sf_dir):
 
 @query(
     "ds_tpcds_q4_channel_growth_screen",
-    oracle="""
+    oracle=f"""
     WITH s AS (
       SELECT o_custkey,
              o_orderpriority IN ('1-URGENT', '2-HIGH') AS express,
              EXTRACT(year FROM o_orderdate) AS yr,
-             SUM(CAST(ROUND(o_totalprice * 1000000.0) AS BIGINT)) AS spend_fix
+             SUM({sql_units("o_totalprice", 6)}) AS spend_fix
       FROM orders
       WHERE EXTRACT(year FROM o_orderdate) IN (1996, 1997)
       GROUP BY o_custkey, express, yr
@@ -1908,9 +1911,7 @@ def ds_tpcds_q4_channel_growth_screen(spark, sf_dir):
         )
     )
     s = o.groupBy("o_custkey", "express", "yr").agg(
-        F.sum(F.round(F.col("o_totalprice") * F.lit(1e6)).cast("long")).alias(
-            "spend_fix"
-        )
+        fixed("o_totalprice", 6).alias("spend_fix")
     )
 
     def cell(express, yr):
@@ -2104,12 +2105,11 @@ def ds_tpcds_q17_sale_return_repurchase(spark, sf_dir):
 
 @query(
     "ds_tpcds_q92_excess_discount",
-    oracle="""
+    oracle=f"""
     WITH j AS (
       SELECT l_partkey,
              EXTRACT(month FROM o_orderdate) AS mon,
-             CAST(ROUND((l_extendedprice * l_discount) * 1000000.0)
-                  AS BIGINT) AS micro
+             {sql_units("l_extendedprice * l_discount", 6)} AS micro
       FROM lineitem JOIN orders ON l_orderkey = o_orderkey
       WHERE EXTRACT(year FROM o_orderdate) = 1997
     ),
@@ -2161,9 +2161,7 @@ def ds_tpcds_q92_excess_discount(spark, sf_dir):
     j = li.join(o, li.l_orderkey == o.o_orderkey).select(
         "l_partkey",
         "mon",
-        F.round((F.col("l_extendedprice") * F.col("l_discount")) * F.lit(1e6))
-        .cast("long")
-        .alias("micro"),
+        units(F.col("l_extendedprice") * F.col("l_discount"), 6).alias("micro"),
     )
     w = Window.partitionBy("l_partkey")
     g = j.withColumn("s", F.sum("micro").over(w)).withColumn(
@@ -2183,11 +2181,10 @@ def ds_tpcds_q92_excess_discount(spark, sf_dir):
 
 @query(
     "ds_tpcds_q58_three_channel_agreement",
-    oracle="""
+    oracle=f"""
     WITH g AS (
       SELECT p_brand, o_orderpriority AS ch,
-             CAST(CAST(SUM(CAST(ROUND((l_extendedprice * (1 - l_discount))
-                    * 1000000.0) AS BIGINT)) AS BIGINT) AS BIGINT) AS m
+             {sql_fixed(_REV, 6)} AS m
       FROM lineitem
       JOIN orders ON l_orderkey = o_orderkey
       JOIN part   ON l_partkey = p_partkey
@@ -2254,14 +2251,7 @@ def ds_tpcds_q58_three_channel_agreement(spark, sf_dir):
         li.join(o, li.l_orderkey == o.o_orderkey)
         .join(p, li.l_partkey == p.p_partkey)
         .groupBy("p_brand", "ch")
-        .agg(
-            F.sum(
-                F.round(
-                    (F.col("l_extendedprice") * (1 - F.col("l_discount")))
-                    * F.lit(1e6)
-                ).cast("long")
-            ).alias("m")
-        )
+        .agg(fixed(_rev_col(), 6).alias("m"))
     )
 
     def cell(ch):
@@ -2312,7 +2302,7 @@ def ds_tpcds_q58_three_channel_agreement(spark, sf_dir):
     ),
     web AS (
       SELECT o_custkey, EXTRACT(quarter FROM o_orderdate) AS q,
-             SUM(CAST(ROUND(o_totalprice * 100.0) AS BIGINT)) AS rev
+             SUM({sql_units("o_totalprice", 2)}) AS rev
       FROM orders
       WHERE EXTRACT(year FROM o_orderdate) = 1997
         AND EXTRACT(quarter FROM o_orderdate) <= 3
@@ -2387,10 +2377,10 @@ def ds_tpcds_q31_seasonal_share(spark, sf_dir):
             li.l_orderkey == F.col("o_orderkey"),
         )
         .groupBy("o_custkey", "q")
-        .agg(F.sum(F.round(F.col("rev") * 100.0).cast("long")).alias("rev"))
+        .agg(fixed("rev", 2).alias("rev"))
     )
     web = o.groupBy("o_custkey", F.quarter("o_orderdate").alias("q")).agg(
-        F.sum(F.round(F.col("o_totalprice") * 100.0).cast("long")).alias("rev")
+        fixed("o_totalprice", 2).alias("rev")
     )
     c = t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
 
@@ -2482,7 +2472,7 @@ def _q49_grain(spark, sf_dir):
         "o_orderkey", _channel_col().alias("channel")
     )
     ret = F.col("l_returnflag") == "R"
-    cents = F.round(F.col("rev") * 100.0).cast("long")
+    cents = units("rev", 2)
     return (
         li.join(o, li.l_orderkey == o.o_orderkey)
         .groupBy("channel", "l_partkey")
@@ -2701,18 +2691,18 @@ def ds_tpcds_q14_bucketed(spark, sf_dir):
 
 @query(
     "ds_tpcds_q93_returns_adjusted_net",
-    oracle="""
+    oracle=f"""
     WITH r AS (
       SELECT l_orderkey, l_linenumber,
-             (CAST(ROUND(l_extendedprice * (1 - l_discount) * 100.0) AS BIGINT)
+             ({_REV_CENTS}
               // CAST(ROUND(l_quantity) AS BIGINT))
              * LEAST(CAST(ROUND(l_quantity) AS BIGINT), 10) AS refund_cents
       FROM lineitem WHERE l_returnflag = 'R'
     ),
     net AS (
       SELECT l.l_orderkey,
-             CAST(ROUND(l.l_extendedprice * (1 - l.l_discount) * 100.0)
-                  AS BIGINT) - COALESCE(r.refund_cents, 0) AS net_cents
+             {sql_units("l.l_extendedprice * (1 - l.l_discount)", 2)}
+               - COALESCE(r.refund_cents, 0) AS net_cents
       FROM lineitem l LEFT JOIN r
         ON l.l_orderkey = r.l_orderkey AND l.l_linenumber = r.l_linenumber
     )
@@ -2746,9 +2736,7 @@ def ds_tpcds_q93_returns_adjusted_net(spark, sf_dir):
     key; the per-customer aggregate is map-side combined; top-20 is
     TakeOrdered. All money stays exact BIGINT cents end to end."""
     li = t(spark, sf_dir, "lineitem")
-    cents = F.round(F.col("l_extendedprice") * (1 - F.col("l_discount")) * 100.0).cast(
-        "long"
-    )
+    cents = units(_rev_col(), 2)
     qty = F.round(F.col("l_quantity")).cast("long")
     r = (
         li.filter(F.col("l_returnflag") == "R")
@@ -2845,7 +2833,7 @@ def ds_tpcds_q34_band_buyers(spark, sf_dir):
     )
 
 
-_ORD_CENTS = "CAST(ROUND(o_totalprice * 100.0) AS BIGINT)"
+_ORD_CENTS = sql_units("o_totalprice", 2)
 
 
 _DEC = "decimal(20,0)"  # holds any BIGINT; product fits decimal(38,0)
@@ -2924,10 +2912,7 @@ def ds_tpcds_q11_year_total_growth(spark, sf_dir):
     the engine layer is ours."""
     li = t(spark, sf_dir, "lineitem").select(
         "l_orderkey",
-        F.round(
-            F.col("l_extendedprice") * (1 - F.col("l_discount")) * 100.0
-        )
-        .cast("long")
+        units(_rev_col(), 2)
         .alias("cents"),
     )
     o = (
@@ -2937,7 +2922,7 @@ def ds_tpcds_q11_year_total_growth(spark, sf_dir):
             "o_orderkey",
             "o_custkey",
             F.year("o_orderdate").alias("yr"),
-            F.round(F.col("o_totalprice") * 100.0).cast("long").alias("ocents"),
+            units("o_totalprice", 2).alias("ocents"),
         )
     )
     store = (
@@ -3046,15 +3031,12 @@ def ds_tpcds_q2_week_spine_yoy(spark, sf_dir):
     ours."""
     li = t(spark, sf_dir, "lineitem").select(
         F.col("l_shipdate").alias("d"),
-        F.round(
-            F.col("l_extendedprice") * (1 - F.col("l_discount")) * 100.0
-        )
-        .cast("long")
+        units(_rev_col(), 2)
         .alias("cents"),
     )
     o = t(spark, sf_dir, "orders").select(
         F.col("o_orderdate").alias("d"),
-        F.round(F.col("o_totalprice") * 100.0).cast("long").alias("cents"),
+        units("o_totalprice", 2).alias("cents"),
     )
     u = li.unionByName(o)
     weekly = (
@@ -3200,13 +3182,13 @@ def ds_tpcds_q21_inventory_date_split(spark, sf_dir):
 
 @query(
     "ds_tpcds_q9_quantity_buckets",
-    oracle="""
+    oracle=f"""
     WITH b AS (
       SELECT CAST(FLOOR((l_quantity - 1) / 10) AS BIGINT) AS bucket,
              CAST(COUNT(*) AS BIGINT) AS n_lines,
-             CAST(SUM(CAST(ROUND(l_extendedprice * 100.0) AS BIGINT)) AS BIGINT)
+             {sql_fixed("l_extendedprice", 2)}
                AS price_cents,
-             CAST(SUM(CAST(ROUND(l_discount * 100.0) AS BIGINT)) AS BIGINT)
+             {sql_fixed("l_discount", 2)}
                AS disc_pct
       FROM lineitem GROUP BY 1
     ),
@@ -3259,11 +3241,9 @@ def ds_tpcds_q9_quantity_buckets(spark, sf_dir):
         F.floor((F.col("l_quantity") - 1) / 10).cast("long").alias("bucket")
     ).agg(
         F.count(F.lit(1)).alias("n_lines"),
-        F.sum(F.round(F.col("l_extendedprice") * 100.0).cast("long"))
-        .cast("long")
+        fixed("l_extendedprice", 2)
         .alias("price_cents"),
-        F.sum(F.round(F.col("l_discount") * 100.0).cast("long"))
-        .cast("long")
+        fixed("l_discount", 2)
         .alias("disc_pct"),
     )
     w = b.withColumn(

@@ -25,12 +25,16 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from hadoop_fs_ceph_spark.canonical import _sql_fixsum, dsum, sql_dsum
+from hadoop_fs_ceph_spark.canonical import dsum, sql_dsum, sql_fixsum
 from hadoop_fs_ceph_spark.registry import query
 from hadoop_fs_ceph_spark.tables import t
 
 _REV = "l_extendedprice * (1 - l_discount)"
 _TS = lambda s: F.lit(s).cast("timestamp")  # noqa: E731
+
+
+def _rev_col():
+    return F.col("l_extendedprice") * (1 - F.col("l_discount"))
 
 
 @query(
@@ -548,8 +552,8 @@ def q9_product_profit(spark, sf_dir):
     JOIN nation n ON n.n_nationkey = s.s_nationkey
     WHERE n.n_name = 'NATION_3'
     GROUP BY l.l_partkey
-    HAVING {_sql_fixsum("l.l_extendedprice * l.l_quantity", 4)} > 0.001 * (
-      SELECT {_sql_fixsum("l2.l_extendedprice * l2.l_quantity", 4)}
+    HAVING {sql_fixsum("l.l_extendedprice * l.l_quantity", 4)} > 0.001 * (
+      SELECT {sql_fixsum("l2.l_extendedprice * l2.l_quantity", 4)}
       FROM lineitem l2
       JOIN supplier s2 ON s2.s_suppkey = l2.l_suppkey
       JOIN nation n2 ON n2.n_nationkey = s2.s_nationkey
@@ -915,7 +919,7 @@ def q21_waiting_suppliers(spark, sf_dir):
     FROM customer c
     WHERE c.c_nationkey IN (3, 8, 11, 14, 19, 21, 24)
       AND c.c_acctbal > (
-        SELECT {_sql_fixsum("c2.c_acctbal", 6)} / COUNT(*)
+        SELECT {sql_fixsum("c2.c_acctbal", 6)} / COUNT(*)
         FROM customer c2
         WHERE c2.c_acctbal > 0.0
           AND c2.c_nationkey IN (3, 8, 11, 14, 19, 21, 24))

@@ -14,6 +14,7 @@ import pandas as pd
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, IntegerType
 
+from hadoop_fs_ceph_spark.canonical import sql_fixed, sql_units, units
 from hadoop_fs_ceph_spark.functions.similarity import sql_cosine
 from hadoop_fs_ceph_spark.registry import query
 from hadoop_fs_ceph_spark.tables import t
@@ -230,9 +231,9 @@ def udf_pandas_iterator(spark, sf_dir):
 
 @query(
     "udf_map_in_arrow",
-    oracle="""
+    oracle=f"""
     SELECT event_id,
-           CAST(ROUND(value * 100) AS BIGINT) AS cents,
+           {sql_units("value", 2)} AS cents,
            length(event_type) AS type_len
     FROM events WHERE event_type IN ('purchase', 'signup')
     """,
@@ -272,12 +273,12 @@ def udf_map_in_arrow(spark, sf_dir):
 
 @query(
     "udf_apply_in_arrow",
-    oracle="""
+    oracle=f"""
     SELECT c_mktsegment,
            COUNT(*) AS n,
-           CAST(SUM(CAST(ROUND(c_acctbal * 100) AS BIGINT)) AS BIGINT)
+           {sql_fixed("c_acctbal", 2)}
              AS balance_cents,
-           CAST(MAX(CAST(ROUND(c_acctbal * 100) AS BIGINT)) AS BIGINT)
+           CAST(MAX({sql_units("c_acctbal", 2)}) AS BIGINT)
              AS max_cents
     FROM customer
     GROUP BY c_mktsegment
@@ -498,12 +499,12 @@ def udf_python_udtf(spark, sf_dir):
 
 @query(
     "udf_grouped_ols_fit",
-    oracle="""
+    oracle=f"""
     WITH x AS (
       SELECT c.c_mktsegment AS segment,
              CAST(datediff('day', DATE '1992-01-01', CAST(o.o_orderdate AS DATE))
                   AS BIGINT) AS days,
-             CAST(ROUND(o.o_totalprice * 100) AS BIGINT) AS cents
+             {sql_units("o.o_totalprice", 2)} AS cents
       FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
     ),
     m AS (
@@ -552,7 +553,7 @@ def udf_grouped_ols_fit(spark, sf_dir):
         F.datediff(F.col("o_orderdate").cast("date"), F.lit("1992-01-01").cast("date"))
         .cast("long")
         .alias("days"),
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
+        units("o_totalprice", 2).alias("cents"),
     )
 
     def fit(pdf: pd.DataFrame) -> pd.DataFrame:

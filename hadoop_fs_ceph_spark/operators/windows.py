@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from hadoop_fs_ceph_spark.canonical import dsum
+from hadoop_fs_ceph_spark.canonical import dsum, fixed, sql_fixed, sql_units, units
 from hadoop_fs_ceph_spark.registry import query
 from hadoop_fs_ceph_spark.tables import t
 
@@ -78,9 +78,9 @@ def win_lag_lead(spark, sf_dir):
 
 @query(
     "win_running_sum",
-    oracle="""
+    oracle=f"""
     SELECT o_custkey, o_orderkey, o_orderdate,
-           CAST(CAST(SUM(CAST(ROUND(o_totalprice * 10000.0) AS BIGINT))
+           CAST(CAST(SUM({sql_units("o_totalprice", 4)})
                 OVER (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS DOUBLE)
              / 10000.0 AS running_spend,
@@ -99,12 +99,11 @@ def win_running_sum(spark, sf_dir):
         .orderBy("o_orderdate", "o_orderkey")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    fixed = F.round(F.col("o_totalprice") * 10000.0).cast("long")
     return o.select(
         "o_custkey",
         "o_orderkey",
         "o_orderdate",
-        (F.sum(fixed).over(w).cast("double") / 10000.0).alias("running_spend"),
+        (fixed("o_totalprice", 4).over(w).cast("double") / 10000.0).alias("running_spend"),
         F.count(F.lit(1)).over(w).alias("n_so_far"),
     )
 
@@ -354,11 +353,11 @@ def win_median_disc(spark, sf_dir):
 
 @query(
     "win_rolling_7day",
-    oracle="""
+    oracle=f"""
     WITH daily AS (
       SELECT o_orderstatus,
              CAST(o_orderdate AS DATE) - DATE '1970-01-01' AS epoch_day,
-             SUM(CAST(ROUND(o_totalprice * 100.0) AS BIGINT)) AS rev_c
+             SUM({sql_units("o_totalprice", 2)}) AS rev_c
       FROM orders
       WHERE o_orderdate < TIMESTAMP '1993-01-01 00:00:00'
       GROUP BY o_orderstatus, epoch_day
@@ -394,7 +393,7 @@ def win_rolling_7day(spark, sf_dir):
             ),
         )
         .groupBy("o_orderstatus", "epoch_day")
-        .agg(F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias("rev_c"))
+        .agg(fixed("o_totalprice", 2).alias("rev_c"))
     )
     w = (
         Window.partitionBy("o_orderstatus")
@@ -413,10 +412,10 @@ def win_rolling_7day(spark, sf_dir):
 
 @query(
     "win_cusum_changepoint",
-    oracle="""
+    oracle=f"""
     WITH daily AS (
       SELECT CAST(date_trunc('day', o_orderdate) AS DATE) AS day,
-             CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) AS BIGINT)
+             {sql_fixed("o_totalprice", 2)}
                AS cents
       FROM orders GROUP BY 1
     ),
@@ -455,7 +454,7 @@ def win_cusum_changepoint(spark, sf_dir):
     o = t(spark, sf_dir, "orders")
     daily = o.groupBy(
         F.to_date(F.date_trunc("day", "o_orderdate")).alias("day")
-    ).agg(F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias("cents"))
+    ).agg(fixed("o_totalprice", 2).alias("cents"))
     tot = daily.agg(
         F.count(F.lit(1)).cast("long").alias("n"),
         F.sum("cents").cast("long").alias("total"),
@@ -477,10 +476,10 @@ def win_cusum_changepoint(spark, sf_dir):
 
 @query(
     "win_bollinger_bands",
-    oracle="""
+    oracle=f"""
     WITH q AS (
       SELECT user_id, ts, event_id, value,
-             CAST(ROUND(value * 1000000.0) AS BIGINT) AS qv
+             {sql_units("value", 6)} AS qv
       FROM events
     ),
     f AS (
@@ -524,7 +523,7 @@ def win_bollinger_bands(spark, sf_dir):
         "ts",
         "event_id",
         "value",
-        F.round(F.col("value") * 1e6).cast("long").alias("qv"),
+        units("value", 6).alias("qv"),
     )
     w = (
         Window.partitionBy("user_id")
@@ -554,7 +553,7 @@ def win_bollinger_bands(spark, sf_dir):
     oracle=f"""
     WITH daily AS (
       SELECT event_type, CAST(ts AS DATE) AS d,
-             (CAST(SUM(CAST(ROUND(value * 1000000.0) AS BIGINT)) AS DOUBLE) / 1000000.0) AS v
+             (CAST(SUM({sql_units("value", 6)}) AS DOUBLE) / 1000000.0) AS v
       FROM events GROUP BY event_type, CAST(ts AS DATE)
     ),
     bounds AS (SELECT MIN(d) AS lo, MAX(d) AS hi FROM daily),
@@ -668,10 +667,10 @@ def win_resample_interpolate(spark, sf_dir):
 
 @query(
     "win_rolling_quantile",
-    oracle="""
+    oracle=f"""
     WITH daily AS (
       SELECT event_type, CAST(ts AS DATE) AS d,
-             CAST(SUM(CAST(ROUND(value * 1000000) AS BIGINT)) AS BIGINT) AS v6
+             {sql_fixed("value", 6)} AS v6
       FROM events GROUP BY 1, 2
     ),
     f AS (
@@ -707,7 +706,7 @@ def win_rolling_quantile(spark, sf_dir):
     e = t(spark, sf_dir, "events")
     daily = e.groupBy(
         "event_type", F.col("ts").cast("date").alias("d")
-    ).agg(F.sum(F.round(F.col("value") * 1000000).cast("long")).alias("v6"))
+    ).agg(fixed("value", 6).alias("v6"))
     w = (
         Window.partitionBy("event_type")
         .orderBy("d")
@@ -842,10 +841,10 @@ def win_sessionize_capped(spark, sf_dir):
 
 @query(
     "win_time_weighted_avg",
-    oracle="""
+    oracle=f"""
     WITH seq AS (
       SELECT event_type,
-             CAST(ROUND(value * 1000000) AS BIGINT) AS v6,
+             {sql_units("value", 6)} AS v6,
              epoch_us(LEAD(ts) OVER (PARTITION BY event_type
                                      ORDER BY ts, event_id))
                - epoch_us(ts) AS w_us
@@ -884,7 +883,7 @@ def win_time_weighted_avg(spark, sf_dir):
     w = Window.partitionBy("event_type").orderBy("ts", "event_id")
     seq = e.select(
         "event_type",
-        F.round(F.col("value") * 1000000).cast("long").alias("v6"),
+        units("value", 6).alias("v6"),
         (F.unix_micros(F.lead("ts").over(w)) - F.unix_micros("ts")).alias("w_us"),
     )
     m = (
@@ -915,7 +914,7 @@ _RZ_FRAME = 15  # trailing frame length (rows), excluding the current row
     oracle=f"""
     WITH v AS (
       SELECT user_id, ts, event_id,
-             CAST(ROUND(value * 100) AS BIGINT) AS cents
+             {sql_units("value", 2)} AS cents
       FROM events
     ),
     fr AS (
@@ -975,7 +974,7 @@ def win_rolling_zscore(spark, sf_dir):
         "user_id",
         "ts",
         "event_id",
-        F.round(F.col("value") * 100).cast("long").alias("cents"),
+        units("value", 2).alias("cents"),
     )
     w = (
         Window.partitionBy("user_id")
@@ -1027,10 +1026,10 @@ def win_rolling_zscore(spark, sf_dir):
 
 @query(
     "win_max_drawdown",
-    oracle="""
+    oracle=f"""
     WITH daily AS (
       SELECT event_type, CAST(ts AS DATE) AS day,
-             CAST(SUM(CAST(ROUND(value * 1000000.0) AS BIGINT)) AS BIGINT)
+             {sql_fixed("value", 6)}
                AS micro
       FROM events GROUP BY event_type, CAST(ts AS DATE)
     ),
@@ -1073,7 +1072,7 @@ def win_max_drawdown(spark, sf_dir):
     daily = (
         t(spark, sf_dir, "events")
         .groupBy("event_type", F.col("ts").cast("date").alias("day"))
-        .agg(F.sum(F.round(F.col("value") * 1000000.0).cast("long")).alias("micro"))
+        .agg(fixed("value", 6).alias("micro"))
     )
     w = (
         Window.partitionBy("event_type")
@@ -1105,14 +1104,14 @@ def win_max_drawdown(spark, sf_dir):
 
 @query(
     "win_anchored_vwap",
-    oracle="""
+    oracle=f"""
     WITH daily AS (
       SELECT CAST(DATE_TRUNC('month', l_shipdate) AS DATE) AS month,
              CAST(CAST(l_shipdate AS DATE) - DATE '1970-01-01' AS BIGINT)
                AS epoch_day,
-             SUM(CAST(ROUND(l_extendedprice * l_quantity * 100.0) AS BIGINT))
+             SUM({sql_units("l_extendedprice * l_quantity", 2)})
                AS pq_c,
-             SUM(CAST(ROUND(l_quantity * 1000000.0) AS BIGINT)) AS q_m
+             SUM({sql_units("l_quantity", 6)}) AS q_m
       FROM lineitem
       GROUP BY month, epoch_day
     )
@@ -1154,12 +1153,8 @@ def win_anchored_vwap(spark, sf_dir):
         )
         .groupBy("month", "epoch_day")
         .agg(
-            F.sum(
-                F.round(F.col("l_extendedprice") * F.col("l_quantity") * 100).cast(
-                    "long"
-                )
-            ).alias("pq_c"),
-            F.sum(F.round(F.col("l_quantity") * 1000000).cast("long")).alias("q_m"),
+            fixed(F.col("l_extendedprice") * F.col("l_quantity"), 2).alias("pq_c"),
+            fixed("l_quantity", 6).alias("q_m"),
         )
     )
     w = (
@@ -1180,12 +1175,12 @@ def win_anchored_vwap(spark, sf_dir):
 
 @query(
     "win_rsi",
-    oracle="""
+    oracle=f"""
     WITH daily AS (
       SELECT o_orderstatus,
              CAST(CAST(o_orderdate AS DATE) - DATE '1970-01-01' AS BIGINT)
                AS epoch_day,
-             SUM(CAST(ROUND(o_totalprice * 100.0) AS BIGINT)) AS rev_c
+             SUM({sql_units("o_totalprice", 2)}) AS rev_c
       FROM orders GROUP BY o_orderstatus, epoch_day
     ),
     d AS (
@@ -1235,7 +1230,7 @@ def win_rsi(spark, sf_dir):
             ),
         )
         .groupBy("o_orderstatus", "epoch_day")
-        .agg(F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias("rev_c"))
+        .agg(fixed("o_totalprice", 2).alias("rev_c"))
     )
     ws = Window.partitionBy("o_orderstatus").orderBy("epoch_day")
     d = daily.select(
@@ -1363,12 +1358,12 @@ def win_rolling_corr(spark, sf_dir):
 
 @query(
     "win_stochastic_oscillator",
-    oracle="""
+    oracle=f"""
     WITH daily AS (
       SELECT o_orderstatus,
              CAST(CAST(o_orderdate AS DATE) - DATE '1970-01-01' AS BIGINT)
                AS epoch_day,
-             SUM(CAST(ROUND(o_totalprice * 100.0) AS BIGINT)) AS rev_c
+             SUM({sql_units("o_totalprice", 2)}) AS rev_c
       FROM orders GROUP BY o_orderstatus, epoch_day
     ),
     x AS (
@@ -1427,7 +1422,7 @@ def win_stochastic_oscillator(spark, sf_dir):
             ).cast("long"),
         )
         .groupBy("o_orderstatus", "epoch_day")
-        .agg(F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias("rev_c"))
+        .agg(fixed("o_totalprice", 2).alias("rev_c"))
     )
     ws = Window.partitionBy("o_orderstatus").orderBy("epoch_day")
     w14 = ws.rowsBetween(-13, 0)
@@ -1469,12 +1464,12 @@ def win_stochastic_oscillator(spark, sf_dir):
 
 @query(
     "win_obv",
-    oracle="""
+    oracle=f"""
     WITH daily AS (
       SELECT o_orderstatus,
              CAST(CAST(o_orderdate AS DATE) - DATE '1970-01-01' AS BIGINT)
                AS epoch_day,
-             CAST(SUM(CAST(ROUND(o_totalprice * 100.0) AS BIGINT)) AS BIGINT)
+             {sql_fixed("o_totalprice", 2)}
                AS rev_c,
              CAST(COUNT(*) AS BIGINT) AS vol
       FROM orders GROUP BY o_orderstatus, epoch_day
@@ -1527,7 +1522,7 @@ def win_obv(spark, sf_dir):
         )
         .groupBy("o_orderstatus", "epoch_day")
         .agg(
-            F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias("rev_c"),
+            fixed("o_totalprice", 2).alias("rev_c"),
             F.count(F.lit(1)).cast("long").alias("vol"),
         )
     )
@@ -1562,12 +1557,12 @@ def win_obv(spark, sf_dir):
 
 @query(
     "win_pivot_points",
-    oracle="""
+    oracle=f"""
     WITH daily AS (
       SELECT o_orderstatus,
              CAST(CAST(o_orderdate AS DATE) - DATE '1970-01-01' AS BIGINT)
                AS epoch_day,
-             CAST(SUM(CAST(ROUND(o_totalprice * 100.0) AS BIGINT)) AS BIGINT)
+             {sql_fixed("o_totalprice", 2)}
                AS rev_c
       FROM orders GROUP BY o_orderstatus, epoch_day
     ),
@@ -1611,7 +1606,7 @@ def win_pivot_points(spark, sf_dir):
             ).cast("long"),
         )
         .groupBy("o_orderstatus", "epoch_day")
-        .agg(F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias("rev_c"))
+        .agg(fixed("o_totalprice", 2).alias("rev_c"))
     )
     w7 = (
         Window.partitionBy("o_orderstatus").orderBy("epoch_day").rowsBetween(-3, 3)
@@ -1643,12 +1638,12 @@ def win_pivot_points(spark, sf_dir):
 
 @query(
     "win_topk_with_ties",
-    oracle="""
+    oracle=f"""
     WITH daily AS (
       SELECT o_orderstatus,
              CAST(CAST(o_orderdate AS DATE) - DATE '1970-01-01' AS BIGINT)
                AS epoch_day,
-             CAST(SUM(CAST(ROUND(o_totalprice * 100.0) AS BIGINT)) AS BIGINT)
+             {sql_fixed("o_totalprice", 2)}
                AS rev_c
       FROM orders GROUP BY o_orderstatus, epoch_day
     ),
@@ -1686,7 +1681,7 @@ def win_topk_with_ties(spark, sf_dir):
             ).cast("long"),
         )
         .groupBy("o_orderstatus", "epoch_day")
-        .agg(F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias("rev_c"))
+        .agg(fixed("o_totalprice", 2).alias("rev_c"))
     )
     w = Window.partitionBy("o_orderstatus").orderBy(F.col("rev_c").desc())
     return (

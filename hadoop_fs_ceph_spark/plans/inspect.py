@@ -138,13 +138,6 @@ FLAG_STREAM_STATE_NO_TIMEOUT = (
     "custom stateful operator without timeout — per-key state never expires"
 )
 
-STREAMING_FLAGS = (
-    FLAG_STREAM_DEDUP_NO_EVICTION,
-    FLAG_STREAM_COMPLETE_AGG,
-    FLAG_STREAM_UNWATERMARKED_AGG,
-    FLAG_STREAM_STATE_NO_TIMEOUT,
-)
-
 # Streaming nodes print with a `~` marker (`+- ~Deduplicate [...]`); the
 # eviction-correct variant is `~DeduplicateWithinWatermark [...]`, which the
 # required space-before-bracket deliberately does NOT match.

@@ -62,6 +62,7 @@ of them is a failed class load across the whole classpath.
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -86,6 +87,25 @@ def codegen_compiles(spark: SparkSession) -> int:
     nothing."""
     metrics = getattr(spark._jvm, "org.apache.spark.metrics.source.CodegenMetrics")
     return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
+@contextmanager
+def confs(spark: SparkSession, overrides: dict):
+    """Hold ``overrides`` on the session for the block, then put back every
+    key's prior value. Keys that had none are unset, not skipped, and this
+    holds when the block raises too: an override must never leak into
+    whatever runs on the session next."""
+    saved = {k: spark.conf.get(k, None) for k in overrides}
+    try:
+        for k, v in overrides.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 def _cpus() -> int:

@@ -15,6 +15,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 
 from hadoop_fs_ceph_spark import scratch
+from hadoop_fs_ceph_spark.session import confs
 from hadoop_fs_ceph_spark.sources.readers import is_directory, relation_bytes
 from hadoop_fs_ceph_spark.tables import events_ts, read_events
 
@@ -123,10 +124,8 @@ def run_to_memory(
     run_id = uuid.uuid4().hex[:8]
     table = f"{name}_{run_id}"
     checkpoint = scratch.fresh("ckpt")
-    old_width = spark.conf.get("spark.sql.shuffle.partitions")
-    if state_width is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_width))
-    try:
+    width = {} if state_width is None else {"spark.sql.shuffle.partitions": str(state_width)}
+    with confs(spark, width):
         q = (
             sdf.writeStream.format("memory")
             .queryName(table)
@@ -136,7 +135,4 @@ def run_to_memory(
             .start()
         )
         q.awaitTermination()
-    finally:
-        if state_width is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", old_width)
     return spark.table(table)

@@ -215,6 +215,33 @@ def test_operator_modules_are_named_for_their_family():
     )
 
 
+# An inline fixed-point sum on either side, or a module's own scale-shift
+# helper: a ``fix*`` function or ``FIX*`` constant, a shift computed from a
+# variable exponent, or a local ``shift = 10...``.
+_INLINE_FIXED_POINT = re.compile(
+    r"F\.sum\(\s*F\.round\(|SUM\(\s*CAST\(\s*ROUND\("
+    r"|^\s*def\s+_?fix\w*\s*\(|^\s*_?FIX\w*\s*="
+    r"|10\s*\*\*\s*[a-z_(]|\bshift\s*=\s*(float\()?10\b",
+    re.M,
+)
+
+
+def test_fixed_point_rule_is_spelled_only_in_canonical():
+    """The fixed-point sum ``SUM(CAST(ROUND(x * 10^s) AS BIGINT))`` is what
+    makes aggregates hash-match across Spark and DuckDB, so one module,
+    ``canonical.py``, spells it (``units``/``fixed``/``fixsum`` and their
+    ``sql_*`` twins); an operator module that writes it out again can drift
+    in its scale literal, its casts or its parenthesization."""
+    ops = REPO / "hadoop_fs_ceph_spark" / "operators"
+    sites = [
+        f"{p.name}:{text.count(chr(10), 0, m.start()) + 1}: {m.group(0).strip()}"
+        for p in sorted(ops.glob("*.py"))
+        for text in [p.read_text(encoding="utf-8")]
+        for m in _INLINE_FIXED_POINT.finditer(text)
+    ]
+    assert not sites, f"{len(sites)} inline fixed-point sites; use canonical.py: {sites}"
+
+
 def test_jvm_classes_are_looked_up_in_one_step():
     """Package code names a JVM class in one lookup,
     ``getattr(jvm, "org.apache.hadoop.fs.Path")``, never as an attribute

@@ -16,7 +16,8 @@ sys.path.insert(0, ROOT)
 sys.path.insert(0, os.path.join(ROOT, "tools"))
 
 import bench  # noqa: E402
-from bench import confs, run, soak_header, soak_labels, suite  # noqa: E402
+from bench import run, soak_header, soak_labels, suite  # noqa: E402
+from hadoop_fs_ceph_spark.session import confs  # noqa: E402
 from hadoop_fs_ceph_spark.registry import load_all  # noqa: E402
 from time_heads import time_heads  # noqa: E402
 
