@@ -269,21 +269,23 @@ def _read_sub_blocks(data: bytes, pos: int) -> tuple[bytes, int]:
         pos += n
 
 
-def decode_gif(data: bytes) -> dict:
-    """Strict decode of a single-image GIF.
+def _walk(data: bytes):
+    """Walk a GIF block by block — the one parser both decoders share.
 
-    Returns ``{"width", "height", "pixels", "palette", "interlaced"}`` —
-    ``pixels`` are row-major top-down palette indices (de-interlaced if
-    the image was interlaced), ``palette`` the effective (local-overrides-
-    global) color table bytes. Raises ``ValueError`` on every corruption
-    class (see module docstring).
+    Yields ``(kind, value)`` events in stream order:
 
-    Note (ADVICE r9): ``width``/``height`` are the IMAGE DESCRIPTOR's
-    dimensions, which real-world GIFs may declare smaller than the
-    logical screen — the returned pixel buffer is image-local, NOT
-    composited onto the screen canvas; callers must not read these as
-    screen dimensions. (A descriptor larger than the screen still
-    refuses loudly.)"""
+    * ``("screen", (sw, sh))`` once, after the header and global table;
+    * ``("ext", (label, payload))`` per extension block;
+    * ``("image", n)`` at the n-th image introducer (0-based), before its
+      descriptor is read;
+    * ``("descriptor", (left, top, w, h))`` once that descriptor is read,
+      before its color table and data;
+    * ``("pixels", (body, palette, interlaced))`` once its LZW data is
+      decoded and de-interlaced.
+
+    A decoder refuses an image it cannot take by raising at an event.
+    The walker raises ``ValueError`` on every corruption class (see the
+    module docstring), including a stream with no image or no trailer."""
     if len(data) < 13:
         raise ValueError("truncated GIF header")
     if data[:6] not in _MAGICS:
@@ -297,8 +299,9 @@ def decode_gif(data: bytes) -> dict:
             raise ValueError("truncated global color table")
         gct = data[pos : pos + n]
         pos += n
+    yield "screen", (sw, sh)
 
-    image: dict | None = None
+    n_images = 0
     saw_trailer = False
     while pos < len(data):
         introducer = data[pos]
@@ -309,24 +312,18 @@ def decode_gif(data: bytes) -> dict:
         if introducer == 0x21:  # extension: label + sub-blocks
             if pos >= len(data):
                 raise ValueError("truncated extension label")
-            pos += 1
-            _, pos = _read_sub_blocks(data, pos)
+            label = data[pos]
+            payload, pos = _read_sub_blocks(data, pos + 1)
+            yield "ext", (label, payload)
             continue
         if introducer != 0x2C:
             raise ValueError(f"unknown GIF block introducer 0x{introducer:02x}")
-        if image is not None:
-            raise ValueError(
-                "multi-image GIF (animation) is not supported by the "
-                "still-image reader — use decode_gif_animation"
-            )
+        yield "image", n_images
         if pos + 9 > len(data):
             raise ValueError("truncated image descriptor")
         left, top, w, h, flags = struct.unpack("<HHHHB", data[pos : pos + 9])
         pos += 9
-        if w <= 0 or h <= 0 or left + w > sw or top + h > sh:
-            raise ValueError(
-                f"image {w}x{h}@({left},{top}) exceeds screen {sw}x{sh}"
-            )
+        yield "descriptor", (left, top, w, h)
         lct = None
         if flags & 0x80:
             n = 3 * (2 << (flags & 0x07))
@@ -355,17 +352,53 @@ def decode_gif(data: bytes) -> dict:
             for src, dst in enumerate(_interlace_order(h)):
                 ordered[dst] = rows[src]
             body = b"".join(ordered)
-        image = {
-            "width": w,
-            "height": h,
-            "pixels": body,
-            "palette": palette,
-            "interlaced": interlaced,
-        }
-    if image is None:
+        n_images += 1
+        yield "pixels", (body, palette, interlaced)
+    if n_images == 0:
         raise ValueError("GIF contains no image descriptor")
     if not saw_trailer:
         raise ValueError("missing GIF trailer")
+
+
+def decode_gif(data: bytes) -> dict:
+    """Strict decode of a single-image GIF.
+
+    Returns ``{"width", "height", "pixels", "palette", "interlaced"}`` —
+    ``pixels`` are row-major top-down palette indices (de-interlaced if
+    the image was interlaced), ``palette`` the effective (local-overrides-
+    global) color table bytes. Raises ``ValueError`` on every corruption
+    class (see module docstring).
+
+    Note (ADVICE r9): ``width``/``height`` are the IMAGE DESCRIPTOR's
+    dimensions, which real-world GIFs may declare smaller than the
+    logical screen — the returned pixel buffer is image-local, NOT
+    composited onto the screen canvas; callers must not read these as
+    screen dimensions. (A descriptor larger than the screen still
+    refuses loudly.)"""
+    image: dict = {}
+    for kind, value in _walk(data):
+        if kind == "screen":
+            sw, sh = value
+        elif kind == "image" and value > 0:
+            raise ValueError(
+                "multi-image GIF (animation) is not supported by the "
+                "still-image reader — use decode_gif_animation"
+            )
+        elif kind == "descriptor":
+            left, top, w, h = value
+            if w <= 0 or h <= 0 or left + w > sw or top + h > sh:
+                raise ValueError(
+                    f"image {w}x{h}@({left},{top}) exceeds screen {sw}x{sh}"
+                )
+        elif kind == "pixels":
+            body, palette, interlaced = value
+            image = {
+                "width": w,
+                "height": h,
+                "pixels": body,
+                "palette": palette,
+                "interlaced": interlaced,
+            }
     return image
 
 
@@ -429,37 +462,15 @@ def decode_gif_animation(data: bytes) -> dict:
     (compositing is a renderer concern, not a byte-exact decode).
     Raises ``ValueError`` on every corruption class the still decoder
     does."""
-    if len(data) < 13:
-        raise ValueError("truncated GIF header")
-    if data[:6] not in _MAGICS:
-        raise ValueError(f"not a GIF: bad magic {data[:6]!r}")
-    sw, sh, packed, _bg, _aspect = struct.unpack("<HHBBB", data[6:13])
-    pos = 13
-    gct: bytes | None = None
-    if packed & 0x80:
-        n = 3 * (2 << (packed & 0x07))
-        if pos + n > len(data):
-            raise ValueError("truncated global color table")
-        gct = data[pos : pos + n]
-        pos += n
-
     frames: list[bytes] = []
     delays: list[int] = []
     palette_out: bytes | None = None
     pending_delay = 0
-    saw_trailer = False
-    while pos < len(data):
-        introducer = data[pos]
-        pos += 1
-        if introducer == 0x3B:
-            saw_trailer = True
-            break
-        if introducer == 0x21:
-            if pos >= len(data):
-                raise ValueError("truncated extension label")
-            label = data[pos]
-            pos += 1
-            payload, pos = _read_sub_blocks(data, pos)
+    for kind, value in _walk(data):
+        if kind == "screen":
+            sw, sh = value
+        elif kind == "ext":
+            label, payload = value
             if label == 0xF9:  # Graphic Control Extension
                 if len(payload) < 4:
                     raise ValueError("truncated graphic control extension")
@@ -476,53 +487,18 @@ def decode_gif_animation(data: bytes) -> dict:
                         "(full-frame animation only)"
                     )
                 (pending_delay,) = struct.unpack("<H", payload[1:3])
-            continue
-        if introducer != 0x2C:
-            raise ValueError(f"unknown GIF block introducer 0x{introducer:02x}")
-        if pos + 9 > len(data):
-            raise ValueError("truncated image descriptor")
-        left, top, w, h, flags = struct.unpack("<HHHHB", data[pos : pos + 9])
-        pos += 9
-        if (left, top, w, h) != (0, 0, sw, sh):
-            raise ValueError(
-                f"partial frame {w}x{h}@({left},{top}) on screen {sw}x{sh} "
-                "is not supported (full-frame animation only)"
-            )
-        lct = None
-        if flags & 0x80:
-            n = 3 * (2 << (flags & 0x07))
-            if pos + n > len(data):
-                raise ValueError("truncated local color table")
-            lct = data[pos : pos + n]
-            pos += n
-        palette = lct if lct is not None else gct
-        if palette is None:
-            raise ValueError("no color table (neither global nor local)")
-        if pos >= len(data):
-            raise ValueError("missing LZW minimum code size")
-        min_code = data[pos]
-        pos += 1
-        lzw, pos = _read_sub_blocks(data, pos)
-        body = lzw_decode(lzw, min_code, w * h)
-        if max(body) >= len(palette) // 3:
-            raise ValueError(
-                f"pixel index {max(body)} outside {len(palette) // 3}-entry "
-                "color table"
-            )
-        if flags & 0x40:
-            rows = [body[y * w : (y + 1) * w] for y in range(h)]
-            ordered: list[bytes] = [b""] * h
-            for src, dst in enumerate(_interlace_order(h)):
-                ordered[dst] = rows[src]
-            body = b"".join(ordered)
-        frames.append(body)
-        delays.append(pending_delay)
-        pending_delay = 0
-        palette_out = palette
-    if not frames:
-        raise ValueError("GIF contains no image descriptor")
-    if not saw_trailer:
-        raise ValueError("missing GIF trailer")
+        elif kind == "descriptor":
+            left, top, w, h = value
+            if value != (0, 0, sw, sh):
+                raise ValueError(
+                    f"partial frame {w}x{h}@({left},{top}) on screen {sw}x{sh} "
+                    "is not supported (full-frame animation only)"
+                )
+        elif kind == "pixels":
+            body, palette_out, _interlaced = value
+            frames.append(body)
+            delays.append(pending_delay)
+            pending_delay = 0
     return {
         "width": sw,
         "height": sh,

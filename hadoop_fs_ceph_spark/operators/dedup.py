@@ -12,11 +12,20 @@ as the composition a 100 TB corpus run needs:
 * everything is `pyspark.sql.functions` composition — no UDFs, no
   collect(), shuffle keys explicit in the plan.
 
+The MinHash-LSH queries share one pipeline. Each stage has one owner on
+the Spark side and one SQL twin the oracles splice in:
+
+* signatures — ``_minhash_docs`` / ``_SQL_MINHASH_DOCS``;
+* 4×4 banding — ``_bands`` / ``_SQL_LSH_BANDS``;
+* the candidate self-join — ``_lsh_candidates`` / ``_SQL_LSH_CANDS``;
+* the verify join — ``_pair_overlap`` / ``_sql_pair_join`` with
+  ``_SQL_JACCARD``; ``_lsh_pairs`` / ``_SQL_LSH_ORACLE`` chain all four.
+
 Portable polynomial hashes keep every query DuckDB-oracle-checkable; the
-production tier swaps in ``xxhash64`` with the identical pipeline shape
-(see ``hadoop_fs_ceph_spark.functions``). The reference repo has no
-dedup analog (it is a FileSystem connector, SURVEY.md §0); these
-operators are the engine layer above it.
+production tier swaps in ``xxhash64`` as ``_minhash_docs``'s token hash,
+with the identical pipeline shape (see ``hadoop_fs_ceph_spark.functions``).
+The reference repo has no dedup analog (it is a FileSystem connector,
+SURVEY.md §0); these operators are the engine layer above it.
 """
 
 from __future__ import annotations
@@ -97,8 +106,17 @@ def dedup_exact_content(spark, sf_dir):
     )
 
 
-def _minhash_docs(spark, sf_dir, cap=None):
-    """documents → (doc_id, sh: distinct 3-word shingles, sig: MinHash-16).
+def _xxhash_token(s):
+    """Production-tier token hash: xxhash64, pmod-bounded into the
+    combine-safe domain (< 2^31) so the shingle arithmetic stays
+    overflow-free under ANSI semantics."""
+    return F.pmod(F.xxhash64(s), F.lit(2_147_483_647))
+
+
+def _minhash_docs(spark, sf_dir, cap=None, token_hash=poly_hash):
+    """documents → (doc_id, sh: distinct 3-word shingles, n_sh: |sh|,
+    sig: MinHash-16), each token hashed by ``token_hash`` (the portable
+    ``poly_hash``, or ``_xxhash_token`` for the production tier).
 
     Built as *stacked projections* so Catalyst keeps each expensive alias a
     single computed column (CollapseProject only inlines cheap or
@@ -121,7 +139,7 @@ def _minhash_docs(spark, sf_dir, cap=None):
     # to amortize it (banding bounds the pair stream), and the local A/B
     # measured a wash (LSH heads within noise, keeper −25% only).
     return (
-        d.select("doc_id", F.transform(tokens("text"), lambda s: poly_hash(s)).alias("th"))
+        d.select("doc_id", F.transform(tokens("text"), lambda s: token_hash(s)).alias("th"))
         .select("doc_id", F.array_distinct(hashed_shingles(F.col("th"), 3)).alias("sh"))
         .select(
             "doc_id",
@@ -134,10 +152,11 @@ def _minhash_docs(spark, sf_dir, cap=None):
 
 
 def _bands(docs):
-    """(doc_id, band, bh): the N_BANDS slim banding rows per signature —
-    the ONE construction every MinHash-LSH candidate stage joins on (a
-    banding retune edits this helper plus the SQL template, nothing
-    else)."""
+    """(doc_id, band, bh): the N_BANDS slim banding rows per signature.
+    With its SQL twin ``_SQL_LSH_BANDS`` it is the one banding
+    construction: every MinHash-LSH candidate stage (``_lsh_candidates``,
+    the incremental probe) joins on it, so a banding retune edits these
+    two and nothing else."""
     return docs.select(
         "doc_id",
         F.explode(
@@ -149,9 +168,25 @@ def _bands(docs):
     ).select("doc_id", "k.band", "k.bh")
 
 
-def _pair_sides(docs):
-    """Left/right aliases of the signature relation for pair-verify
-    joins: (doc_a, sh_a, na) and (doc_b, sh_b, nb)."""
+def _lsh_candidates(docs):
+    """(doc_a < doc_b) pairs that share at least one band bucket — the
+    candidate self-join on (band, band-hash). SQL twin: the ``cand`` CTE
+    of ``_SQL_LSH_CANDS``."""
+    bands = _bands(docs)
+    a, b = bands.alias("a"), bands.alias("b")
+    return (
+        a.join(b, (F.col("a.band") == F.col("b.band")) & (F.col("a.bh") == F.col("b.bh")))
+        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
+        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
+        .distinct()
+    )
+
+
+def _pair_overlap(cand, docs):
+    """The verify join: candidate pairs (doc_a, doc_b) joined back to both
+    sides of the signature relation → (doc_a, doc_b, ni = |A∩B|, na, nb)
+    over the hashed-shingle sets. SQL twin: ``_sql_pair_join`` with
+    ``_SQL_JACCARD``."""
     x = docs.select(
         F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a"),
         F.col("n_sh").alias("na"),
@@ -160,7 +195,35 @@ def _pair_sides(docs):
         F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b"),
         F.col("n_sh").alias("nb"),
     )
-    return x, y
+    return (
+        cand.join(x, "doc_a")
+        .join(y, "doc_b")
+        .select(
+            "doc_a",
+            "doc_b",
+            F.size(F.array_intersect("sh_a", "sh_b")).alias("ni"),
+            "na",
+            "nb",
+        )
+    )
+
+
+def _lsh_pairs(docs):
+    """The whole MinHash-LSH pipeline over a signature relation:
+    candidates → verify → (doc_a, doc_b, jaccard) at Jaccard ≥ 0.8.
+    SQL twin: ``_SQL_LSH_ORACLE``."""
+    # |A∩B| / (|A| + |B| - |A∩B|): one array op per pair (the union array
+    # is never materialized — set sizes are exact ints, so the jaccard
+    # double is bit-identical to the intersect/union form)
+    return (
+        _pair_overlap(_lsh_candidates(docs), docs)
+        .select(
+            "doc_a",
+            "doc_b",
+            (F.col("ni") / (F.col("na") + F.col("nb") - F.col("ni"))).alias("jaccard"),
+        )
+        .filter(F.col("jaccard") >= 0.8)
+    )
 
 
 _SQL_MINHASH_DOCS = f"""
@@ -173,28 +236,51 @@ _SQL_MINHASH_DOCS = f"""
     )
 """
 
-
-@query(
-    "dedup_minhash_lsh",
-    oracle=f"""
-    WITH docs AS ({_SQL_MINHASH_DOCS}),
+# The ``docs`` and ``bands`` CTEs (twins of ``_minhash_docs``/``_bands``),
+# then the ``cand`` CTE (twin of ``_lsh_candidates``); oracles splice them
+# after ``WITH`` (or ``WITH RECURSIVE``).
+_SQL_LSH_BANDS = f"""
+    docs AS ({_SQL_MINHASH_DOCS}),
     bands AS (
       {" UNION ALL ".join(f"SELECT doc_id, {b} AS band, {sql_band_hash('sig', b)} AS bh FROM docs" for b in range(N_BANDS))}
-    ),
+    )"""
+
+_SQL_LSH_CANDS = f"""{_SQL_LSH_BANDS},
     cand AS (
       SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
       FROM bands a JOIN bands b ON a.band = b.band AND a.bh = b.bh
       WHERE a.doc_id < b.doc_id
-    )
-    SELECT doc_a, doc_b, jaccard FROM (
-      SELECT c.doc_a, c.doc_b,
-             len(list_intersect(x.sh, y.sh))
-               / (len(x.sh) + len(y.sh) - len(list_intersect(x.sh, y.sh))) AS jaccard
-      FROM cand c
+    )"""
+
+
+def _sql_pair_join(cand: str = "cand") -> str:
+    """FROM clause joining a candidate-pair CTE to both sides (x, y) of
+    ``docs`` — the SQL twin of ``_pair_overlap``'s joins."""
+    return f"""FROM {cand} c
       JOIN docs x ON x.doc_id = c.doc_a
-      JOIN docs y ON y.doc_id = c.doc_b
+      JOIN docs y ON y.doc_id = c.doc_b"""
+
+
+# Exact hashed-shingle Jaccard of a joined (x, y) pair, intersection form.
+_SQL_JACCARD = (
+    "len(list_intersect(x.sh, y.sh))"
+    " / (len(x.sh) + len(y.sh) - len(list_intersect(x.sh, y.sh)))"
+)
+
+# Oracle of both MinHash-LSH tiers (the production tier's Jaccard is the
+# portable one's, see dedup_minhash_lsh_prod).
+_SQL_LSH_ORACLE = f"""
+    WITH {_SQL_LSH_CANDS}
+    SELECT doc_a, doc_b, jaccard FROM (
+      SELECT c.doc_a, c.doc_b, {_SQL_JACCARD} AS jaccard
+      {_sql_pair_join()}
     ) WHERE jaccard >= 0.8
-    """,
+    """
+
+
+@query(
+    "dedup_minhash_lsh",
+    oracle=_SQL_LSH_ORACLE,
     tags=("dedup", "minhash", "lsh"),
     bench=True,
 )
@@ -211,36 +297,7 @@ def dedup_minhash_lsh(spark, sf_dir):
     all-pairs blowup is bounded by bucket sizes. Only candidate pairs
     (≪ n²) ever touch the shingle arrays again, via two hash joins back
     to the signature relation."""
-    docs = _minhash_docs(spark, sf_dir)
-    bands = _bands(docs)
-    a, b = bands.alias("a"), bands.alias("b")
-    cand = (
-        a.join(b, (F.col("a.band") == F.col("b.band")) & (F.col("a.bh") == F.col("b.bh")))
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
-    x, y = _pair_sides(docs)
-    # |A∩B| / (|A| + |B| - |A∩B|): one array op per pair (the union array
-    # is never materialized — set sizes are exact ints, so the jaccard
-    # double is bit-identical to the intersect/union form)
-    return (
-        cand.join(x, "doc_a")
-        .join(y, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            F.size(F.array_intersect("sh_a", "sh_b")).alias("ni"),
-            "na",
-            "nb",
-        )
-        .select(
-            "doc_a",
-            "doc_b",
-            (F.col("ni") / (F.col("na") + F.col("nb") - F.col("ni"))).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= 0.8)
-    )
+    return _lsh_pairs(_minhash_docs(spark, sf_dir))
 
 
 _SQL_SIMHASH_DOCS = f"""
@@ -340,15 +397,7 @@ def dedup_simhash(spark, sf_dir):
 @query(
     "dedup_ngram_jaccard",
     oracle=f"""
-    WITH docs AS ({_SQL_MINHASH_DOCS}),
-    bands AS (
-      {" UNION ALL ".join(f"SELECT doc_id, {b} AS band, {sql_band_hash('sig', b)} AS bh FROM docs" for b in range(N_BANDS))}
-    ),
-    cand AS (
-      SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-      FROM bands a JOIN bands b ON a.band = b.band AND a.bh = b.bh
-      WHERE a.doc_id < b.doc_id
-    ),
+    WITH {_SQL_LSH_CANDS},
     grams AS (
       SELECT doc_id,
              list_distinct(list_transform(generate_series(1, length(text) - 3),
@@ -377,15 +426,7 @@ def dedup_ngram_jaccard(spark, sf_dir):
     An attribute-bucket blocking (e.g. by document length) was rejected:
     its bucket populations grow linearly with the corpus, so the in-block
     quadratic verify melts at scale — hash-diverse LSH buckets don't."""
-    docs = _minhash_docs(spark, sf_dir)
-    bands = _bands(docs)
-    a, b = bands.alias("a"), bands.alias("b")
-    cand = (
-        a.join(b, (F.col("a.band") == F.col("b.band")) & (F.col("a.bh") == F.col("b.bh")))
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
+    cand = _lsh_candidates(_minhash_docs(spark, sf_dir))
     grams = t(spark, sf_dir, "documents").select(
         "doc_id",
         F.array_distinct(
@@ -422,19 +463,10 @@ _CC_MAX_ROUNDS = 50
 # (label propagation and star contraction): smallest doc_id reachable
 # through verified near-dup edges.
 _SQL_CC_ORACLE = f"""
-    WITH RECURSIVE docs AS ({_SQL_MINHASH_DOCS}),
-    bands AS (
-      {" UNION ALL ".join(f"SELECT doc_id, {b} AS band, {sql_band_hash('sig', b)} AS bh FROM docs" for b in range(N_BANDS))}
-    ),
-    cand AS (
-      SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-      FROM bands a JOIN bands b ON a.band = b.band AND a.bh = b.bh
-      WHERE a.doc_id < b.doc_id
-    ),
+    WITH RECURSIVE {_SQL_LSH_CANDS},
     pairs AS (
       SELECT c.doc_a, c.doc_b
-      FROM cand c JOIN docs x ON x.doc_id = c.doc_a
-                  JOIN docs y ON y.doc_id = c.doc_b
+      {_sql_pair_join()}
       WHERE len(list_intersect(x.sh, y.sh))
               / len(list_distinct(list_concat(x.sh, y.sh))) >= 0.8
     ),
@@ -606,25 +638,7 @@ def dedup_cluster_cc_star(spark, sf_dir):
 
 @query(
     "dedup_minhash_lsh_prod",
-    oracle=f"""
-    WITH docs AS ({_SQL_MINHASH_DOCS}),
-    bands AS (
-      {" UNION ALL ".join(f"SELECT doc_id, {b} AS band, {sql_band_hash('sig', b)} AS bh FROM docs" for b in range(N_BANDS))}
-    ),
-    cand AS (
-      SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-      FROM bands a JOIN bands b ON a.band = b.band AND a.bh = b.bh
-      WHERE a.doc_id < b.doc_id
-    )
-    SELECT doc_a, doc_b, jaccard FROM (
-      SELECT c.doc_a, c.doc_b,
-             len(list_intersect(x.sh, y.sh))
-               / (len(x.sh) + len(y.sh) - len(list_intersect(x.sh, y.sh))) AS jaccard
-      FROM cand c
-      JOIN docs x ON x.doc_id = c.doc_a
-      JOIN docs y ON y.doc_id = c.doc_b
-    ) WHERE jaccard >= 0.8
-    """,
+    oracle=_SQL_LSH_ORACLE,
     tags=("dedup", "minhash", "lsh", "production"),
     bench=True,
 )
@@ -636,67 +650,22 @@ def dedup_minhash_lsh_prod(spark, sf_dir):
     per-character fold. This is the tier a 100 TB run uses; the portable
     polynomial tier exists so the SAME pipeline stays DuckDB-checkable.
 
-    Driver-checkable shape: candidates still come from the xxhash64
-    banding, but the verify stage computes the emitted Jaccard over the
-    PORTABLE polynomial-hash shingle sets (hash-function-independent:
-    both hashes are injective on shingles modulo astronomically unlikely
-    collisions), and the oracle is the portable LSH pipeline. Tier
-    parity is PROBABILISTIC, not by construction: the two band families
-    hash different signatures, so each catches a true near-dup pair
-    independently — at Jaccard j the per-family miss probability is
-    (1−j⁴)⁴ (4×4 bands), i.e. ~1.4% at j=0.90 and ~0.03% at j=0.95,
-    vanishing as j→1. The current fixtures' weakest pair is j=0.90 and
+    Driver-checkable shape: candidates come from the xxhash64 banding and
+    the verify stage computes the emitted Jaccard over the xxhash64
+    shingle sets. That Jaccard is hash-function-independent (both hashes
+    are injective on shingles modulo astronomically unlikely
+    collisions), so it equals the portable tier's, and the oracle is the
+    portable LSH pipeline. Tier parity is PROBABILISTIC, not by
+    construction: the two band families hash different signatures, so
+    each catches a true near-dup pair independently — at Jaccard j the
+    per-family miss probability is (1−j⁴)⁴ (4×4 bands), i.e. ~1.4% at
+    j=0.90 and ~0.03% at j=0.95, vanishing as j→1. The current fixtures' weakest pair is j=0.90 and
     both families catch all 25 pairs (deterministic for FIXED texts;
     tier equality is asserted in tests/test_extensions.py) — but
     regenerated fixtures with pairs near the 0.8 threshold could make
     one family miss a pair the other catches, a recall property of LSH
-    itself, not an engine bug. A pure production run skips the portable
-    pass and verifies on the xxhash shingles (same values)."""
-    d = t(spark, sf_dir, "documents")
-    # pmod bounds the 64-bit hash into the combine-safe domain (< 2^31),
-    # keeping the shingle arithmetic overflow-free under ANSI semantics
-    docs = (
-        d.select(
-            "doc_id",
-            F.transform(
-                tokens("text"), lambda s: F.pmod(F.xxhash64(s), F.lit(2_147_483_647))
-            ).alias("th"),
-        )
-        .select("doc_id", F.array_distinct(hashed_shingles(F.col("th"), 3)).alias("sh"))
-        .select(
-            "doc_id",
-            "sh",
-            F.size("sh").alias("n_sh"),
-            minhash_signature(F.col("sh")).alias("sig"),
-        )
-        .persist()
-    )
-    bands = _bands(docs)
-    a, b = bands.alias("a"), bands.alias("b")
-    cand = (
-        a.join(b, (F.col("a.band") == F.col("b.band")) & (F.col("a.bh") == F.col("b.bh")))
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
-    x, y = _pair_sides(docs)
-    return (
-        cand.join(x, "doc_a")
-        .join(y, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            F.size(F.array_intersect("sh_a", "sh_b")).alias("ni"),
-            "na",
-            "nb",
-        )
-        .select(
-            "doc_a",
-            "doc_b",
-            (F.col("ni") / (F.col("na") + F.col("nb") - F.col("ni"))).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= 0.8)
-    )
+    itself, not an engine bug."""
+    return _lsh_pairs(_minhash_docs(spark, sf_dir, token_hash=_xxhash_token))
 
 
 @query(
@@ -768,15 +737,7 @@ def dedup_hybrid_signal(spark, sf_dir):
 @query(
     "dedup_containment",
     oracle=f"""
-    WITH docs AS ({_SQL_MINHASH_DOCS}),
-    bands AS (
-      {" UNION ALL ".join(f"SELECT doc_id, {b} AS band, {sql_band_hash('sig', b)} AS bh FROM docs" for b in range(N_BANDS))}
-    ),
-    cand AS (
-      SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-      FROM bands a JOIN bands b ON a.band = b.band AND a.bh = b.bh
-      WHERE a.doc_id < b.doc_id
-    ),
+    WITH {_SQL_LSH_CANDS},
     toksets AS (
       SELECT doc_id, list_distinct(string_split(text, chr(32))) AS ts
       FROM documents
@@ -800,15 +761,7 @@ def dedup_containment(spark, sf_dir):
     Jaccard/char-gram verifiers, so the quadratic verify stays bounded
     by hash-diverse bucket sizes at any corpus size; only the verify
     metric differs."""
-    docs = _minhash_docs(spark, sf_dir)
-    bands = _bands(docs)
-    a, b = bands.alias("a"), bands.alias("b")
-    cand = (
-        a.join(b, (F.col("a.band") == F.col("b.band")) & (F.col("a.bh") == F.col("b.bh")))
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
+    cand = _lsh_candidates(_minhash_docs(spark, sf_dir))
     toksets = t(spark, sf_dir, "documents").select(
         "doc_id", F.array_distinct(F.split("text", " ")).alias("ts")
     )
@@ -869,20 +822,10 @@ def dedup_normalized_content(spark, sf_dir):
     )
 
 
-_SQL_LSH_PAIR_CTES = f"""
-    docs AS ({_SQL_MINHASH_DOCS}),
-    bands AS (
-      {" UNION ALL ".join(f"SELECT doc_id, {b} AS band, {sql_band_hash('sig', b)} AS bh FROM docs" for b in range(N_BANDS))}
-    ),
-    cand AS (
-      SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-      FROM bands a JOIN bands b ON a.band = b.band AND a.bh = b.bh
-      WHERE a.doc_id < b.doc_id
-    ),
+_SQL_LSH_PAIR_CTES = f"""{_SQL_LSH_CANDS},
     lsh_pairs AS (
       SELECT c.doc_a, c.doc_b
-      FROM cand c JOIN docs x ON x.doc_id = c.doc_a
-                  JOIN docs y ON y.doc_id = c.doc_b
+      {_sql_pair_join()}
       WHERE len(list_intersect(x.sh, y.sh))
               / len(list_distinct(list_concat(x.sh, y.sh))) >= 0.8
     )
@@ -983,9 +926,9 @@ def pipeline_curation_funnel(spark, sf_dir):
     )
 
 
-@query(
-    "dedup_incremental_batch",
-    oracle=f"""
+# Verdict ledger of the exact incremental tier; the Bloom-prefiltered plan
+# (dedup_incremental_bloom) must give the same verdicts.
+_SQL_INCREMENTAL_ORACLE = f"""
     WITH corpus AS (
       SELECT doc_id, {sql_poly_hash("text")} AS h FROM documents
       WHERE doc_id % 10 <> 7
@@ -1010,7 +953,12 @@ def pipeline_curation_funnel(spark, sf_dir):
     SELECT verdict, CAST(COUNT(*) AS BIGINT) AS n_docs,
            list_sort(list(doc_id)) AS doc_ids
     FROM verdicts GROUP BY verdict ORDER BY verdict
-    """,
+    """
+
+
+@query(
+    "dedup_incremental_batch",
+    oracle=_SQL_INCREMENTAL_ORACLE,
     tags=("dedup", "incremental", "ingest"),
 )
 def dedup_incremental_batch(spark, sf_dir):
@@ -1280,36 +1228,24 @@ def dedup_lsh_recall_report(spark, sf_dir):
 # retune can never desynchronize the estimator from the signatures it
 # calibrates (sigma ~ sqrt(J(1-J)/K)).
 _SIG_K = N_BANDS * ROWS_PER_BAND
+# matching signature slots of a joined (x, y) pair
+_SQL_SIG_MATCHES = (
+    f"len(list_filter(list_transform(generate_series(1, {_SIG_K}),"
+    " i -> x.sig[i] = y.sig[i]), v -> v))"
+)
+
 
 @query(
     "dedup_minhash_estimator_quality",
     oracle=f"""
-    WITH docs AS ({_SQL_MINHASH_DOCS}),
-    bands AS (
-      {" UNION ALL ".join(f"SELECT doc_id, {b} AS band, {sql_band_hash('sig', b)} AS bh FROM docs" for b in range(N_BANDS))}
-    ),
-    cand AS (
-      SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-      FROM bands a JOIN bands b ON a.band = b.band AND a.bh = b.bh
-      WHERE a.doc_id < b.doc_id
-    )
+    WITH {_SQL_LSH_CANDS}
     SELECT c.doc_a, c.doc_b,
-           CAST(len(list_filter(list_transform(generate_series(1, {_SIG_K}),
-                  i -> x.sig[i] = y.sig[i]), v -> v)) AS INTEGER) AS sig_matches,
-           CAST(len(list_filter(list_transform(generate_series(1, {_SIG_K}),
-                  i -> x.sig[i] = y.sig[i]), v -> v)) AS DOUBLE) / {_SIG_K}.0
-             AS jaccard_est,
-           len(list_intersect(x.sh, y.sh))
-             / (len(x.sh) + len(y.sh) - len(list_intersect(x.sh, y.sh)))
-             AS jaccard_exact,
-           ABS(CAST(len(list_filter(list_transform(generate_series(1, {_SIG_K}),
-                  i -> x.sig[i] = y.sig[i]), v -> v)) AS DOUBLE) / {_SIG_K}.0
-               - len(list_intersect(x.sh, y.sh))
-                 / (len(x.sh) + len(y.sh) - len(list_intersect(x.sh, y.sh))))
+           CAST({_SQL_SIG_MATCHES} AS INTEGER) AS sig_matches,
+           CAST({_SQL_SIG_MATCHES} AS DOUBLE) / {_SIG_K}.0 AS jaccard_est,
+           {_SQL_JACCARD} AS jaccard_exact,
+           ABS(CAST({_SQL_SIG_MATCHES} AS DOUBLE) / {_SIG_K}.0 - {_SQL_JACCARD})
              AS abs_err
-    FROM cand c
-    JOIN docs x ON x.doc_id = c.doc_a
-    JOIN docs y ON y.doc_id = c.doc_b
+    {_sql_pair_join()}
     """,
     tags=("dedup", "minhash", "estimator", "quality"),
 )
@@ -1333,14 +1269,7 @@ def dedup_minhash_estimator_quality(spark, sf_dir):
     every column hash-matches. Unordered output (no sort of any
     kind)."""
     docs = _minhash_docs(spark, sf_dir)
-    bands = _bands(docs)
-    a, b = bands.alias("a"), bands.alias("b")
-    cand = (
-        a.join(b, (F.col("a.band") == F.col("b.band")) & (F.col("a.bh") == F.col("b.bh")))
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
+    cand = _lsh_candidates(docs)
     x = docs.select(
         F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a"),
         F.col("n_sh").alias("na"), F.col("sig").alias("sig_a"),
@@ -1374,21 +1303,11 @@ def dedup_minhash_estimator_quality(spark, sf_dir):
 @query(
     "dedup_cross_source_matrix",
     oracle=f"""
-    WITH docs AS ({_SQL_MINHASH_DOCS}),
-    bands AS (
-      {" UNION ALL ".join(f"SELECT doc_id, {b} AS band, {sql_band_hash('sig', b)} AS bh FROM docs" for b in range(N_BANDS))}
-    ),
-    cand AS (
-      SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-      FROM bands a JOIN bands b ON a.band = b.band AND a.bh = b.bh
-      WHERE a.doc_id < b.doc_id
-    ),
+    WITH {_SQL_LSH_CANDS},
     pairs AS (
       SELECT c.doc_a, c.doc_b
-      FROM cand c JOIN docs x ON x.doc_id = c.doc_a
-                  JOIN docs y ON y.doc_id = c.doc_b
-      WHERE len(list_intersect(x.sh, y.sh))
-              / (len(x.sh) + len(y.sh) - len(list_intersect(x.sh, y.sh))) >= 0.8
+      {_sql_pair_join()}
+      WHERE {_SQL_JACCARD} >= 0.8
     )
     SELECT LEAST(sx.source, sy.source) AS source_a,
            GREATEST(sx.source, sy.source) AS source_b,
@@ -1438,32 +1357,7 @@ def dedup_cross_source_matrix(spark, sf_dir):
 
 @query(
     "dedup_incremental_bloom",
-    oracle=f"""
-    WITH corpus AS (
-      SELECT doc_id, {sql_poly_hash("text")} AS h FROM documents
-      WHERE doc_id % 10 <> 7
-    ),
-    batch AS (
-      SELECT doc_id, {sql_poly_hash("text")} AS h FROM documents
-      WHERE doc_id % 10 = 7
-    ),
-    in_batch_first AS (
-      SELECT doc_id, h FROM batch
-      QUALIFY row_number() OVER (PARTITION BY h ORDER BY doc_id) = 1
-    ),
-    verdicts AS (
-      SELECT b.doc_id,
-             CASE WHEN c.h IS NOT NULL THEN 'dup_of_corpus'
-                  WHEN f.doc_id IS NULL THEN 'dup_in_batch'
-                  ELSE 'accept' END AS verdict
-      FROM batch b
-      LEFT JOIN (SELECT DISTINCT h FROM corpus) c ON c.h = b.h
-      LEFT JOIN in_batch_first f ON f.doc_id = b.doc_id
-    )
-    SELECT verdict, CAST(COUNT(*) AS BIGINT) AS n_docs,
-           list_sort(list(doc_id)) AS doc_ids
-    FROM verdicts GROUP BY verdict ORDER BY verdict
-    """,
+    oracle=_SQL_INCREMENTAL_ORACLE,
     tags=("dedup", "incremental", "ingest", "bloom"),
 )
 def dedup_incremental_bloom(spark, sf_dir):
@@ -1826,19 +1720,10 @@ def dedup_prefix_filter_join(spark, sf_dir):
     return verified
 
 
-_SQL_INC_JACCARD = (
-    "len(list_intersect(x.sh, y.sh))"
-    " / (len(x.sh) + len(y.sh) - len(list_intersect(x.sh, y.sh)))"
-)
-
-
 @query(
     "dedup_minhash_lsh_incremental",
     oracle=f"""
-    WITH docs AS ({_SQL_MINHASH_DOCS}),
-    bands AS (
-      {" UNION ALL ".join(f"SELECT doc_id, {b} AS band, {sql_band_hash('sig', b)} AS bh FROM docs" for b in range(N_BANDS))}
-    ),
+    WITH {_SQL_LSH_BANDS},
     corpus_bands AS (SELECT * FROM bands WHERE doc_id % 10 <> 7),
     batch_bands AS (SELECT * FROM bands WHERE doc_id % 10 = 7),
     cand_corpus AS (
@@ -1847,10 +1732,8 @@ _SQL_INC_JACCARD = (
     ),
     dup_corpus AS (
       SELECT DISTINCT c.doc_a AS doc_id
-      FROM cand_corpus c
-      JOIN docs x ON x.doc_id = c.doc_a
-      JOIN docs y ON y.doc_id = c.doc_b
-      WHERE {_SQL_INC_JACCARD} >= 0.8
+      {_sql_pair_join("cand_corpus")}
+      WHERE {_SQL_JACCARD} >= 0.8
     ),
     cand_batch AS (
       SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
@@ -1859,10 +1742,8 @@ _SQL_INC_JACCARD = (
     ),
     dup_batch AS (
       SELECT DISTINCT c.doc_b AS doc_id
-      FROM cand_batch c
-      JOIN docs x ON x.doc_id = c.doc_a
-      JOIN docs y ON y.doc_id = c.doc_b
-      WHERE {_SQL_INC_JACCARD} >= 0.8
+      {_sql_pair_join("cand_batch")}
+      WHERE {_SQL_JACCARD} >= 0.8
     ),
     verdicts AS (
       SELECT d.doc_id,
@@ -1911,7 +1792,6 @@ def dedup_minhash_lsh_incremental(spark, sf_dir):
     docs = _minhash_docs(spark, sf_dir)
     bands = _bands(docs)
     batch_bands = bands.filter(F.col("doc_id") % 10 == 7)
-    x, y = _pair_sides(docs)
     probe = (
         batch_bands.alias("a")
         .join(
@@ -1930,17 +1810,8 @@ def dedup_minhash_lsh_incremental(spark, sf_dir):
     )
     # exact hashed-shingle Jaccard on candidate pairs only, same int-set
     # formulation as dedup_minhash_lsh (bit-identical doubles)
-    verified = (
-        probe.join(x, "doc_a")
-        .join(y, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            F.size(F.array_intersect("sh_a", "sh_b")).alias("ni"),
-            "na",
-            "nb",
-        )
-        .filter(F.col("ni") / (F.col("na") + F.col("nb") - F.col("ni")) >= 0.8)
+    verified = _pair_overlap(probe, docs).filter(
+        F.col("ni") / (F.col("na") + F.col("nb") - F.col("ni")) >= 0.8
     )
     flags = verified.groupBy(F.col("doc_a").alias("doc_id")).agg(
         F.max(F.when(F.col("doc_b") % 10 != 7, 1).otherwise(0)).alias("in_corpus"),

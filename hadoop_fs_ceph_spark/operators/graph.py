@@ -61,6 +61,22 @@ def _edges(spark, sf_dir):
     )
 
 
+# SQL twins of ``_und`` and ``_sym``: the canonical undirected edge set
+# (an ``und`` CTE body) and both its orientations (a ``dir`` CTE body).
+_UND_SQL = f"""
+      SELECT DISTINCT LEAST(src, dst) AS a, GREATEST(src, dst) AS b
+      FROM ({_EDGES_SQL}) WHERE src <> dst
+    """
+
+
+def _sql_sym(u: str, w: str) -> str:
+    return f"""
+      SELECT a AS {u}, b AS {w} FROM und
+      UNION ALL
+      SELECT b AS {u}, a AS {w} FROM und
+    """
+
+
 def _und(spark, sf_dir):
     """Canonical UNDIRECTED edge list (a < b), self-loops dropped — the
     shared front of every triangle/wedge-family query below."""
@@ -148,10 +164,7 @@ def graph_pagerank_fixed(spark, sf_dir):
 @query(
     "graph_triangle_count",
     oracle=f"""
-    WITH und AS (
-      SELECT DISTINCT LEAST(src, dst) AS a, GREATEST(src, dst) AS b
-      FROM ({_EDGES_SQL}) WHERE src <> dst
-    )
+    WITH und AS ({_UND_SQL})
     SELECT COUNT(*) AS n_triangles,
            CAST((SELECT COUNT(*) FROM und) AS BIGINT) AS n_edges
     FROM und e1
@@ -569,15 +582,8 @@ def graph_kcore(spark, sf_dir):
 @query(
     "graph_jaccard_neighbors",
     oracle=f"""
-    WITH und AS (
-      SELECT DISTINCT LEAST(src, dst) AS a, GREATEST(src, dst) AS b
-      FROM ({_EDGES_SQL}) WHERE src <> dst
-    ),
-    dir AS (
-      SELECT a AS u, b AS w FROM und
-      UNION ALL
-      SELECT b AS u, a AS w FROM und
-    ),
+    WITH und AS ({_UND_SQL}),
+    dir AS ({_sql_sym("u", "w")}),
     deg AS (SELECT u, CAST(COUNT(*) AS BIGINT) AS d FROM dir GROUP BY u),
     common AS (
       SELECT e1.u AS u, e2.u AS v, CAST(COUNT(*) AS BIGINT) AS n_common
@@ -648,15 +654,8 @@ def _bfs_round_sql(prev: str, out: str) -> str:
 @query(
     "graph_bfs_distance",
     oracle=f"""
-    WITH und AS (
-      SELECT DISTINCT LEAST(src, dst) AS a, GREATEST(src, dst) AS b
-      FROM ({_EDGES_SQL}) WHERE src <> dst
-    ),
-    dir AS (
-      SELECT a AS src, b AS dst FROM und
-      UNION ALL
-      SELECT b AS src, a AS dst FROM und
-    ),
+    WITH und AS ({_UND_SQL}),
+    dir AS ({_sql_sym("src", "dst")}),
     r0 AS (SELECT CAST(0 AS INTEGER) AS node, CAST(0 AS BIGINT) AS dist),
     {_bfs_round_sql('r0', 'r1')},
     {_bfs_round_sql('r1', 'r2')},
@@ -831,15 +830,8 @@ def _sssp_round_sql(prev: str, out: str) -> str:
 @query(
     "graph_sssp_weighted",
     oracle=f"""
-    WITH und AS (
-      SELECT DISTINCT LEAST(src, dst) AS a, GREATEST(src, dst) AS b
-      FROM ({_EDGES_SQL}) WHERE src <> dst
-    ),
-    dir AS (
-      SELECT a AS src, b AS dst FROM und
-      UNION ALL
-      SELECT b AS src, a AS dst FROM und
-    ),
+    WITH und AS ({_UND_SQL}),
+    dir AS ({_sql_sym("src", "dst")}),
     we AS (
       SELECT src, dst,
              CAST(1 + ((src * 31 + dst * 17) % 9) AS BIGINT) AS cost
@@ -911,13 +903,8 @@ def graph_sssp_weighted(spark, sf_dir):
 @query(
     "graph_clustering_coefficient",
     oracle=f"""
-    WITH und AS (
-      SELECT DISTINCT LEAST(src, dst) AS a, GREATEST(src, dst) AS b
-      FROM ({_EDGES_SQL}) WHERE src <> dst
-    ),
-    dir AS (
-      SELECT a AS u, b AS w FROM und UNION ALL SELECT b AS u, a AS w FROM und
-    ),
+    WITH und AS ({_UND_SQL}),
+    dir AS ({_sql_sym("u", "w")}),
     deg AS (SELECT u, CAST(COUNT(*) AS BIGINT) AS d FROM dir GROUP BY u),
     wedge AS (
       SELECT e1.u AS u, e1.w AS v, e2.w AS w
@@ -992,13 +979,8 @@ def graph_clustering_coefficient(spark, sf_dir):
 @query(
     "graph_common_neighbors_rec",
     oracle=f"""
-    WITH und AS (
-      SELECT DISTINCT LEAST(src, dst) AS a, GREATEST(src, dst) AS b
-      FROM ({_EDGES_SQL}) WHERE src <> dst
-    ),
-    dir AS (
-      SELECT a AS u, b AS w FROM und UNION ALL SELECT b AS u, a AS w FROM und
-    ),
+    WITH und AS ({_UND_SQL}),
+    dir AS ({_sql_sym("u", "w")}),
     common AS (
       SELECT e1.u AS u, e2.u AS v, CAST(COUNT(*) AS BIGINT) AS n_common
       FROM dir e1 JOIN dir e2 ON e1.w = e2.w AND e1.u < e2.u
@@ -1046,13 +1028,8 @@ def graph_common_neighbors_rec(spark, sf_dir):
 @query(
     "graph_assortativity",
     oracle=f"""
-    WITH und AS (
-      SELECT DISTINCT LEAST(src, dst) AS a, GREATEST(src, dst) AS b
-      FROM ({_EDGES_SQL}) WHERE src <> dst
-    ),
-    dir AS (
-      SELECT a AS u, b AS w FROM und UNION ALL SELECT b AS u, a AS w FROM und
-    ),
+    WITH und AS ({_UND_SQL}),
+    dir AS ({_sql_sym("u", "w")}),
     deg AS (SELECT u, CAST(COUNT(*) AS BIGINT) AS d FROM dir GROUP BY u),
     pairs AS (
       SELECT du.d AS x, dw.d AS y

@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 
 from hadoop_fs_ceph_spark import scratch
 from hadoop_fs_ceph_spark.canonical import fixsum, sql_fixsum
+from hadoop_fs_ceph_spark.operators.sources_q import _ORDERS_AGG_SQL, _orders_agg
 from hadoop_fs_ceph_spark.registry import query
 from hadoop_fs_ceph_spark.session import confs
 from hadoop_fs_ceph_spark.streaming import (
@@ -986,15 +987,7 @@ def stream_doc_quality_filter(spark, sf_dir):
 
 @query(
     "stream_python_datasource",
-    oracle=f"""
-    SELECT o_orderstatus,
-           COUNT(*) AS n,
-           {sql_fixsum("o_totalprice", 6)} AS sum_price,
-           MIN(o_orderdate) AS first_date,
-           MAX(o_orderdate) AS last_date
-    FROM orders
-    GROUP BY o_orderstatus
-    """,
+    oracle=_ORDERS_AGG_SQL,
     tags=("streaming", "source", "pydatasource", "connector"),
 )
 def stream_python_datasource(spark, sf_dir):
@@ -1042,13 +1035,7 @@ def stream_python_datasource(spark, sf_dir):
         .start()
     )
     q.awaitTermination()
-    back = spark.read.parquet(out)
-    return back.groupBy("o_orderstatus").agg(
-        F.count(F.lit(1)).alias("n"),
-        fixsum("o_totalprice", 6).alias("sum_price"),
-        F.min("o_orderdate").alias("first_date"),
-        F.max("o_orderdate").alias("last_date"),
-    )
+    return _orders_agg(spark.read.parquet(out))
 
 
 _ROCKSDB_PROVIDER = (

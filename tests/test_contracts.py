@@ -257,3 +257,22 @@ def test_jvm_classes_are_looked_up_in_one_step():
         if pat.search(line)
     ]
     assert not offenders, offenders
+
+
+def test_queries_with_equal_oracles_share_one_definition():
+    """Queries whose oracles are the same SQL (up to whitespace) reference
+    one string object: two tiers or plans of the same answer (the portable
+    and production MinHash-LSH tiers, the exact and Bloom-prefiltered
+    incremental dedup, the ``src_*`` round trips of the orders aggregate)
+    must not carry copies that can drift apart while each still passes
+    against its own oracle."""
+    groups: dict[str, list] = {}
+    for name, spec in sorted(load_all().items()):
+        if spec.oracle is not None:
+            groups.setdefault(" ".join(spec.oracle.split()), []).append((name, spec.oracle))
+    copies = [
+        sorted(name for name, _ in members)
+        for members in groups.values()
+        if any(oracle is not members[0][1] for _, oracle in members)
+    ]
+    assert not copies, f"equal oracles written out more than once: {copies}"
