@@ -35,7 +35,7 @@ from hadoop_fs_ceph_spark.operators.ranking import (
     _ranked_nosort,
 )
 from hadoop_fs_ceph_spark.registry import query
-from hadoop_fs_ceph_spark.tables import t
+from hadoop_fs_ceph_spark.tables import order_bounded, t
 
 
 @query(
@@ -66,7 +66,7 @@ def agg_multikey_having(spark, sf_dir):
             F.max("o_orderdate").alias("last_order"),
         )
         .filter(F.col("n_orders") > 5)
-        .orderBy("o_orderstatus", "o_orderpriority")
+        .transform(order_bounded, "o_orderstatus", "o_orderpriority")
     )
 
 
@@ -304,7 +304,7 @@ def agg_approx_count_distinct(spark, sf_dir):
                 <= F.greatest(F.col("exact_orders") * 0.06, F.lit(2.0))
             ).alias("within_tolerance"),
         )
-        .orderBy("l_returnflag")
+        .transform(order_bounded, "l_returnflag")
     )
 
 
@@ -437,7 +437,7 @@ def agg_corr_bivariate(spark, sf_dir):
             "corr_qty_price"
         ),
         ((n * sxy - sx * sy) / (n * sxx - sx * sx)).alias("slope_price_per_qty"),
-    ).orderBy("l_returnflag")
+    ).transform(order_bounded, "l_returnflag")
 
 
 @query(
@@ -480,7 +480,7 @@ def agg_histogram_fixed(spark, sf_dir):
         )
         .groupBy("bucket")
         .agg(F.count(F.lit(1)).alias("n"))
-        .orderBy("bucket")
+        .transform(order_bounded, "bucket")
     )
 
 
@@ -637,7 +637,7 @@ def agg_approx_quantiles_group(spark, sf_dir):
             ((F.col("ap50") >= F.element_at("br", 1)) & (F.col("ap50") <= F.element_at("br", 2))).alias("p50_ok"),
             ((F.col("ap90") >= F.element_at("br", 3)) & (F.col("ap90") <= F.element_at("br", 4))).alias("p90_ok"),
         )
-        .orderBy("o_orderpriority")
+        .transform(order_bounded, "o_orderpriority")
     )
 
 
@@ -1231,7 +1231,7 @@ def agg_incremental_rollup(spark, sf_dir):
             F.sum("s").alias("v6"),
             F.sum(F.expr("bitmap_count(bm)")).alias("n_users"),
         )
-        .orderBy("event_type")
+        .transform(order_bounded, "event_type")
     )
 
 
@@ -1392,7 +1392,7 @@ def agg_exact_mode(spark, sf_dir):
             F.expr("comp div 1024").alias("mode_count"),
             "n_distinct_qty",
         )
-        .orderBy("l_returnflag")
+        .transform(order_bounded, "l_returnflag")
     )
 
 
@@ -1591,7 +1591,7 @@ def agg_geometric_harmonic_mean(spark, sf_dir):
             F.col("n").cast("double") / (F.col("inv_nano").cast("double") / 1000000000.0),
             8,
         ).alias("harmonic_mean"),
-    ).orderBy("l_returnflag")
+    ).transform(order_bounded, "l_returnflag")
 
 
 _REGR_SQL = """
@@ -1790,7 +1790,7 @@ def agg_bool_family(spark, sf_dir):
             F.bool_or(F.col("o_totalprice") > 400000).alias("any_jumbo"),
             F.count_if(F.col("o_totalprice").between(100000, 200000)).alias("n_mid"),
         )
-        .orderBy("o_orderstatus")
+        .transform(order_bounded, "o_orderstatus")
     )
 
 
@@ -1825,7 +1825,7 @@ def agg_weighted_stats(spark, sf_dir):
             (fixsum(q * p, 2) / fixsum(q, 6)).alias("wavg_price"),
             fixsum(q, 6).alias("total_weight"),
         )
-        .orderBy("l_returnflag")
+        .transform(order_bounded, "l_returnflag")
     )
 
 
@@ -1860,7 +1860,7 @@ def agg_string_agg(spark, sf_dir):
                 "names_csv"
             ),
         )
-        .orderBy("c_mktsegment")
+        .transform(order_bounded, "c_mktsegment")
     )
 
 
@@ -1894,5 +1894,5 @@ def agg_bitwise_fold(spark, sf_dir):
             F.bit_xor("o_orderkey").alias("parity_bits"),
             F.count(F.lit(1)).alias("n"),
         )
-        .orderBy("o_orderstatus")
+        .transform(order_bounded, "o_orderstatus")
     )

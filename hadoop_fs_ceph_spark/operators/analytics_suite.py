@@ -31,7 +31,7 @@ from hadoop_fs_ceph_spark.operators.ranking import (
     _ranked_nosort,
 )
 from hadoop_fs_ceph_spark.registry import query
-from hadoop_fs_ceph_spark.tables import t
+from hadoop_fs_ceph_spark.tables import order_bounded, t
 
 
 @query(
@@ -131,7 +131,7 @@ def ds_retention_cohort(spark, sf_dir):
         .select("cohort_year", (F.col("yr") - F.col("cohort_year")).alias("offset_years"))
         .groupBy("cohort_year", "offset_years")
         .agg(F.count(F.lit(1)).alias("n_active"))
-        .orderBy("cohort_year", "offset_years")
+        .transform(order_bounded, "cohort_year", "offset_years")
     )
 
 
@@ -451,7 +451,7 @@ def ds_attribution_touch(spark, sf_dir):
             F.count(F.lit(1)).alias("n_users"),
             (F.sum("pv6").cast("double") / F.lit(1000000.0)).alias("purchase_value"),
         )
-        .orderBy("first_touch", "last_touch")
+        .transform(order_bounded, "first_touch", "last_touch")
     )
 
 
@@ -550,7 +550,7 @@ def ds_rfm_segmentation(spark, sf_dir):
             F.count(F.lit(1)).alias("n_customers"),
             (F.sum("cents").cast("double") / F.lit(100.0)).alias("monetary"),
         )
-        .orderBy("r_bucket", "f_bucket", "m_bucket")
+        .transform(order_bounded, "r_bucket", "f_bucket", "m_bucket")
     )
 
 
@@ -1046,7 +1046,7 @@ def ds_new_vs_returning(spark, sf_dir):
             F.count(F.when(F.col("yr") == F.col("first_yr"), 1)).alias("n_new"),
             F.count(F.when(F.col("yr") > F.col("first_yr"), 1)).alias("n_returning"),
         )
-        .orderBy("yr")
+        .transform(order_bounded, "yr")
     )
 
 
@@ -1126,7 +1126,7 @@ def ds_cart_abandonment(spark, sf_dir):
             ).alias("n_abandoned"),
             F.sum("has_purchase").alias("n_converted"),
         )
-        .orderBy("len_bucket")
+        .transform(order_bounded, "len_bucket")
     )
 
 
@@ -1277,7 +1277,7 @@ def ds_repurchase_interval(spark, sf_dir):
                 F.when(F.col("rn") == F.expr("(n + 1) div 2"), F.col("gap_days"))
             ).alias("median_gap_days"),
         )
-        .orderBy("c_mktsegment")
+        .transform(order_bounded, "c_mktsegment")
     )
 
 
@@ -1943,7 +1943,7 @@ def ds_attribution_time_decay(spark, sf_dir):
                 "credited_value"
             ),
         )
-        .orderBy("channel")
+        .transform(order_bounded, "channel")
     )
 
 
@@ -2105,7 +2105,7 @@ def ds_autocorrelation(spark, sf_dir):
         "lag",
         F.col("n").cast("long").alias("n_pairs"),
         F.round(num / F.when(den != 0.0, den), 9).alias("acf"),
-    ).orderBy("event_type", "lag")
+    ).transform(order_bounded, "event_type", "lag")
 
 
 _SLO_BUDGET_NUM, _SLO_BUDGET_DEN = 1, 4  # error budget = 25% of requests
@@ -2506,7 +2506,7 @@ def ds_holt_winters(spark, sf_dir):
         (F.element_at(st, 1) + F.element_at(st, 2) + F.element_at(st, 3)).alias(
             "forecast_next"
         ),
-    ).orderBy("event_type")
+    ).transform(order_bounded, "event_type")
 
 
 @query(
@@ -2598,7 +2598,7 @@ def ds_ols_moments(spark, sf_dir):
             ).alias("intercept_cents"),
             F.round(slope * (dxy.cast("double") / dyy.cast("double")), 8).alias("r2"),
         )
-        .orderBy("segment")
+        .transform(order_bounded, "segment")
     )
 
 
@@ -2975,7 +2975,7 @@ def ds_price_elasticity(spark, sf_dir):
         "n",
         (num / denx).alias("elasticity"),
         (num * num / (denx * deny)).alias("r2"),
-    ).orderBy("l_returnflag")
+    ).transform(order_bounded, "l_returnflag")
 
 
 @query(
@@ -3154,7 +3154,7 @@ def ds_absorbing_markov(spark, sf_dir):
                 .alias("reach"),
             )
         )
-    return r.select("state", F.col("reach").alias("reach_ppm")).orderBy("state")
+    return r.select("state", F.col("reach").alias("reach_ppm")).transform(order_bounded, "state")
 
 
 @query(
@@ -3514,7 +3514,7 @@ def win_macd_fold(spark, sf_dir):
             - F.element_at("s", 2)
             - F.element_at("s", 3)
         ).alias("histogram"),
-    ).orderBy("o_orderstatus")
+    ).transform(order_bounded, "o_orderstatus")
 
 
 @query(
@@ -3900,7 +3900,7 @@ def ds_naive_bayes(spark, sf_dir):
         scored.select("actual", pred.alias("predicted"))
         .groupBy("actual", "predicted")
         .agg(F.count(F.lit(1)).cast("long").alias("n"))
-        .orderBy("actual", "predicted")
+        .transform(order_bounded, "actual", "predicted")
     )
 
 
@@ -3989,7 +3989,7 @@ def ds_forecast_eval(spark, sf_dir):
                 / (10.0 * n)
             ).alias("pinball90"),
         )
-        .orderBy("o_orderstatus")
+        .transform(order_bounded, "o_orderstatus")
     )
 
 
@@ -4121,7 +4121,7 @@ def ds_price_volume_bridge(spark, sf_dir):
             - F.col("vol_fp").cast("double") / 1e6
             - F.col("price_fp").cast("double") / 1e6
         ).alias("residual_c"),
-    ).orderBy("brand")
+    ).transform(order_bounded, "brand")
 
 
 _MIG_SPLIT = "1998-01-01"
@@ -4204,7 +4204,7 @@ def ds_segment_migration_matrix(spark, sf_dir):
         )
         .groupBy("seg_from", "seg_to")
         .agg(F.count(F.lit(1)).cast("long").alias("n_customers"))
-        .orderBy("seg_from", "seg_to")
+        .transform(order_bounded, "seg_from", "seg_to")
     )
 
 
@@ -4686,7 +4686,7 @@ def ds_abc_classification(spark, sf_dir):
             "rev_c_total",
             (F.col("rev_c_total").cast("double") / F.col("s")).alias("rev_share"),
         )
-        .orderBy("abc")
+        .transform(order_bounded, "abc")
     )
 
 
@@ -4961,4 +4961,4 @@ def ds_seasonal_strength(spark, sf_dir):
             F.greatest(F.lit(0.0), 1.0 - var_num("sr", "srr") / var_num("sy", "syy")),
             8,
         ).alias("strength_trend"),
-    ).orderBy("o_orderstatus")
+    ).transform(order_bounded, "o_orderstatus")

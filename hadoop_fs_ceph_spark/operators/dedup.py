@@ -55,7 +55,7 @@ from hadoop_fs_ceph_spark.functions.text import (
     tokens,
 )
 from hadoop_fs_ceph_spark.registry import query
-from hadoop_fs_ceph_spark.tables import t
+from hadoop_fs_ceph_spark.tables import order_bounded, t
 
 # Shared SQL fragment (single source for query + oracle parity).
 _SQL_TOK = "string_split(text, chr(32))"
@@ -999,7 +999,7 @@ def dedup_incremental_batch(spark, sf_dir):
             F.count(F.lit(1)).alias("n_docs"),
             F.sort_array(F.collect_list("doc_id")).alias("doc_ids"),
         )
-        .orderBy("verdict")
+        .transform(order_bounded, "verdict")
     )
 
 
@@ -1221,7 +1221,7 @@ def dedup_lsh_recall_report(spark, sf_dir):
             F.abs(F.col("n_hit").cast("double") - F.col("expected_hits"))
             < 4.0 * F.col("sigma") + 1.5
         ).alias("within_tolerance"),
-    ).orderBy("target_ja")
+    ).transform(order_bounded, "target_ja")
 
 
 # Signature width DERIVED from the shared banding constants, so a banding
@@ -1351,7 +1351,7 @@ def dedup_cross_source_matrix(spark, sf_dir):
         )
         .agg(F.count(F.lit(1)).alias("n_pairs"))
         .select("source_a", "source_b", "n_pairs", "cross_source")
-        .orderBy("source_a", "source_b")
+        .transform(order_bounded, "source_a", "source_b")
     )
 
 
@@ -1438,7 +1438,7 @@ def dedup_incremental_bloom(spark, sf_dir):
             F.count(F.lit(1)).cast("long").alias("n_docs"),
             F.array_sort(F.collect_list("doc_id")).alias("doc_ids"),
         )
-        .orderBy("verdict")
+        .transform(order_bounded, "verdict")
     )
 
 
@@ -1831,5 +1831,5 @@ def dedup_minhash_lsh_incremental(spark, sf_dir):
             F.count(F.lit(1)).alias("n_docs"),
             F.sort_array(F.collect_list("doc_id")).alias("doc_ids"),
         )
-        .orderBy("verdict")
+        .transform(order_bounded, "verdict")
     )

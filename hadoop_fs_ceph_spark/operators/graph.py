@@ -200,13 +200,9 @@ def graph_triangle_count(spark, sf_dir):
 @query(
     "graph_degree_distribution",
     oracle=f"""
-    WITH edges AS ({_EDGES_SQL}),
-    und AS (
-      SELECT src AS u, dst AS v FROM edges WHERE src <> dst
-      UNION
-      SELECT dst, src FROM edges WHERE src <> dst
-    ),
-    deg AS (SELECT u, COUNT(*) AS degree FROM und GROUP BY u)
+    WITH und AS ({_UND_SQL}),
+    dir AS ({_sql_sym("u", "v")}),
+    deg AS (SELECT u, COUNT(*) AS degree FROM dir GROUP BY u)
     SELECT degree, CAST(COUNT(*) AS BIGINT) AS n_nodes,
            list_sort(list(u)) AS nodes
     FROM deg GROUP BY degree ORDER BY degree
@@ -1156,11 +1152,7 @@ def graph_reciprocity(spark, sf_dir):
 @query(
     "graph_modularity_score",
     oracle=f"""
-    WITH und AS (
-      SELECT LEAST(src, dst) AS a, GREATEST(src, dst) AS b
-      FROM ({_EDGES_SQL}) WHERE src <> dst
-      GROUP BY 1, 2
-    ),
+    WITH und AS ({_UND_SQL}),
     m AS (SELECT CAST(COUNT(*) AS BIGINT) AS m FROM und),
     deg AS (
       SELECT v, CAST(COUNT(*) AS BIGINT) AS d FROM (

@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 from hadoop_fs_ceph_spark import scratch
 from hadoop_fs_ceph_spark.canonical import dsum, fixed, sql_dsum, sql_fixed, sql_units, units
 from hadoop_fs_ceph_spark.registry import query
-from hadoop_fs_ceph_spark.tables import dim, t
+from hadoop_fs_ceph_spark.tables import dim, order_bounded, t
 
 
 @query(
@@ -47,7 +47,7 @@ def join_inner_hash(spark, sf_dir):
         o.join(c, o.o_custkey == c.c_custkey, "inner")
         .groupBy("c_mktsegment")
         .agg(F.count(F.lit(1)).alias("n_orders"), dsum("o_totalprice", "total_price"))
-        .orderBy("c_mktsegment")
+        .transform(order_bounded, "c_mktsegment")
     )
 
 
@@ -81,7 +81,7 @@ def join_broadcast_dim(spark, sf_dir):
             F.count(F.lit(1)).alias("n_customers"),
             dsum("c_acctbal", "total_balance"),
         )
-        .orderBy("n_name")
+        .transform(order_bounded, "n_name")
     )
 
 
@@ -114,7 +114,7 @@ def join_sortmerge_facts(spark, sf_dir):
         li.join(o, li.l_orderkey == o.o_orderkey)
         .groupBy("o_orderpriority")
         .agg(F.count(F.lit(1)).alias("n_lines"), dsum("l_extendedprice", "sum_price"))
-        .orderBy("o_orderpriority")
+        .transform(order_bounded, "o_orderpriority")
     )
 
 
@@ -462,7 +462,7 @@ def join_existence_flag(spark, sf_dir):
     return (
         flagged.groupBy("c_mktsegment", "has_open", "has_final")
         .agg(F.count(F.lit(1)).alias("n_customers"))
-        .orderBy("c_mktsegment", "has_open", "has_final")
+        .transform(order_bounded, "c_mktsegment", "has_open", "has_final")
     )
 
 
@@ -527,7 +527,7 @@ def join_dpp_partitioned(spark, sf_dir):
             F.count(F.lit(1)).alias("n"),
             fixed("o_totalprice", 2).alias("cents"),
         )
-        .orderBy("yr")
+        .transform(order_bounded, "yr")
     )
 
 
@@ -1182,7 +1182,7 @@ def join_null_bypass_left(spark, sf_dir):
             .cast("long")
             .alias("sum_profile_events"),
         )
-        .orderBy("event_type", "attributed")
+        .transform(order_bounded, "event_type", "attributed")
     )
 
 
@@ -1460,7 +1460,7 @@ def join_aqe_skew_split(spark, sf_dir):
             F.count(F.lit(1)).cast("long").alias("n_lines"),
             F.sum("cents").cast("long").alias("cents"),
         )
-        .orderBy("o_orderpriority")
+        .transform(order_bounded, "o_orderpriority")
     )
 
 
@@ -1519,5 +1519,5 @@ def join_null_safe_keys(spark, sf_dir):
             F.count(F.lit(1)).alias("n_pairs"),
             F.sum("n_nationkey").alias("nation_sum"),
         )
-        .orderBy(F.col("status_key").asc_nulls_first())
+        .transform(order_bounded, F.col("status_key").asc_nulls_first())
     )

@@ -42,7 +42,7 @@ from hadoop_fs_ceph_spark.operators.ranking import (
     _ranked_nosort,
 )
 from hadoop_fs_ceph_spark.registry import query
-from hadoop_fs_ceph_spark.tables import t
+from hadoop_fs_ceph_spark.tables import order_bounded, t
 
 # Knuth's multiplicative constant: spreads sequential keys uniformly.
 # Integer arithmetic is exact and identical in both engines; keys here
@@ -83,7 +83,7 @@ def sample_hash_bernoulli(spark, sf_dir):
         li.filter(_line_hash(1000) < 125)
         .groupBy("l_returnflag")
         .agg(F.count(F.lit(1)).alias("n_rows"), dsum("l_extendedprice", "sum_price"))
-        .orderBy("l_returnflag")
+        .transform(order_bounded, "l_returnflag")
     )
 
 
@@ -117,7 +117,7 @@ def sample_stratified_rates(spark, sf_dir):
         o.filter(F.pmod(F.col("o_orderkey") * _MIX, F.lit(1000)) < rate)
         .groupBy("o_orderpriority")
         .agg(F.count(F.lit(1)).alias("n_sampled"), dsum("o_totalprice", "sum_price"))
-        .orderBy("o_orderpriority")
+        .transform(order_bounded, "o_orderpriority")
     )
 
 
@@ -156,7 +156,7 @@ def sample_k_per_stratum(spark, sf_dir):
         .filter(F.col("rn") <= 20)
         .groupBy("l_returnflag", "l_linestatus")
         .agg(F.count(F.lit(1)).alias("n_rows"), dsum("l_quantity", "sum_qty"))
-        .orderBy("l_returnflag", "l_linestatus")
+        .transform(order_bounded, "l_returnflag", "l_linestatus")
     )
 
 
@@ -327,7 +327,7 @@ def outlier_zscore_group(spark, sf_dir):
             F.min("o_totalprice").alias("min_out"),
             F.max("o_totalprice").alias("max_out"),
         )
-        .orderBy("o_orderpriority")
+        .transform(order_bounded, "o_orderpriority")
     )
 
 
@@ -433,7 +433,7 @@ def profile_dup_rate_by_source(spark, sf_dir):
                 - F.countDistinct("ch") / F.count(F.lit(1)).cast("double")
             ).alias("dup_rate"),
         )
-        .orderBy("source")
+        .transform(order_bounded, "source")
     )
 
 
@@ -563,7 +563,7 @@ def profile_winsorize_clip(spark, sf_dir):
             ).alias("n_clipped"),
             dsum("w", "sum_winsorized"),
         )
-        .orderBy("o_orderpriority")
+        .transform(order_bounded, "o_orderpriority")
     )
 
 
@@ -611,7 +611,7 @@ def sample_class_balance(spark, sf_dir):
             F.max("k").cast("long").alias("keep_every_kth"),
             F.count(F.lit(1)).alias("n_after"),
         )
-        .orderBy("lang")
+        .transform(order_bounded, "lang")
     )
 
 
@@ -853,7 +853,7 @@ def sample_token_budget_mix(spark, sf_dir):
             F.count(F.lit(1)).alias("docs_kept"),
             F.sum("n_tok").cast("long").alias("tokens_kept"),
         )
-        .orderBy("lang")
+        .transform(order_bounded, "lang")
     )
 
 
@@ -1034,7 +1034,7 @@ def outlier_mad_robust(spark, sf_dir):
             F.min("value").alias("min_out"),
             F.max("value").alias("max_out"),
         )
-        .orderBy("event_type")
+        .transform(order_bounded, "event_type")
     )
 
 
@@ -1446,7 +1446,7 @@ def ds_ab_cuped_adjust(spark, sf_dir):
         F.round(var_y, 6).alias("var_y"),
         F.round(var_a, 6).alias("var_y_adj"),
         F.round(1.0 - var_a / var_y, 8).alias("variance_reduction"),
-    ).orderBy("variant")
+    ).transform(order_bounded, "variant")
 
 
 _NEYMAN_TARGET = 500  # total sample budget across strata
@@ -1563,7 +1563,7 @@ def sample_neyman_allocation(spark, sf_dir):
                 <= 4.0 * F.sqrt(F.col("rate") * F.col("nh")) + 1.0
             ).alias("within_4sigma"),
         )
-        .orderBy("stratum")
+        .transform(order_bounded, "stratum")
     )
 
 
@@ -2302,7 +2302,7 @@ def sample_temporal_split(spark, sf_dir):
             F.min("ts").alias("min_ts"),
             F.max("ts").alias("max_ts"),
         )
-        .orderBy("split")
+        .transform(order_bounded, "split")
     )
 
 
@@ -2586,7 +2586,7 @@ def sample_rolling_origin_folds(spark, sf_dir):
             .alias("n_test"),
         )
         .select("fold_id", "train_end", "test_end", "n_train", "n_test")
-        .orderBy("fold_id")
+        .transform(order_bounded, "fold_id")
     )
 
 
@@ -3388,7 +3388,7 @@ def sample_group_kfold(spark, sf_dir):
             F.count("o_orderkey").alias("n_orders"),
             dsum("o_totalprice", "sum_spend", scale=2),
         )
-        .orderBy("fold")
+        .transform(order_bounded, "fold")
     )
 
 
@@ -4381,7 +4381,7 @@ def outlier_ensemble_votes(spark, sf_dir):
             F.sum(F.col("mad_flag").cast("long")).cast("long").alias("n_mad"),
             F.sum((votes >= 2).cast("long")).cast("long").alias("n_ensemble"),
         )
-        .orderBy("event_type")
+        .transform(order_bounded, "event_type")
     )
 
 
@@ -5063,7 +5063,7 @@ def sample_token_budget_mix_bpe(spark, sf_dir):
             F.count(F.lit(1)).alias("docs_kept"),
             F.sum("n_tok").cast("long").alias("tokens_kept"),
         )
-        .orderBy("lang")
+        .transform(order_bounded, "lang")
     )
 
 
@@ -5172,5 +5172,5 @@ def sample_temperature_mix(spark, sf_dir):
             F.count(F.lit(1)).alias("docs_kept"),
             F.sum("n_tok").cast("long").alias("tokens_kept"),
         )
-        .orderBy("source")
+        .transform(order_bounded, "source")
     )

@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 
 from hadoop_fs_ceph_spark.canonical import davg, dsum, sql_davg, sql_dsum
 from hadoop_fs_ceph_spark.registry import query
-from hadoop_fs_ceph_spark.tables import t
+from hadoop_fs_ceph_spark.tables import order_bounded, t
 
 
 @query(
@@ -45,8 +45,12 @@ def q1_pricing_summary(spark, sf_dir):
 
     Plan shape at scale: parquet scan with pushed ``l_shipdate`` predicate
     and 7-column pruned schema → partial hash agg (map-side) → exchange on
-    (l_returnflag, l_linestatus) [6 groups] → final agg → sort. The shuffle
-    moves only #groups × #partitions rows.
+    (l_returnflag, l_linestatus) [6 groups] → final agg → ``Coalesce 1`` →
+    global sort. The shuffle moves only #groups × #partitions rows. The
+    sort over ``Coalesce 1`` is the bounded-result form
+    (``tables.order_bounded``): the 6 groups are sorted in the result
+    stage, with no range-partitioning sample job or range shuffle, so the
+    query runs 2 jobs.
     """
     li = t(spark, sf_dir, "lineitem")
     disc_price = F.col("l_extendedprice") * (1 - F.col("l_discount"))
@@ -64,7 +68,7 @@ def q1_pricing_summary(spark, sf_dir):
             davg("l_discount", "avg_disc"),
             F.count(F.lit(1)).alias("count_order"),
         )
-        .orderBy("l_returnflag", "l_linestatus")
+        .transform(order_bounded, "l_returnflag", "l_linestatus")
     )
 
 

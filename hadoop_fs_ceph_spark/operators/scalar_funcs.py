@@ -35,7 +35,7 @@ from pyspark.sql import functions as F
 
 from hadoop_fs_ceph_spark.canonical import sql_units, units
 from hadoop_fs_ceph_spark.registry import query
-from hadoop_fs_ceph_spark.tables import t
+from hadoop_fs_ceph_spark.tables import order_bounded, t
 
 
 @query(
@@ -935,7 +935,7 @@ def fn_collation_family(spark, sf_dir):
             F.countDistinct("l").alias("n_case_variants"),
         )
         .select(F.lower("k").alias("lang_ci"), "n", "n_case_variants")
-        .orderBy("lang_ci")
+        .transform(order_bounded, "lang_ci")
     )
 
 
@@ -1086,7 +1086,7 @@ def fn_luhn_family(spark, sf_dir):
             F.count(F.lit(1)).cast("long").alias("n"),
             F.min("c_custkey").cast("long").alias("first_key"),
         )
-        .orderBy("is_valid")
+        .transform(order_bounded, "is_valid")
     )
 
 

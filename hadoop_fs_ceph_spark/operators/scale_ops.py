@@ -30,7 +30,7 @@ from hadoop_fs_ceph_spark.canonical import dsum, sql_dsum
 from hadoop_fs_ceph_spark.functions.similarity import cosine, sql_cosine
 from hadoop_fs_ceph_spark.operators.tpch import _REV
 from hadoop_fs_ceph_spark.registry import query
-from hadoop_fs_ceph_spark.tables import t
+from hadoop_fs_ceph_spark.tables import order_bounded, t
 
 _N_SALT = 8
 
@@ -71,7 +71,7 @@ def join_skew_salted(spark, sf_dir):
             F.count(F.lit(1)).alias("n_lines"),
             dsum(F.expr(_REV), "revenue"),
         )
-        .orderBy("o_orderpriority")
+        .transform(order_bounded, "o_orderpriority")
     )
 
 

@@ -36,7 +36,7 @@ from hadoop_fs_ceph_spark.functions.text import (
 )
 from hadoop_fs_ceph_spark.registry import query
 from hadoop_fs_ceph_spark.sources.readers import relation_bytes
-from hadoop_fs_ceph_spark.tables import t
+from hadoop_fs_ceph_spark.tables import order_bounded, t
 
 # Sign-bit LSH: bucket = 4 sign bits of the first 4 components. At
 # production scale this generalizes to b random-hyperplane bits; the
@@ -237,7 +237,7 @@ def sim_centroid_per_label(spark, sf_dir):
                 F.array_sort(F.collect_list(F.struct("pos", "a"))), lambda x: x["a"]
             ).alias("centroid")
         )
-        .orderBy("label")
+        .transform(order_bounded, "label")
     )
 
 
@@ -549,7 +549,7 @@ def sim_ann_recall_calibration(spark, sf_dir):
                 < 4.0 * F.col("sigma") + 1.5
             ).alias("within_tolerance"),
         )
-        .orderBy("level")
+        .transform(order_bounded, "level")
     )
 
 
@@ -1070,7 +1070,7 @@ def sim_kmeans_update(spark, sf_dir):
                 F.array_sort(F.collect_list(F.struct("pos", "a"))), lambda x: x["a"]
             ).alias("centroid"),
         )
-        .orderBy("cell")
+        .transform(order_bounded, "cell")
     )
 
 
@@ -2148,7 +2148,7 @@ def sim_ann_table_sweep(spark, sf_dir):
             "n_top10_found",
             "top1_found",
         )
-        .orderBy("n_tables")
+        .transform(order_bounded, "n_tables")
     )
 
 
@@ -2857,5 +2857,5 @@ def dedup_semantic_recall_report(spark, sf_dir):
                 < 4.0 * F.col("sigma") + 1.5
             ).alias("within_tolerance"),
         )
-        .orderBy("level")
+        .transform(order_bounded, "level")
     )

@@ -28,7 +28,7 @@ from hadoop_fs_ceph_spark.canonical import (
 from hadoop_fs_ceph_spark.registry import query
 from hadoop_fs_ceph_spark.session import confs
 from hadoop_fs_ceph_spark.sources import read_csv, read_json, read_orc, write_table
-from hadoop_fs_ceph_spark.tables import t
+from hadoop_fs_ceph_spark.tables import order_bounded, t
 
 _ORDERS_AGG_SQL = f"""
     SELECT o_orderstatus,
@@ -582,7 +582,7 @@ def src_dynamic_partition_overwrite(spark, sf_dir):
             F.count(F.lit(1)).alias("n"),
             fixsum("o_totalprice", 6).alias("sum_price"),
         )
-        .orderBy("o_orderstatus")
+        .transform(order_bounded, "o_orderstatus")
     )
 
 
@@ -748,7 +748,7 @@ def src_csv_permissive_corrupt(spark, sf_dir):
             F.sum("doc_id").alias("sum_ids"),
             F.sum(F.coalesce(F.col("n_chars"), F.lit(0))).alias("sum_chars"),
         )
-        .orderBy("is_corrupt")
+        .transform(order_bounded, "is_corrupt")
     )
 
 
@@ -849,7 +849,7 @@ def src_catalog_rename(spark, sf_dir):
             F.count(F.lit(1)).alias("n"),
             fixed("o_totalprice", 2).alias("cents"),
         )
-        .orderBy("o_orderstatus")
+        .transform(order_bounded, "o_orderstatus")
     )
 
 
@@ -1015,7 +1015,7 @@ def src_partition_evolution(spark, sf_dir):
     return (
         back.groupBy("o_orderstatus", F.col("yr").cast("long").alias("yr"))
         .agg(F.count(F.lit(1)).alias("n"))
-        .orderBy("o_orderstatus", "yr")
+        .transform(order_bounded, "o_orderstatus", "yr")
     )
 
 
@@ -1807,7 +1807,7 @@ def profile_data_diff(spark, sf_dir):
             F.sum("ca").cast("long").alias("cents_before"),
             F.sum("cb").cast("long").alias("cents_after"),
         )
-        .orderBy("change_type")
+        .transform(order_bounded, "change_type")
     )
 
 
@@ -2328,7 +2328,7 @@ def src_metadata_lineage_audit(spark, sf_dir):
                 "row_index_contract"
             ),
         )
-        .orderBy("o_orderstatus")
+        .transform(order_bounded, "o_orderstatus")
     )
 
 

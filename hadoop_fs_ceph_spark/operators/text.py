@@ -36,7 +36,7 @@ from hadoop_fs_ceph_spark.functions.text import (
 )
 from hadoop_fs_ceph_spark.functions.similarity import cosine, sql_cosine
 from hadoop_fs_ceph_spark.registry import query
-from hadoop_fs_ceph_spark.tables import t
+from hadoop_fs_ceph_spark.tables import order_bounded, t
 
 _EN = LANG_STOPWORDS["en"]
 
@@ -335,7 +335,7 @@ def text_split_assign(spark, sf_dir):
             F.count(F.lit(1)).alias("n_docs"),
             F.sum("n_chars").alias("total_chars"),
         )
-        .orderBy("lang", "split")
+        .transform(order_bounded, "lang", "split")
     )
 
 

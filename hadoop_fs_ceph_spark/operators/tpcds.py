@@ -46,7 +46,7 @@ from hadoop_fs_ceph_spark.canonical import (
 )
 from hadoop_fs_ceph_spark.operators.tpch import _REV, _rev_col
 from hadoop_fs_ceph_spark.registry import query
-from hadoop_fs_ceph_spark.tables import dim, t
+from hadoop_fs_ceph_spark.tables import dim, order_bounded, t
 
 _REV_CENTS = sql_units(_REV, 2)
 
@@ -154,7 +154,7 @@ def ds_channel_rollup(spark, sf_dir):
                 F.grouping("channel") + F.lit(2) * F.grouping("o_orderstatus")
             ).alias("gid"),
         )
-        .orderBy("gid", "channel", "o_orderstatus")
+        .transform(order_bounded, "gid", "channel", "o_orderstatus")
     )
 
 
@@ -280,7 +280,7 @@ def ds_tpcds_q7_segment_profile(spark, sf_dir):
             dsum("l_extendedprice", "sum_price"),
             dsum("l_discount", "sum_disc"),
         )
-        .orderBy("p_type")
+        .transform(order_bounded, "p_type")
     )
 
 
@@ -322,7 +322,7 @@ def ds_tpcds_q19_cross_border_brands(spark, sf_dir):
         .join(p, li.l_partkey == p.p_partkey)
         .groupBy("p_brand")
         .agg(dsum(_rev_col(), "revenue"), F.count(F.lit(1)).alias("n_lines"))
-        .orderBy(F.col("revenue").desc(), "p_brand")
+        .transform(order_bounded, F.col("revenue").desc(), "p_brand")
     )
 
 
@@ -436,7 +436,7 @@ def ds_tpcds_q51_cumulative_channels(spark, sf_dir):
             (F.col("standard").cast("double") / 1e6).alias("standard_cum"),
         )
     )
-    return wide.filter(F.col("express_cum") > F.col("standard_cum")).orderBy("mon")
+    return wide.filter(F.col("express_cum") > F.col("standard_cum")).transform(order_bounded, "mon")
 
 
 @query(
@@ -821,7 +821,7 @@ def ds_tpcds_q23_frequent_best(spark, sf_dir):
         .join(best, "o_custkey", "left_semi")
         .groupBy("mon")
         .agg(dsum(_rev_col(), "revenue"), F.count(F.lit(1)).alias("n_lines"))
-        .orderBy("mon")
+        .transform(order_bounded, "mon")
     )
 
 
@@ -882,7 +882,7 @@ def ds_tpcds_q66_monthly_matrix(spark, sf_dir):
             qsum(F.col("mon") >= 10, "q4_rev"),
             dsum("rev", "total_rev"),
         )
-        .orderBy("n_name")
+        .transform(order_bounded, "n_name")
     )
 
 
@@ -1253,7 +1253,7 @@ def ds_tpcds_q72_inventory_shortfall(spark, sf_dir):
             ),
             F.sum("n_lines").cast("long").alias("n_lines"),
         )
-        .orderBy("wk")
+        .transform(order_bounded, "wk")
     )
 
 
@@ -1847,7 +1847,7 @@ def ds_tpcds_q95_multi_supplier_clean(spark, sf_dir):
             F.count(F.lit(1)).cast("long").alias("n_orders"),
             dsum("o_totalprice", "total_value"),
         )
-        .orderBy("mon")
+        .transform(order_bounded, "mon")
     )
 
 
@@ -2099,7 +2099,7 @@ def ds_tpcds_q17_sale_return_repurchase(spark, sf_dir):
             *stats("S1r", "S2r", "r_qty_mean", "r_qty_std"),
             *stats("S1c", "S2c", "c_qty_mean", "c_qty_std"),
         )
-        .orderBy("p_brand")
+        .transform(order_bounded, "p_brand")
     )
 
 
@@ -2175,7 +2175,7 @@ def ds_tpcds_q92_excess_discount(spark, sf_dir):
             F.count(F.lit(1)).alias("n_lines"),
             (F.sum("micro").cast("double") / F.lit(1e6)).alias("excess_total"),
         )
-        .orderBy("mon")
+        .transform(order_bounded, "mon")
     )
 
 
@@ -2285,7 +2285,7 @@ def ds_tpcds_q58_three_channel_agreement(spark, sf_dir):
             (F.col("m3").cast("double") / F.lit(1e6)).alias("medium_rev"),
             (s_d / F.lit(3.0) / F.lit(1e6)).alias("avg_rev"),
         )
-        .orderBy("p_brand")
+        .transform(order_bounded, "p_brand")
     )
 
 

@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 
 from hadoop_fs_ceph_spark.canonical import dsum, sql_dsum, sql_fixsum
 from hadoop_fs_ceph_spark.registry import query
-from hadoop_fs_ceph_spark.tables import t
+from hadoop_fs_ceph_spark.tables import order_bounded, t
 
 _REV = "l_extendedprice * (1 - l_discount)"
 _TS = lambda s: F.lit(s).cast("timestamp")  # noqa: E731
@@ -134,7 +134,7 @@ def q5_local_supplier_volume(spark, sf_dir):
         .join(F.broadcast(nk), c.c_nationkey == nk.n_nationkey)
         .groupBy("n_name")
         .agg(dsum(F.expr(_REV), "revenue"))
-        .orderBy(F.col("revenue").desc(), "n_name")
+        .transform(order_bounded, F.col("revenue").desc(), "n_name")
     )
 
 
@@ -213,7 +213,7 @@ def q4_order_priority(spark, sf_dir):
         o.join(li, cond, "left_semi")
         .groupBy("o_orderpriority")
         .agg(F.count(F.lit(1)).alias("n_orders"))
-        .orderBy("o_orderpriority")
+        .transform(order_bounded, "o_orderpriority")
     )
 
 
@@ -441,7 +441,7 @@ def q7_volume_shipping(spark, sf_dir):
         .filter(pair)
         .groupBy("supp_nation", "cust_nation", F.year("l_shipdate").alias("l_year"))
         .agg(dsum(F.expr(_REV), "revenue"))
-        .orderBy("supp_nation", "cust_nation", "l_year")
+        .transform(order_bounded, "supp_nation", "cust_nation", "l_year")
     )
 
 
@@ -499,7 +499,7 @@ def q8_market_share(spark, sf_dir):
             dsum(F.when(F.col("supp_nation") == "NATION_5", rev).otherwise(F.lit(0.0)), "nation_rev"),
             dsum(rev, "total_rev"),
         )
-        .orderBy("o_year")
+        .transform(order_bounded, "o_year")
     )
 
 
@@ -539,7 +539,7 @@ def q9_product_profit(spark, sf_dir):
         .join(F.broadcast(n), F.col("s_nationkey") == F.col("n_nationkey"))
         .groupBy(F.col("n_name").alias("nation"), F.year("o_orderdate").alias("o_year"))
         .agg(dsum(profit, "sum_profit"))
-        .orderBy("nation", F.col("o_year").desc())
+        .transform(order_bounded, "nation", F.col("o_year").desc())
     )
 
 
@@ -625,7 +625,7 @@ def q12_priority_lines(spark, sf_dir):
             F.sum(F.when(high, 1).otherwise(0)).alias("high_line_count"),
             F.sum(F.when(~high, 1).otherwise(0)).alias("low_line_count"),
         )
-        .orderBy("l_linestatus")
+        .transform(order_bounded, "l_linestatus")
     )
 
 
@@ -743,7 +743,7 @@ def q16_supplier_cnt(spark, sf_dir):
         .join(p, li.l_partkey == p.p_partkey)
         .groupBy("p_brand", "p_type", "p_size")
         .agg(F.countDistinct("l_suppkey").alias("supplier_cnt"))
-        .orderBy(F.col("supplier_cnt").desc(), "p_brand", "p_type", "p_size")
+        .transform(order_bounded, F.col("supplier_cnt").desc(), "p_brand", "p_type", "p_size")
     )
 
 
@@ -960,5 +960,5 @@ def q22_global_sales_opportunity(spark, sf_dir):
             F.count(F.lit(1)).alias("numcust"),
             dsum("c_acctbal", "totacctbal"),
         )
-        .orderBy("cntrycode")
+        .transform(order_bounded, "cntrycode")
     )

@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 
 from hadoop_fs_ceph_spark.canonical import dsum, fixed, sql_fixed, sql_units, units
 from hadoop_fs_ceph_spark.registry import query
-from hadoop_fs_ceph_spark.tables import t
+from hadoop_fs_ceph_spark.tables import order_bounded, t
 
 
 @query(
@@ -903,7 +903,7 @@ def win_time_weighted_avg(spark, sf_dir):
         (
             F.col("sv").cast("double") / F.col("sw").cast("double") / F.lit(1000000.0)
         ).alias("twap"),
-    ).orderBy("event_type")
+    ).transform(order_bounded, "event_type")
 
 
 _RZ_FRAME = 15  # trailing frame length (rows), excluding the current row
@@ -1098,7 +1098,7 @@ def win_max_drawdown(spark, sf_dir):
             (999 - F.col("comp") % 1000).alias("dd_day_idx"),
             (F.expr("comp div 1000") / 1000000.0).alias("max_drawdown"),
         )
-        .orderBy("event_type")
+        .transform(order_bounded, "event_type")
     )
 
 

@@ -94,7 +94,11 @@ class ScaleAudit:
         aggregate: a sort above an aggregation orders a group-key-sized
         relation (the deterministic-output contract of the declared
         queries), while a sort of a raw scan/join output really does
-        sort the world at scale.
+        sort the world at scale. A global sort over ``Coalesce 1`` is the
+        bounded-result form (``tables.order_bounded``): the aggregate
+        under it is keyed by a domain that does not grow with the scale
+        factor, so its rows are sorted in one task with no range
+        exchange.
 
         The single-partition-window flag is NOT aggregate-suppressed: an
         unpartitioned window above an aggregate still funnels the whole

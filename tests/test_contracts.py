@@ -276,3 +276,22 @@ def test_queries_with_equal_oracles_share_one_definition():
         if any(oracle is not members[0][1] for _, oracle in members)
     ]
     assert not copies, f"equal oracles written out more than once: {copies}"
+
+
+_INLINE_BOUNDED_SORT = re.compile(r"\.\s*coalesce\(\s*1\s*\)\s*\.\s*(?:orderBy|sort)\(")
+
+
+def test_bounded_sort_is_spelled_only_in_tables():
+    """``tables.order_bounded`` is the one owner of the single-partition
+    final sort: it states which relations may be ordered on one partition
+    and resolves the sort keys in the fewest round trips. An operator module
+    that writes ``.coalesce(1).orderBy(...)`` itself bypasses both. A
+    ``.coalesce(1)`` that feeds a write is not a sort and is left alone."""
+    ops = REPO / "hadoop_fs_ceph_spark" / "operators"
+    sites = [
+        f"{p.name}:{text.count(chr(10), 0, m.start()) + 1}"
+        for p in sorted(ops.glob("*.py"))
+        for text in [p.read_text(encoding="utf-8")]
+        for m in _INLINE_BOUNDED_SORT.finditer(text)
+    ]
+    assert not sites, f"inline single-partition sorts; use tables.order_bounded: {sites}"

@@ -73,6 +73,17 @@ def test_suite_counters_match_each_head_run_alone(spark, sf_dir):
     assert all(r.content[0] > 0 and r.action_s > 0 for r in together.values())
 
 
+def test_bounded_order_by_runs_two_jobs(spark, sf_dir):
+    """``q1_pricing_summary`` orders its few groups on one partition
+    (``tables.order_bounded``): the partial-aggregate map stage and the
+    result stage are its only jobs. A distributed sort added a sampling job
+    (which ran the final aggregate a second time) and a range-shuffle map
+    stage: 4 jobs."""
+    spec = load_all()["q1_pricing_summary"]
+    spec.fn(spark, sf_dir)  # the first read resolves and keeps the table schema
+    assert run(spark, spec, sf_dir).stages.jobs == 2
+
+
 class _Spec:
     def __init__(self, fn):
         self.fn = fn
@@ -99,9 +110,11 @@ def test_sweep_records_skip_and_keeps_going(spark, sf_dir):
     rec = out["q6_forecast_revenue"]
     assert set(rec) == {
         "cold", "warm", "cold_all", "warm_all", "cold_fn", "cold_py_cpu", "cold_compiles",
+        "cold_jobs",
     }
-    assert len(rec["cold_all"]) == len(rec["cold_fn"]) == 1
+    assert len(rec["cold_all"]) == len(rec["cold_fn"]) == len(rec["cold_jobs"]) == 1
     assert rec["cold_fn"][0] <= rec["cold_all"][0]
+    assert rec["cold_jobs"][0] >= 1
 
 
 def test_time_heads_conf_reaches_core_confs(sf_dir):

@@ -7,6 +7,7 @@ and column pruning into the parquet scan, partition pruning over
 partitioned layouts, and whole-stage codegen on the hot paths.
 """
 
+import inspect
 import re
 
 import pytest
@@ -404,6 +405,33 @@ def test_zipf_topk_is_take_ordered(spark, sf_dir):
     audit = scale_audit(SPECS["text_zipf_profile"].fn(spark, sf_dir))
     assert audit.take_ordered
     assert audit.single_partition_windows == 0
+
+
+def _plan_node(line: str) -> str:
+    """The operator name on one line of a plan tree dump."""
+    return re.sub(r"^[\s|:+-]*(?:\*\(\d+\) )?", "", line).split(" ", 1)[0].split("(", 1)[0]
+
+
+@pytest.mark.parametrize(
+    "name",
+    sorted(n for n, s in SPECS.items() if "order_bounded" in inspect.getsource(s.fn)),
+)
+def test_bounded_final_sort_has_no_range_exchange(spark, sf_dir, name):
+    """A query that orders its result with ``tables.order_bounded`` sorts
+    on one partition: the executed plan has no range-partitioning exchange
+    (no sampling job, no range shuffle), and the node under ``Coalesce 1``
+    is the grouped aggregate that bounds the result, reached only through
+    ``Project``/``Filter``. Anything else under the coalesce (a join, a
+    window, a scan) would run on one task at any scale. The final plan is
+    read first; where AQE replaced an empty result by ``EmptyRelation``,
+    the initial plan that follows it."""
+    plan = plan_of(SPECS[name].fn(spark, sf_dir), execute=True)
+    assert "rangepartitioning" not in plan
+    lines = plan.splitlines()
+    at = next(i for i, line in enumerate(lines) if _plan_node(line) == "Coalesce")
+    under = [_plan_node(line) for line in lines[at + 1 :]]
+    first = next(n for n in under if n not in ("Project", "Filter"))
+    assert first.endswith("Aggregate"), (name, under[: under.index(first) + 1])
 
 
 def test_collect_gate_fires_on_unbounded_collect(spark, sf_dir):

@@ -13,7 +13,9 @@ records the seconds spent inside the query function (``cold_fn``), the CPU
 seconds its Python workers used (``cold_py_cpu``, the cost of the
 Python/Arrow boundary for UDF, pandas and Python-source heads) and the
 classes Janino compiled for it (``cold_compiles``: after the first pass a
-head whose generated code stays cached compiles 0).
+head whose generated code stays cached compiles 0) and the Spark jobs it ran
+(``cold_jobs``, so the driver's fixed cost per job can be ranked over
+``--all``).
 
 ``--all`` sweeps every registered query, finding tail hotspots the bench
 heads miss; a query that raises is recorded as ``"skip:<ExceptionName>"``
@@ -48,7 +50,7 @@ def time_heads(spark, specs: dict, sf_dir: str, passes: int):
     record is ``"skip:<ExceptionName>"`` for a head that raised."""
     jvm = jvm_pid(spark)
     for name, spec in specs.items():
-        rec = {k: [] for k in ("cold", "warm", "fn", "py_cpu", "compiles")}
+        rec = {k: [] for k in ("cold", "warm", "fn", "py_cpu", "compiles", "jobs")}
         try:
             for _ in range(passes):
                 cpu0, n0 = python_worker_cpu_s(jvm), codegen_compiles(spark)
@@ -57,6 +59,7 @@ def time_heads(spark, specs: dict, sf_dir: str, passes: int):
                     rec["compiles"].append(codegen_compiles(spark) - n0)
                     rec["cold"].append(cold.wall)
                     rec["fn"].append(cold.fn_s)
+                    rec["jobs"].append(cold.stages.jobs)
                     rec["warm"].append(run(spark, spec, sf_dir).wall)
         except Exception as exc:
             print(f"skip {name}: {exc!r:.300}", file=sys.stderr)
@@ -70,6 +73,7 @@ def time_heads(spark, specs: dict, sf_dir: str, passes: int):
             "cold_fn": [round(v, 3) for v in rec["fn"]],
             "cold_py_cpu": [round(v, 2) for v in rec["py_cpu"]],
             "cold_compiles": rec["compiles"],
+            "cold_jobs": rec["jobs"],
         }
 
 
